@@ -336,8 +336,9 @@ def main() -> None:
     # tail still carries the per-query record, printed compact
     # (3-decimal walls: the ~0.07 s per-job floor makes sub-ms digits
     # pure noise) so that section fits the 2000-char window.  The
-    # FULL record additionally lands in BENCH_local.json next to this
-    # file — the in-repo belt to the stdout suspenders.
+    # FULL record additionally lands in .bench_out/BENCH_local.json
+    # next to this file (gitignored, so a run leaves the tree clean) —
+    # the on-disk belt to the stdout suspenders.
     record = {
         "duckdb": duck,
         "ratio": ratios,
@@ -431,13 +432,10 @@ def main() -> None:
     full = dict(record)
     full["queries"] = times
     full["extra"] = extra_times
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_out")
     try:
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"
-            ),
-            "w",
-        ) as f:
+        os.makedirs(out_dir, exist_ok=True)
+        with open(os.path.join(out_dir, "BENCH_local.json"), "w") as f:
             json.dump(full, f, indent=1)
             f.write("\n")
     except OSError as e:  # read-only checkout: the stdout line stands

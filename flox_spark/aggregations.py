@@ -5,18 +5,27 @@ Ports the semantics of flox's ``REDUCTIONS`` registry
 aggregates.  flox's chunk/combine/finalize three-stage spec collapses:
 Spark's HashAggregateExec already executes partial -> shuffle -> final
 merge (the exact role of flox's map-reduce tree, flox/dask.py:325-573),
-so each flox reduction becomes ONE declarative Column expression and
+so each flox reduction becomes ONE declarative aggregate expression and
 Catalyst plans the distribution.
+
+Each built-in reduction is defined once, as SQL text: ``agg_column``
+parses it with one ``F.expr`` call, one py4j round trip, where the
+same expression assembled from ``F.*`` calls costs one round trip per
+call.  Builders that must return a Column are the named exceptions:
+``prod``/``nanprod`` (``product`` has no SQL spelling), the Arrow UDF
+of ``pandas_aggregation``, and user ``Aggregation(build=...)`` callables
+written against the Column views of ``AggContext``.
 
 NaN policy (see dtypes.py): ``nan*`` funcs aggregate the
 missing->NULL view (Spark aggregates skip NULL natively); plain funcs
-wrap the same expression in ``when(bool_or(is_missing), <NaN|NULL>)``
-which reproduces numpy's NaN propagation exactly — including for
-min/max, where Spark's native NaN-sorts-high rule would otherwise
-diverge from numpy (flox/aggregate_npg.py:58-88 vs Spark semantics).
+wrap the same expression in ``CASE WHEN bool_or(missing) THEN
+<NaN|NULL>`` which reproduces numpy's NaN propagation exactly —
+including for min/max, where Spark's native NaN-sorts-high rule would
+otherwise diverge from numpy (flox/aggregate_npg.py:58-88 vs Spark
+semantics).
 
-Every build function returns a single Column whose leaves are
-aggregate expressions, so any combination stays inside one
+Every builder returns a single expression whose leaves are aggregate
+expressions, so any combination stays inside one
 whole-stage-codegen'd aggregate (no extra passes over the data).
 """
 
@@ -27,75 +36,110 @@ from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DataType,
-    DoubleType,
-    FloatType,
-    LongType,
-)
+from pyspark.sql.types import DataType, FloatType
 
-from flox_spark import dtypes as dt_mod
 from flox_spark.dtypes import (
-    NAN,
-    arith_input,
-    arith_restore,
+    is_bool_type,
     is_datetime_type,
     is_float_type,
-    is_missing,
     is_timedelta_type,
+    sql_arith_input,
+    sql_arith_restore,
+    sql_missing,
+    sql_prop,
+    sql_skip,
 )
 from flox_spark.options import OPTIONS
 
 
 @dataclass
 class AggContext:
-    """Everything a builder needs to emit its expression."""
+    """Everything a builder needs to emit its expression: the value and
+    order columns as SQL text, plus Column views derived from that text
+    for builders that return a Column."""
 
-    value: Column  # raw value column
+    value_sql: str  # quoted value column
     dt: DataType  # its Spark type
-    idx: Column | None = None  # total-order column (first/last/arg*)
+    order_sql: str | None = None  # numericized total order (first/last/arg*)
     kwargs: dict[str, Any] = field(default_factory=dict)  # ddof, q, ...
 
-    # -- derived views ------------------------------------------------
+    # -- text views ----------------------------------------------------
     @property
-    def missing(self) -> Column:
-        return is_missing(self.value, self.dt)
+    def skip_sql(self) -> str:
+        """Missing -> NULL view (Spark aggs then skip them)."""
+        return sql_skip(self.value_sql, self.dt)
+
+    @property
+    def missing_sql(self) -> str:
+        return sql_missing(self.value_sql, self.dt)
+
+    def arith_sql(self) -> tuple[str, DataType]:
+        """NaN-skipping view pre-cast for arithmetic (bool->int,
+        datetime->int64 us)."""
+        return sql_arith_input(self.skip_sql, self.dt)
+
+    # -- Column views --------------------------------------------------
+    @property
+    def value(self) -> Column:
+        return F.expr(self.value_sql)
 
     @property
     def v_skip(self) -> Column:
-        """Missing -> NULL view (Spark aggs then skip them)."""
-        return dt_mod.to_skip(self.value, self.dt)
+        return F.expr(self.skip_sql)
+
+    @property
+    def missing(self) -> Column:
+        return F.expr(self.missing_sql)
+
+    @property
+    def idx(self) -> Column | None:
+        return None if self.order_sql is None else F.expr(self.order_sql)
 
     def arith(self) -> tuple[Column, DataType]:
-        """NaN-skipping view pre-cast for arithmetic (bool->int,
-        datetime->int64 us)."""
-        return arith_input(self.v_skip, self.dt)
+        v, vdt = self.arith_sql()
+        return F.expr(v), vdt
 
 
-def _nan_sentinel(result_dt: DataType | str) -> Column:
+def _sql_double(x: Any) -> str:
+    """A DOUBLE literal: ``F.lit(float)``'s type, exact (repr round-trips)."""
+    return f"{float(x)!r}D"
+
+
+def sql_sentinel(result_dt: DataType | str) -> str:
     """What numpy's NaN-propagation produces in the output type:
     NaN for float results, NULL otherwise (NULL is Spark's only
     missing representation for non-float types; flox would have
     promoted the dtype, xrdtypes.py:35-65)."""
-    if isinstance(result_dt, str):
-        return F.lit(NAN).cast(result_dt) if result_dt in ("double", "float") else F.lit(None).cast(result_dt)
-    if is_float_type(result_dt):
-        return F.lit(NAN).cast(result_dt)
-    return F.lit(None).cast(result_dt)
+    name = result_dt if isinstance(result_dt, str) else result_dt.simpleString()
+    if name.lower() in ("double", "float"):
+        return f"CAST('NaN' AS {name})"
+    return f"CAST(NULL AS {name})"
 
 
-def _propagate(ctx: AggContext, skip_expr: Column, result_dt: DataType | str) -> Column:
+def _propagate(c: AggContext, skip_expr: str, result_dt: DataType | str) -> str:
     """Wrap a NaN-skipping aggregate so missing values poison the
     group result (numpy plain-func semantics, flox §1.2)."""
-    return F.when(F.bool_or(ctx.missing), _nan_sentinel(result_dt)).otherwise(skip_expr)
+    return f"CASE WHEN bool_or({c.missing_sql}) THEN {sql_sentinel(result_dt)} ELSE {skip_expr} END"
 
 
-def _restore_float32(expr: Column, in_dt: DataType) -> Column:
+def _restore_float32(expr: str, in_dt: DataType) -> str:
     """numpy keeps float32 results float32 (flox/xrdtypes.py:153-172);
     Spark's sum/avg widen to double — cast back."""
     if isinstance(in_dt, FloatType):
-        return expr.cast("float")
+        return f"CAST({expr} AS FLOAT)"
     return expr
+
+
+def _result_type(dt: DataType, int_name: str) -> str:
+    """Result type of an arithmetic reduction: float32 stays float32,
+    other floats are double, everything else ``int_name``."""
+    if isinstance(dt, FloatType):
+        return "float"
+    return "double" if is_float_type(dt) else int_name
+
+
+def _zero(dt: DataType) -> str:
+    return "CAST(0 AS DOUBLE)" if is_float_type(dt) else "CAST(0 AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -103,142 +147,164 @@ def _restore_float32(expr: Column, in_dt: DataType) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _count(ctx: AggContext) -> Column:
+def _count(c: AggContext) -> str:
     # flox count == nanlen: number of non-missing (aggregations.py:304-313)
-    return F.count(ctx.v_skip)
+    return f"count({c.skip_sql})"
 
 
-def _sum(ctx: AggContext, skipna: bool) -> Column:
-    v, vdt = ctx.arith()
-    zero = F.lit(0).cast("double" if is_float_type(vdt) else "long")
-    expr = F.coalesce(F.sum(v), zero)
-    if is_timedelta_type(ctx.dt):
+def _sum(c: AggContext, skipna: bool) -> str:
+    v, vdt = c.arith_sql()
+    expr = f"coalesce(sum({v}), {_zero(vdt)})"
+    if is_timedelta_type(c.dt):
         # numpy sums timedelta64 to timedelta64 (flox int64 view +
         # dtype restore, flox/core.py:985-1001, 1209-1217)
-        expr = arith_restore(expr, ctx.dt)
-        return expr if skipna else _propagate(ctx, expr, ctx.dt)
-    expr = _restore_float32(expr, ctx.dt)
-    if skipna:
-        return expr
-    rdt = "float" if isinstance(ctx.dt, FloatType) else ("double" if is_float_type(ctx.dt) else "long")
-    return _propagate(ctx, expr, rdt)
+        expr = sql_arith_restore(expr, c.dt)
+        return expr if skipna else _propagate(c, expr, c.dt)
+    expr = _restore_float32(expr, c.dt)
+    return expr if skipna else _propagate(c, expr, _result_type(c.dt, "bigint"))
+
+
+def _sum_of_squares(c: AggContext, skipna: bool) -> str:
+    v, _ = c.arith_sql()
+    expr = f"coalesce(sum(({v} * {v})), {_zero(c.dt)})"
+    return expr if skipna else _propagate(c, expr, "double" if is_float_type(c.dt) else "bigint")
 
 
 def _prod(ctx: AggContext, skipna: bool) -> Column:
-    v, vdt = ctx.arith()
-    one = F.lit(1).cast("double")
-    expr = F.coalesce(F.product(v), one)  # product() returns double
+    """Column-only: ``product`` is not a SQL routine, the aggregate is
+    reachable only through ``F.product``."""
+    v, _ = ctx.arith()
+    expr = F.coalesce(F.product(v), F.lit(1).cast("double"))  # product() returns double
     if not is_float_type(ctx.dt):
         expr = expr.cast("long")  # numpy int prod stays int (xrdtypes.py:175-185)
-    else:
-        expr = _restore_float32(expr, ctx.dt)
+    elif isinstance(ctx.dt, FloatType):
+        expr = expr.cast("float")
     if skipna:
         return expr
-    rdt = "float" if isinstance(ctx.dt, FloatType) else ("double" if is_float_type(ctx.dt) else "long")
-    return _propagate(ctx, expr, rdt)
+    sentinel = F.expr(sql_sentinel(_result_type(ctx.dt, "bigint")))
+    return F.when(F.bool_or(ctx.missing), sentinel).otherwise(expr)
 
 
-def _mean(ctx: AggContext, skipna: bool) -> Column:
-    v, _ = ctx.arith()
-    expr = F.avg(v)
-    if is_datetime_type(ctx.dt) or is_timedelta_type(ctx.dt):
-        expr = arith_restore(expr, ctx.dt)
-        return expr if skipna else _propagate(ctx, expr, ctx.dt)
-    expr = _restore_float32(expr, ctx.dt)
-    rdt = "float" if isinstance(ctx.dt, FloatType) else "double"
-    return expr if skipna else _propagate(ctx, expr, rdt)
+def _mean(c: AggContext, skipna: bool) -> str:
+    v, _ = c.arith_sql()
+    expr = f"avg({v})"
+    if is_datetime_type(c.dt) or is_timedelta_type(c.dt):
+        expr = sql_arith_restore(expr, c.dt)
+        return expr if skipna else _propagate(c, expr, c.dt)
+    expr = _restore_float32(expr, c.dt)
+    return expr if skipna else _propagate(c, expr, _result_type(c.dt, "double"))
 
 
-def _var(ctx: AggContext, skipna: bool, std: bool) -> Column:
+def _var(c: AggContext, skipna: bool, std: bool) -> str:
     # flox var/std take ddof (default 0, numpy rule); Spark var_pop is
     # ddof=0 and var_samp ddof=1; generic ddof scales the sum of
     # squared deviations M2 = var_pop * n  (flox/aggregations.py:460-472)
-    ddof = int(ctx.kwargs.get("ddof", 0))
-    v, _ = ctx.arith()
+    ddof = int(c.kwargs.get("ddof", 0))
+    v, _ = c.arith_sql()
     if ddof == 0:
-        expr = F.var_pop(v)
+        expr = f"var_pop({v})"
     elif ddof == 1:
-        expr = F.var_samp(v)
+        expr = f"var_samp({v})"
     else:
-        n = F.count(v)
-        expr = F.when(n > ddof, F.var_pop(v) * n / (n - ddof)).otherwise(F.lit(NAN))
+        expr = (
+            f"CASE WHEN count({v}) > {ddof} THEN "
+            f"((var_pop({v}) * count({v})) / (count({v}) - {ddof})) "
+            "ELSE CAST('NaN' AS DOUBLE) END"
+        )
     if std:
-        expr = F.sqrt(expr)
-    expr = _restore_float32(expr, ctx.dt)
-    rdt = "float" if isinstance(ctx.dt, FloatType) else "double"
+        expr = f"sqrt({expr})"
+    expr = _restore_float32(expr, c.dt)
+    rdt = _result_type(c.dt, "double")
     # numpy: var of n<=ddof group -> NaN (flox fills NaN); Spark
     # var_samp of 1 row -> NULL. Normalize NULL->NaN for float parity.
-    expr = F.coalesce(expr, _nan_sentinel(rdt))
-    return expr if skipna else _propagate(ctx, expr, rdt)
+    expr = f"coalesce({expr}, {sql_sentinel(rdt)})"
+    return expr if skipna else _propagate(c, expr, rdt)
 
 
-def _minmax(ctx: AggContext, skipna: bool, is_max: bool) -> Column:
-    f = F.max if is_max else F.min
-    expr = f(ctx.v_skip)  # NULL-skipping; preserves type natively
+def _minmax(c: AggContext, skipna: bool, is_max: bool) -> str:
+    # NULL-skipping; preserves type natively
+    expr = f"{'max' if is_max else 'min'}({c.skip_sql})"
     if skipna:
         return expr
     # numpy min/max propagate NaN; Spark sorts NaN high (wrong for
     # min) — the bool_or wrapper fixes both directions (SURVEY §2.2).
-    return _propagate(ctx, expr, ctx.dt)
+    return _propagate(c, expr, c.dt)
 
 
-def _first_last(ctx: AggContext, skipna: bool, is_last: bool) -> Column:
+def _first_last(c: AggContext, skipna: bool, is_last: bool) -> str:
     # Positional semantics need the explicit order column: Spark
     # first()/last() without a deterministic order are nondeterministic
     # (flox first/last are array-order, aggregations.py:634-649).
-    assert ctx.idx is not None
+    assert c.order_sql is not None
     # plain first/last surface a missing element as NaN (numpy view:
     # NULL has no representation in float arrays), nan* skip it
-    v = ctx.value if skipna else dt_mod.to_prop(ctx.value, ctx.dt)
-    pair = F.struct(ctx.idx.alias("i"), v.alias("v"))
+    v = c.value_sql if skipna else sql_prop(c.value_sql, c.dt)
+    pair = f"struct({c.order_sql} AS i, {v} AS v)"
     if skipna:
-        pair = F.when(~ctx.missing, pair)
-    f = F.max if is_last else F.min
-    return f(pair)["v"]
+        pair = f"CASE WHEN NOT {c.missing_sql} THEN {pair} END"
+    return f"{'max' if is_last else 'min'}({pair}).v"
 
 
-def _arg(ctx: AggContext, skipna: bool, is_max: bool) -> Column:
+def _arg(c: AggContext, skipna: bool, is_max: bool) -> str:
     """argmin/argmax with numpy parity: ties -> first occurrence
     (flox/core.py:334-336); plain variant returns the FIRST missing
     position when any value is missing (numpy comparison semantics).
     Result is the value of the order column (the positional index in
     flox's flattened axis, core.py:520-521)."""
-    assert ctx.idx is not None
-    # NB: core.groupby_reduce numericizes datetime order columns
-    # before building the context (the tie-break negates idx)
-    idx = ctx.idx
+    assert c.order_sql is not None
+    idx, miss = c.order_sql, c.missing_sql
     if is_max:
         # max value, then min idx among ties: negate idx inside struct
-        pair = F.when(~ctx.missing, F.struct(ctx.value.alias("v"), (-idx).alias("ni")))
-        best = -F.max(pair)["ni"]
+        pair = f"CASE WHEN NOT {miss} THEN struct({c.value_sql} AS v, -({idx}) AS ni) END"
+        best = f"-(max({pair}).ni)"
     else:
-        pair = F.when(~ctx.missing, F.struct(ctx.value.alias("v"), idx.alias("i")))
-        best = F.min(pair)["i"]
+        pair = f"CASE WHEN NOT {miss} THEN struct({c.value_sql} AS v, {idx} AS i) END"
+        best = f"min({pair}).i"
     if skipna:
         return best
-    first_missing = F.min(F.when(ctx.missing, idx))
-    return F.when(F.bool_or(ctx.missing), first_missing).otherwise(best)
+    first_missing = f"min(CASE WHEN {miss} THEN {idx} END)"
+    return f"CASE WHEN bool_or({miss}) THEN {first_missing} ELSE {best} END"
 
 
-def _quantile(ctx: AggContext, skipna: bool, q: Any = None) -> Column:
-    qv = ctx.kwargs.get("q", q)
+def _lerp(a: str, x: float) -> str:
+    """Linear interpolation at quantile ``x`` over the sorted array
+    ``a``: the lerp Spark's ``percentile`` aggregate runs
+    (Percentile.scala: lower + (higher - lower) * (rank - lowerIndex)),
+    with an integral rank returning the exact order statistic (no fp
+    noise from a degenerate lerp).  The CASE guard keeps ANSI
+    element_at from ever seeing an out-of-range index on the untaken
+    branch."""
+    pos = f"({_sql_double(x)} * CAST((size({a}) - 1) AS DOUBLE))"
+    lo = f"CAST(floor({pos}) AS INT)"
+    hi = f"CAST(ceil({pos}) AS INT)"
+    lov = f"CAST(element_at({a}, ({lo} + 1)) AS DOUBLE)"
+    hiv = f"CAST(element_at({a}, ({hi} + 1)) AS DOUBLE)"
+    return (
+        f"CASE WHEN ({lo} = {hi}) THEN {lov} "
+        f"ELSE ({lov} + (({hiv} - {lov}) * ({pos} - CAST({lo} AS DOUBLE)))) END"
+    )
+
+
+def _quantile(c: AggContext, skipna: bool, q: Any = None) -> str:
+    qv = c.kwargs.get("q", q)
     if qv is None:
         qv = 0.5
-    v, _ = ctx.arith()
+    is_vec = isinstance(qv, (list, tuple))
+    qlist = list(qv) if is_vec else [qv]
+    v, _ = c.arith_sql()
     if OPTIONS["approx_quantile"]:
-        expr = F.percentile_approx(v, qv, OPTIONS["approx_quantile_accuracy"])
+        pct = f"array({', '.join(map(_sql_double, qlist))})" if is_vec else _sql_double(qv)
+        expr = f"percentile_approx({v}, {pct}, {int(OPTIONS['approx_quantile_accuracy'])})"
     else:
         # exact, linear interpolation — matches numpy's default method
         # (flox/aggregate_flox.py:50-130) and DuckDB quantile_cont.
         # Kernel: array_sort(collect_list) + the same sorted-array lerp
-        # Spark's `percentile` aggregate runs (Percentile.scala:
-        # lower + (higher - lower) * (rank - lowerIndex), exact element
-        # when the rank is integral) — bit-identical results, but the
-        # partial state is a flat array append/concat instead of
-        # percentile's per-value OpenHashMap (measured 1.40s -> 0.65s
-        # on the sf0.1 lineitem two-fence agg).  Same memory class:
-        # both buffer the whole group, which is exactly what the agg
-        # strategy's size gate (_choose_quantile_impl) admits.
+        # Spark's `percentile` aggregate runs — bit-identical results,
+        # but the partial state is a flat array append/concat instead
+        # of percentile's per-value OpenHashMap (measured 1.40s ->
+        # 0.65s on the sf0.1 lineitem two-fence agg).  Same memory
+        # class: both buffer the whole group, which is exactly what the
+        # agg strategy's size gate (_choose_quantile_impl) admits.
         #
         # The sorted array is bound ONCE as a transform() lambda
         # variable: every element_at/size reference reads the bound
@@ -248,61 +314,49 @@ def _quantile(ctx: AggContext, skipna: bool, q: Any = None) -> Column:
         # subexpression elimination rescued it (measured ~2.5 sorts'
         # worth of extra wall at sf0.1; the media_features staging
         # discipline, multimodal.py).  Catalyst still plans the ONE
-        # collect_list buffer however many q's read it.
-        qlist = list(qv) if isinstance(qv, (list, tuple)) else [qv]
-
-        def _lerps(a: Column) -> Column:
-            n = F.size(a)
-
-            def one(x: float) -> Column:
-                pos = F.lit(float(x)) * (n - F.lit(1)).cast("double")
-                lo = F.floor(pos).cast("int")
-                hi = F.ceil(pos).cast("int")
-                lov = F.element_at(a, lo + F.lit(1)).cast("double")
-                # integral rank -> the exact order statistic (no fp
-                # noise from a degenerate lerp); guarded so ANSI
-                # element_at never sees an out-of-range index on the
-                # untaken branch
-                return F.when(lo == hi, lov).otherwise(
-                    lov
-                    + (F.element_at(a, hi + F.lit(1)).cast("double") - lov)
-                    * (pos - lo.cast("double"))
-                )
-
-            # empty group (all-missing values) -> NULL result, matching
-            # the percentile aggregate
-            return F.when(n > 0, F.array(*[one(x) for x in qlist]))
-
-        qarr = F.element_at(
-            F.transform(F.array(F.array_sort(F.collect_list(v))), _lerps), 1
+        # collect_list buffer however many q's read it.  An empty group
+        # (all-missing values) gives NULL, matching the percentile
+        # aggregate.
+        lerps = ", ".join(_lerp("a", x) for x in qlist)
+        qarr = (
+            f"element_at(transform(array(array_sort(collect_list({v}))), "
+            f"a -> CASE WHEN (size(a) > 0) THEN array({lerps}) END), 1)"
         )
-        expr = qarr if isinstance(qv, (list, tuple)) else F.element_at(qarr, 1)
-    if is_datetime_type(ctx.dt) or is_timedelta_type(ctx.dt):
-        expr = arith_restore(expr, ctx.dt)
-        return expr if skipna else _propagate(ctx, expr, ctx.dt)
+        expr = qarr if is_vec else f"element_at({qarr}, 1)"
+    if is_datetime_type(c.dt) or is_timedelta_type(c.dt):
+        expr = sql_arith_restore(expr, c.dt)
+        return expr if skipna else _propagate(c, expr, c.dt)
     if skipna:
         return expr
-    rdt = "double"
-    if isinstance(qv, (list, tuple)):
+    if is_vec:
         # array result: propagate by replacing whole array
-        return F.when(F.bool_or(ctx.missing), F.array(*[F.lit(NAN) for _ in qv])).otherwise(expr)
-    return _propagate(ctx, expr, rdt)
+        nans = ", ".join(sql_sentinel("double") for _ in qlist)
+        return f"CASE WHEN bool_or({c.missing_sql}) THEN array({nans}) ELSE {expr} END"
+    return _propagate(c, expr, "double")
 
 
-def _any_all(ctx: AggContext, is_all: bool) -> Column:
+def _any_all(c: AggContext, is_all: bool) -> str:
     # numpy truthiness: nonzero is True, NaN is True (flox
     # aggregations.py:651-668). bool input passes through.
-    if dt_mod.is_bool_type(ctx.dt):
-        b = ctx.value
-    elif is_float_type(ctx.dt):
-        b = F.when(ctx.value.isNotNull(), F.isnan(ctx.value) | (ctx.value != 0.0))
+    v = c.value_sql
+    if is_bool_type(c.dt):
+        b = v
+    elif is_float_type(c.dt):
+        b = f"CASE WHEN {v} IS NOT NULL THEN (isnan({v}) OR ({v} != 0.0D)) END"
     else:
         # numericize first: datetime/timedelta cannot compare to int 0
-        nv, _ = arith_input(ctx.value, ctx.dt)
-        b = F.when(ctx.value.isNotNull(), nv != 0)
-    expr = F.bool_and(b) if is_all else F.bool_or(b)
+        nv, _ = sql_arith_input(v, c.dt)
+        b = f"CASE WHEN {v} IS NOT NULL THEN ({nv} != 0) END"
+    expr = f"bool_and({b})" if is_all else f"bool_or({b})"
     # empty/all-null group -> False (flox final fill, aggregations.py:651-668)
-    return F.coalesce(expr, F.lit(False))
+    return f"coalesce({expr}, false)"
+
+
+def _nunique(c: AggContext, skipna: bool) -> str:
+    distinct = f"count(DISTINCT {c.skip_sql})"
+    if skipna:
+        return distinct
+    return f"{distinct} + max(CASE WHEN {c.missing_sql} THEN 1 ELSE 0 END)"
 
 
 # ---------------------------------------------------------------------------
@@ -314,7 +368,8 @@ def _any_all(ctx: AggContext, is_all: bool) -> Column:
 class Aggregation:
     """Declarative reduction spec — the Spark analog of flox's
     ``Aggregation`` (flox/aggregations.py:161-301).  ``build`` emits
-    the final Column; Spark's partial/merge replaces chunk/combine.
+    the final aggregate expression as SQL text or as a Column; Spark's
+    partial/merge replaces chunk/combine.
 
     Users may register custom reductions by constructing one with
     their own ``build`` callable (mirrors flox's custom-Aggregation
@@ -322,17 +377,24 @@ class Aggregation:
     """
 
     name: str
-    build: Callable[[AggContext], Column]
+    build: Callable[[AggContext], str | Column]
     default_fill: Any = None
     needs_order: bool = False
     two_stage: str | None = None  # "mode" -> needs a pre-aggregation
     preserves_dtype: bool = False  # min/max/first/last keep input type
 
 
+def agg_column(agg: Aggregation, ctx: AggContext) -> Column:
+    """The reduction's expression as a Column: SQL text parses in one
+    round trip, a Column-returning build passes through."""
+    built = agg.build(ctx)
+    return F.expr(built) if isinstance(built, str) else built
+
+
 REDUCTIONS: dict[str, Aggregation] = {}
 
 
-def _reg(name: str, build: Callable[[AggContext], Column], **kw: Any) -> None:
+def _reg(name: str, build: Callable[[AggContext], str | Column], **kw: Any) -> None:
     REDUCTIONS[name] = Aggregation(name=name, build=build, **kw)
 
 
@@ -341,21 +403,9 @@ _reg("count", _count, default_fill=0)
 # aggregate_flox.py:225-248, aggregate_npg.py:16-109): nanlen == count,
 # len counts ALL rows (NaN included), sum_of_squares variants
 _reg("nanlen", _count, default_fill=0)
-_reg("len", lambda c: F.count(F.lit(1)), default_fill=0)
-_reg(
-    "nansum_of_squares",
-    lambda c: F.coalesce(F.sum(c.arith()[0] * c.arith()[0]), F.lit(0).cast("double" if is_float_type(c.dt) else "long")),
-    default_fill=0,
-)
-_reg(
-    "sum_of_squares",
-    lambda c: _propagate(
-        c,
-        F.coalesce(F.sum(c.arith()[0] * c.arith()[0]), F.lit(0).cast("double" if is_float_type(c.dt) else "long")),
-        "double" if is_float_type(c.dt) else "long",
-    ),
-    default_fill=0,
-)
+_reg("len", lambda c: "count(1)", default_fill=0)
+_reg("nansum_of_squares", lambda c: _sum_of_squares(c, skipna=True), default_fill=0)
+_reg("sum_of_squares", lambda c: _sum_of_squares(c, skipna=False), default_fill=0)
 _reg("sum", lambda c: _sum(c, skipna=False), default_fill=0)
 _reg("nansum", lambda c: _sum(c, skipna=True), default_fill=0)
 _reg("prod", lambda c: _prod(c, skipna=False), default_fill=1)
@@ -393,7 +443,7 @@ _reg("nanmode", None, two_stage="mode", preserves_dtype=True)
 # Spark; for 100 TB cardinality estimates use a custom Aggregation
 # over approx_count_distinct (HLL, mergeable, bounded memory) —
 # not registered here because its result is estimate-dependent.
-_reg("nannunique", lambda c: F.count_distinct(c.v_skip), default_fill=0)
+_reg("nannunique", lambda c: _nunique(c, skipna=True), default_fill=0)
 # the 100 TB path for distinct counts: HyperLogLog++ sketch —
 # mergeable, bounded memory, ONE regular aggregation (exact
 # count_distinct costs an extra Expand + second shuffle stage).
@@ -402,276 +452,10 @@ _reg("nannunique", lambda c: F.count_distinct(c.v_skip), default_fill=0)
 # checked rather than oracle-hashed.
 _reg(
     "approx_nunique",
-    lambda c: F.approx_count_distinct(c.v_skip, rsd=c.kwargs.get("rsd", 0.05)),
+    lambda c: f"approx_count_distinct({c.skip_sql}, {_sql_double(c.kwargs.get('rsd', 0.05))})",
     default_fill=0,
 )
-_reg(
-    "nunique",
-    lambda c: F.count_distinct(c.v_skip)
-    + F.max(F.when(c.missing, F.lit(1)).otherwise(F.lit(0))),
-    default_fill=0,
-)
-
-
-# ---------------------------------------------------------------------------
-# SQL-TEXT twins of the simple builders (r15 optimization; r14 VERDICT
-# next #3).  Assembling a plain grouped reduction through Column
-# objects costs ~270 py4j round trips (~0.17 s) per plan build — every
-# F.* call is a JVM round trip.  The same expression as ONE SQL string
-# through F.expr parses in a single round trip.  These builders emit
-# text whose ANALYZED tree is the exact twin of the Column builders
-# above (same functions, same casts, same CASE/struct shapes — literal
-# spellings like CAST('NaN' AS DOUBLE) constant-fold to the Column
-# path's folded literals), so the OPTIMIZED/physical plans are
-# identical; tests/test_reduce.py::test_sql_twin_plan_parity pins
-# plan-string equality per (func, dtype) and the md5 oracle sweep pins
-# the results.  Only the shapes core.groupby_reduce's fast path
-# actually takes are covered: a builder (or a dtype probe) returning
-# None sends the caller back to the Column path — never a behavior
-# change, only an assembly-cost one.
-#
-# Maintenance invariant: these mirror the Column builders ABOVE —
-# change one, change both (the parity test fails loudly otherwise).
-
-_SQL_F = "FLOAT"
-_SQL_D = "DOUBLE"
-
-
-def sql_quote(name: str) -> str:
-    """Backtick-quote an identifier for SQL text."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_float_t(dt: DataType) -> str:
-    return _SQL_F if isinstance(dt, FloatType) else _SQL_D
-
-
-def sql_missing(v: str, dt: DataType) -> str:
-    """Text twin of dtypes.is_missing."""
-    if is_float_type(dt):
-        return f"({v} IS NULL OR isnan({v}))"
-    return f"({v} IS NULL)"
-
-
-def _sql_skip(v: str, dt: DataType) -> str:
-    """Text twin of dtypes.to_skip."""
-    if is_float_type(dt):
-        return f"nanvl({v}, CAST(NULL AS {_sql_float_t(dt)}))"
-    return v
-
-
-def _sql_prop(v: str, dt: DataType) -> str:
-    """Text twin of dtypes.to_prop."""
-    if is_float_type(dt):
-        return f"coalesce({v}, CAST('NaN' AS {_sql_float_t(dt)}))"
-    return v
-
-
-def _sql_sentinel(rdt: str) -> str:
-    """Text twin of _nan_sentinel for a simpleString/SQL type name."""
-    if rdt.lower() in ("double", "float"):
-        return f"CAST('NaN' AS {rdt.upper()})"
-    return f"CAST(NULL AS {rdt.upper()})"
-
-
-def _sql_propagate(missing: str, expr: str, rdt: str) -> str:
-    """Text twin of _propagate."""
-    return f"CASE WHEN bool_or({missing}) THEN {_sql_sentinel(rdt)} ELSE {expr} END"
-
-
-def sql_arith_idx(v: str, dt: DataType) -> str | None:
-    """Text twin of dtypes.arith_input for ORDER columns (first/last/
-    arg*).  None = unsupported here -> Column path."""
-    if dt_mod.is_bool_type(dt) or is_timedelta_type(dt):
-        return None  # exotic order columns keep the generic builder
-    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
-
-    if isinstance(dt, (TimestampType, TimestampNTZType)):
-        return f"unix_micros(CAST({v} AS TIMESTAMP))"
-    if isinstance(dt, DateType):
-        return f"CAST(datediff({v}, CAST('1970-01-01' AS DATE)) AS BIGINT)"
-    return v  # numeric: identity
-
-
-def _sql_value_arith(v: str, dt: DataType) -> str | None:
-    """Text twin of AggContext.arith() (to_skip then arith_input) for
-    the VALUE column of arithmetic reductions.  Datetime/timedelta
-    values (restore round-trips) keep the Column path."""
-    if is_datetime_type(dt) or is_timedelta_type(dt):
-        return None
-    skip = _sql_skip(v, dt)
-    if dt_mod.is_bool_type(dt):
-        return f"CAST({skip} AS BIGINT)"
-    return skip
-
-
-def _sql_restore_f32(expr: str, dt: DataType) -> str:
-    """Text twin of _restore_float32."""
-    if isinstance(dt, FloatType):
-        return f"CAST({expr} AS FLOAT)"
-    return expr
-
-
-def _sql_rdt(dt: DataType, int_name: str = "bigint") -> str:
-    """The propagate result-type name the Column builders pass."""
-    if isinstance(dt, FloatType):
-        return "float"
-    return "double" if is_float_type(dt) else int_name
-
-
-class SqlAggContext:
-    """Everything a SQL-text builder needs: pre-quoted column texts."""
-
-    def __init__(self, v: str, dt: DataType, idx: str | None, kwargs: dict):
-        self.v = v
-        self.dt = dt
-        self.idx = idx
-        self.kwargs = kwargs
-
-    @property
-    def missing(self) -> str:
-        return sql_missing(self.v, self.dt)
-
-    @property
-    def v_skip(self) -> str:
-        return _sql_skip(self.v, self.dt)
-
-
-def _sql_count(c: SqlAggContext) -> str:
-    return f"count({c.v_skip})"
-
-
-def _sql_sum(c: SqlAggContext, skipna: bool) -> str | None:
-    v = _sql_value_arith(c.v, c.dt)
-    if v is None:
-        return None
-    zero = f"CAST(0 AS {_SQL_D})" if is_float_type(c.dt) else "CAST(0 AS BIGINT)"
-    expr = _sql_restore_f32(f"coalesce(sum({v}), {zero})", c.dt)
-    if skipna:
-        return expr
-    return _sql_propagate(c.missing, expr, _sql_rdt(c.dt))
-
-
-def _sql_mean(c: SqlAggContext, skipna: bool) -> str | None:
-    v = _sql_value_arith(c.v, c.dt)
-    if v is None:
-        return None
-    expr = _sql_restore_f32(f"avg({v})", c.dt)
-    if skipna:
-        return expr
-    return _sql_propagate(c.missing, expr, _sql_rdt(c.dt, int_name="double"))
-
-
-def _sql_var(c: SqlAggContext, skipna: bool, std: bool) -> str | None:
-    v = _sql_value_arith(c.v, c.dt)
-    if v is None:
-        return None
-    ddof = int(c.kwargs.get("ddof", 0))
-    if ddof == 0:
-        expr = f"var_pop({v})"
-    elif ddof == 1:
-        expr = f"var_samp({v})"
-    else:
-        expr = (
-            f"CASE WHEN count({v}) > {ddof} THEN "
-            f"((var_pop({v}) * count({v})) / (count({v}) - {ddof})) "
-            f"ELSE CAST('NaN' AS {_SQL_D}) END"
-        )
-    if std:
-        expr = f"sqrt({expr})"
-    expr = _sql_restore_f32(expr, c.dt)
-    rdt = _sql_rdt(c.dt, int_name="double")
-    expr = f"coalesce({expr}, {_sql_sentinel(rdt)})"
-    return expr if skipna else _sql_propagate(c.missing, expr, rdt)
-
-
-def _sql_minmax(c: SqlAggContext, skipna: bool, is_max: bool) -> str:
-    f = "max" if is_max else "min"
-    expr = f"{f}({c.v_skip})"
-    if skipna:
-        return expr
-    return _sql_propagate(c.missing, expr, c.dt.simpleString())
-
-
-def _sql_first_last(c: SqlAggContext, skipna: bool, is_last: bool) -> str | None:
-    if c.idx is None:
-        return None
-    v = c.v if skipna else _sql_prop(c.v, c.dt)
-    pair = f"struct({c.idx} AS i, {v} AS v)"
-    if skipna:
-        pair = f"CASE WHEN NOT {c.missing} THEN {pair} END"
-    f = "max" if is_last else "min"
-    return f"{f}({pair}).v"
-
-
-def _sql_arg(c: SqlAggContext, skipna: bool, is_max: bool) -> str | None:
-    if c.idx is None:
-        return None
-    if is_max:
-        pair = f"CASE WHEN NOT {c.missing} THEN struct({c.v} AS v, -({c.idx}) AS ni) END"
-        best = f"-(max({pair}).ni)"
-    else:
-        pair = f"CASE WHEN NOT {c.missing} THEN struct({c.v} AS v, {c.idx} AS i) END"
-        best = f"min({pair}).i"
-    if skipna:
-        return best
-    first_missing = f"min(CASE WHEN {c.missing} THEN {c.idx} END)"
-    return f"CASE WHEN bool_or({c.missing}) THEN {first_missing} ELSE {best} END"
-
-
-def _sql_any_all(c: SqlAggContext, is_all: bool) -> str | None:
-    if dt_mod.is_bool_type(c.dt):
-        b = c.v
-    elif is_float_type(c.dt):
-        b = f"CASE WHEN {c.v} IS NOT NULL THEN (isnan({c.v}) OR ({c.v} != 0.0D)) END"
-    elif is_datetime_type(c.dt) or is_timedelta_type(c.dt):
-        return None  # numericized comparison: keep the Column path
-    else:
-        b = f"CASE WHEN {c.v} IS NOT NULL THEN ({c.v} != 0) END"
-    expr = f"bool_and({b})" if is_all else f"bool_or({b})"
-    return f"coalesce({expr}, false)"
-
-
-def _sql_nunique(c: SqlAggContext, skipna: bool) -> str:
-    dc = f"count(DISTINCT {c.v_skip})"
-    if skipna:
-        return dc
-    return f"{dc} + max(CASE WHEN {c.missing} THEN 1 ELSE 0 END)"
-
-
-# name -> text builder; mirrors REDUCTIONS for the simple shapes.
-# prod/nanprod are NOT here: F.product has no SQL surface (the
-# Product aggregate is DataFrame-API-only), and the quantile/mode
-# families route through their own strategies in core.py.
-SQL_BUILDERS: dict[str, Callable[[SqlAggContext], str | None]] = {
-    "count": _sql_count,
-    "nanlen": _sql_count,
-    "len": lambda c: "count(1)",
-    "sum": lambda c: _sql_sum(c, skipna=False),
-    "nansum": lambda c: _sql_sum(c, skipna=True),
-    "mean": lambda c: _sql_mean(c, skipna=False),
-    "nanmean": lambda c: _sql_mean(c, skipna=True),
-    "var": lambda c: _sql_var(c, skipna=False, std=False),
-    "nanvar": lambda c: _sql_var(c, skipna=True, std=False),
-    "std": lambda c: _sql_var(c, skipna=False, std=True),
-    "nanstd": lambda c: _sql_var(c, skipna=True, std=True),
-    "min": lambda c: _sql_minmax(c, skipna=False, is_max=False),
-    "nanmin": lambda c: _sql_minmax(c, skipna=True, is_max=False),
-    "max": lambda c: _sql_minmax(c, skipna=False, is_max=True),
-    "nanmax": lambda c: _sql_minmax(c, skipna=True, is_max=True),
-    "first": lambda c: _sql_first_last(c, skipna=False, is_last=False),
-    "last": lambda c: _sql_first_last(c, skipna=False, is_last=True),
-    "nanfirst": lambda c: _sql_first_last(c, skipna=True, is_last=False),
-    "nanlast": lambda c: _sql_first_last(c, skipna=True, is_last=True),
-    "argmin": lambda c: _sql_arg(c, skipna=False, is_max=False),
-    "argmax": lambda c: _sql_arg(c, skipna=False, is_max=True),
-    "nanargmin": lambda c: _sql_arg(c, skipna=True, is_max=False),
-    "nanargmax": lambda c: _sql_arg(c, skipna=True, is_max=True),
-    "all": lambda c: _sql_any_all(c, is_all=True),
-    "any": lambda c: _sql_any_all(c, is_all=False),
-    "nannunique": lambda c: _sql_nunique(c, skipna=True),
-    "nunique": lambda c: _sql_nunique(c, skipna=False),
-}
+_reg("nunique", lambda c: _nunique(c, skipna=False), default_fill=0)
 
 
 def pandas_aggregation(
@@ -700,7 +484,7 @@ def pandas_aggregation(
     udf = pandas_udf(fn, return_type, PandasUDFType.GROUPED_AGG)
 
     def build(ctx: AggContext) -> Column:
-        return udf(ctx.v_skip if skipna else dt_mod.to_prop(ctx.value, ctx.dt))
+        return udf(ctx.v_skip if skipna else F.expr(sql_prop(ctx.value_sql, ctx.dt)))
 
     return Aggregation(name=name, build=build, default_fill=default_fill)
 

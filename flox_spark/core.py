@@ -28,8 +28,16 @@ from typing import Any, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flox_spark.aggregations import REDUCTIONS, AggContext, Aggregation
-from flox_spark.dtypes import NAN, arith_input, is_datetime_type, is_float_type, is_missing
+from flox_spark.aggregations import REDUCTIONS, AggContext, Aggregation, agg_column, sql_sentinel
+from flox_spark.dtypes import (
+    NAN,
+    arith_input,
+    is_datetime_type,
+    is_float_type,
+    sql_arith_input,
+    sql_missing,
+    sql_quote,
+)
 from flox_spark.options import OPTIONS
 
 __all__ = ["groupby_reduce"]
@@ -134,8 +142,55 @@ def _fold_negzero(b: str, bdt) -> Column:
     the group's first-encountered RAW bits — so an un-normalized
     ``-0.0`` key makes the emitted key order- and strategy-dependent.
     One codegen'd projection; NaN labels are already filtered by the
-    ``is_missing`` drop above every call site."""
-    return F.when(F.col(b) == 0, F.lit(0.0).cast(bdt)).otherwise(F.col(b))
+    missing-label drop above every call site."""
+    q = sql_quote(b)
+    return F.expr(f"CASE WHEN {q} = 0 THEN CAST(0.0D AS {bdt.simpleString()}) ELSE {q} END")
+
+
+def _prep_labels(
+    df: DataFrame, by: Sequence[str], isbin_t: Sequence[bool], expected_t: Sequence,
+    closed_t: Sequence[str], snapshots: dict[str, str],
+) -> tuple[DataFrame, list[str], list, dict[str, str]]:
+    """Label prep shared by ``groupby_reduce`` and
+    ``groupby_reduce_multi``: per key, drop rows whose label is NULL or
+    NaN (flox/factorize.py:201-212), digitize binned keys into
+    ``{by}_bin`` (out-of-range rows dropped), and fold ``-0.0`` float
+    keys.  The fold is a GROUPING-KEY normalization only: a float key
+    that is also a value column is first copied to its
+    ``snapshots[key]`` name, so sign-sensitive reductions (first/min/sum
+    of all -0.0) see the raw bits.  Returns (work, key_cols, by_dts,
+    raw) with ``raw``: value column -> the snapshot actually taken."""
+    schema = df.schema
+    work = df
+    key_cols: list[str] = []
+    by_dts: list = []
+    raw: dict[str, str] = {}
+    for i, b in enumerate(by):
+        bdt = schema[b].dataType
+        by_dts.append(bdt)
+        work = work.filter(F.expr(f"NOT {sql_missing(sql_quote(b), bdt)}"))
+        if isbin_t[i]:
+            kc = f"{b}_bin"
+            work = work.withColumn(kc, _bin_column(F.col(b), expected_t[i], bdt, closed_t[i]))
+            work = work.filter(F.col(kc).isNotNull())  # out-of-range
+        else:
+            kc = b
+            if is_float_type(bdt):
+                if b in snapshots:
+                    raw[b] = snapshots[b]
+                    work = work.withColumn(raw[b], F.col(b))
+                work = work.withColumn(b, _fold_negzero(b, bdt))
+        key_cols.append(kc)
+    return work, key_cols, by_dts, raw
+
+
+def _order_sql(schema, order_by: str | None) -> str | None:
+    """The total-order column as numericized SQL text: arg* tie-breaks
+    negate it, and the int64-us view of a datetime order column orders
+    identically."""
+    if order_by is None:
+        return None
+    return sql_arith_input(sql_quote(order_by), schema[order_by].dataType)[0]
 
 
 def _with_bin_labels(
@@ -380,57 +435,13 @@ def groupby_reduce(
         raise ValueError(f"func {agg.name!r} requires order_by= (positional semantics)")
     out_name = alias or agg.name
 
-    # ---- SQL-text fast path (r15; r14 VERDICT next #3) ---------------
-    # The PLAIN reduction shape — no bins, no expected grid, no
-    # min_count/fill, no dtype override — is the registry's hot path
-    # and its Column assembly cost ~270 py4j round trips (~0.17 s) per
-    # plan build.  The same DataFrame operators with every expression
-    # parsed from ONE SQL string (F.expr) build in ~0.05 s with an
-    # IDENTICAL physical plan (aggregations.SQL_BUILDERS docstring;
-    # plan parity pinned in tests/test_reduce.py).  Any shape or dtype
-    # the text twins do not cover falls through to the generic builder
-    # below — never a semantic fork, only an assembly-cost one.
-    if (
-        expected_groups is None
-        and isbin is False
-        and not bin_labels
-        and fill_value is None
-        and min_count is None
-        and dtype is None
-        and isinstance(func, str)
-    ):
-        fast = _sql_simple_path(
-            df, by, agg, value, order_by, out_name, sort, finalize_kwargs
-        )
-        if fast is not None:
-            return fast
-
     # ---- label prep: drop invalid labels, digitize bins -------------
-    key_cols: list[str] = []
-    by_dts: list = []
-    work = df
-    for i, b in enumerate(by):
-        bdt = work.schema[b].dataType
-        by_dts.append(bdt)
-        work = work.filter(~is_missing(F.col(b), bdt))
-        if isbin_t[i]:
-            kc = f"{b}_bin"
-            work = work.withColumn(kc, _bin_column(F.col(b), expected_t[i], bdt, closed_t[i]))
-            work = work.filter(F.col(kc).isNotNull())  # out-of-range
-        else:
-            kc = b
-            if is_float_type(bdt):
-                if b == value:
-                    # the fold is a GROUPING-KEY normalization only:
-                    # when the key column is also the value column
-                    # (groupby_reduce(by=b, value=b)), snapshot the
-                    # raw bits first so sign-sensitive reductions
-                    # (first/min/sum of all -0.0) see -0.0 values
-                    work = work.withColumn("__fs_value_raw", F.col(value))
-                    value = "__fs_value_raw"
-                work = work.withColumn(b, _fold_negzero(b, bdt))
-        key_cols.append(kc)
-
+    work, key_cols, by_dts, raw = _prep_labels(
+        df, by, isbin_t, expected_t, closed_t, {value: "__fs_value_raw"}
+    )
+    schema = df.schema
+    vdt = schema[value].dataType
+    value = raw.get(value, value)
     if dtype is not None:
         # flox's dtype= governs the ACCUMULATOR (the kernel runs in
         # the requested dtype, flox/aggregations.py:925-1030): cast
@@ -438,21 +449,9 @@ def groupby_reduce(
         # dtype=float64 keeps double precision instead of being
         # restored to float32 and re-widened
         work = work.withColumn(value, F.col(value).cast(_spark_type(dtype)))
-
-    vdt = work.schema[value].dataType
-    idx_col = None
-    if order_by:
-        # arg* tie-breaks negate the order key: numericize datetime
-        # order columns (their int64-us view orders identically)
-        from flox_spark.dtypes import arith_input as _ai
-
-        idx_col, _ = _ai(F.col(order_by), work.schema[order_by].dataType)
-    ctx = AggContext(
-        value=F.col(value),
-        dt=vdt,
-        idx=idx_col,
-        kwargs=dict(finalize_kwargs or {}),
-    )
+        schema = work.schema
+        vdt = schema[value].dataType
+    ctx = AggContext(sql_quote(value), vdt, _order_sql(schema, order_by), dict(finalize_kwargs or {}))
 
     # ---- vector-q quantile: q=[...] adds a per-q output row ---------
     # (reference quantile_new_dims_func adds a q dimension,
@@ -467,6 +466,10 @@ def groupby_reduce(
     # ---- min_count defaulting (flox/core.py:1026-1038) --------------
     if min_count is None and fill_value is not None and any(e is not None for e in expected_t):
         min_count = 1
+    if min_count is not None and min_count > 0 and agg.name in ("nansum", "nanprod") and fill_value is None:
+        # their identity fill (0/1) gives way to NaN once min_count is
+        # set, for masked AND absent groups (flox/core.py:1036-1038)
+        fill_value = NAN
 
     # ---- aggregate --------------------------------------------------
     qfam = agg.name in ("median", "nanmedian", "quantile", "nanquantile")
@@ -500,7 +503,7 @@ def groupby_reduce(
             two_level=(quantile_impl == "refine2"),
         )
     else:
-        expr = agg.build(ctx)
+        expr = agg_column(agg, ctx)
         if min_count is not None and min_count > 0:
             cnt = F.count(ctx.v_skip)
             fill_scalar = fill_value if fill_value is not None else agg.default_fill
@@ -509,7 +512,7 @@ def groupby_reduce(
         aggs_list = [expr.alias(out_name)]
         if occ_needed:
             # fused into the one aggregation pass — no extra scan
-            aggs_list.append(F.min(idx_col).alias("__occ"))
+            aggs_list.append(F.expr(f"min({ctx.order_sql})").alias("__occ"))
             occ_needed = False
         agg_in = work
         if qfam and not OPTIONS["approx_quantile"]:
@@ -531,7 +534,7 @@ def groupby_reduce(
         # first-occurrence position with a separate group-sized
         # aggregate + join (only when the caller asked for sort=False
         # WITH an order column — never on the default path)
-        occ = work.groupBy(*key_cols).agg(F.min(idx_col).alias("__occ"))
+        occ = work.groupBy(*key_cols).agg(F.expr(f"min({ctx.order_sql})").alias("__occ"))
         result = result.join(occ, key_cols, "left")
 
     # ---- expected-groups reindex (flox/reindex.py:160-216) ----------
@@ -604,94 +607,6 @@ def groupby_reduce(
             result = _tiny_sorted(result, *oc, input_df=work).drop("__occ")
         else:
             result = result.orderBy(*oc).drop("__occ")
-    return result
-
-
-def _sql_simple_path(
-    df: DataFrame,
-    by: tuple,
-    agg,
-    value: str,
-    order_by: str | None,
-    out_name: str,
-    sort: bool,
-    finalize_kwargs: dict | None,
-) -> DataFrame | None:
-    """The plain-reduction build with every expression parsed from SQL
-    text (one py4j round trip each) instead of assembled Column-call by
-    Column-call.  Same DataFrame operators, same expressions, same
-    physical plan (tests/test_reduce.py::test_sql_twin_plan_parity) —
-    returns None whenever the shape or a dtype is outside the text
-    twins' coverage, sending the caller to the generic builder."""
-    from flox_spark import aggregations as A
-
-    if df.isStreaming:
-        return None
-    builder = A.SQL_BUILDERS.get(agg.name)
-    if builder is None:
-        return None
-    fkw = dict(finalize_kwargs or {})
-    if set(fkw) - {"ddof"}:
-        return None
-    schema = df.schema
-    names = set(df.columns)
-    # missing columns fall through: the generic path owns the errors
-    if value not in names or any(b not in names for b in by):
-        return None
-    vdt = schema[value].dataType
-    idx_sql = None
-    if order_by is not None:
-        if order_by not in names:
-            return None
-        idx_sql = A.sql_arith_idx(
-            A.sql_quote(order_by), schema[order_by].dataType
-        )
-        if idx_sql is None:
-            return None
-    # ---- label prep (text twin of the generic loop) ------------------
-    preds: list[str] = []
-    folds: list[tuple[str, str]] = []
-    work_value = value
-    snapshot = False
-    for b in by:
-        bdt = schema[b].dataType
-        preds.append(f"NOT {A.sql_missing(A.sql_quote(b), bdt)}")
-        if is_float_type(bdt):
-            if b == value:
-                # grouping-key normalization only: snapshot the raw
-                # bits first (sign-sensitive reductions see -0.0)
-                snapshot = True
-                work_value = "__fs_value_raw"
-            from pyspark.sql.types import FloatType
-
-            t = "FLOAT" if isinstance(bdt, FloatType) else "DOUBLE"
-            folds.append(
-                (
-                    b,
-                    f"CASE WHEN {A.sql_quote(b)} = 0 "
-                    f"THEN CAST(0.0D AS {t}) ELSE {A.sql_quote(b)} END",
-                )
-            )
-    work = df.filter(F.expr(" AND ".join(preds)))
-    if snapshot:
-        work = work.withColumn("__fs_value_raw", F.col(value))
-    for b, txt in folds:
-        work = work.withColumn(b, F.expr(txt))
-    ctx = A.SqlAggContext(A.sql_quote(work_value), vdt, idx_sql, fkw)
-    expr_sql = builder(ctx)
-    if expr_sql is None:
-        return None
-    aggs_list = [F.expr(expr_sql).alias(out_name)]
-    occ = (not sort) and order_by is not None
-    if occ:
-        # fused first-occurrence position, as in the generic path
-        aggs_list.append(F.expr(f"min({idx_sql})").alias("__occ"))
-    result = work.groupBy(*by).agg(*aggs_list)
-    if sort:
-        return _sorted_output(result, list(by), None, heavy=False, input_df=work)
-    if occ:
-        # declared_card is None on this path -> always the plain order
-        return result.orderBy(F.col("__occ").asc_nulls_last()).drop("__occ")
     return result
 
 
@@ -869,30 +784,11 @@ def groupby_reduce_multi(
         (spec["value"] if isinstance(spec, dict) else spec[1])
         for spec in aggs.values()
     }
-    raw_map: dict[str, str] = {}
-    work = df
-    key_cols: list[str] = []
-    by_dts: list = []
-    for i, b in enumerate(by):
-        bdt = work.schema[b].dataType
-        by_dts.append(bdt)
-        work = work.filter(~is_missing(F.col(b), bdt))
-        if isbin_t[i]:
-            kc = f"{b}_bin"
-            work = work.withColumn(kc, _bin_column(F.col(b), expected_t[i], bdt, closed_t[i]))
-            work = work.filter(F.col(kc).isNotNull())
-        else:
-            kc = b
-            if is_float_type(bdt):
-                if b in agg_value_cols:
-                    # grouping-key normalization only: preserve the
-                    # raw value bits for aggs over the key column
-                    # itself (see groupby_reduce's same branch)
-                    raw = f"__fs_raw__{b}"
-                    work = work.withColumn(raw, F.col(b))
-                    raw_map[b] = raw
-                work = work.withColumn(b, _fold_negzero(b, bdt))
-        key_cols.append(kc)
+    work, key_cols, by_dts, raw_map = _prep_labels(
+        df, by, isbin_t, expected_t, closed_t, {v: f"__fs_raw__{v}" for v in agg_value_cols}
+    )
+    schema = df.schema
+    order_sql = _order_sql(schema, order_by)
 
     exprs = []
     fills: dict[str, Any] = {}
@@ -903,7 +799,7 @@ def groupby_reduce_multi(
         else:
             func, value = spec
             fk = {}
-        value = raw_map.get(value, value)
+        spec_value, value = value, raw_map.get(value, value)
         if isinstance(func, str):
             if func not in REDUCTIONS:
                 raise ValueError(f"unknown reduction {func!r}")
@@ -933,50 +829,14 @@ def groupby_reduce_multi(
                 "groupby_reduce for the multi-stage exact paths.",
                 stacklevel=2,
             )
-        vdt = work.schema[value].dataType
-        # SQL-text twin per expression (r15, see groupby_reduce's fast
-        # path): same expression tree from one F.expr parse instead of
-        # per-call Column assembly; builders return None on shapes
-        # they do not cover and the Column path below stands in
-        txt = None
-        if isinstance(func, str) and not (fk and set(fk) - {"ddof"}):
-            from flox_spark import aggregations as A
-
-            sb = A.SQL_BUILDERS.get(agg.name)
-            if sb is not None:
-                idx_sql = (
-                    A.sql_arith_idx(
-                        A.sql_quote(order_by), work.schema[order_by].dataType
-                    )
-                    if order_by
-                    else None
-                )
-                if not (agg.needs_order and idx_sql is None):
-                    txt = sb(A.SqlAggContext(A.sql_quote(value), vdt, idx_sql, fk))
-        if txt is not None:
-            exprs.append(F.expr(txt).alias(out_name))
-        else:
-            # numericize the order column exactly as groupby_reduce
-            # does: arg* builders negate idx for the tie-break, which
-            # fails on timestamp/date order columns without the int64
-            # view
-            idx_col = None
-            if order_by:
-                idx_col, _ = arith_input(F.col(order_by), work.schema[order_by].dataType)
-            ctx = AggContext(
-                value=F.col(value),
-                dt=vdt,
-                idx=idx_col,
-                kwargs=fk,
-            )
-            exprs.append(agg.build(ctx).alias(out_name))
+        ctx = AggContext(sql_quote(value), schema[spec_value].dataType, order_sql, dict(fk))
+        exprs.append(agg_column(agg, ctx).alias(out_name))
         fills[out_name] = fill_value if fill_value is not None else agg.default_fill
 
     all_declared = all(e is not None for e in expected_t)
     if (not sort) and order_by is not None and not all_declared:
         # sort=False occurrence order (see groupby_reduce) — fused
-        occ_idx, _ = arith_input(F.col(order_by), work.schema[order_by].dataType)
-        exprs.append(F.min(occ_idx).alias("__occ"))
+        exprs.append(F.expr(f"min({order_sql})").alias("__occ"))
     result = work.groupBy(*key_cols).agg(*exprs)
 
     if any(e is not None for e in expected_t):
@@ -1054,12 +914,11 @@ def _quantile_sort(
 
     Returns the same shape as the aggregate path (scalar double or
     per-q array), so reindex/explode/sort downstream are shared."""
-    from flox_spark.aggregations import _nan_sentinel
-    from flox_spark.dtypes import arith_input as _ai, arith_restore, is_timedelta_type
+    from flox_spark.dtypes import arith_restore, is_timedelta_type
 
     skipna, is_vec, qlist = _q_params(ctx, agg)
 
-    av, _ = _ai(ctx.v_skip, ctx.dt)
+    av, _ = ctx.arith()
     work2 = work.withColumn("__qv", av).withColumn("__miss", ctx.missing)
     gaggs = [F.count("__qv").alias("__n")]
     if not skipna:
@@ -1101,7 +960,7 @@ def _quantile_sort(
     dtish = is_datetime_type(ctx.dt) or is_timedelta_type(ctx.dt)
     val = arith_restore(F.col("__val"), ctx.dt) if dtish else F.col("__val")
     if not skipna:
-        sentinel = _nan_sentinel(ctx.dt) if dtish else _nan_sentinel("double")
+        sentinel = F.expr(sql_sentinel(ctx.dt if dtish else "double"))
         val = F.when(F.col("__poison"), sentinel).otherwise(val)
     if min_count is not None and min_count > 0:
         fill = _fill_literal(fill_value if fill_value is not None else agg.default_fill)
@@ -1178,15 +1037,14 @@ def _quantile_arrow(
     aggregations.py:688-710), i.e. identical rounding."""
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    from flox_spark.aggregations import _nan_sentinel
-    from flox_spark.dtypes import arith_input as _ai, arith_restore, is_timedelta_type
+    from flox_spark.dtypes import arith_restore, is_timedelta_type
     from flox_spark.plans.util import pin_keyed_parallelism
 
     skipna, is_vec, qlist = _q_params(ctx, agg)
     qs = tuple(qlist)
     m = len(qs)
 
-    av, _ = _ai(ctx.v_skip, ctx.dt)
+    av, _ = ctx.arith()
     # v_skip already nulled policy-NaNs, so after the Arrow transfer
     # every pandas NaN means "missing of either kind" and one isnan
     # mask is the whole cleaning pass — n_miss is then just
@@ -1239,7 +1097,6 @@ def _finalize_qarrays(
     kernel's deliberate None re-entry) and is reconstructed from
     ``n`` here, so both kernels share one NaN/NULL/min_count/poison
     rule by construction."""
-    from flox_spark.aggregations import _nan_sentinel
     from flox_spark.dtypes import arith_restore, is_timedelta_type
 
     skipna, is_vec, qlist = _q_params(ctx, agg)
@@ -1248,7 +1105,7 @@ def _finalize_qarrays(
     n = F.element_at(F.col("__qa"), m + 1)
     poison = F.element_at(F.col("__qa"), m + 2) > 0
     dtish = is_datetime_type(ctx.dt) or is_timedelta_type(ctx.dt)
-    sentinel = _nan_sentinel(ctx.dt) if dtish else _nan_sentinel("double")
+    sentinel = F.expr(sql_sentinel(ctx.dt if dtish else "double"))
     fill_scalar = fill_value if fill_value is not None else agg.default_fill
 
     # see the docstring's Arrow-boundary note: non-empty group's
@@ -1338,7 +1195,6 @@ def _quantile_driver(
     falls back to the "arrow" kernel."""
     import numpy as np
 
-    from flox_spark.dtypes import arith_input as _ai
 
     skipna, is_vec, qlist = _q_params(ctx, agg)
     qs = list(qlist)
@@ -1358,7 +1214,7 @@ def _quantile_driver(
         _QUANTILE_DRIVER_HARD_FACTOR * OPTIONS["quantile_driver_max_bytes"]
     ):
         return None
-    av, _ = _ai(ctx.v_skip, ctx.dt)
+    av, _ = ctx.arith()
     sel = work.select(*[F.col(k) for k in key_cols], av.cast("double").alias("__qv"))
     try:
         import pyarrow as pa
@@ -1745,8 +1601,7 @@ def _quantile_refine(
     O(sqrt(n)*log n) across the whole refine zone.  Returns the same
     shape as the aggregate path (scalar double or per-q array).
     """
-    from flox_spark.aggregations import _nan_sentinel
-    from flox_spark.dtypes import arith_input as _ai, arith_restore, is_timedelta_type
+    from flox_spark.dtypes import arith_restore, is_timedelta_type
 
     skipna, is_vec, qlist = _q_params(ctx, agg)
 
@@ -1764,7 +1619,7 @@ def _quantile_refine(
     # window — silently mis-bracketing the quantile.)
     cutoff = max(_REFINE_CUTOFF_FLOOR, acc)
 
-    av, _ = _ai(ctx.v_skip, ctx.dt)
+    av, _ = ctx.arith()
     work2 = work.withColumn("__qv", av).withColumn("__miss", ctx.missing)
 
     probs: list[float] = []
@@ -1844,7 +1699,7 @@ def _quantile_refine(
         if dtish:
             val = arith_restore(val, ctx.dt)
         if not skipna:
-            sentinel = _nan_sentinel(ctx.dt) if dtish else _nan_sentinel("double")
+            sentinel = F.expr(sql_sentinel(ctx.dt if dtish else "double"))
             val = F.when(F.col("__poison"), sentinel).otherwise(val)
         if min_count is not None and min_count > 0:
             fill = _fill_literal(fill_value if fill_value is not None else agg.default_fill)

@@ -79,15 +79,6 @@ def to_skip(col: Column, dt: DataType) -> Column:
     return col
 
 
-def to_prop(col: Column, dt: DataType) -> Column:
-    """Missing -> NaN (the NaN-propagating view).  Only float types
-    can hold NaN; other types have no missing representation in numpy,
-    so they pass through."""
-    if is_float_type(dt):
-        return F.coalesce(col, F.lit(NAN).cast(dt))
-    return col
-
-
 def is_missing(col: Column, dt: DataType) -> Column:
     """Boolean: row's value is missing (NULL or NaN)."""
     if is_float_type(dt):
@@ -143,3 +134,72 @@ def arith_restore(col: Column, original: DataType) -> Column:
     if isinstance(original, BooleanType):
         return col.cast("boolean")
     return col
+
+
+# ---------------------------------------------------------------------------
+# SQL-text forms of the same policy.  The reduction registry builds its
+# expressions as SQL text (one py4j round trip per F.expr parse instead
+# of one per F.* call); each helper below spells the rule above it in
+# text that analyzes to the same expression tree.  ``v`` is column or
+# expression text, already quoted (``sql_quote``).
+# ---------------------------------------------------------------------------
+
+
+def sql_quote(name: str) -> str:
+    """Backtick-quote a column name for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_missing(v: str, dt: DataType) -> str:
+    """Text form of ``is_missing``."""
+    if is_float_type(dt):
+        return f"({v} IS NULL OR isnan({v}))"
+    return f"({v} IS NULL)"
+
+
+def sql_skip(v: str, dt: DataType) -> str:
+    """Text form of ``to_skip``: missing -> NULL."""
+    if is_float_type(dt):
+        return f"nanvl({v}, CAST(NULL AS {dt.simpleString()}))"
+    return v
+
+
+def sql_prop(v: str, dt: DataType) -> str:
+    """Missing -> NaN (the NaN-propagating view).  Only float types
+    can hold NaN; other types have no missing representation in numpy,
+    so they pass through."""
+    if is_float_type(dt):
+        return f"coalesce({v}, CAST('NaN' AS {dt.simpleString()}))"
+    return v
+
+
+def sql_arith_input(v: str, dt: DataType) -> tuple[str, DataType]:
+    """Text form of ``arith_input``: bool -> int, datetime and
+    timedelta -> int64 microseconds."""
+    from pyspark.sql.types import LongType
+
+    if is_bool_type(dt):
+        return f"CAST({v} AS BIGINT)", LongType()
+    if isinstance(dt, (TimestampType, TimestampNTZType)):
+        return f"unix_micros(CAST({v} AS TIMESTAMP))", LongType()
+    if isinstance(dt, DateType):
+        return f"CAST(datediff({v}, CAST('1970-01-01' AS DATE)) AS BIGINT)", LongType()
+    if isinstance(dt, DayTimeIntervalType):
+        return f"unix_micros((timestamp_micros(0) + {v}))", LongType()
+    return v, dt
+
+
+def sql_arith_restore(v: str, original: DataType) -> str:
+    """Text form of ``arith_restore``."""
+    if isinstance(original, (TimestampType, TimestampNTZType)):
+        return f"CAST(timestamp_micros(CAST({v} AS BIGINT)) AS {original.simpleString()})"
+    if isinstance(original, DateType):
+        return f"date_add(CAST('1970-01-01' AS DATE), CAST({v} AS INT))"
+    if isinstance(original, DayTimeIntervalType):
+        return (
+            f"CAST((timestamp_micros(CAST({v} AS BIGINT)) - timestamp_micros(0)) "
+            f"AS {original.simpleString()})"
+        )
+    if isinstance(original, BooleanType):
+        return f"CAST({v} AS BOOLEAN)"
+    return v

@@ -22,9 +22,9 @@ from __future__ import annotations
 from typing import Any, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from flox_spark.aggregations import REDUCTIONS, AggContext
+from flox_spark.aggregations import REDUCTIONS, AggContext, agg_column
+from flox_spark.dtypes import sql_quote
 
 __all__ = ["groupby_pivot"]
 
@@ -54,11 +54,8 @@ def groupby_pivot(
             f"{func!r} needs a multi-stage / ordered plan and cannot fuse "
             "into a pivot aggregate; pivot the long groupby_reduce output instead"
         )
-    ctx = AggContext(
-        value=F.col(value), dt=df.schema[value].dataType, idx=None,
-        kwargs=dict(finalize_kwargs or {}),
-    )
-    out = df.groupBy(*by).pivot(pivot, list(values)).agg(agg.build(ctx))
+    ctx = AggContext(sql_quote(value), df.schema[value].dataType, kwargs=dict(finalize_kwargs or {}))
+    out = df.groupBy(*by).pivot(pivot, list(values)).agg(agg_column(agg, ctx))
     if fill_value is not None:
         out = out.fillna(fill_value, subset=[str(v) for v in values])
     if sort:

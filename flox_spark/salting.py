@@ -56,7 +56,7 @@ __all__ = ["diagnose_skew", "groupby_reduce_salted", "SALTABLE"]
 # (parity holds, exactness doesn't).  float32
 # results restore to float, and the plain-func poison sentinel is NaN
 # for float results / typed NULL otherwise (mirrors
-# aggregations._nan_sentinel / _propagate).
+# aggregations.sql_sentinel / _propagate).
 def _specs(is_float: bool, in_dt) -> dict[str, tuple[Callable, Callable]]:
     from pyspark.sql.types import FloatType
 

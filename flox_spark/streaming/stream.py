@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flox_spark.aggregations import REDUCTIONS, AggContext, Aggregation
+from flox_spark.aggregations import REDUCTIONS, AggContext, Aggregation, agg_column
+from flox_spark.dtypes import sql_quote
 
 
 def _build_expr(df: DataFrame, func: str | Aggregation, value: str, fk: dict | None) -> Column:
@@ -33,6 +34,7 @@ def _build_expr(df: DataFrame, func: str | Aggregation, value: str, fk: dict | N
             f"{agg.name} needs a total order or multiple passes — not available "
             "on an unbounded stream; use the batch engine on a sink table"
         )
+    ctx = AggContext(sql_quote(value), df.schema[value].dataType, kwargs=dict(fk or {}))
     if agg.name in ("median", "nanmedian", "quantile", "nanquantile"):
         # exact quantile state would buffer EVERY value of every open
         # (window, key) in the state store — unbounded.  Streaming
@@ -51,12 +53,8 @@ def _build_expr(df: DataFrame, func: str | Aggregation, value: str, fk: dict | N
                 stacklevel=3,
             )
         with set_options(approx_quantile=True):
-            ctx = AggContext(
-                value=F.col(value), dt=df.schema[value].dataType, kwargs=dict(fk or {})
-            )
-            return agg.build(ctx)
-    ctx = AggContext(value=F.col(value), dt=df.schema[value].dataType, kwargs=dict(fk or {}))
-    return agg.build(ctx)
+            return agg_column(agg, ctx)
+    return agg_column(agg, ctx)
 
 
 def groupby_reduce_stream(

@@ -410,7 +410,6 @@ def test_driver_kernel_nan_key_list_path_direct(spark):
     # merge two groups into one key).
     import flox_spark.core as C
     from flox_spark.aggregations import REDUCTIONS, AggContext
-    import pyspark.sql.functions as SF
 
     work = spark.createDataFrame(
         [(float("nan"), 1.0), (float("nan"), 3.0),
@@ -419,7 +418,7 @@ def test_driver_kernel_nan_key_list_path_direct(spark):
         "k double, v double",
     )
     agg = REDUCTIONS["nanmedian"]
-    ctx = AggContext(value=SF.col("v"), dt=work.schema["v"].dataType)
+    ctx = AggContext("`v`", work.schema["v"].dataType)
     out = C._quantile_driver(work, ["k"], ctx, agg, "m", None, None)
     assert out is not None, "kernel declined unexpectedly"
     got = sorted(((str(r["k"]), r["m"]) for r in out.collect()), key=str)

@@ -1,6 +1,7 @@
 """Decompose a query's wall into BUILD (DataFrame construction:
 py4j plan assembly + any gated plan-build collects) and EXEC, with an
-optional cProfile of the build.  Usage:
+optional cProfile of the build.  Prints one row per run, then the best
+wall and the best build, each taken over all runs.  Usage:
 
     python tools/build_profile.py quantile dedup_documents [--profile]
 """
@@ -36,17 +37,20 @@ def main() -> None:
     force(qs["sum"](spark, sf_dir))  # warm
 
     for name in names:
-        best = None
+        walls, builds = [], []
         for _ in range(n_runs):
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
-            tb = time.perf_counter() - t0
+            builds.append(time.perf_counter() - t0)
             force(df)
-            dt = time.perf_counter() - t0
-            if best is None or dt < best[0]:
-                best = (dt, tb)
-        print(f"{name:22s} wall={best[0]:.3f}s build={best[1]:.3f}s exec={best[0]-best[1]:.3f}s")
+            walls.append(time.perf_counter() - t0)
+        for i, (w, b) in enumerate(zip(walls, builds)):
+            print(f"{name:22s} run={i} wall={w:.3f}s build={b:.3f}s exec={w - b:.3f}s")
+        # best-of-N of each quantity on its own: build and exec can
+        # anti-correlate across runs (JIT, cache warm-up), so the build
+        # of the best-wall run is not the best build
+        print(f"{name:22s} best wall={min(walls):.3f}s best build={min(builds):.3f}s")
         if do_profile:
             spark.catalog.clearCache()
             pr = cProfile.Profile()
