@@ -1,7 +1,9 @@
-"""Stats-gated routing between one-window and blocked plans.
+"""The blocked-scan skeleton and the stats-gated routing onto it.
 
-The blocked operators (``scan_blocked`` / ``shift_blocked`` /
-``rank_blocked`` / ``ewm_blocked``) exist for FEW-GROUPS GIANT-GROUP
+``blocked_scan`` is the one block -> local -> fold -> combine plan;
+the blocked operators (``scan_blocked`` / ``shift_blocked`` /
+``rank_blocked`` / ``ewm_blocked``) are ``BlockedSpec`` carry specs
+over it.  They exist for FEW-GROUPS GIANT-GROUP
 shapes, where a WindowExec / per-group kernel's parallelism is bound
 by group-key cardinality and one group serializes on one core —
 SCALE.md's measured crossovers put the switch at millions of rows per
@@ -51,7 +53,10 @@ Crossover constants (OPTIONS, measured in SCALE.md r13 on local[32]):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+from typing import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flox_spark.options import OPTIONS
@@ -105,3 +110,121 @@ def route_to_blocked(
         # quantile block function needs a total numeric order view)
         return False
     return row["__n"] / max(row["__g"], 1) > crossover_rows
+
+
+@dataclass(frozen=True)
+class BlockedSpec:
+    """One blocked operator in flox's ``Scan(scan, reduction,
+    binary_op, identity)`` form (reference flox/aggregations.py:715-737):
+
+    - ``local(work, keys)``: the in-block pass over ``keys`` =
+      ``[*by, "__blk"]``, adding the operator's per-row columns;
+    - ``carry``: name -> aggregate Column, the per-(key, block) carry
+      (over ``work``, or over the local pass's output when
+      ``carry_on_local``).  The fold reads every carry inside a lambda,
+      where Catalyst cannot prune it, so list only carries the call
+      uses;
+    - ``identity`` and ``fold(state, block)``: the associative fold of
+      carries; ``block`` is a struct with the carry names as fields;
+    - ``combine(state, total)``: the per-row ``out`` Column, from the
+      exclusive fold of the earlier blocks (and the inclusive group
+      total when ``total``; else ``None``).
+
+    ``descending`` folds blocks from the last to the first (reversed
+    scans, leads, descending ranks)."""
+
+    out: str
+    local: Callable[[DataFrame, list[str]], DataFrame]
+    carry: dict[str, Column]
+    identity: Column
+    fold: Callable[[Column, Column], Column]
+    combine: Callable[[Column, Column | None], Column]
+    descending: bool = False
+    total: bool = False
+    carry_on_local: bool = False
+
+
+def blocked_scan(
+    df: DataFrame,
+    by: Sequence[str],
+    order_view: Column,
+    spec: BlockedSpec,
+    num_blocks: int,
+    missing_block: tuple[Column, int] | None = None,
+) -> DataFrame:
+    """Run ``spec`` as the blocked (Blelloch) plan flox uses across dask
+    chunks (flox/dask.py:576-663):
+
+        stage 0  equal-population blocks: approx-quantile breaks of
+                 ``order_view`` (a lazy broadcast aggregate, no driver
+                 action); __blk = #{breaks < order_view}
+        stage 1  local pass within (key, __blk)     [big shuffle, split]
+        stage 2  per-(key, __blk) carry aggregate   [small]
+        stage 3  exclusive fold of carries over blocks per key: one
+                 F.aggregate over the collected block array  [tiny]
+        stage 4  broadcast-join states back; per-row combine
+
+    The block function is monotone in ``order_view`` — block i's rows
+    all precede block i+1's and tied values share one block — so blocks
+    stay equal-population under skewed (bursty) orders where uniform
+    [min, max] ranges would put nearly everything in one block.
+    ``order_view`` must be numeric and non-null except on rows that
+    ``missing_block = (is_missing, index)`` sends to a dedicated block.
+    It is staged as a real column before the crossJoin: a derived
+    expression captured in the block-filter lambda can mis-bind across
+    the join (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on one plan shape,
+    silently wrong blocks on another).  ``num_blocks == 1`` skips the
+    quantile aggregate.  Returns ``df``'s columns plus ``spec.out``."""
+    if num_blocks < 1:
+        raise ValueError("num_blocks must be >= 1")
+    by = list(by)
+    keys = [*by, "__blk"]
+
+    work, blk = df, F.lit(0)
+    if num_blocks > 1:
+        qs = [i / num_blocks for i in range(1, num_blocks)]
+        bounds = df.agg(
+            F.percentile_approx(
+                order_view, F.array(*[F.lit(q) for q in qs]), F.lit(10000)
+            ).alias("__breaks")
+        )
+        work = df.withColumn("__ord", order_view).crossJoin(F.broadcast(bounds))
+        blk = F.size(F.filter(F.col("__breaks"), lambda b: b < F.col("__ord")))
+    if missing_block is not None:
+        blk = F.when(missing_block[0], F.lit(missing_block[1])).otherwise(blk)
+    work = work.withColumn("__blk", blk.cast("int")).drop("__breaks", "__ord")
+
+    staged = spec.local(work, keys)
+    carries = (staged if spec.carry_on_local else work).groupBy(*keys).agg(
+        *[c.alias(name) for name, c in spec.carry.items()]
+    )
+
+    arr = F.array_sort(F.collect_list(F.struct("__blk", *spec.carry)))
+    if spec.descending:
+        arr = F.reverse(arr)
+    folds = [
+        F.aggregate(
+            F.slice(F.col("__arr"), F.lit(1), F.col("__pos")), spec.identity, spec.fold
+        ).alias("__st")
+    ]
+    if spec.total:
+        folds.append(F.aggregate(F.col("__arr"), spec.identity, spec.fold).alias("__tot"))
+    # the state side's keys are renamed so the join can be null-safe:
+    # a NULL group label is a group of its own, as in the window plan
+    skeys = [f"__k{i}" for i in range(len(by))]
+    states = (
+        carries.groupBy(*by)
+        .agg(arr.alias("__arr"))
+        .select(*by, "__arr", F.posexplode("__arr").alias("__pos", "__b"))
+        .select(
+            *[F.col(b).alias(k) for b, k in zip(by, skeys)],
+            F.col("__b")["__blk"].alias("__sblk"),
+            *folds,
+        )
+    )
+
+    on = [F.col(b).eqNullSafe(F.col(k)) for b, k in zip(by, skeys)]
+    joined = staged.join(F.broadcast(states), [*on, F.col("__blk") == F.col("__sblk")], "left")
+    total = F.col("__tot") if spec.total else None
+    cols = [c for c in df.columns if c != spec.out]
+    return joined.withColumn(spec.out, spec.combine(F.col("__st"), total)).select(*cols, spec.out)

@@ -1,4 +1,4 @@
-"""Blocked EWM mean: the skew path for giant groups.
+"""Blocked EWM: the skew path for giant groups.
 
 ``groupby_ewm`` streams whole groups through one pandas kernel per
 group — correct, pandas-exact, but a group's EWM serializes on one
@@ -41,16 +41,16 @@ observation (pandas' first-observation weight-1 rule).  Verified
 against a step-by-step emulation of the pandas kernel before
 building (both ignore_na modes, multi-gap series).
 
-    stage 1  order-quantile blocks; per-(key, block) pandas ewm
-             kernels                 [parallelism = groups x blocks]
-    stage 2  per-block carries = last row's state  [small]
-    stage 3  per-group fold over blocks (tiny ``F.aggregate`` over a
-             collected block array)
-    stage 4  broadcast-join states back; per-row combine
+Both run through ``blocked_route.blocked_scan`` (see its docstring
+for the stages): the local pass is the per-(key, block) pandas ewm
+kernels (parallelism = groups x blocks), the carry is the block's
+last-row state in processing order, the fold is the linear / affine
+composition above, and the combine applies the inbound state per row.
 
-Scope: ``func="mean"``, BOTH ``adjust`` and both ``ignore_na``
-modes.  var/std stay on ``groupby_ewm``'s per-group kernel (coupled
-second-moment states).  Results match ``groupby_ewm`` to float
+Scope: ``func="mean"`` in BOTH ``adjust`` modes, and ``var``/``std``
+with ``adjust=True`` (see ``groupby_ewm_blocked``), each with both
+``ignore_na`` modes; adjust=False var/std stay on ``groupby_ewm``'s
+per-group kernel.  Results match ``groupby_ewm`` to float
 tolerance (the blocked form composes decay by powers where pandas
 multiplies iteratively — last-ulp drift, pinned at rtol 1e-9 in
 tests/test_ewm_blocked.py).
@@ -63,7 +63,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flox_spark.blocked_route import BlockedSpec, blocked_scan
 from flox_spark.dtypes import arith_input
+from flox_spark.transform import groupby_apply_batched
 
 __all__ = ["groupby_ewm_blocked"]
 
@@ -84,6 +86,13 @@ def _resolve_alpha(alpha, halflife, span) -> float:
     if halflife <= 0:
         raise ValueError("halflife must be > 0")
     return 1.0 - math.exp(math.log(0.5) / float(halflife))
+
+
+def _pandas_kw(alpha, halflife, span) -> dict:
+    """The one decay spelling given, as pandas ``ewm`` keywords."""
+    if alpha is not None:
+        return {"alpha": alpha}
+    return {"halflife": halflife} if halflife is not None else {"span": span}
 
 
 def groupby_ewm_blocked(
@@ -133,70 +142,21 @@ def groupby_ewm_blocked(
     a = _resolve_alpha(alpha, halflife, span)
     base = 1.0 - a
     out = out or f"ewm_{func}"
-    kw = (
-        {"alpha": alpha}
-        if alpha is not None
-        else {"halflife": halflife}
-        if halflife is not None
-        else {"span": span}
-    )
+    kw = _pandas_kw(alpha, halflife, span)
 
     in_fields = [f for f in df.schema.fields if f.name in (*by, order_by, value)]
     in_names = [f.name for f in in_fields]
 
-    # order-quantile blocks (scan_blocked's split): equal-population
-    # even under bursty order columns; ties land in one block.  The
-    # numeric order view is STAGED as a real column before the
-    # crossJoin: capturing the derived expression (ts_micros for
-    # timestamps) inside the block-filter lambda mis-binds across the
-    # join under some optimized plan shapes — observed as an
-    # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on one plan and as silently
-    # wrong block assignment (wrong EWM values) on another; a bound
-    # column reference is stable in both.
+    args = (by, value, order_by, out, in_fields, a, base, kw, ignore_na)
+    spec = _adjust_true(*args, func) if adjust else _adjust_false(*args)
     onum, _ = arith_input(F.col(order_by), df.schema[order_by].dataType)
-    if num_blocks > 1:
-        qs = [i / num_blocks for i in range(1, num_blocks)]
-        bounds = df.agg(
-            F.percentile_approx(
-                onum, F.array(*[F.lit(q) for q in qs]), F.lit(10000)
-            ).alias("__breaks")
-        )
-        work = (
-            df.select(*in_names)
-            .withColumn("__onum", onum)
-            .crossJoin(F.broadcast(bounds))
-            .withColumn(
-                "__blk",
-                F.size(
-                    F.filter(F.col("__breaks"), lambda b: b < F.col("__onum"))
-                ).cast("int"),
-            )
-            .drop("__breaks", "__onum")
-        )
-    else:
-        work = df.select(*in_names).withColumn("__blk", F.lit(0).cast("int"))
-
-    args = (work, by, value, order_by, out, in_fields, in_names, a, base,
-            kw, ignore_na)
-    if adjust:
-        return _adjust_true(*args, func=func)
-    return _adjust_false(*args)
+    return blocked_scan(df.select(*in_names), by, onum, spec, num_blocks)
 
 
-def _adjust_true(
-    work, by, value, order_by, out, in_fields, in_names, a, base, kw, ign,
-    func="mean",
-):
-    """The (num, den) linear-recurrence-ratio path (module docstring
+def _adjust_true(by, value, order_by, out, in_fields, a, base, kw, ign, func):
+    """The (num, den) linear-recurrence-ratio spec (module docstring
     part 1); var/std add the (Swx2, Sw2) second-moment recurrences."""
     second = func != "mean"
-    if second:
-        # per-group anchor (variance is shift-invariant): centered
-        # moments avoid raw-moment cancellation for tight data
-        anchors = work.groupBy(*by).agg(
-            F.coalesce(F.avg(F.col(value)), F.lit(0.0)).alias("__anch")
-        )
-        work = work.join(F.broadcast(anchors), list(by), "left")
     schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in in_fields]
     extra = ["`__blk` int", "`__num` double", "`__den` double"]
     if second:
@@ -266,119 +226,74 @@ def _adjust_true(
         keep["__pos"] = g.cumcount().to_numpy(dtype="int64")
         return keep.drop(columns=drop_cols)
 
-    from flox_spark.transform import groupby_apply_batched
-
-    staged = groupby_apply_batched(
-        work, *keys, fn=fn, schema=schema, order_by=order_by
-    )
-
-    def _z(col):
-        return F.coalesce(F.nanvl(F.col(col), F.lit(0.0)), F.lit(0.0))
-
-    # stage 2: per-block carries = the LAST row's states in
-    # PROCESSING order (__pos — unique within the block, so the max
-    # struct is deterministic even under tied order_by values); an
-    # all-invalid block carries (A, 0...) — the fold's identity shape
-    carry_fields = [
-        F.col("__pos").alias("p"),
-        F.col("__A").alias("cA"),
-        _z("__num").alias("cn"),
-        _z("__den").alias("cd"),
-    ]
-    if second:
-        carry_fields += [_z("__sx2").alias("cx2"), _z("__s2").alias("c2")]
-    last = F.max(F.struct(*carry_fields))
-    carry_cols = [
-        last["cA"].alias("__cA"), last["cn"].alias("__cn"),
-        last["cd"].alias("__cd"),
-    ]
-    if second:
-        carry_cols += [last["cx2"].alias("__cx2"), last["c2"].alias("__c2")]
-    carries = staged.groupBy(*by, "__blk").agg(*carry_cols)
-
-    # stage 3: exclusive linear-fold prefix over blocks per group —
-    # state_in(blk i) = fold_{b < i} (A_b * state + c_b), a tiny
-    # O(blocks^2) F.aggregate over the collected block array.  The
-    # squared-weight sum Sw2 folds with A^2 (its weights decay by
-    # (1-a)^2 per step).
-    struct_cols = ["__blk", "__cA", "__cn", "__cd"]
-    zero_fields = [F.lit(0.0).alias("n"), F.lit(0.0).alias("d")]
-    if second:
-        struct_cols += ["__cx2", "__c2"]
-        zero_fields += [F.lit(0.0).alias("x2"), F.lit(0.0).alias("s2")]
-    arr = F.array_sort(F.collect_list(F.struct(*struct_cols))).alias("__arr")
-    zero = F.struct(*zero_fields)
-
-    def _fold(s, b):
-        fields = [
-            (b["__cA"] * s["n"] + b["__cn"]).alias("n"),
-            (b["__cA"] * s["d"] + b["__cd"]).alias("d"),
-        ]
+    def local(work, keys):
         if second:
-            fields += [
-                (b["__cA"] * s["x2"] + b["__cx2"]).alias("x2"),
-                (b["__cA"] * b["__cA"] * s["s2"] + b["__c2"]).alias("s2"),
-            ]
-        return F.struct(*fields)
+            # per-group anchor (variance is shift-invariant): centered
+            # moments avoid raw-moment cancellation for tight data
+            anchors = work.groupBy(*by).agg(
+                F.coalesce(F.avg(F.col(value)), F.lit(0.0)).alias("__anch")
+            )
+            work = work.join(F.broadcast(anchors), list(by), "left")
+        return groupby_apply_batched(work, *keys, fn=fn, schema=schema, order_by=order_by)
 
-    state_cols = [
-        F.col("__st")["n"].alias("__nin"),
-        F.col("__st")["d"].alias("__din"),
-    ]
+    # carries = the LAST row's states in PROCESSING order (__pos —
+    # unique within the block, so the max struct is deterministic even
+    # under tied order_by values); an all-invalid block carries
+    # (A, 0...) — the fold's identity shape
+    moments = {"n": _z("__num"), "d": _z("__den")}
     if second:
-        state_cols += [
-            F.col("__st")["x2"].alias("__x2in"),
-            F.col("__st")["s2"].alias("__s2in"),
-        ]
-    states = (
-        carries.groupBy(*by)
-        .agg(arr)
-        .select(*by, F.col("__arr"), F.posexplode("__arr").alias("__pos", "__b"))
-        .select(
-            *by,
-            F.col("__b")["__blk"].alias("__blk"),
-            F.aggregate(
-                F.slice(F.col("__arr"), F.lit(1), F.col("__pos")),
-                zero, _fold,
-            ).alias("__st"),
-        )
-        .select(*by, "__blk", *state_cols)
-    )
+        moments.update(x2=_z("__sx2"), s2=_z("__s2"))
+    last = F.max(F.struct(
+        F.col("__pos").alias("p"), F.col("__A").alias("A"),
+        *[c.alias(m) for m, c in moments.items()],
+    ))
 
-    # stage 4: combine.  A pandas-NaN local sum means "no valid obs in
-    # this block yet" — contributes 0 on top of the decayed carry; a
-    # zero global denominator is the leading-rows case, where pandas
-    # emits NaN.
-    joined = staged.join(F.broadcast(states), [*by, "__blk"], "left")
-    numg = _z("__num") + F.col("__A") * F.coalesce(F.col("__nin"), F.lit(0.0))
-    deng = _z("__den") + F.col("__A") * F.coalesce(F.col("__din"), F.lit(0.0))
-    if second:
-        sx2g = _z("__sx2") + F.col("__A") * F.coalesce(
-            F.col("__x2in"), F.lit(0.0)
-        )
-        s2g = _z("__s2") + F.col("__A") * F.col("__A") * F.coalesce(
-            F.col("__s2in"), F.lit(0.0)
-        )
-        # pandas bias=False: var = (Sw*Swx2 - Swx^2)/(Sw^2 - Sw2);
-        # one observation makes the divisor exactly 0 -> NULL (the
-        # per-group kernel's NaN crosses Arrow as null)
+    def fold(s, b):
+        # state_out = A * state_in + c per block; the squared-weight
+        # sum Sw2 folds with A^2 (its weights decay by (1-a)^2 per step)
+        A = b["__cA"]
+        return F.struct(*[
+            ((A * A if m == "s2" else A) * s[m] + b[f"__c{m}"]).alias(m) for m in moments
+        ])
+
+    def combine(st, _):
+        # a pandas-NaN local sum means "no valid obs in this block yet"
+        # — it contributes 0 on top of the decayed inbound state
+        A = F.col("__A")
+        numg = _z("__num") + A * st["n"]
+        deng = _z("__den") + A * st["d"]
+        if not second:
+            # den == 0 (no valid obs yet) -> NULL, matching the
+            # per-group kernel: its pandas NaN crosses Arrow as null
+            return F.when(deng > 0, numg / deng)
+        sx2g = _z("__sx2") + A * st["x2"]
+        s2g = _z("__s2") + A * A * st["s2"]
+        # pandas bias=False: var = (Sw*Swx2 - Swx^2)/(Sw^2 - Sw2); one
+        # observation makes the divisor exactly 0 -> NULL
         dvz = deng * deng - s2g
         var = F.when(dvz > 0, (deng * sx2g - numg * numg) / dvz)
         # weighted variance is mathematically >= 0; centered-moment
         # rounding can produce tiny negatives — clamp like pandas
         var = F.when(var < 0, F.lit(0.0)).otherwise(var)
-        y = F.sqrt(var) if func == "std" else var
-    else:
-        # den == 0 (no valid obs yet) -> NULL, matching the per-group
-        # kernel: its pandas NaN crosses the Arrow boundary as null
-        y = F.when(deng > 0, numg / deng)
-    return joined.withColumn(out, y).select(*in_names, out)
+        return F.sqrt(var) if func == "std" else var
+
+    return BlockedSpec(
+        out=out,
+        local=local,
+        carry={f"__c{m}": last[m] for m in ["A", *moments]},
+        identity=F.struct(*[F.lit(0.0).alias(m) for m in moments]),
+        fold=fold,
+        combine=combine,
+        carry_on_local=True,
+    )
 
 
-def _adjust_false(
-    work, by, value, order_by, out, in_fields, in_names, a, base, kw, ign
-):
-    """The (lam, mu, seed) affine path (module docstring part 2):
+def _z(col):
+    return F.coalesce(F.nanvl(F.col(col), F.lit(0.0)), F.lit(0.0))
+
+
+def _adjust_false(by, value, order_by, out, in_fields, a, base, kw, ign):
+    """The (lam, mu, seed) affine spec (module docstring part 2):
     pandas' renormalize-per-observation kernel makes the block
     response affine in the avg right after the block's first event,
     with data-independent coefficients extracted from two block-local
@@ -447,15 +362,9 @@ def _adjust_false(
         keep["__pos"] = pos.to_numpy(dtype="int64")
         return keep.drop(columns=["__vi", "__s0", "__s1", "__posv", "__xv"])
 
-    from flox_spark.transform import groupby_apply_batched
-
-    staged = groupby_apply_batched(
-        work, *keys, fn=fn, schema=schema, order_by=order_by
-    )
-
-    # stage 2: per-block carry = last row's (lam, mu) in processing
-    # order (lam/mu are constant after the block's last event, so the
-    # last ROW carries the block-end response) + the block constants
+    # carry = last row's (lam, mu) in processing order (lam/mu are
+    # constant after the block's last event, so the last ROW carries
+    # the block-end response) + the block constants
     last = F.max(
         F.struct(
             F.col("__pos").alias("p"),
@@ -463,88 +372,57 @@ def _adjust_false(
             F.col("__mu").alias("mu"),
         )
     )
-    carries = staged.groupBy(*by, "__blk").agg(
-        last["lam"].alias("__clam"),
-        last["mu"].alias("__cmu"),
-        F.max("__x1").alias("__cx1"),
-        F.max("__h1").alias("__ch1"),
-        F.max("__trail").alias("__ctrail"),
-        F.max("__n").alias("__cn"),
-        (F.max("__h1") >= 0).alias("__chas"),
-    )
 
-    # stage 3: fold (avg, gap_rows, seen) over blocks in order.  For a
-    # block with events: seed = (w1*avg + a*x1)/(w1 + a) with
-    # w1 = b^(gap + h1 + 1) (ignore_na=False counts every row;
-    # ignore_na=True: w1 = b), or seed = x1 when nothing seen yet
-    # (pandas' first-observation weight-1 rule); avg_out =
-    # lam*seed + mu; gap_out = trailing rows.  An event-less block
-    # only extends the gap.
-    arr = F.array_sort(
-        F.collect_list(
-            F.struct(
-                "__blk", "__clam", "__cmu", "__cx1", "__ch1", "__ctrail",
-                "__cn", "__chas",
-            )
-        )
-    ).alias("__arr")
-    zero = F.struct(
-        F.lit(0.0).alias("avg"),
-        F.lit(0.0).alias("gap"),
-        F.lit(False).alias("seen"),
-    )
-
-    def _w1(gap, h1):
+    def w1(gap, h1):
         if ign:
             return F.lit(base)
         return F.pow(F.lit(base), gap + h1.cast("double") + F.lit(1.0))
 
-    def _step(s, b):
-        w1 = _w1(s["gap"], b["__ch1"])
-        seed = F.when(
-            s["seen"],
-            (w1 * s["avg"] + F.lit(a) * b["__cx1"]) / (w1 + F.lit(a)),
-        ).otherwise(b["__cx1"])
+    def seed(st, h1, x1):
+        # (w1*avg + a*x1)/(w1 + a) with w1 = b^(gap + h1 + 1)
+        # (ignore_na=False counts every row; ignore_na=True: w1 = b),
+        # or x1 when nothing was seen yet (pandas' first-observation
+        # weight-1 rule)
+        w = w1(st["gap"], h1)
+        return F.when(st["seen"], (w * st["avg"] + F.lit(a) * x1) / (w + F.lit(a))).otherwise(x1)
+
+    def fold(s, b):
+        # fold (avg, gap_rows, seen): a block with events ends at
+        # avg = lam*seed + mu with gap = its trailing rows; an
+        # event-less block only extends the gap
         return F.struct(
-            F.when(b["__chas"], b["__clam"] * seed + b["__cmu"])
+            F.when(b["__chas"], b["__clam"] * seed(s, b["__ch1"], b["__cx1"]) + b["__cmu"])
             .otherwise(s["avg"]).alias("avg"),
             F.when(b["__chas"], b["__ctrail"].cast("double"))
             .otherwise(s["gap"] + b["__cn"].cast("double")).alias("gap"),
             (s["seen"] | b["__chas"]).alias("seen"),
         )
 
-    states = (
-        carries.groupBy(*by)
-        .agg(arr)
-        .select(*by, F.col("__arr"), F.posexplode("__arr").alias("__pos", "__b"))
-        .select(
-            *by,
-            F.col("__b")["__blk"].alias("__blk"),
-            F.aggregate(
-                F.slice(F.col("__arr"), F.lit(1), F.col("__pos")),
-                zero, _step,
-            ).alias("__st"),
-        )
-        .select(
-            *by, "__blk",
-            F.col("__st")["avg"].alias("__avgin"),
-            F.col("__st")["gap"].alias("__gapin"),
-            F.col("__st")["seen"].alias("__sin"),
-        )
-    )
+    def combine(st, _):
+        # rows before the block's first event carry the inbound avg
+        # (NULL when nothing seen anywhere yet); rows at/after it
+        # evaluate the affine response at the seed
+        y = F.col("__lam") * seed(st, F.col("__h1"), F.col("__x1")) + F.col("__mu")
+        return F.when(F.col("__pre"), F.when(st["seen"], st["avg"])).otherwise(y)
 
-    # stage 4: per-row combine.  Rows before the block's first event
-    # carry the inbound avg (NULL when nothing seen anywhere yet);
-    # rows at/after it evaluate the affine response at the seed.
-    joined = staged.join(F.broadcast(states), [*by, "__blk"], "left")
-    sin = F.coalesce(F.col("__sin"), F.lit(False))
-    gapin = F.coalesce(F.col("__gapin"), F.lit(0.0))
-    w1 = _w1(gapin, F.col("__h1"))
-    seed = F.when(
-        sin,
-        (w1 * F.col("__avgin") + F.lit(a) * F.col("__x1")) / (w1 + F.lit(a)),
-    ).otherwise(F.col("__x1"))
-    y = F.when(F.col("__pre"), F.when(sin, F.col("__avgin"))).otherwise(
-        F.col("__lam") * seed + F.col("__mu")
+    return BlockedSpec(
+        out=out,
+        local=lambda work, keys: groupby_apply_batched(
+            work, *keys, fn=fn, schema=schema, order_by=order_by
+        ),
+        carry={
+            "__clam": last["lam"],
+            "__cmu": last["mu"],
+            "__cx1": F.max("__x1"),
+            "__ch1": F.max("__h1"),
+            "__ctrail": F.max("__trail"),
+            "__cn": F.max("__n"),
+            "__chas": F.max("__h1") >= 0,
+        },
+        identity=F.struct(
+            F.lit(0.0).alias("avg"), F.lit(0.0).alias("gap"), F.lit(False).alias("seen")
+        ),
+        fold=fold,
+        combine=combine,
+        carry_on_local=True,
     )
-    return joined.withColumn(out, y).select(*in_names, out)

@@ -17,13 +17,42 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, NumericType
 
-from flox_spark.dtypes import arith_input, is_missing
+from flox_spark.dtypes import (
+    arith_input,
+    is_bool_type,
+    is_datetime_type,
+    is_missing,
+    is_timedelta_type,
+)
 from flox_spark.options import OPTIONS
 
 __all__ = ["groupby_rank"]
 
 _METHODS = ("average", "min", "max", "dense", "first")
+
+
+def _check_args(method: str, na_option: str, order_by: str | None) -> None:
+    if method not in _METHODS:
+        raise ValueError(f"method must be one of {_METHODS}, got {method!r}")
+    if na_option not in ("keep", "top", "bottom"):
+        raise ValueError(f"na_option must be keep|top|bottom, got {na_option!r}")
+    if method == "first" and order_by is None:
+        raise ValueError(
+            "method='first' ranks ties by occurrence order, which a table "
+            "does not have — pass order_by="
+        )
+
+
+def _blockable(vdt: DataType) -> bool:
+    """Value types the blocked rank can split into quantile blocks."""
+    return (
+        isinstance(vdt, NumericType)
+        or is_bool_type(vdt)
+        or is_datetime_type(vdt)
+        or is_timedelta_type(vdt)
+    )
 
 
 def groupby_rank(
@@ -61,31 +90,15 @@ def groupby_rank(
     giant table would serialize one group's whole sort on one core.
     ``"window"``/``"blocked"`` force a strategy.
     """
-    if method not in _METHODS:
-        raise ValueError(f"method must be one of {_METHODS}, got {method!r}")
-    if na_option not in ("keep", "top", "bottom"):
-        raise ValueError(f"na_option must be keep|top|bottom, got {na_option!r}")
-    if method == "first" and order_by is None:
-        raise ValueError(
-            "method='first' ranks ties by occurrence order, which a table "
-            "does not have — pass order_by="
-        )
+    _check_args(method, na_option, order_by)
     vdt = df.schema[value].dataType
 
     from flox_spark import blocked_route
-    from flox_spark.dtypes import is_bool_type, is_datetime_type, is_timedelta_type
-    from pyspark.sql.types import NumericType
 
     blocked_route.validate_plan(plan, "groupby_rank")
-    blockable = (
-        isinstance(vdt, NumericType)
-        or is_bool_type(vdt)
-        or is_datetime_type(vdt)
-        or is_timedelta_type(vdt)
-    )
     if plan == "blocked" or (
         plan == "auto"
-        and blockable
+        and _blockable(vdt)
         and blocked_route.route_to_blocked(
             df, by, OPTIONS["blocked_route_rank_rows"]
         )

@@ -2,25 +2,25 @@
 
 ``groupby_rank`` is one WindowExec whose parallelism is bound by the
 GROUP-KEY cardinality — correct at any size thanks to spilling, but a
-3-group 100 TB table serializes 33 TB of sort per task.  This module
-applies ``scan_blocked``'s Blelloch shape to rank (the same split the
-reference uses across dask chunks, flox/dask.py:576-663): a rank is a
-prefix COUNT over the value order, so it decomposes into value-range
-blocks exactly like a cumsum decomposes over an order column:
+3-group 100 TB table serializes 33 TB of sort per task.  A rank is a
+prefix COUNT over the value order, so it runs through
+``blocked_route.blocked_scan`` (see its docstring for the stages) over
+VALUE blocks, exactly like a cumsum decomposes over an order column:
 
-    stage 1  local rank inside (key, value-block)    [big shuffle, split]
-    stage 2  per-block row / distinct-value counts   [small]
-    stage 3  exclusive prefix of counts over blocks per key [tiny window]
-    stage 4  broadcast-join offsets back, add        [no extra big shuffle]
+- local pass: rank / dense_rank / row_number (+ the peer count)
+  within (key, value-block);
+- carry: rows, dense levels and missing rows per block;
+- fold: elementwise sums from zero (plus a has-missing max); the
+  inclusive group total gives the ``pct`` divisors;
+- combine: local rank + the earlier blocks' rows (dense: levels).
 
-Blocks are VALUE-quantile buckets (lazy broadcast ``percentile_approx``
-aggregate, no driver action): ``block(v) = #{breaks < v}`` is monotone
-in the rank order, so block i's ranks all precede block i+1's and —
-the property every method's tie arithmetic rides on — TIED VALUES
-share one block, so peer counts are block-local.  Missing values get
-a dedicated block placed per ``na_option`` (before everything for
-``top``, after for ``keep``/``bottom``), which makes every block pure
-and keeps the missing tie-block semantics of the one-window form.
+``block(v) = #{breaks < v}`` is monotone in the rank order, so block
+i's ranks all precede block i+1's and — the property every method's
+tie arithmetic rides on — TIED VALUES share one block, so peer counts
+are block-local.  Missing values get a dedicated block placed per
+``na_option`` (before everything for ``top``, after for
+``keep``/``bottom``), which makes every block pure and keeps the
+missing tie-block semantics of the one-window form.
 
 Results equal ``groupby_rank`` EXACTLY (bitwise — the combine is
 integer-valued double arithmetic plus the same half/divisor terms);
@@ -33,12 +33,12 @@ keys (its exchange already spreads the sort).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import NumericType
 
-from flox_spark.dtypes import arith_input, is_bool_type, is_datetime_type, is_missing, is_timedelta_type
-from flox_spark.rank import _METHODS
+from flox_spark.blocked_route import BlockedSpec, blocked_scan
+from flox_spark.dtypes import arith_input, is_missing
+from flox_spark.rank import _blockable, _check_args
 
 __all__ = ["groupby_rank_blocked"]
 
@@ -55,29 +55,14 @@ def groupby_rank_blocked(
     pct: bool = False,
     num_blocks: int = 32,
 ) -> DataFrame:
-    """``groupby_rank`` semantics through the four-stage blocked plan.
+    """``groupby_rank`` semantics through the blocked plan.
 
     Same parameters and output as ``groupby_rank`` plus
     ``num_blocks`` — the value-range split width, i.e. the rank's
     parallelism floor regardless of how few groups there are."""
-    if method not in _METHODS:
-        raise ValueError(f"method must be one of {_METHODS}, got {method!r}")
-    if na_option not in ("keep", "top", "bottom"):
-        raise ValueError(f"na_option must be keep|top|bottom, got {na_option!r}")
-    if method == "first" and order_by is None:
-        raise ValueError(
-            "method='first' ranks ties by occurrence order, which a table "
-            "does not have — pass order_by="
-        )
-    if num_blocks < 1:
-        raise ValueError("num_blocks must be >= 1")
+    _check_args(method, na_option, order_by)
     vdt = df.schema[value].dataType
-    if not (
-        isinstance(vdt, NumericType)
-        or is_bool_type(vdt)
-        or is_datetime_type(vdt)
-        or is_timedelta_type(vdt)
-    ):
+    if not _blockable(vdt):
         raise ValueError(
             "groupby_rank_blocked needs a numeric/datetime/bool value "
             f"column for its quantile blocking, got {vdt.simpleString()}; "
@@ -88,132 +73,77 @@ def groupby_rank_blocked(
     missing = is_missing(v, vdt)
     av, _ = arith_input(v, vdt)
     vord = F.when(missing, F.lit(None)).otherwise(av)
+    miss = missing.cast("long")
+    vsort = vord.asc() if ascending else vord.desc()
 
-    # equal-population VALUE blocks from a lazy broadcast aggregate
-    # (percentile_approx skips the nulled missing view).  Missing rows
-    # go to a dedicated block whose INDEX is chosen so that one
-    # uniform block sort (asc for ascending ranks, desc otherwise)
-    # places it exactly where the na_option puts the missing tie
-    # block: before everything for 'top', after for 'keep'/'bottom'.
-    miss_first = na_option == "top"
-    if ascending:
-        miss_blk = -1 if miss_first else num_blocks
-    else:
-        miss_blk = num_blocks if miss_first else -1
-    # __vord / __miss are STAGED as real columns BEFORE the crossJoin
-    # (the ewm_blocked lesson, ewm_blocked.py stage-0 comment): a
-    # derived expression captured in the block-filter lambda can
-    # mis-bind across the join under some optimized plan shapes —
-    # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on one plan, silently wrong
-    # block assignment on another; a bound column reference is stable.
-    work = df.withColumn("__vord", vord).withColumn("__miss", missing.cast("int"))
-    if num_blocks > 1:
-        qs = [i / num_blocks for i in range(1, num_blocks)]
-        bounds = df.agg(
-            F.percentile_approx(
-                vord, F.array(*[F.lit(q) for q in qs]), F.lit(10000)
-            ).alias("__breaks")
-        )
-        blk = F.size(
-            F.filter(F.col("__breaks"), lambda b: b < F.col("__vord"))
-        ).cast("int")
-        work = work.crossJoin(F.broadcast(bounds))
-    else:
-        blk = F.lit(0)
-    work = work.withColumn(
-        "__blk",
-        F.when(F.col("__miss") == 1, F.lit(miss_blk)).otherwise(blk).cast("int"),
-    )
-    if num_blocks > 1:
-        work = work.drop("__breaks")
-
-    # stage 1: local rank within (key, block).  The within-block order
-    # is the one-window form's (mkey, vord[, order_by]) restricted to
-    # a pure block: vord alone (missing blocks are all peers).
-    vcol = F.col("__vord")
-    order: list[Column] = [vcol.asc() if ascending else vcol.desc()]
-    if method == "first" and order_by is not None:
-        order.append(F.col(order_by).asc())
-    w_local = Window.partitionBy(*by, "__blk").orderBy(*order)
-    if method == "first":
-        local = F.row_number().over(w_local).cast("double")
-        peer = None
-    elif method == "dense":
-        local = F.dense_rank().over(w_local).cast("double")
-        peer = None
-    else:
-        local = F.rank().over(w_local).cast("double")
+    def local(work, keys):
+        # within a pure block the one-window form's (mkey, vord[,
+        # order_by]) order is vord alone (missing blocks are all peers)
+        order = [vsort, F.col(order_by).asc()] if method == "first" else [vsort]
+        w = Window.partitionBy(*keys).orderBy(*order)
+        if method == "first":
+            return work.withColumn("__local", F.row_number().over(w).cast("double"))
+        if method == "dense":
+            return work.withColumn("__local", F.dense_rank().over(w).cast("double"))
         # SQL peer-group frame over the same sort (groupby_rank's
         # trick): tied values never cross blocks, so this is the
         # GLOBAL tie-block size
-        peer = F.count(F.lit(1)).over(
-            Window.partitionBy(*by, "__blk")
-            .orderBy(order[0])
-            .rangeBetween(Window.currentRow, Window.currentRow)
+        peer = F.count(F.lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow))
+        return work.select(
+            "*", F.rank().over(w).cast("double").alias("__local"), peer.alias("__peer")
         )
-    staged = work.withColumn("__local", local)
-    if peer is not None:
-        staged = staged.withColumn("__peer", peer)
 
-    # stage 2: per-(key, block) summaries.  __nd counts the block's
-    # dense levels: distinct non-missing values, plus 1 for the
-    # missing block (its NULL tie-block is one dense level).
-    carries = work.groupBy(*by, "__blk").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum("__miss").alias("__nm"),
-        (F.count_distinct(F.col("__vord")) + F.max("__miss")).alias("__nd"),
-    )
+    # carry "__c": the block's rows, or for dense its levels (distinct
+    # non-missing values, plus 1 for the missing block: its NULL
+    # tie-block is one dense level).  pct with na_option="keep" also
+    # needs "__m", the unranked missing rows (dense: whether the
+    # missing level exists).
+    dense = method == "dense"
+    unranked = pct and na_option == "keep"
+    carry = {"__c": F.count_distinct(vord) + F.max(miss) if dense else F.count(F.lit(1))}
+    fields = ["c"]
+    if unranked:
+        carry["__m"] = F.max(miss) if dense else F.sum(miss)
+        fields.append("m")
 
-    # stage 3: exclusive prefixes over blocks in RANK order (tiny
-    # window: |groups| x (num_blocks + 1) rows), plus the group totals
-    # the pct divisors need — same frame, zero extra exchanges.
-    blk_ord = F.col("__blk").asc() if ascending else F.col("__blk").desc()
-    w_prefix = (
-        Window.partitionBy(*by).orderBy(blk_ord)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = (
-        Window.partitionBy(*by).orderBy(blk_ord)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    offsets = carries.select(
-        *by,
-        "__blk",
-        F.coalesce(F.sum("__n").over(w_prefix), F.lit(0)).alias("__roff"),
-        F.coalesce(F.sum("__nd").over(w_prefix), F.lit(0)).alias("__doff"),
-        F.sum("__n").over(w_all).alias("__tn"),
-        F.sum("__nm").over(w_all).alias("__tm"),
-        F.sum("__nd").over(w_all).alias("__td"),
-        F.max((F.col("__nm") > 0).cast("int")).over(w_all).alias("__hm"),
-    )
+    def fold(s, b):
+        c = (s["c"] + b["__c"]).alias("c")
+        if not unranked:
+            return F.struct(c)
+        m = F.greatest(s["m"], b["__m"]) if dense else s["m"] + b["__m"]
+        return F.struct(c, m.alias("m"))
 
-    # stage 4: combine.  Integer-valued double arithmetic — bitwise
-    # identical to the one-window form's rank values.
-    joined = staged.join(F.broadcast(offsets), [*by, "__blk"], "left")
-    if method == "dense":
-        expr = F.col("__local") + F.col("__doff").cast("double")
-    else:
-        expr = F.col("__local") + F.col("__roff").cast("double")
+    def combine(st, tot):
+        # integer-valued double arithmetic — bitwise identical to the
+        # one-window form's rank values
+        expr = F.col("__local") + st["c"].cast("double")
         if method == "max":
             expr = expr + (F.col("__peer") - F.lit(1)).cast("double")
         elif method == "average":
             expr = expr + (F.col("__peer") - F.lit(1)).cast("double") / F.lit(2.0)
-    if na_option == "keep":
-        expr = F.when(F.col("__miss") == 1, F.lit(None)).otherwise(expr)
-    if pct:
-        if method == "dense":
-            denom = (
-                (F.col("__td") - F.col("__hm")) if na_option == "keep"
-                else F.col("__td")
-            ).cast("double")
-        else:
-            denom = (
-                (F.col("__tn") - F.col("__tm")) if na_option == "keep"
-                else F.col("__tn")
-            ).cast("double")
-        expr = expr / denom
-    drop = ["__vord", "__miss", "__blk", "__local", "__roff", "__doff",
-            "__tn", "__tm", "__td", "__hm"]
-    if peer is not None:
-        drop.append("__peer")
-    return joined.withColumn(out, expr).drop(*drop)
+        if na_option == "keep":
+            expr = F.when(missing, F.lit(None)).otherwise(expr)
+        if pct:
+            # divisors: the group's ranked rows, or ranked dense levels
+            denom = tot["c"] - tot["m"] if unranked else tot["c"]
+            expr = expr / denom.cast("double")
+        return expr
+
+    spec = BlockedSpec(
+        out=out,
+        local=local,
+        carry=carry,
+        identity=F.struct(*[F.lit(0).cast("long").alias(f) for f in fields]),
+        fold=fold,
+        combine=combine,
+        descending=not ascending,
+        total=pct,
+    )
+    # missing rows get a dedicated block whose INDEX puts it where the
+    # na_option puts the missing tie block in rank order: before
+    # everything for 'top', after for 'keep'/'bottom'
+    miss_last = (na_option != "top") == ascending
+    return blocked_scan(
+        df, by, vord, spec, num_blocks,
+        missing_block=(missing, num_blocks if miss_last else -1),
+    )

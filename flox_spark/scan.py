@@ -13,15 +13,150 @@ per partition (WindowExec spills if a group exceeds memory).  No UDFs.
 
 from __future__ import annotations
 
-from typing import Any
+import operator
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DecimalType
 
-from flox_spark.dtypes import arith_input, arith_restore, is_float_type, is_missing, to_skip
+from flox_spark.dtypes import (
+    NAN,
+    arith_input,
+    is_datetime_type,
+    is_float_type,
+    is_missing,
+    is_timedelta_type,
+    to_skip,
+)
 from flox_spark.aggregations import SCANS, Scan, ScanContext
 
 __all__ = ["groupby_scan"]
+
+_LAGS = ("shift", "diff", "pct_change")
+
+
+@dataclass(frozen=True)
+class _Channel:
+    """One running reduction of a cumulative scan, in flox's ``Scan``
+    form (flox/aggregations.py:715-737): ``run`` is the aggregate whose
+    running window is the scan, ``op(earlier, later)`` the associative
+    combine, ``identity`` its neutral element (``None``: a NULL, which
+    every NULL-skipping ``op`` here ignores).  ``carry(order)`` is the
+    block reduction when it is not ``run`` itself (the fills: the last
+    non-missing value in order)."""
+
+    run: Column
+    op: Callable[[Column, Column], Column]
+    identity: Column | None = None
+    carry: Callable[[Column], Column] | None = None
+
+    def scan(self, window) -> Column:
+        running = self.run.over(window)
+        return running if self.identity is None else F.coalesce(running, self.identity)
+
+
+@dataclass(frozen=True)
+class _CumulativeScan:
+    """A cumulative scan as channels plus ``finish`` (channel values ->
+    output Column, with the dtype restore).  ``reverse``: the scan runs
+    over the descending order (``bfill``)."""
+
+    channels: tuple[_Channel, ...]
+    finish: Callable[[list[Column]], Column]
+    reverse: bool = False
+
+
+def _sum_type(dt: DataType) -> str:
+    """Spark's ``sum`` result type for an arithmetic input."""
+    if is_float_type(dt):
+        return "double"
+    if isinstance(dt, DecimalType):
+        return DecimalType(min(38, dt.precision + 10), dt.scale).simpleString()
+    return "long"
+
+
+def _cumulative_scan(func: str, v: Column, vdt: DataType) -> _CumulativeScan:
+    """The one definition of each cumulative scan in ``SCANS``: the
+    window plan runs ``finish([ch.scan(group_window)])``; the blocked
+    plan (``scan_blocked``) runs the same ``ch.scan`` per block and
+    folds the block carries with ``op``."""
+    v_skip = to_skip(v, vdt)
+
+    def same(c: list[Column]) -> Column:
+        return c[0]
+
+    if func in ("cumsum", "nancumsum", "cumprod", "nancumprod"):
+        x, xdt = arith_input(v_skip, vdt)
+        if "sum" in func:
+            ch = _Channel(F.sum(x), operator.add, F.lit(0).cast(_sum_type(xdt)))
+        else:
+            ch = _Channel(F.product(x), operator.mul, F.lit(1.0))
+
+        def restore(c: Column) -> Column:
+            if vdt.simpleString() == "float":
+                return c.cast("float")
+            if "prod" in func and not is_float_type(vdt):
+                return c.cast("long")
+            return c
+
+        if func.startswith("nan"):
+            return _CumulativeScan((ch,), lambda c: restore(c[0]))
+        # numpy cumsum/cumprod: a missing value poisons every position
+        # from its own on — NaN for floats, NULL otherwise (a NaN
+        # literal cast to long would silently yield 0)
+        poison = _Channel(F.max(is_missing(v, vdt).cast("int")), F.greatest, F.lit(0))
+        bad = F.lit(NAN) if is_float_type(vdt) else F.lit(None)
+        return _CumulativeScan(
+            (ch, poison), lambda c: restore(F.when(c[1] == 1, bad).otherwise(c[0]))
+        )
+    if func == "cumcount":
+        count = _Channel(F.count(v_skip), operator.add, F.lit(0).cast("long"))
+        return _CumulativeScan((count,), same)
+    if func in ("cummax", "cummin"):
+        # NaN-skipping running extrema (beyond-reference utility);
+        # preserves input type
+        if func == "cummax":
+            return _CumulativeScan((_Channel(F.max(v_skip), F.greatest),), same)
+        return _CumulativeScan((_Channel(F.min(v_skip), F.least),), same)
+    if func in ("ffill", "bfill"):
+        # bfill is ffill over the reversed order: a running frame, where
+        # first() over currentRow..unboundedFollowing re-aggregates the
+        # whole rest of the group for every row
+        pick = F.max if func == "ffill" else F.min
+        fill = _Channel(
+            F.last(v_skip, ignorenulls=True),
+            lambda earlier, later: F.coalesce(later, earlier),
+            # the last non-missing value in traversal order (missing
+            # rows must not clobber the carry)
+            carry=lambda o: pick(
+                F.when(v_skip.isNotNull(), F.struct(o.alias("o"), v_skip.alias("v")))
+            )["v"],
+        )
+        return _CumulativeScan((fill,), same, reverse=func == "bfill")
+    raise ValueError(f"{func!r} is not a cumulative scan")
+
+
+def _lag_finish(func: str, v: Column, lagged: Column, vdt: DataType) -> Column:
+    """shift/diff/pct_change from the value and its lagged partner —
+    shared by the window plan and ``shift_blocked``."""
+    if func == "shift":
+        return lagged
+    if func == "pct_change":
+        # pandas GroupBy.pct_change: v / lag(v) - 1; a zero lag
+        # yields NULL via try_divide (ANSI-safe), not an abort
+        return F.try_divide(v.cast("double"), lagged.cast("double")) - F.lit(1.0)
+    av, _ = arith_input(v, vdt)
+    lv, _ = arith_input(lagged, vdt)
+    expr = av - lv
+    if is_datetime_type(vdt) or is_timedelta_type(vdt):
+        # datetime diff yields an interval-like long of microseconds,
+        # surfaced as day-time interval
+        return F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), expr / F.lit(1e6))
+    if vdt.simpleString() == "float":
+        return expr.cast("float")
+    return expr
 
 
 def groupby_scan(
@@ -46,11 +181,12 @@ def groupby_scan(
     ``plan``: physical strategy.  ``"auto"`` (default) keeps the
     one-window form unless plan stats say rows-per-group crosses the
     measured blocked crossover (``blocked_route.route_to_blocked``;
-    OPTIONS["blocked_route_scan_rows"]) — then the exactly-equal
-    blocked twin runs (``groupby_scan_blocked`` for the cumulative
-    funcs, ``groupby_shift_blocked`` for shift/diff/pct_change),
-    whose parallelism is num_blocks per group instead of one task
-    per group.  ``"window"``/``"blocked"`` force a strategy (blocked
+    OPTIONS["blocked_route_scan_rows"]) — then the blocked twin runs
+    (``groupby_scan_blocked`` for the cumulative funcs, over the same
+    ``_cumulative_scan`` expressions and output types;
+    ``groupby_shift_blocked`` for shift/diff/pct_change), whose
+    parallelism is num_blocks per group instead of one task per
+    group.  ``"window"``/``"blocked"`` force a strategy (blocked
     raises for custom ``Scan`` specs — their window expressions have
     no generic carry decomposition).
 
@@ -61,7 +197,8 @@ def groupby_scan(
     - ``nancumsum``: running sum treating NaN/NULL as 0 — missing
       positions receive the running total (numpy nancumsum).
     - ``ffill`` / ``bfill``: forward/backward fill of the last/next
-      non-missing value within the group (flox/aggregations.py:855-876).
+      non-missing value within the group (flox/aggregations.py:855-876);
+      ``bfill`` is the ffill window over the reversed order.
       No-op passthrough for non-float, non-nullable semantics mirrors
       flox/scan.py:199-201 (we fill NULLs for any type).
     - ``cumcount``: running count of non-missing values (bonus, the
@@ -100,17 +237,11 @@ def groupby_scan(
         )
     if not custom and plan != "window":
         from flox_spark.options import OPTIONS
-        from flox_spark.scan_blocked import _SUPPORTED as _BLOCKED_SCANS
 
-        _shiftlike = func in ("shift", "diff", "pct_change")
-        blockable = func in _BLOCKED_SCANS or _shiftlike
-        if plan == "blocked" or (
-            blockable
-            and blocked_route.route_to_blocked(
-                df, by, OPTIONS["blocked_route_scan_rows"], order_by=order_by
-            )
+        if plan == "blocked" or blocked_route.route_to_blocked(
+            df, by, OPTIONS["blocked_route_scan_rows"], order_by=order_by
         ):
-            if _shiftlike:
+            if func in _LAGS:
                 from flox_spark.shift_blocked import groupby_shift_blocked
 
                 return groupby_shift_blocked(
@@ -125,70 +256,16 @@ def groupby_scan(
             )
     vdt = df.schema[value].dataType
     v = F.col(value)
-    missing = is_missing(v, vdt)
-    v_skip = to_skip(v, vdt)
-
-    w = Window.partitionBy(*by).orderBy(order_by).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    expr: Column
+    w_ord = Window.partitionBy(*by).orderBy(order_by)
     if custom:
-        w_fwd = Window.partitionBy(*by).orderBy(order_by).rowsBetween(
-            Window.currentRow, Window.unboundedFollowing
-        )
         ctx = ScanContext(
-            value=v, v_skip=v_skip, missing=missing, dt=vdt,
-            window=w, window_fwd=w_fwd, kwargs=dict(finalize_kwargs or {}),
+            value=v, v_skip=to_skip(v, vdt), missing=is_missing(v, vdt), dt=vdt,
+            window=w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow),
+            window_fwd=w_ord.rowsBetween(Window.currentRow, Window.unboundedFollowing),
+            kwargs=dict(finalize_kwargs or {}),
         )
         return df.withColumn(out, func.build(ctx))
-    if func == "cumsum":
-        av, _ = arith_input(v_skip, vdt)
-        run = F.sum(av).over(w)
-        # numpy cumsum: NaN poisons everything from its position on
-        poisoned = F.max(F.when(missing, F.lit(1)).otherwise(F.lit(0))).over(w) == 1
-        if is_float_type(vdt):
-            expr = F.when(poisoned, F.lit(float("nan"))).otherwise(run)
-            if vdt.simpleString() == "float":
-                expr = expr.cast("float")
-        else:
-            expr = F.when(poisoned, F.lit(None)).otherwise(run)
-    elif func == "nancumsum":
-        av, avdt = arith_input(v_skip, vdt)
-        zero = F.lit(0).cast("double" if is_float_type(avdt) else "long")
-        expr = F.coalesce(F.sum(av).over(w), zero)
-        if vdt.simpleString() == "float":
-            expr = expr.cast("float")
-    elif func == "cumprod" or func == "nancumprod":
-        av, _ = arith_input(v_skip, vdt)
-        run = F.product(av).over(w)
-        if func == "cumprod":
-            poisoned = F.max(F.when(missing, F.lit(1)).otherwise(F.lit(0))).over(w) == 1
-            if is_float_type(vdt):
-                expr = F.when(poisoned, F.lit(float("nan"))).otherwise(run)
-            else:
-                # integer input: poison must stay NULL — a NaN literal
-                # here would be cast to long below, and non-ANSI
-                # CAST(NaN AS BIGINT) silently yields 0 (cumsum's int
-                # branch already does this)
-                expr = F.when(poisoned, F.lit(None)).otherwise(run)
-        else:
-            expr = F.coalesce(run, F.lit(1.0))
-        if not is_float_type(vdt):
-            expr = expr.cast("long")
-        elif vdt.simpleString() == "float":
-            expr = expr.cast("float")
-    elif func == "cumcount":
-        expr = F.count(v_skip).over(w)
-    elif func in ("cummax", "cummin"):
-        # NaN-skipping running extrema (beyond-reference utility);
-        # preserves input type
-        f = F.max if func == "cummax" else F.min
-        expr = f(v_skip).over(w)
-    elif func == "ffill":
-        expr = F.last(v_skip, ignorenulls=True).over(w)
-    elif func == "bfill":
-        w_fwd = Window.partitionBy(*by).orderBy(order_by).rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        expr = F.first(v_skip, ignorenulls=True).over(w_fwd)
-    elif func in ("shift", "diff", "pct_change"):
+    if func in _LAGS:
         # pandas GroupBy.shift/diff parity (beyond the reference's
         # SCANS): lag/lead needs an UNFRAMED ordered window.  Rows
         # with no lag partner (group head for positive periods) are
@@ -196,34 +273,18 @@ def groupby_scan(
         # pandas would upcast ints to float and emit NaN there, which
         # a typed column engine deliberately does not do.
         periods = int((finalize_kwargs or {}).get("periods", 1))
-        w_ord = Window.partitionBy(*by).orderBy(order_by)
         lagged = (
             F.lag(v, periods).over(w_ord)
             if periods >= 0
             else F.lead(v, -periods).over(w_ord)
         )
-        if func == "shift":
-            expr = lagged
-        elif func == "pct_change":
-            # pandas GroupBy.pct_change: v / lag(v) - 1; a zero lag
-            # yields NULL via try_divide (ANSI-safe), not an abort
-            expr = F.try_divide(v.cast("double"), lagged.cast("double")) - F.lit(1.0)
-        else:
-            av, _ = arith_input(v, vdt)
-            lv, _ = arith_input(lagged, vdt)
-            expr = av - lv
-            from flox_spark.dtypes import is_datetime_type, is_timedelta_type
-
-            if is_datetime_type(vdt) or is_timedelta_type(vdt):
-                # datetime diff yields an interval-like long of
-                # microseconds, surfaced as day-time interval
-                expr = F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), expr / F.lit(1e6))
-            elif vdt.simpleString() == "float":
-                expr = expr.cast("float")
-    else:  # pragma: no cover
-        raise AssertionError(func)
-
-    return df.withColumn(out, expr)
+        return df.withColumn(out, _lag_finish(func, v, lagged, vdt))
+    spec = _cumulative_scan(func, v, vdt)
+    o = F.col(order_by)
+    w = Window.partitionBy(*by).orderBy(o.desc() if spec.reverse else o).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return df.withColumn(out, spec.finish([ch.scan(w) for ch in spec.channels]))
 
 
 def groupby_ewm(
@@ -304,14 +365,10 @@ def groupby_ewm(
             "on the per-group kernel (the renormalized second moment "
             "has no clean affine form)"
         )
+    from flox_spark.ewm_blocked import _pandas_kw
+
     out = out or f"ewm_{func}"
-    kw = (
-        {"alpha": alpha}
-        if alpha is not None
-        else {"halflife": halflife}
-        if halflife is not None
-        else {"span": span}
-    )
+    kw = _pandas_kw(alpha, halflife, span)
 
     in_fields = [f for f in df.schema.fields if f.name in (*by, order_by, value)]
     schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in in_fields]

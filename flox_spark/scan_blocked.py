@@ -2,27 +2,25 @@
 
 ``groupby_scan`` shuffles each group to ONE task (WindowExec needs
 the whole partition sorted) — correct at any size thanks to spilling,
-but a single enormous group serializes on one core.  This module
-splits each group into order-range blocks and runs the scan in the
-Blelloch shape flox uses across dask chunks (flox/dask.py:576-663,
-scan_binary_op flox/aggregations.py:792-846):
+but a single enormous group serializes on one core.  This module runs
+the cumulative scans through ``blocked_route.blocked_scan`` (order-range
+blocks, see its docstring for the stages), with each scan's channels
+from ``scan._cumulative_scan`` — the window plan's own expressions:
 
-    stage 1  local scan inside (key, block)        [big shuffle, split]
-    stage 2  per-block carry summary               [small]
-    stage 3  exclusive prefix of carries over blocks per key  [tiny window]
-    stage 4  broadcast-join carries back, combine  [no extra big shuffle]
+- local pass: every channel's running window within (key, block);
+- carry: the channel's reduction over the block (``coalesce``d to the
+  identity), e.g. ``sum`` / ``product`` / ``count`` / ``max``, a
+  "missing seen" max for the NaN-poisoning ``cumsum``/``cumprod``, and
+  the last non-missing value in order for the fills;
+- fold and combine: the channel's ``op`` (``+``, ``*``, ``greatest``,
+  ``least``, ``coalesce(later, earlier)``) — ``combine = op(state,
+  local)`` then the scan's own ``finish`` (poison, dtype restore).
 
-Supported funcs: ``nancumsum``, ``cumcount`` (additive carries) and
-``ffill`` (last-non-missing carry).  Results equal ``groupby_scan``
-exactly; use when profiling shows one group dominating a WindowExec
-task.  Blocks are order-column QUANTILE buckets from a lazy broadcast
-``percentile_approx`` aggregate (no driver action): equal-population
-blocks even when the order column is skewed (timestamp bursts), where
-uniform [min, max] ranges would put nearly everything in one block.
-Rows of block i still all precede block i+1 (the bucket function is
-monotone in the order column; ties land in one block).  The order
-column is numericized first (timestamp/date -> int64), so datetime
-order columns work; it must be non-null.
+``bfill`` runs over the reversed order, so its blocks fold from the
+last to the first.  Results equal ``groupby_scan`` (sums and products
+reassociate across blocks: last-ulp drift); the order column is
+numericized for blocking (timestamp/date -> int64) and must be
+non-null.
 """
 
 from __future__ import annotations
@@ -30,7 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import arith_input, is_float_type, to_skip
+from flox_spark.blocked_route import BlockedSpec, blocked_scan
+from flox_spark.dtypes import arith_input
+from flox_spark.scan import _cumulative_scan
 
 __all__ = ["groupby_scan_blocked"]
 
@@ -58,146 +58,33 @@ def groupby_scan_blocked(
 ) -> DataFrame:
     if func not in _SUPPORTED:
         raise ValueError(f"blocked scan supports {_SUPPORTED}, not {func!r}")
-    out = alias or func
     vdt = df.schema[value].dataType
-    v_skip = to_skip(F.col(value), vdt)
+    cs = _cumulative_scan(func, F.col(value), vdt)
+    o = F.col(order_by)
+    null = F.lit(None).cast(vdt)
+    # (carry name, local-pass name, channel, identity)
+    chans = [
+        (f"__c{i}", f"__l{i}", ch, ch.identity if ch.identity is not None else null)
+        for i, ch in enumerate(cs.channels)
+    ]
 
-    # equal-population blocks: approx-quantile breaks of the (numeric
-    # view of the) order column, from a lazy broadcast aggregate.
-    # block(x) = #{breaks < x} is monotone, so block i's rows all
-    # precede block i+1's and duplicate order values share one block.
-    onum, _ = arith_input(F.col(order_by), df.schema[order_by].dataType)
-    qs = [i / num_blocks for i in range(1, num_blocks)]
-    bounds = df.agg(
-        F.percentile_approx(onum, F.array(*[F.lit(q) for q in qs]), F.lit(10000)).alias(
-            "__breaks"
+    def local(work, keys):
+        w = Window.partitionBy(*keys).orderBy(o.desc() if cs.reverse else o).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
         )
+        return work.select("*", *[ch.scan(w).alias(ln) for _, ln, ch, _ in chans])
+
+    spec = BlockedSpec(
+        out=alias or func,
+        local=local,
+        carry={
+            cn: F.coalesce(ch.carry(o) if ch.carry else ch.run, ident)
+            for cn, _, ch, ident in chans
+        },
+        identity=F.struct(*[ident.alias(cn) for cn, _, _, ident in chans]),
+        fold=lambda s, b: F.struct(*[ch.op(s[cn], b[cn]).alias(cn) for cn, _, ch, _ in chans]),
+        combine=lambda s, _: cs.finish([ch.op(s[cn], F.col(ln)) for cn, ln, ch, _ in chans]),
+        descending=cs.reverse,
     )
-    work = (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn("__blk", F.size(F.filter(F.col("__breaks"), lambda b: b < onum)).cast("int"))
-        .drop("__breaks")
-    )
-
-    # stage 1: local scan within (key, block).  bfill is the mirror
-    # image: traverse each block DESCENDING and take carries from
-    # LATER blocks, so its windows flip direction.
-    order_col = F.col(order_by).desc() if func == "bfill" else F.col(order_by)
-    w_local = (
-        Window.partitionBy(*by, "__blk")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-
-    if func in ("cumsum", "cumprod"):
-        # plain (NaN-poisoning) variants: the nan* carry PLUS a
-        # "missing seen so far" boolean carry (a cummax) threaded
-        # through the same four stages; positions at-or-after the
-        # first missing value poison to NaN (NULL for non-float
-        # inputs — CAST(NaN AS BIGINT) would silently yield 0)
-        from flox_spark.dtypes import NAN, is_missing
-
-        is_sum = func == "cumsum"
-        ident = F.lit(0 if is_sum else 1).cast("double" if is_float_type(vdt) else "long")
-        acc = F.sum if is_sum else F.product
-        work = work.withColumn("__m", is_missing(F.col(value), vdt).cast("int"))
-        staged = work.withColumn(
-            "__ls", F.coalesce(acc(v_skip).over(w_local), ident)
-        ).withColumn("__lp", F.max("__m").over(w_local))
-        carries = work.groupBy(*by, "__blk").agg(
-            F.coalesce(acc(v_skip), ident).alias("__cs"),
-            F.max("__m").alias("__cp"),
-        )
-        w_prefix = (
-            Window.partitionBy(*by).orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = carries.select(
-            *by,
-            "__blk",
-            F.coalesce(acc("__cs").over(w_prefix), F.lit(0 if is_sum else 1)).alias("__os"),
-            F.coalesce(F.max("__cp").over(w_prefix), F.lit(0)).alias("__op"),
-        )
-        joined = staged.join(F.broadcast(offsets), [*by, "__blk"], "left")
-        off = F.coalesce(F.col("__os"), F.lit(0 if is_sum else 1))
-        total = (F.col("__ls") + off) if is_sum else (F.col("__ls") * off)
-        poisoned = F.greatest(F.col("__lp"), F.coalesce(F.col("__op"), F.lit(0))) == 1
-        if is_float_type(vdt):
-            combined = F.when(poisoned, F.lit(NAN)).otherwise(total)
-        else:
-            combined = F.when(poisoned, F.lit(None)).otherwise(total).cast("long")
-        return joined.withColumn(out, combined).drop(
-            "__blk", "__m", "__ls", "__lp", "__os", "__op"
-        )
-
-    if func == "nancumsum":
-        zero = F.lit(0).cast("double" if is_float_type(vdt) else "long")
-        local = F.coalesce(F.sum(v_skip).over(w_local), zero)
-        carry_agg = F.coalesce(F.sum(v_skip), zero)
-    elif func == "cumcount":
-        local = F.count(v_skip).over(w_local)
-        carry_agg = F.count(v_skip)
-    elif func == "cummax":
-        local = F.max(v_skip).over(w_local)
-        carry_agg = F.max(v_skip)
-    elif func == "cummin":
-        local = F.min(v_skip).over(w_local)
-        carry_agg = F.min(v_skip)
-    elif func == "nancumprod":
-        one = F.lit(1).cast("double")
-        local = F.coalesce(F.product(v_skip).over(w_local), one)
-        carry_agg = F.coalesce(F.product(v_skip), one)
-        if not is_float_type(vdt):
-            local = local.cast("long")
-            carry_agg = carry_agg.cast("long")
-    elif func == "ffill":
-        local = F.last(v_skip, ignorenulls=True).over(w_local)
-        # block carry = last NON-missing value in order (missing rows
-        # must not clobber the carry)
-        carry_agg = F.max(
-            F.when(v_skip.isNotNull(), F.struct(F.col(order_by).alias("o"), v_skip.alias("v")))
-        )["v"]
-    else:  # bfill: first non-missing value in order
-        local = F.last(v_skip, ignorenulls=True).over(w_local)
-        carry_agg = F.min(
-            F.when(v_skip.isNotNull(), F.struct(F.col(order_by).alias("o"), v_skip.alias("v")))
-        )["v"]
-    staged = work.withColumn("__local", local)
-
-    # stage 2: per-(key, block) carry summaries (reuses stage-1 keys)
-    carries = work.groupBy(*by, "__blk").agg(carry_agg.alias("__carry"))
-
-    # stage 3: exclusive prefix of carries over blocks (tiny window:
-    # |groups| x num_blocks rows)
-    w_prefix = (
-        Window.partitionBy(*by)
-        .orderBy(F.col("__blk").desc() if func == "bfill" else F.col("__blk"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    if func in ("nancumsum", "cumcount"):
-        offset = F.coalesce(F.sum("__carry").over(w_prefix), F.lit(0))
-    elif func == "cummax":
-        offset = F.max("__carry").over(w_prefix)
-    elif func == "cummin":
-        offset = F.min("__carry").over(w_prefix)
-    elif func == "nancumprod":
-        offset = F.coalesce(F.product("__carry").over(w_prefix), F.lit(1.0))
-    else:  # ffill: last non-null carry among earlier blocks
-        offset = F.last("__carry", ignorenulls=True).over(w_prefix)
-    offsets = carries.select(*by, "__blk", offset.alias("__off"))
-
-    # stage 4: combine local result with the carried offset
-    joined = staged.join(F.broadcast(offsets), [*by, "__blk"], "left")
-    if func in ("nancumsum", "cumcount"):
-        combined = F.col("__local") + F.coalesce(F.col("__off"), F.lit(0))
-    elif func == "cummax":
-        combined = F.greatest(F.col("__local"), F.col("__off"))  # greatest/least skip nulls
-    elif func == "cummin":
-        combined = F.least(F.col("__local"), F.col("__off"))
-    elif func == "nancumprod":
-        off = F.coalesce(F.col("__off"), F.lit(1))
-        combined = F.col("__local") * off
-        if not is_float_type(vdt):
-            combined = combined.cast("long")
-    else:
-        combined = F.coalesce(F.col("__local"), F.col("__off"))
-    return joined.withColumn(out, combined).drop("__blk", "__local", "__off")
+    onum, _ = arith_input(o, df.schema[order_by].dataType)
+    return blocked_scan(df, by, onum, spec, num_blocks)

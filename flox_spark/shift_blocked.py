@@ -3,37 +3,35 @@
 ``groupby_scan(func="shift"|"diff"|"pct_change")`` is one ordered
 WindowExec per group — a few-groups giant table serializes its sort
 on as many cores as there are groups.  A lag is the easiest scan to
-block: each order-range block only needs the PREVIOUS blocks' last
-``periods`` rows, so the carry is a bounded (order, value) array and
-the cross-block combine is "concat, keep the tail" — associative,
-tiny, and exact (shift copies values; no arithmetic drift is
-possible, so the blocked form is BITWISE equal to the window form).
+block (``blocked_route.blocked_scan`` runs the stages): each
+order-range block only needs the PREVIOUS blocks' last ``periods``
+rows, so
 
-    stage 1  order-quantile blocks; local lag + row_number per
-             (key, block)                      [big shuffle, split]
-    stage 2  per-block carry = the block's last `periods`
-             (order, value) rows               [|groups| x blocks x p]
-    stage 3  exclusive concat-tail prefix over blocks per key
-             (tiny ``F.aggregate`` fold)
-    stage 4  broadcast-join carries back; the first `periods` rows
-             of each block read from the carried tail
+- local pass: lag + row_number within (key, block);
+- carry: the block's last ``periods`` (order, value) rows;
+- fold: "concat, keep the tail" from the empty array — associative,
+  tiny, and exact (shift copies values; no arithmetic drift is
+  possible, so the blocked form is BITWISE equal to the window form);
+- combine: the first ``periods`` rows of each block read from the
+  carried tail.
 
 Negative ``periods`` (lead) mirrors every direction: the "previous"
 blocks are the LATER ones and the carry is each block's head.
 ``diff``/``pct_change`` post-process the same lagged column with
-exactly ``groupby_scan``'s expressions (datetime diff -> day-time
-interval, try_divide for pct_change), so all three funcs share one
-blocked lag.  Differentials pinned in tests/test_shift_blocked.py:
-bitwise vs ``groupby_scan`` across funcs x periods (1..7, beyond the
-block size) x directions x NULL/NaN patterns, plus a hypothesis fuzz.
+``groupby_scan``'s own ``_lag_finish``.  Differentials pinned in
+tests/test_shift_blocked.py: bitwise vs ``groupby_scan`` across funcs x
+periods (1..7, beyond the block size) x directions x NULL/NaN patterns,
+plus a hypothesis fuzz.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import arith_input, is_datetime_type, is_timedelta_type
+from flox_spark.blocked_route import BlockedSpec, blocked_scan
+from flox_spark.dtypes import arith_input
+from flox_spark.scan import _lag_finish
 
 __all__ = ["groupby_shift_blocked"]
 
@@ -58,126 +56,44 @@ def groupby_shift_blocked(
     contract)."""
     if func not in _FUNCS:
         raise ValueError(f"blocked shift supports {_FUNCS}, not {func!r}")
-    if num_blocks < 1:
-        raise ValueError("num_blocks must be >= 1")
     out = alias or func
     periods = int(periods)
     vdt = df.schema[value].dataType
     v = F.col(value)
     if periods == 0:
-        lagged = v
-        return _finish(df.withColumn("__lagged", lagged), func, value, vdt, out)
+        return df.withColumn(out, _lag_finish(func, v, v, vdt))
     ascending = periods > 0
     p = abs(periods)
+    o = F.col(order_by)
 
-    # order-quantile blocks; the numeric order view STAGED as a real
-    # column (the ewm_blocked lesson: a derived expression captured in
-    # the filter lambda can mis-bind across the crossJoin)
-    onum, _ = arith_input(F.col(order_by), df.schema[order_by].dataType)
-    if num_blocks > 1:
-        qs = [i / num_blocks for i in range(1, num_blocks)]
-        bounds = df.agg(
-            F.percentile_approx(
-                onum, F.array(*[F.lit(q) for q in qs]), F.lit(10000)
-            ).alias("__breaks")
-        )
-        work = (
-            df.withColumn("__onum", onum)
-            .crossJoin(F.broadcast(bounds))
-            .withColumn(
-                "__blk",
-                F.size(
-                    F.filter(F.col("__breaks"), lambda b: b < F.col("__onum"))
-                ).cast("int"),
-            )
-            .drop("__breaks", "__onum")
-        )
-    else:
-        work = df.withColumn("__blk", F.lit(0).cast("int"))
+    def tail(arr: Column) -> Column:
+        return F.when(F.size(arr) > p, F.slice(arr, F.size(arr) - F.lit(p) + 1, F.lit(p))).otherwise(arr)
 
-    # stage 1: local lag + position within (key, block), in the lag's
-    # direction (a lead is a lag over the reversed order)
-    ocol = F.col(order_by).asc() if ascending else F.col(order_by).desc()
-    w_local = Window.partitionBy(*by, "__blk").orderBy(ocol)
-    staged = work.withColumn("__lagged", F.lag(v, p).over(w_local)).withColumn(
-        "__rn", F.row_number().over(w_local)
-    )
+    def local(work, keys):
+        # a lead is a lag over the reversed order
+        w = Window.partitionBy(*keys).orderBy(o.asc() if ascending else o.desc())
+        return work.select("*", F.lag(v, p).over(w).alias("__lagged"), F.row_number().over(w).alias("__rn"))
 
-    # stage 2: per-block carry = the last p rows in lag direction
-    arr_all = F.sort_array(
-        F.collect_list(F.struct(F.col(order_by).alias("o"), v.alias("v"))),
-        asc=ascending,
-    )
-    tail = F.when(
-        F.size(arr_all) > p,
-        F.slice(arr_all, F.size(arr_all) - F.lit(p) + 1, F.lit(p)),
-    ).otherwise(arr_all)
-    carries = work.groupBy(*by, "__blk").agg(tail.alias("__tail"))
+    def combine(prev, _):
+        # rows whose local position <= p read from the carried tail;
+        # index from the END of prev (its last element is the row
+        # immediately before the block in lag direction)
+        idx = F.size(prev) - F.lit(p) + F.col("__rn")
+        from_prev = F.when(idx >= 1, F.element_at(prev, idx)["v"])
+        lagged = F.when(F.col("__rn") > p, F.col("__lagged")).otherwise(from_prev)
+        return _lag_finish(func, v, lagged, vdt)
 
-    # stage 3: exclusive concat-tail prefix over blocks per key, in
-    # lag direction (lead: later blocks are the "previous" ones)
-    arr = F.array_sort(
-        F.collect_list(F.struct("__blk", "__tail"))
-    ).alias("__arr")
-    if not ascending:
-        arr = F.reverse(
-            F.array_sort(F.collect_list(F.struct("__blk", "__tail")))
-        ).alias("__arr")
-
-    def _fold_tail(st, b):
-        cat = F.concat(st, b["__tail"])
-        return F.when(
-            F.size(cat) > p,
-            F.slice(cat, F.size(cat) - F.lit(p) + 1, F.lit(p)),
-        ).otherwise(cat)
-
-    vtype = df.schema[value].dataType.simpleString()
     otype = df.schema[order_by].dataType.simpleString()
-    zero = F.array().cast(f"array<struct<o: {otype}, v: {vtype}>>")
-    states = (
-        carries.groupBy(*by)
-        .agg(arr)
-        .select(*by, F.col("__arr"), F.posexplode("__arr").alias("__pos", "__b"))
-        .select(
-            *by,
-            F.col("__b")["__blk"].alias("__blk"),
-            F.aggregate(
-                F.slice(F.col("__arr"), F.lit(1), F.col("__pos")),
-                zero, _fold_tail,
-            ).alias("__prev"),
-        )
+    spec = BlockedSpec(
+        out=out,
+        local=local,
+        carry={"__tail": tail(F.sort_array(
+            F.collect_list(F.struct(o.alias("o"), v.alias("v"))), asc=ascending
+        ))},
+        identity=F.array().cast(f"array<struct<o: {otype}, v: {vdt.simpleString()}>>"),
+        fold=lambda s, b: tail(F.concat(s, b["__tail"])),
+        combine=combine,
+        descending=not ascending,
     )
-
-    # stage 4: rows whose local position <= p read from the carried
-    # tail; index from the END of prev (prev is in lag direction, its
-    # last element is the row immediately before the block)
-    joined = staged.join(F.broadcast(states), [*by, "__blk"], "left")
-    idx = F.size(F.col("__prev")) - F.lit(p) + F.col("__rn")
-    from_prev = F.when(
-        idx >= 1, F.element_at(F.col("__prev"), idx)["v"]
-    )
-    lagged = F.when(F.col("__rn") > p, F.col("__lagged")).otherwise(from_prev)
-    joined = joined.withColumn("__lagged", lagged).drop(
-        "__blk", "__rn", "__prev"
-    )
-    return _finish(joined, func, value, vdt, out)
-
-
-def _finish(staged: DataFrame, func: str, value: str, vdt, out: str) -> DataFrame:
-    """``groupby_scan``'s exact shift/diff/pct_change finalization over
-    the blocked lag column (scan.py:144-176 semantics)."""
-    v = F.col(value)
-    lagged = F.col("__lagged")
-    if func == "shift":
-        expr = lagged
-    elif func == "pct_change":
-        expr = F.try_divide(v.cast("double"), lagged.cast("double")) - F.lit(1.0)
-    else:
-        av, _ = arith_input(v, vdt)
-        lv, _ = arith_input(lagged, vdt)
-        expr = av - lv
-        if is_datetime_type(vdt) or is_timedelta_type(vdt):
-            expr = F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), expr / F.lit(1e6))
-        elif vdt.simpleString() == "float":
-            expr = expr.cast("float")
-    return staged.withColumn(out, expr).drop("__lagged")
+    onum, _ = arith_input(o, df.schema[order_by].dataType)
+    return blocked_scan(df, by, onum, spec, num_blocks)

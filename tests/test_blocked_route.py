@@ -215,3 +215,38 @@ def test_rank_auto_nonnumeric_value_stays_window(spark, monkeypatch):
     with set_options(blocked_route_min_bytes=0, blocked_route_rank_rows=0):
         out = groupby_rank(df, "k", value="v").collect()
     assert not calls and len(out) == 6
+
+
+@pytest.mark.parametrize("op", ["scan", "shift", "rank", "ewm"])
+def test_num_blocks_zero_rejected(spark, op):
+    # every blocked operator validates through the one skeleton
+    df = _frame(spark, n=20)
+    calls = {
+        "scan": lambda: SB.groupby_scan_blocked(
+            df, "k", func="nancumsum", value="v", order_by="t", num_blocks=0),
+        "shift": lambda: HB.groupby_shift_blocked(
+            df, "k", value="v", order_by="t", num_blocks=0),
+        "rank": lambda: RB.groupby_rank_blocked(df, "k", value="v", num_blocks=0),
+        "ewm": lambda: EB.groupby_ewm_blocked(
+            df, "k", value="v", order_by="t", alpha=0.5, num_blocks=0),
+    }
+    with pytest.raises(ValueError, match="num_blocks must be >= 1"):
+        calls[op]()
+
+
+@pytest.mark.parametrize("op", ["scan", "shift", "rank"])
+def test_null_group_label_is_a_group(spark, op):
+    # a NULL key is one group in the window plan; the blocked plan's
+    # state join must match it too (null-safe), or every block after
+    # the first loses its carry
+    rows = [(None if i % 2 else "a", i, float(i % 7)) for i in range(200)]
+    df = spark.createDataFrame(rows, "k string, t long, v double")
+    if op == "rank":
+        want = groupby_rank(df, "k", value="v", plan="window")
+        got = RB.groupby_rank_blocked(df, "k", value="v", num_blocks=4)
+    else:
+        func = "nancumsum" if op == "scan" else "shift"
+        want = groupby_scan(df, "k", func=func, value="v", order_by="t", plan="window")
+        got = (SB.groupby_scan_blocked if op == "scan" else HB.groupby_shift_blocked)(
+            df, "k", func=func, value="v", order_by="t", num_blocks=4)
+    assert _sorted_rows(got) == _sorted_rows(want)

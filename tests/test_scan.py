@@ -219,3 +219,34 @@ def test_complex_dtype_rejected_loudly(spark):
             df.withColumn("idx", df.v), "k", func="cumsum", value="v",
             order_by="idx", dtype=np.complex64,
         )
+
+
+def test_bfill_reversed_running_frame(spark):
+    # bfill is ffill over the reversed order (a running frame): same
+    # values as first(ignorenulls) over currentRow..unboundedFollowing,
+    # which Spark re-aggregates for every row (superlinear per group)
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(4)
+    n = 600
+    v = rng.normal(size=n)
+    v[rng.random(n) < 0.4] = np.nan
+    v[-25:] = np.nan  # trailing missing runs stay missing
+    pdf = pd.DataFrame({"idx": rng.permutation(n).astype(np.int64),
+                        "label": rng.integers(0, 4, n), "v": v})
+    df = spark.createDataFrame(pdf)
+    got = groupby_scan(df, "label", func="bfill", value="v", order_by="idx", plan="window")
+    w_fwd = Window.partitionBy("label").orderBy("idx").rowsBetween(
+        Window.currentRow, Window.unboundedFollowing
+    )
+    ref = df.withColumn(
+        "bfill", F.first(F.nanvl("v", F.lit(None).cast("double")), ignorenulls=True).over(w_fwd)
+    )
+    want = {r["idx"]: r["bfill"] for r in ref.collect()}
+    have = {r["idx"]: r["bfill"] for r in got.collect()}
+    assert have == want
+    assert any(x is None for x in have.values()) and any(x is not None for x in have.values())
+    plan = got._jdf.queryExecution().analyzed().toString().lower()
+    assert "unboundedfollowing" not in plan
+    assert "unboundedpreceding" in plan

@@ -166,3 +166,122 @@ def test_reindex_broadcast_heuristic(spark):
         expected_groups=[0, 1, 2], fill_value=0.0, sort=False,
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in small or "BroadcastExchange" in small
+
+
+# ---- parity matrix: blocked plan vs window plan, dtype and value ----
+
+import datetime as _dt
+import math
+
+from pyspark.sql import types as T
+
+from flox_spark import groupby_ewm, groupby_shift_blocked
+from flox_spark.scan_blocked import _SUPPORTED
+
+_T0 = _dt.datetime(2024, 1, 1)
+_MATRIX_TYPES = {
+    "float64": T.DoubleType(),
+    "float32": T.FloatType(),
+    "int64": T.LongType(),
+    "bool": T.BooleanType(),
+    "timestamp": T.TimestampType(),
+}
+# sums and products of instants have no meaning; every other scan does
+_TIMESTAMP_FUNCS = ("cumcount", "ffill", "bfill", "cummax", "cummin")
+
+
+def _matrix_value(dtype, rng):
+    if rng.random() < 0.15:
+        return None
+    if dtype == "float64":
+        return float("nan") if rng.random() < 0.3 else float(rng.uniform(0.5, 1.5))
+    if dtype == "float32":
+        return float(np.float32(rng.uniform(0.5, 1.5)))
+    if dtype == "int64":
+        return int(rng.integers(-3, 4))
+    if dtype == "bool":
+        return bool(rng.random() < 0.6)
+    return _T0 + _dt.timedelta(minutes=int(rng.integers(0, 10_000)))
+
+
+_matrix_frames: dict = {}
+
+
+def _matrix_frame(spark, dtype):
+    if dtype not in _matrix_frames:
+        rng = np.random.default_rng(17)
+        n = 240
+        t = rng.permutation(n)
+        rows = [(f"g{i % 3}", int(t[i]), _matrix_value(dtype, rng)) for i in range(n)]
+        schema = T.StructType([
+            T.StructField("k", T.StringType()),
+            T.StructField("t", T.LongType()),
+            T.StructField("v", _MATRIX_TYPES[dtype]),
+        ])
+        _matrix_frames[dtype] = spark.createDataFrame(rows, schema).cache()
+    return _matrix_frames[dtype]
+
+
+def _same_cell(g, w):
+    if w is None:
+        return g is None
+    if isinstance(w, float):
+        if math.isnan(w):
+            return isinstance(g, float) and math.isnan(g)
+        return g is not None and g == pytest.approx(w, rel=1e-9, abs=0)
+    return g == w
+
+
+def _assert_same(got, want, out, key):
+    assert got.schema[out].dataType == want.schema[out].dataType
+    w = {tuple(r[c] for c in key): r[out] for r in want.collect()}
+    g = {tuple(r[c] for c in key): r[out] for r in got.collect()}
+    assert set(g) == set(w)
+    bad = [(k, g[k], w[k]) for k in w if not _same_cell(g[k], w[k])]
+    assert not bad, bad[:5]
+
+
+_MATRIX = [
+    (dtype, func)
+    for dtype in _MATRIX_TYPES
+    for func in _SUPPORTED
+    if dtype != "timestamp" or func in _TIMESTAMP_FUNCS
+]
+
+
+@pytest.mark.parametrize("nb", [1, 7])
+@pytest.mark.parametrize("dtype,func", _MATRIX)
+def test_blocked_equals_window(spark, dtype, func, nb):
+    df = _matrix_frame(spark, dtype)
+    want = groupby_scan(df, "k", func=func, value="v", order_by="t", plan="window")
+    got = groupby_scan_blocked(df, "k", func=func, value="v", order_by="t", num_blocks=nb)
+    _assert_same(got, want, func, ("k", "t"))
+
+
+def _timestamp_order_frame(spark):
+    rng = np.random.default_rng(23)
+    n = 300
+    rows = [
+        (f"g{i % 2}", _T0 + _dt.timedelta(seconds=int(s)),
+         None if rng.random() < 0.1 else float(rng.normal()))
+        for i, s in enumerate(rng.permutation(n) * 7)
+    ]
+    schema = "k string, ts timestamp, v double"
+    return spark.createDataFrame(rows, schema)
+
+
+def test_blocked_shift_timestamp_order(spark):
+    df = _timestamp_order_frame(spark)
+    want = groupby_scan(df, "k", func="shift", value="v", order_by="ts",
+                        finalize_kwargs={"periods": 2}, plan="window")
+    got = groupby_shift_blocked(df, "k", value="v", order_by="ts", periods=2, num_blocks=4)
+    _assert_same(got, want, "shift", ("k", "ts"))
+
+
+@pytest.mark.parametrize("adjust", [True, False])
+def test_blocked_ewm_timestamp_order(spark, adjust):
+    df = _timestamp_order_frame(spark)
+    kw = dict(value="v", order_by="ts", alpha=0.2, adjust=adjust, out="m")
+    want = groupby_ewm(df, "k", plan="window", **kw)
+    got = groupby_ewm(df, "k", plan="blocked", **kw)
+    _assert_same(got, want, "m", ("k", "ts"))
