@@ -1142,21 +1142,6 @@ def q_quantile_refine(s, d):
     return out.withColumn("p90_price", F.round("p90_price", 6))
 
 
-def q_quantile_refine2(s, d):
-    # the big-scale exact quantile (two-level bracket: one extra
-    # narrowing scan between the sketch and the candidate collect,
-    # three scans, zero data-sized shuffles) must also produce the
-    # identical p90 — driver evidence for quantile_impl="refine2"
-    from flox_spark import set_options
-
-    with set_options(quantile_impl="refine2"):
-        out = _q_reduce(
-            "nanquantile", "lineitem", ["l_returnflag"], "l_extendedprice", "p90_price",
-            finalize_kwargs={"q": 0.9},
-        )(s, d)
-    return out.withColumn("p90_price", F.round("p90_price", 6))
-
-
 def q_dedup_against(s, d):
     # incremental cross-corpus dedup: odd-id "new batch" anti-joined
     # against even-id "existing corpus" on the shared normalized
@@ -2884,7 +2869,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scan_pct_change": q_pct_change,
         "corr_spearman": q_corr_spearman,
         "rolling_rows": q_rolling_rows,
-        "quantile_refine2": q_quantile_refine2,
         "quantile_refine": q_quantile_refine,
         "simhash_xx": q_simhash_xx,
         "sample_bernoulli": q_sample_bernoulli,
@@ -3661,9 +3645,6 @@ UNION ALL SELECT doc_id, 7 AS band, md5(mh14::VARCHAR || '|' || mh15::VARCHAR) A
               FROM keep GROUP BY doc_id
             ) k USING (doc_id)""",
         "quantile_refine": """
-            SELECT l_returnflag, round(quantile_cont(l_extendedprice, 0.9), 6) AS p90_price
-            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-        "quantile_refine2": """
             SELECT l_returnflag, round(quantile_cont(l_extendedprice, 0.9), 6) AS p90_price
             FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
         "binned_left": """

@@ -266,23 +266,33 @@ def _arg(c: AggContext, skipna: bool, is_max: bool) -> str:
     return f"CASE WHEN bool_or({miss}) THEN {first_missing} ELSE {best} END"
 
 
-def _lerp(a: str, x: float) -> str:
-    """Linear interpolation at quantile ``x`` over the sorted array
-    ``a``: the lerp Spark's ``percentile`` aggregate runs
-    (Percentile.scala: lower + (higher - lower) * (rank - lowerIndex)),
-    with an integral rank returning the exact order statistic (no fp
-    noise from a degenerate lerp).  The CASE guard keeps ANSI
-    element_at from ever seeing an out-of-range index on the untaken
-    branch."""
+def sql_lerp(lo: str, hi: str, frac: str) -> str:
+    """The one interpolation rule of every exact-quantile strategy:
+    numpy's two-sided linear interpolation (numpy ``_lerp``),
+    ``lo + frac*(hi-lo)`` for frac < 0.5, else ``hi - (1-frac)*(hi-lo)``,
+    between the floor- and ceil-rank neighbours.  No ``lo = hi``
+    shortcut: an integral rank over infinite neighbours is NaN, as in
+    numpy (inf - inf).  The two-sided switch is not cosmetic — at
+    frac -> 1 the one-sided form cancels catastrophically (q = 1 - ulp
+    over [-16385, 0]: one-sided -3.64e-12, numpy and this form
+    -1.82e-12)."""
+    d = f"({hi} - {lo})"
+    return (
+        f"CASE WHEN ({frac} >= 0.5D) THEN ({hi} - ((1.0D - {frac}) * {d})) "
+        f"ELSE ({lo} + ({frac} * {d})) END"
+    )
+
+
+def _array_lerp(a: str, x: float) -> str:
+    """``sql_lerp`` at quantile ``x`` over the sorted array ``a`` (rank
+    ``x * (size - 1)``, numpy's linear method)."""
     pos = f"({_sql_double(x)} * CAST((size({a}) - 1) AS DOUBLE))"
     lo = f"CAST(floor({pos}) AS INT)"
-    hi = f"CAST(ceil({pos}) AS INT)"
-    lov = f"CAST(element_at({a}, ({lo} + 1)) AS DOUBLE)"
-    hiv = f"CAST(element_at({a}, ({hi} + 1)) AS DOUBLE)"
-    return (
-        f"CASE WHEN ({lo} = {hi}) THEN {lov} "
-        f"ELSE ({lov} + (({hiv} - {lov}) * ({pos} - CAST({lo} AS DOUBLE)))) END"
-    )
+
+    def at(i: str) -> str:
+        return f"CAST(element_at({a}, ({i} + 1)) AS DOUBLE)"
+
+    return sql_lerp(at(lo), at(f"CAST(ceil({pos}) AS INT)"), f"({pos} - CAST({lo} AS DOUBLE))")
 
 
 def _quantile(c: AggContext, skipna: bool, q: Any = None) -> str:
@@ -298,13 +308,14 @@ def _quantile(c: AggContext, skipna: bool, q: Any = None) -> str:
     else:
         # exact, linear interpolation — matches numpy's default method
         # (flox/aggregate_flox.py:50-130) and DuckDB quantile_cont.
-        # Kernel: array_sort(collect_list) + the same sorted-array lerp
-        # Spark's `percentile` aggregate runs — bit-identical results,
-        # but the partial state is a flat array append/concat instead
-        # of percentile's per-value OpenHashMap (measured 1.40s ->
-        # 0.65s on the sf0.1 lineitem two-fence agg).  Same memory
-        # class: both buffer the whole group, which is exactly what the
-        # agg strategy's size gate (_choose_quantile_impl) admits.
+        # Kernel: array_sort(collect_list) + ``sql_lerp``, the rule
+        # every exact strategy shares.  The partial state is a flat
+        # array append/concat (measured 1.40s -> 0.65s against
+        # percentile's per-value OpenHashMap on the sf0.1 lineitem
+        # two-fence agg), but it buffers the whole group: "auto" never
+        # picks it for a lone quantile (core._choose_quantile_impl).
+        # It runs where quantiles fuse into one aggregation pass
+        # (groupby_reduce_multi) and under quantile_impl="agg".
         #
         # The sorted array is bound ONCE as a transform() lambda
         # variable: every element_at/size reference reads the bound
@@ -317,7 +328,7 @@ def _quantile(c: AggContext, skipna: bool, q: Any = None) -> str:
         # collect_list buffer however many q's read it.  An empty group
         # (all-missing values) gives NULL, matching the percentile
         # aggregate.
-        lerps = ", ".join(_lerp("a", x) for x in qlist)
+        lerps = ", ".join(_array_lerp("a", x) for x in qlist)
         qarr = (
             f"element_at(transform(array(array_sort(collect_list({v}))), "
             f"a -> CASE WHEN (size(a) > 0) THEN array({lerps}) END), 1)"

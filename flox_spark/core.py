@@ -27,13 +27,16 @@ from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
-from flox_spark.aggregations import REDUCTIONS, AggContext, Aggregation, agg_column, sql_sentinel
+from flox_spark.aggregations import REDUCTIONS, AggContext, Aggregation, agg_column, sql_lerp, sql_sentinel
 from flox_spark.dtypes import (
     NAN,
     arith_input,
+    arith_restore,
     is_datetime_type,
     is_float_type,
+    is_timedelta_type,
     sql_arith_input,
     sql_missing,
     sql_quote,
@@ -497,18 +500,13 @@ def groupby_reduce(
             result = _quantile_arrow(work, key_cols, ctx, agg, out_name, min_count, fill_value)
     elif qfam and quantile_impl == "arrow":
         result = _quantile_arrow(work, key_cols, ctx, agg, out_name, min_count, fill_value)
-    elif qfam and quantile_impl in ("refine", "refine2"):
-        result = _quantile_refine(
-            work, key_cols, ctx, agg, out_name, min_count, fill_value,
-            two_level=(quantile_impl == "refine2"),
-        )
+    elif qfam and quantile_impl == "refine":
+        result = _quantile_refine(work, key_cols, ctx, agg, out_name, min_count, fill_value)
     else:
-        expr = agg_column(agg, ctx)
-        if min_count is not None and min_count > 0:
-            cnt = F.count(ctx.v_skip)
-            fill_scalar = fill_value if fill_value is not None else agg.default_fill
-            fill = _fill_literal([fill_scalar] * len(qlist) if qlist is not None else fill_scalar)
-            expr = F.when(cnt >= F.lit(min_count), expr).otherwise(fill)
+        expr = _finalize(
+            agg_column(agg, ctx), f"count({ctx.skip_sql})", agg, min_count, fill_value,
+            m=len(qlist) if qlist is not None else None,
+        )
         aggs_list = [expr.alias(out_name)]
         if occ_needed:
             # fused into the one aggregation pass — no extra scan
@@ -812,14 +810,15 @@ def groupby_reduce_multi(
             raise ValueError(f"func {agg.name!r} requires order_by=")
         if (
             agg.name in ("median", "nanmedian", "quantile", "nanquantile")
-            and OPTIONS["quantile_impl"] in ("sort", "refine", "refine2", "arrow")
+            and OPTIONS["quantile_impl"] not in ("auto", "agg")
             and not OPTIONS["approx_quantile"]
         ):
-            # the sort/refine strategies need their own multi-stage
-            # plans and cannot fuse into the single agg pass: fall back
-            # loudly rather than silently ignore the user's explicit
-            # option ("auto" fuses silently — agg IS the best strategy
-            # available inside one aggregation pass)
+            # every strategy but "agg" needs its own plan (a driver
+            # collect, a python kernel or extra scans) and cannot fuse
+            # into the single agg pass: fall back loudly rather than
+            # silently ignore the user's explicit option ("auto" fuses
+            # silently — agg IS the best strategy available inside one
+            # aggregation pass)
             import warnings
 
             warnings.warn(
@@ -861,18 +860,40 @@ def groupby_reduce_multi(
     return result
 
 
-def _np_lerp(vf: Column, vc: Column, frac: Column) -> Column:
-    """numpy's two-sided linear interpolation (np.lib._function_base
-    _lerp): ``vf + frac*(vc-vf)`` for frac < 0.5, else
-    ``vc - (1-frac)*(vc-vf)``.  The switch is not cosmetic — at
-    frac -> 1 with large-magnitude endpoints the one-sided form
-    cancels catastrophically (found by the refine property test at
-    q = 1 - ulp over [0, -16385]: one-sided loses every significant
-    digit of the ~1e-12 result, the two-sided form is exact)."""
-    d = vc - vf
-    return F.when(
-        frac >= F.lit(0.5), vc - (F.lit(1.0) - frac) * d
-    ).otherwise(vf + frac * d)
+def _finalize(
+    val: Column,
+    n: str,
+    agg: Aggregation,
+    min_count: int | None,
+    fill_value: Any,
+    m: int | None = None,
+    dt: DataType | None = None,
+    poison: str | None = None,
+) -> Column:
+    """The one finalize tail of a group result: every exact-quantile
+    strategy and the registry path's ``min_count`` mask call it, so
+    the rules cannot drift apart.  In order:
+
+    - ``dt``: datetime/timedelta values come back from the arithmetic
+      (int64 us, as double) view (None: ``val`` is already typed);
+    - ``poison``: plain (non-``nan*``) funcs return the missing
+      sentinel of the output type where it holds;
+    - ``min_count``: groups with fewer than ``min_count`` countable
+      values (``n``) take ``fill_value`` (default: the func's fill).
+
+    ``n`` and ``poison`` are SQL text, parsed only when their rule
+    applies (each parse is a py4j round trip).  ``m`` is the vector-q
+    width when ``val`` is an array of m values."""
+    dtish = dt is not None and (is_datetime_type(dt) or is_timedelta_type(dt))
+    if dtish:
+        val = F.transform(val, lambda c: arith_restore(c, dt)) if m else arith_restore(val, dt)
+    if poison is not None and not agg.name.startswith("nan"):
+        sentinel = F.expr(sql_sentinel(dt if dtish else "double"))
+        val = F.when(F.expr(poison), F.array_repeat(sentinel, m) if m else sentinel).otherwise(val)
+    if min_count is not None and min_count > 0:
+        fill = fill_value if fill_value is not None else agg.default_fill
+        val = F.when(F.expr(f"{n} >= {int(min_count)}"), val).otherwise(_fill_literal([fill] * m if m else fill))
+    return val
 
 
 def _q_params(ctx: AggContext, agg: Aggregation) -> tuple[bool, bool, list[float]]:
@@ -914,8 +935,6 @@ def _quantile_sort(
 
     Returns the same shape as the aggregate path (scalar double or
     per-q array), so reindex/explode/sort downstream are shared."""
-    from flox_spark.dtypes import arith_restore, is_timedelta_type
-
     skipna, is_vec, qlist = _q_params(ctx, agg)
 
     av, _ = ctx.arith()
@@ -952,19 +971,11 @@ def _quantile_sort(
             F.min(F.when(F.col("__r") == F.col("__tc"), F.col("__qv"))).alias("__vhi"),
         )
     )
-    per_q = bounds.join(picked, [*key_cols, "__qi"], "left").withColumn(
-        "__val",
-        _np_lerp(F.col("__vlo"), F.col("__vhi"), F.col("__t") - F.col("__tf")),
+    per_q = bounds.join(picked, [*key_cols, "__qi"], "left")
+    val = _finalize(
+        F.expr(sql_lerp("__vlo", "__vhi", "(__t - __tf)")), "__n", agg,
+        min_count, fill_value, dt=ctx.dt, poison="__poison",
     )
-
-    dtish = is_datetime_type(ctx.dt) or is_timedelta_type(ctx.dt)
-    val = arith_restore(F.col("__val"), ctx.dt) if dtish else F.col("__val")
-    if not skipna:
-        sentinel = F.expr(sql_sentinel(ctx.dt if dtish else "double"))
-        val = F.when(F.col("__poison"), sentinel).otherwise(val)
-    if min_count is not None and min_count > 0:
-        fill = _fill_literal(fill_value if fill_value is not None else agg.default_fill)
-        val = F.when(F.col("__n") >= F.lit(min_count), val).otherwise(fill)
 
     if is_vec:
         return (
@@ -1037,7 +1048,6 @@ def _quantile_arrow(
     aggregations.py:688-710), i.e. identical rounding."""
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    from flox_spark.dtypes import arith_restore, is_timedelta_type
     from flox_spark.plans.util import pin_keyed_parallelism
 
     skipna, is_vec, qlist = _q_params(ctx, agg)
@@ -1095,49 +1105,26 @@ def _finalize_qarrays(
     ``__qa`` packs ``[q_0..q_{m-1}, n, n_miss]`` — NaN inside the
     array may arrive as NULL (pyarrow's serialization, or the driver
     kernel's deliberate None re-entry) and is reconstructed from
-    ``n`` here, so both kernels share one NaN/NULL/min_count/poison
-    rule by construction."""
-    from flox_spark.dtypes import arith_restore, is_timedelta_type
-
-    skipna, is_vec, qlist = _q_params(ctx, agg)
+    ``n`` here; the rest is ``_finalize``."""
+    _, is_vec, qlist = _q_params(ctx, agg)
     m = len(qlist)
-
-    n = F.element_at(F.col("__qa"), m + 1)
-    poison = F.element_at(F.col("__qa"), m + 2) > 0
-    dtish = is_datetime_type(ctx.dt) or is_timedelta_type(ctx.dt)
-    sentinel = F.expr(sql_sentinel(ctx.dt if dtish else "double"))
-    fill_scalar = fill_value if fill_value is not None else agg.default_fill
-
-    # see the docstring's Arrow-boundary note: non-empty group's
-    # null slot = serialized NaN; empty group (n = 0) = NULL
-    if dtish:
-        elem = lambda c: arith_restore(c, ctx.dt)  # noqa: E731
-    else:
-        elem = lambda c: F.coalesce(c, F.lit(NAN))  # noqa: E731
-
-    if is_vec:
-        arr = F.when(
-            n > 0,
-            F.transform(F.slice(F.col("__qa"), 1, m), elem),
-        )
-        if not skipna:
-            arr = F.when(poison, F.array_repeat(sentinel, m)).otherwise(arr)
-        if min_count is not None and min_count > 0:
-            arr = F.when(
-                n >= F.lit(min_count), arr
-            ).otherwise(_fill_literal([fill_scalar] * m))
-        return res.select(*key_cols, arr.alias(out_name))
-    val = F.when(n > 0, elem(F.element_at(F.col("__qa"), 1)))
-    if not skipna:
-        val = F.when(poison, sentinel).otherwise(val)
-    if min_count is not None and min_count > 0:
-        val = F.when(n >= F.lit(min_count), val).otherwise(_fill_literal(fill_scalar))
+    n = f"element_at(__qa, {m + 1})"
+    vals = f"slice(__qa, 1, {m})" if is_vec else "element_at(__qa, 1)"
+    if not (is_datetime_type(ctx.dt) or is_timedelta_type(ctx.dt)):
+        # see _quantile_arrow's Arrow-boundary note: a non-empty
+        # group's null slot = serialized NaN; empty group (n = 0) = NULL
+        nan = "coalesce({}, CAST('NaN' AS DOUBLE))"
+        vals = f"transform({vals}, x -> {nan.format('x')})" if is_vec else nan.format(vals)
+    val = _finalize(
+        F.expr(f"CASE WHEN {n} > 0 THEN {vals} END"), n, agg, min_count, fill_value,
+        m=m if is_vec else None, dt=ctx.dt, poison=f"element_at(__qa, {m + 2}) > 0",
+    )
     return res.select(*key_cols, val.alias(out_name))
 
 
-# past this many observed groups the driver kernel's LocalRelation
-# re-entry (a pandas/Arrow build of one row per group) stops paying
-# for itself vs the distributed hash aggregate — fall back to "arrow"
+# past this many observed groups the driver kernel's per-group loop
+# and LocalRelation re-entry stop paying for themselves vs the
+# distributed hash aggregate — the kernel declines
 _QUANTILE_DRIVER_MAX_GROUPS = 65_536
 
 # forced-mode guard: quantile_impl="driver" declines (-> "arrow")
@@ -1145,6 +1132,81 @@ _QUANTILE_DRIVER_MAX_GROUPS = 65_536
 # so a forced strategy can't collect an arbitrarily large input into
 # the driver before the group-count fallback gets a chance to fire
 _QUANTILE_DRIVER_HARD_FACTOR = 32
+
+
+def _driver_group_quantiles(
+    sel: DataFrame, key_cols: list[str], qs: list[float], max_groups: int | None = None
+) -> list[tuple] | None:
+    """The one driver-side ``np.quantile`` kernel, shared by the
+    "driver" strategy and winsorize's fence branch: ONE no-shuffle
+    Arrow collect of ``sel`` (keys..., ``__qv`` double), keys
+    dictionary-coded into one combined group code, a stable argsort,
+    then ``np.quantile`` per group over the non-NaN values — the same
+    numpy function over the same post-cast float64 bytes as the
+    distributed Arrow kernel, so both are bit-identical by
+    construction.
+
+    NULL keys form their own group (Spark groupBy semantics: null
+    dictionary indices take code 0, real values shift by +1).  Float
+    keys get Spark's groupBy normalization mirrored before the
+    bitwise dictionary encode (NormalizeFloatingNumbers: ``-0.0``
+    folds into ``0.0``, every NaN payload into one canonical NaN).
+
+    Returns ``[(keys, quantiles, n, n_missing)]`` per group, with
+    ``[None] * len(qs)`` quantiles for a group with no non-NaN value;
+    None when ineligible (Arrow-hostile types, combined-code
+    overflow, more than ``max_groups`` groups)."""
+    import numpy as np
+
+    try:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        tbl = sel.toArrow().combine_chunks()
+
+        def chunk(name):
+            col = tbl.column(name)
+            return col.chunk(0) if col.num_chunks else pa.array([], type=col.type)
+
+        combined = np.zeros(tbl.num_rows, dtype="int64")
+        dims: list[list] = []
+        maxcode = 1
+        for k in key_cols:
+            ch = chunk(k)
+            if pa.types.is_floating(ch.type):
+                # pc.equal/is_nan return NULL on NULL slots and if_else
+                # propagates it, so NULL keys keep their own group
+                zero = pa.scalar(0.0, ch.type)
+                ch = pc.if_else(pc.equal(ch, zero), zero, ch)
+                ch = pc.if_else(pc.is_nan(ch), pa.scalar(float("nan"), ch.type), ch)
+            enc = pc.dictionary_encode(ch)
+            codes = enc.indices.to_numpy(zero_copy_only=False)
+            codes = np.where(np.isnan(codes.astype("float64")), -1.0, codes).astype("int64") + 1
+            dic = enc.dictionary.to_pylist()
+            dims.append(dic)
+            maxcode *= len(dic) + 1
+            if maxcode > (1 << 62):
+                return None
+            combined = combined * (len(dic) + 1) + codes
+        v = chunk("__qv").to_numpy(zero_copy_only=False).astype("float64", copy=False)
+    except Exception:
+        return None
+    order = np.argsort(combined, kind="stable")
+    sc, sv = combined[order], v[order]
+    starts = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]]) if len(sc) else []
+    if max_groups is not None and len(starts) > max_groups:
+        return None
+    groups = []
+    for start, stop in zip(starts, [*starts[1:], len(sc)]):
+        raw = sv[start:stop]
+        a = raw[~np.isnan(raw)]
+        code, keys = int(sc[start]), []
+        for dic in reversed(dims):
+            code, idx = divmod(code, len(dic) + 1)
+            keys.append(None if idx == 0 else dic[idx - 1])
+        out = np.quantile(a, qs).tolist() if a.size else [None] * len(qs)
+        groups.append((tuple(reversed(keys)), out, a.size, raw.size - a.size))
+    return groups
 
 
 def _quantile_driver(
@@ -1157,18 +1219,16 @@ def _quantile_driver(
     fill_value: Any,
 ) -> DataFrame | None:
     """Exact quantile for the TINY zone (input plan-stats under
-    ``quantile_driver_max_bytes``): ONE no-shuffle Arrow collect of
-    the pruned ``(keys, value-as-double)`` projection, per-group
-    ``np.quantile`` in the driver, re-entered as a LocalRelation with
-    the same ``(keys, __qa)`` shape the distributed Arrow kernel
-    aggregates to — ``_finalize_qarrays`` is shared, so the two
-    kernels are bit-identical by construction (the winsorize driver
-    fence kernel generalized into the strategy ladder; pinned by the
-    strategy matrix in tests/test_quantile_arrow.py).  numpy IS the
-    reference semantics (flox computes np.quantile directly,
-    /root/reference/flox/aggregations.py:688-710), so this kernel is
-    the closest physical analog of the reference's own execution —
-    just over a gated, bounded slice of the data.
+    ``quantile_driver_max_bytes``): ``_driver_group_quantiles`` over
+    the pruned ``(keys, value-as-double)`` projection, re-entered as
+    a LocalRelation with the same ``(keys, __qa)`` shape the
+    distributed Arrow kernel aggregates to — ``_finalize_qarrays`` is
+    shared, so the two kernels are bit-identical by construction
+    (pinned by the strategy matrix in tests/test_quantile_arrow.py).
+    numpy IS the reference semantics (flox computes np.quantile
+    directly, flox/aggregations.py:688-710), so this kernel is the
+    closest physical analog of the reference's own execution — just
+    over a gated, bounded slice of the data.
 
     What it saves vs "arrow" at this size: the keyed exchange of
     every row, the GROUPED_AGG python-worker round trip, and one AQE
@@ -1178,27 +1238,16 @@ def _quantile_driver(
     would keep NaN, but the pandas path would flip it silently —
     None is the one representation both the GROUPED_AGG transfer and
     the local re-entry agree on, and the shared tail reconstructs
-    from ``n`` either way).
+    from ``n`` either way).  A frame whose keys contain NaN re-enters
+    through the classic list path instead of pandas: pandas/Arrow
+    would coerce a NaN KEY to NULL, silently merging a NaN-key group
+    into a genuine NULL-key group.
 
-    Float/double GROUPING keys get Spark's groupBy normalization
-    mirrored Arrow-side before dictionary encoding (``-0.0`` folds
-    into ``0.0``, every NaN payload into one canonical NaN —
-    Catalyst's NormalizeFloatingNumbers rule), and a frame whose keys
-    contain NaN re-enters through the classic list path instead of
-    pandas: pandas/Arrow would coerce a NaN KEY to NULL, silently
-    merging a NaN-key group into a genuine NULL-key group.
-
-    Returns None when ineligible (streaming input, >
-    ``_QUANTILE_DRIVER_MAX_GROUPS`` observed groups, Arrow-hostile
-    key types, or — forced-mode guard — plan stats over
+    Returns None when ineligible (streaming input, a declined kernel,
+    or — forced-mode guard — plan stats over
     ``_QUANTILE_DRIVER_HARD_FACTOR`` x the auto gate) — the caller
     falls back to the "arrow" kernel."""
-    import numpy as np
-
-
-    skipna, is_vec, qlist = _q_params(ctx, agg)
-    qs = list(qlist)
-    m = len(qs)
+    _, _, qlist = _q_params(ctx, agg)
     if work.isStreaming:
         return None
     # forced-mode memory guard: `auto` only routes here under the
@@ -1207,84 +1256,23 @@ def _quantile_driver(
     # plan is KNOWN to be far past the tiny zone.  Unknown stats fall
     # through (the user explicitly forced the strategy; auto never
     # reaches here stats-less — it picks "sort").
-    from flox_spark.plans.util import estimate_size_bytes as _esb
+    from flox_spark.plans.util import estimate_size_bytes
 
-    _size = _esb(work)
-    if _size is not None and _size > (
-        _QUANTILE_DRIVER_HARD_FACTOR * OPTIONS["quantile_driver_max_bytes"]
-    ):
+    size = estimate_size_bytes(work)
+    if size is not None and size > _QUANTILE_DRIVER_HARD_FACTOR * OPTIONS["quantile_driver_max_bytes"]:
         return None
     av, _ = ctx.arith()
-    sel = work.select(*[F.col(k) for k in key_cols], av.cast("double").alias("__qv"))
+    groups = _driver_group_quantiles(
+        work.select(*key_cols, av.cast("double").alias("__qv")), key_cols, qlist,
+        max_groups=_QUANTILE_DRIVER_MAX_GROUPS,
+    )
+    if groups is None:
+        return None
+    rows = [
+        (*keys, [None if x != x else x for x in out] + [float(n), float(n_miss)])
+        for keys, out, n, n_miss in groups
+    ]
     try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = sel.toArrow().combine_chunks()
-
-        def chunk(name):
-            col = tbl.column(name)
-            return col.chunk(0) if col.num_chunks else pa.array([], type=col.type)
-
-        nrows = tbl.num_rows
-        rows: list[tuple] = []
-        if nrows:
-            v = chunk("__qv").to_numpy(zero_copy_only=False).astype(
-                "float64", copy=False
-            )
-            # group codes with NULL keys as their own group (Spark
-            # groupBy semantics): null dictionary indices -> code 0,
-            # real values shift by +1
-            combined = np.zeros(nrows, dtype="int64")
-            dims: list[list] = []
-            maxcode = 1
-            for k in key_cols:
-                ch = chunk(k)
-                if pa.types.is_floating(ch.type):
-                    # mirror Spark's groupBy float normalization
-                    # (NormalizeFloatingNumbers): -0.0 folds into 0.0
-                    # and every NaN payload into ONE canonical NaN, so
-                    # the bitwise dictionary encode groups exactly the
-                    # keys Spark would.  pc.equal/is_nan return NULL on
-                    # NULL slots and if_else propagates it, so NULL
-                    # keys keep their own (shifted code 0) group.
-                    zero = pa.scalar(0.0, ch.type)
-                    ch = pc.if_else(pc.equal(ch, zero), zero, ch)
-                    ch = pc.if_else(
-                        pc.is_nan(ch), pa.scalar(float("nan"), ch.type), ch
-                    )
-                enc = pc.dictionary_encode(ch)
-                codes = enc.indices.to_numpy(zero_copy_only=False)
-                codes = np.where(
-                    np.isnan(codes.astype("float64")), -1.0, codes
-                ).astype("int64") + 1
-                dic = enc.dictionary.to_pylist()
-                dims.append(dic)
-                maxcode *= len(dic) + 1
-                if maxcode > (1 << 62):
-                    return None
-                combined = combined * (len(dic) + 1) + codes
-            order = np.argsort(combined, kind="stable")
-            sc, sv = combined[order], v[order]
-            bounds = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-            if len(bounds) > _QUANTILE_DRIVER_MAX_GROUPS:
-                return None
-            for i, start in enumerate(bounds):
-                stop = bounds[i + 1] if i + 1 < len(bounds) else len(sc)
-                raw = sv[start:stop]
-                a = raw[~np.isnan(raw)]
-                out = np.quantile(a, qs).tolist() if a.size else [None] * m
-                # NaN -> None on purpose (see docstring)
-                qa = [None if x is not None and x != x else x for x in out]
-                qa.append(float(a.size))
-                qa.append(float(raw.size - a.size))
-                code = int(sc[start])
-                key_vals: dict = {}
-                for k, dic in zip(reversed(key_cols), reversed(dims)):
-                    code, idx = divmod(code, len(dic) + 1)
-                    key_vals[k] = None if idx == 0 else dic[idx - 1]
-                rows.append(tuple(key_vals[k] for k in key_cols) + (qa,))
-
         import pandas as pd
         from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
@@ -1293,20 +1281,9 @@ def _quantile_driver(
             + [StructField("__qa", ArrayType(DoubleType()))]
         )
         spark = work.sparkSession
-        nkeys = len(key_cols)
-
-        def _nan_key(r: tuple) -> bool:
-            return any(
-                isinstance(x, float) and x != x for x in r[:nkeys]
-            )
-
-        if rows and any(_nan_key(r) for r in rows):
-            # NaN GROUPING key: the pandas/Arrow re-entry would coerce
-            # it to NULL (pandas null semantics), silently merging the
-            # NaN-key group into a genuine NULL-key group — the classic
-            # list path keeps NaN as a double value.  Rare (needs a
-            # float key column containing NaN), so the common path
-            # below stays on the cheaper Arrow LocalRelation.
+        if any(isinstance(x, float) and x != x for r in rows for x in r[:-1]):
+            # NaN GROUPING key (rare: needs a float key column holding
+            # NaN): the list path keeps NaN as a double value
             res = spark.createDataFrame(rows, schema=schema)
         elif rows:
             pdf = pd.DataFrame({
@@ -1326,46 +1303,50 @@ def _choose_quantile_impl(work: DataFrame) -> str:
     analog of flox's ``_choose_engine``, flox/core.py:712-736 — pick
     the physical kernel from the data's shape, never from a fixed
     default).  ``set_options(quantile_impl=...)`` forces a strategy;
-    the default ``"auto"`` picks from the optimized plan's size
-    statistics (parquet footers / LocalRelation actual bytes — free
-    at plan time):
+    the default ``"auto"`` walks a four-strategy ladder on the
+    optimized plan's size statistics (parquet footers / LocalRelation
+    actual bytes — free at plan time).  Every strategy interpolates
+    with the one ``sql_lerp``/``np.quantile`` rule and ends in the one
+    ``_finalize`` tail, so the pick changes cost, never the result:
 
     - tiny input (<= ``quantile_driver_max_bytes``, non-streaming):
       ``"driver"`` — one no-shuffle Arrow collect + in-driver
-      ``np.quantile`` (``_quantile_driver``), bit-identical to
-      "arrow" via the shared finalize; NB this strategy runs its
-      collect at PLAN-BUILD time (bounded by the gate — the
-      winsorize/lm/kmeans literal pattern)
-    - small input (<= ``quantile_agg_max_bytes``): ``"arrow"`` —
-      one ``np.quantile`` grouped-agg kernel per group
-      (``_quantile_arrow``); whole-group buffering is safe by the
-      same provably-fits argument the old ``"agg"`` pick relied on,
-      and the kernel beats the JVM collect_list+sort kernel 2.4x at
-      the zone top (5M rows) while tying at floor-dominated sizes.
-      ``"agg"`` stays reachable explicitly.  The 64 MB zone bound
-      deliberately does NOT rise with the faster kernel: it also
-      caps the worst case of ONE group's values crossing Arrow into
-      a single python worker.
+      ``np.quantile`` (``_quantile_driver``); NB this strategy runs
+      its collect at PLAN-BUILD time, bounded by the gate;
+    - small input (<= ``quantile_agg_max_bytes``): ``"arrow"`` — one
+      ``np.quantile`` grouped-agg kernel per group
+      (``_quantile_arrow``).  The 64 MB bound also caps the worst
+      case of ONE group's values crossing Arrow into a single python
+      worker;
     - medium input (<= ``quantile_refine_max_bytes``, default 1 TB):
-      ``"refine"`` — exact two-scan approx-bracket + candidate-collect
-      (``_quantile_refine``).  The sketch accuracy adapts to the
-      input size (~sqrt(rows), ``_refine_accuracy``), balancing the
-      pass-1 sketch against the pass-2 candidate collect so
-      worst-case per-group memory grows as O(sqrt(n)*log n) even if
-      ONE group holds the entire input — no regime of group sizes
-      can OOM it inside the zone.
-    - big input (<= ``quantile_refine2_max_bytes``, default 64 TB):
-      ``"refine2"`` — the same exact bracket-and-collect with one
-      extra narrowing scan (``_narrow_quantile_brackets``): instead of
-      collecting the level-1 bracket's ~6n/acc candidates outright, a
-      second GK sketch over ONLY the in-bracket values shrinks the
-      bracket by another ~grid/6 factor before the collect, keeping
-      the candidate set in the low megabytes even when one group owns
-      a 64 TB input.  Cost: three scans instead of two, still zero
-      data-sized shuffles.
+      ``"refine"`` — exact two-scan approx-bracket + candidate collect
+      (``_quantile_refine``); the sketch accuracy adapts to the input
+      size (~sqrt(rows), ``_refine_accuracy``), so worst-case
+      per-group memory grows as O(sqrt(n)*log n) even if ONE group
+      holds the entire input;
     - larger or unknown input: ``"sort"`` — spillable sort + streaming
       rank (``_quantile_sort``); the always-safe plan whose cost is a
-      full shuffle of the values."""
+      full shuffle of the values.
+
+    ``"agg"`` (the registry's array_sort(collect_list) kernel) is only
+    reachable explicitly and inside ``groupby_reduce_multi``'s fused
+    pass.  Measured zones (``tools/bench_scale.py --qarrow``: 8 groups
+    unless noted, 2 pinned CPUs, whole call = build + noop sink,
+    median of 4-5 alternating runs; *starred* = the auto pick):
+
+    | input stats         | driver   | arrow    | refine   | sort    |
+    |---------------------|----------|----------|----------|---------|
+    | 0.7 MB              | *0.51 s* | 1.35 s   | 1.63 s   |         |
+    | 6.9 MB              | *0.64 s* | 1.31 s   | 1.74 s   |         |
+    | 16 MB               |          | *2.06 s* | 3.29 s   |         |
+    | 40 MB               |          | *3.31 s* | 4.45 s   |         |
+    | 40 MB (5000 groups) |          | *8.10 s* | 7.77 s   |         |
+    | 60 MB               |          | *4.21 s* | 5.09 s   |         |
+    | 80 MB               |          |          | *7.29 s* | 15.43 s |
+
+    The 5000-group row is a tie (within run-to-run spread).  No zone
+    past 1 TB has been measured; sort is the plan that stays safe
+    there."""
     impl = OPTIONS["quantile_impl"]
     if impl != "auto":
         return impl
@@ -1375,19 +1356,13 @@ def _choose_quantile_impl(work: DataFrame) -> str:
     if size is None:
         return "sort"
     if size <= OPTIONS["quantile_driver_max_bytes"] and not work.isStreaming:
-        # tiny zone: driver np.quantile over one no-shuffle Arrow
-        # collect (r12 — the winsorize fence kernel generalized);
-        # bit-identical to "arrow" via the shared finalize, minus the
-        # keyed exchange and the python-worker hop.  Falls back to
-        # "arrow" inside the kernel on high group cardinality or
-        # Arrow-hostile key types.
+        # the kernel itself falls back to "arrow" on high group
+        # cardinality or Arrow-hostile key types
         return "driver"
     if size <= OPTIONS["quantile_agg_max_bytes"]:
         return "arrow"
     if size <= OPTIONS["quantile_refine_max_bytes"]:
         return "refine"
-    if size <= OPTIONS["quantile_refine2_max_bytes"]:
-        return "refine2"
     return "sort"
 
 
@@ -1433,134 +1408,6 @@ def _refine_accuracy_for_bytes(size: int | None, floor: int = 10_000) -> int:
 
 
 _REFINE_CUTOFF_FLOOR = 1024
-# level-2 narrowing constants: the sub-sketch is queried at GRID+1
-# uniform fractions of the level-1 bracket's population; PAD grid
-# cells on each side absorb the sketch's rank error (error n2/ACC is
-# under one grid cell once n2 > GRID*GRID/ACC — smaller n2 takes the
-# collect-outright fallback long before that)
-_REFINE2_GRID = 256
-_REFINE2_ACC = 10_000
-_REFINE2_PAD = 2
-
-
-def _narrow_quantile_brackets(
-    work2: DataFrame,
-    bounds: DataFrame,
-    key_cols: list[str],
-    qlist: list[float],
-    cutoff: int,
-    skipna: bool,
-) -> DataFrame:
-    """Level-2 bracket narrowing for ``quantile_impl="refine2"``.
-
-    One extra scan between the level-1 sketch and the candidate
-    collect: per group and per q, count the values below the level-1
-    bracket (fixing the target's rank WITHIN the bracket) and sketch
-    ONLY the in-bracket values at ``_REFINE2_GRID``+1 uniform
-    fractions.  The refined bracket is the pair of grid values
-    adjacent to the within-bracket target rank, padded by
-    ``_REFINE2_PAD`` grid cells to absorb the sketch's rank error —
-    so the collect pass gathers ~n2*(2*PAD+2)/GRID values instead of
-    all n2 = ~6n/acc, a further ~GRID/6 shrink that keeps the collect
-    in the low megabytes at a 64 TB single group.
-
-    Exactness: the level-1 guarantee (count(v < blo1) <= floor-rank
-    and ceil-rank < count(v <= bhi1)) is preserved by construction —
-    the refined lo sits at a within-bracket rank <= the target floor
-    rank (or degrades to blo1 when the target is at/below the
-    bracket), and symmetrically for hi.  Groups whose bracket
-    population n2 is at most ``cutoff`` skip the narrowing (the
-    collect of n2 values is already bounded); level-1 collect-all
-    groups pass through as NULL brackets untouched.
-    """
-    G = _REFINE2_GRID
-    pad = _REFINE2_PAD
-    grid = F.array(*[F.lit(jj / G) for jj in range(G + 1)])
-    j = work2.select(*key_cols, "__qv").join(F.broadcast(bounds), key_cols)
-    small = F.col("__n") <= F.lit(cutoff)
-    exprs = [F.first("__n").alias("__n")]
-    if not skipna:
-        exprs.append(F.first("__poison").alias("__poison"))
-    for i in range(len(qlist)):
-        vlo = F.col(f"__blo_{i}")
-        vhi = F.col(f"__bhi_{i}")
-        use_all = small | vlo.isNull()
-        in_mid = ~use_all & (F.col("__qv") > vlo) & (F.col("__qv") < vhi)
-        exprs += [
-            F.sum(
-                F.when(~use_all & (F.col("__qv") < vlo), 1).otherwise(0)
-            ).alias(f"__c1lt_{i}"),
-            F.sum(
-                F.when(~use_all & (F.col("__qv") == vlo), 1).otherwise(0)
-            ).alias(f"__c1eq_{i}"),
-            F.sum(F.when(in_mid, 1).otherwise(0)).alias(f"__n2_{i}"),
-            F.percentile_approx(
-                F.when(in_mid, F.col("__qv")), grid, F.lit(_REFINE2_ACC)
-            ).alias(f"__S_{i}"),
-            F.first(vlo).alias(f"__b1lo_{i}"),
-            F.first(vhi).alias(f"__b1hi_{i}"),
-        ]
-    g = j.groupBy(*key_cols).agg(*exprs)
-
-    out = [*key_cols, "__n"] + ([] if skipna else ["__poison"])
-    for i, q in enumerate(qlist):
-        n = F.col("__n")
-        n2 = F.col(f"__n2_{i}")
-        # ANSI-safe denominator: the branches below only read it when
-        # n2 > cutoff >= 1, but Spark may still typecheck/evaluate
-        # eagerly under codegen fusion
-        n2d = F.greatest(n2, F.lit(1))
-        clt, ceq = F.col(f"__c1lt_{i}"), F.col(f"__c1eq_{i}")
-        b1lo, b1hi = F.col(f"__b1lo_{i}"), F.col(f"__b1hi_{i}")
-        t = (n - F.lit(1)) * F.lit(q)
-        tf = F.floor(t).cast("long")
-        tc = F.ceil(t).cast("long")
-        rf = tf - clt - ceq  # target floor rank within the bracket
-        rc = F.least(tc - clt - ceq, n2 - F.lit(1))
-        # ADAPTIVE pad (r11): the fixed 2-cell pad only absorbs the
-        # level-2 sketch's deviation when cells are wide (>= ~1 rank
-        # each, i.e. n2 >> G).  The deviation is one cell of index
-        # truncation + n2/ACC ranks of compression error + ~2 ranks of
-        # GK rank-convention slop, so the pad must be
-        # ceil(1 + G/ACC + 2G/n2) cells — which degrades gracefully
-        # toward the full level-1 bracket as n2 shrinks instead of
-        # silently mis-bracketing (same failure family as the level-1
-        # cutoff fix above; production n2 > cutoff >= 1024 keeps this
-        # at the old 2 cells, tiny forced-knob runs now stay exact)
-        padc = F.greatest(
-            F.lit(pad).cast("long"),
-            F.ceil(
-                F.lit(1.0 + G / _REFINE2_ACC) + F.lit(2.0 * G) / n2d
-            ).cast("long"),
-        )
-        jlo = F.greatest(
-            F.lit(0), (F.lit(G) * rf / n2d).cast("long") - padc
-        )
-        jhi = F.least(
-            F.lit(G), F.ceil(F.lit(G) * rc / n2d).cast("long") + padc
-        )
-        # rank-overflow guards: with many duplicates AT a bracket
-        # edge, the target rank can sit entirely below (rf <= rc < 0,
-        # value IS blo1) or above (n2 <= rf <= rc, value IS bhi1) the
-        # strict-interior population; degrade the bracket to the edge
-        # value so the collect pass resolves it from counts alone and
-        # the grid index stays in [1, G+1]
-        blo2 = (
-            F.when(b1lo.isNull(), F.lit(None))  # level-1 collect-all
-            .when(n2 <= F.lit(cutoff), b1lo)  # bracket already small
-            .when(rf < F.lit(0), b1lo)  # target at/below blo1
-            .when(rf >= n2, b1hi)  # target at/above bhi1
-            .otherwise(F.element_at(f"__S_{i}", (jlo + F.lit(1)).cast("int")))
-        )
-        bhi2 = (
-            F.when(b1lo.isNull(), F.lit(None))
-            .when(n2 <= F.lit(cutoff), b1hi)
-            .when(tc - clt - ceq < F.lit(0), b1lo)  # target at/below blo1
-            .when(tc - clt - ceq >= n2, b1hi)  # target at/above bhi1
-            .otherwise(F.element_at(f"__S_{i}", (jhi + F.lit(1)).cast("int")))
-        )
-        out += [blo2.alias(f"__blo_{i}"), bhi2.alias(f"__bhi_{i}")]
-    return g.select(*out)
 
 
 def _quantile_refine(
@@ -1571,7 +1418,6 @@ def _quantile_refine(
     out_name: str,
     min_count: int | None,
     fill_value: Any,
-    two_level: bool = False,
 ) -> DataFrame:
     """Exact quantile via approx-bracket + candidate collection — the
     medium-scale path of ``_choose_quantile_impl``: two scans, zero
@@ -1601,8 +1447,6 @@ def _quantile_refine(
     O(sqrt(n)*log n) across the whole refine zone.  Returns the same
     shape as the aggregate path (scalar double or per-q array).
     """
-    from flox_spark.dtypes import arith_restore, is_timedelta_type
-
     skipna, is_vec, qlist = _q_params(ctx, agg)
 
     acc = _refine_accuracy(work)
@@ -1633,21 +1477,11 @@ def _quantile_refine(
     ]
     if not skipna:
         gaggs.append(F.bool_or("__miss").alias("__poison"))
-    bounds = work2.groupBy(*key_cols).agg(*gaggs)
-    # name the per-q brackets: the collect pass reads __blo_i/__bhi_i
-    # regardless of whether they came straight from the level-1 sketch
-    # or through the level-2 narrowing scan
-    bsel = [*key_cols, "__n"] + ([] if skipna else ["__poison"])
-    for i in range(len(qlist)):
-        bsel += [
-            F.element_at("__pa", 2 * i + 1).alias(f"__blo_{i}"),
-            F.element_at("__pa", 2 * i + 2).alias(f"__bhi_{i}"),
-        ]
-    bounds = bounds.select(*bsel)
-    if two_level:
-        bounds = _narrow_quantile_brackets(
-            work2, bounds, key_cols, qlist, cutoff, skipna
-        )
+    # per-q brackets as group-level columns: read once per group, not
+    # once per row of the collect pass
+    bounds = work2.groupBy(*key_cols).agg(*gaggs).select(
+        "*", *[F.element_at("__pa", b + 1).alias(f"__b{b}") for b in range(2 * len(qlist))]
+    )
 
     j = work2.select(*key_cols, "__qv").join(F.broadcast(bounds), key_cols)
     small = F.col("__n") <= F.lit(cutoff)
@@ -1655,8 +1489,8 @@ def _quantile_refine(
     if not skipna:
         exprs.append(F.first("__poison").alias("__poison"))
     for i in range(len(qlist)):
-        vlo = F.col(f"__blo_{i}")
-        vhi = F.col(f"__bhi_{i}")
+        vlo = F.col(f"__b{2 * i}")
+        vhi = F.col(f"__b{2 * i + 1}")
         use_all = small | vlo.isNull()
         in_mid = F.when(use_all, F.col("__qv").isNotNull()).otherwise(
             (F.col("__qv") > vlo) & (F.col("__qv") < vhi)
@@ -1674,37 +1508,24 @@ def _quantile_refine(
         ]
     g2 = j.groupBy(*key_cols).agg(*exprs)
 
-    dtish = is_datetime_type(ctx.dt) or is_timedelta_type(ctx.dt)
-
     def q_val(i: int, q: float) -> Column:
-        t = (F.col("__n") - 1) * F.lit(q)
-        tf = F.floor(t).cast("long")
-        tc = F.ceil(t).cast("long")
-        mid_lo = F.col(f"__clt_{i}") + F.col(f"__ceq_{i}")
-        mid_hi = mid_lo + F.size(f"__mid_{i}")
+        t = f"((__n - 1) * {float(q)!r}D)"
+        lo = f"(__clt_{i} + __ceq_{i})"  # rank of the first candidate
 
-        def val_at(r: Column) -> Column:
+        def at(r: str) -> str:
             return (
-                F.when(r < mid_lo, F.col(f"__vlo_{i}"))
-                .when(
-                    r < mid_hi,
-                    F.element_at(f"__mid_{i}", (r - mid_lo + 1).cast("int")),
-                )
-                .otherwise(F.col(f"__vhi_{i}"))
+                f"CAST(CASE WHEN {r} < {lo} THEN __vlo_{i} "
+                f"WHEN {r} < {lo} + size(__mid_{i}) "
+                f"THEN element_at(__mid_{i}, CAST({r} - {lo} + 1 AS INT)) "
+                f"ELSE __vhi_{i} END AS DOUBLE)"
             )
 
-        vf = val_at(tf).cast("double")
-        vc = val_at(tc).cast("double")
-        val = F.when(F.col("__n") > 0, _np_lerp(vf, vc, t - tf))
-        if dtish:
-            val = arith_restore(val, ctx.dt)
-        if not skipna:
-            sentinel = F.expr(sql_sentinel(ctx.dt if dtish else "double"))
-            val = F.when(F.col("__poison"), sentinel).otherwise(val)
-        if min_count is not None and min_count > 0:
-            fill = _fill_literal(fill_value if fill_value is not None else agg.default_fill)
-            val = F.when(F.col("__n") >= F.lit(min_count), val).otherwise(fill)
-        return val
+        tf = f"CAST(floor({t}) AS BIGINT)"
+        lerp = sql_lerp(at(tf), at(f"CAST(ceil({t}) AS BIGINT)"), f"({t} - {tf})")
+        return _finalize(
+            F.expr(f"CASE WHEN __n > 0 THEN {lerp} END"), "__n", agg,
+            min_count, fill_value, dt=ctx.dt, poison="__poison",
+        )
 
     if is_vec:
         return g2.select(

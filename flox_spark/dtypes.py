@@ -86,14 +86,6 @@ def is_missing(col: Column, dt: DataType) -> Column:
     return col.isNull()
 
 
-def key_is_invalid(col: Column, dt: DataType) -> Column:
-    """NaN/NULL group labels are dropped from the output
-    (flox/factorize.py:201-212, flox/core.py:1184-1202).  Note Spark's
-    groupBy would otherwise emit a NULL group — a real behavior
-    difference we must filter away."""
-    return is_missing(col, dt)
-
-
 def arith_input(col: Column, dt: DataType) -> tuple[Column, DataType]:
     """Pre-cast for arithmetic reductions: bool -> int, datetime and
     timedelta -> int64 microseconds (flox/core.py:916-917, 985-1001;

@@ -19,52 +19,34 @@ OPTIONS: dict[str, Any] = {
     # Broadcast the aggregated result into the expected-groups join
     # (the aggregate side is |groups| rows — almost always tiny).
     "broadcast_reindex": True,
-    # Exact-quantile physical strategy.  "auto" (default) picks from
-    # plan-size statistics (core._choose_quantile_impl): "driver" for
-    # tiny inputs, "arrow" for provably-small, "refine" for medium,
-    # "sort" for large or stats-less inputs.  Explicit values force
-    # one strategy:
-    # - "driver" (r12): one no-shuffle Arrow collect + in-driver
-    #   np.quantile, re-entered as a LocalRelation — bit-identical to
-    #   "arrow" (shared finalize) minus the keyed exchange and the
-    #   python-worker hop; runs its collect at plan-build time,
-    #   bounded by the tiny-zone gate.  Falls back to "arrow" on
-    #   streaming inputs / high group cardinality / Arrow-hostile keys;
-    # - "arrow" (r11): one np.quantile grouped-agg kernel per group —
-    #   numpy IS the reference semantics; measured equal to "agg" at
-    #   sf0.1 (floor-dominated) and 2.4x faster at the zone top
-    #   (5M rows/40 MB: 2.74 s vs 6.50 s, bench_scale --qarrow);
-    # - "agg": the JVM array_sort(collect_list)+lerp kernel
-    #   (aggregations._quantile; buffers every group's values in
-    #   memory — pure JVM, but the one OOM-able plan at giant group
-    #   sizes);
+    # Exact-quantile physical strategy.  "auto" (default) walks a
+    # four-strategy ladder on plan-size statistics
+    # (core._choose_quantile_impl, whose docstring holds the measured
+    # zones): "driver" for inputs <= quantile_driver_max_bytes,
+    # "arrow" <= quantile_agg_max_bytes, "refine" <=
+    # quantile_refine_max_bytes, "sort" for larger or stats-less
+    # inputs.  Explicit values force one strategy:
+    # - "driver": one no-shuffle Arrow collect + in-driver np.quantile,
+    #   re-entered as a LocalRelation; runs its collect at plan-build
+    #   time.  Falls back to "arrow" on streaming inputs, high group
+    #   cardinality or Arrow-hostile keys;
+    # - "arrow": one np.quantile grouped-agg kernel per group;
     # - "refine": exact two-scan approx-bracket + candidate collect
-    #   (bounded ~6n/accuracy memory at ANY group size, zero
+    #   (bounded O(sqrt(n)*log n) memory at ANY group size, zero
     #   data-sized shuffles);
     # - "sort": spillable sort + streaming row_number + rank filter
-    #   (always-safe, cost = one full shuffle of the values).
-    # All three produce the identical numpy-linear interpolation;
-    # approx_quantile remains the cheap sketch alternative.
+    #   (always-safe, cost = one full shuffle of the values);
+    # - "agg": the JVM array_sort(collect_list) kernel
+    #   (aggregations._quantile) — buffers every group's values, so
+    #   auto never picks it; it is what groupby_reduce_multi fuses.
+    # All of them interpolate with the one numpy-linear rule
+    # (aggregations.sql_lerp / np.quantile) and share one finalize
+    # tail; approx_quantile remains the cheap sketch alternative.
     "quantile_impl": "auto",
-    # "auto" thresholds (bytes, from the optimized plan's stats):
-    # inputs <= agg_max run "agg"; <= refine_max run "refine"; larger
-    # or unknown run "sort".  refine's worst case is ONE group holding
-    # the whole input; its sketch accuracy scales as ~sqrt(rows)
-    # (core._refine_accuracy), so per-group memory grows as
-    # O(sqrt(n)*log n) — at the 1 TB zone edge that is ~13 MB of
-    # collected candidates + ~80 MB of sketch, bounded either way.
-    # The old 1 MB threshold dated from the `percentile` aggregate's
-    # per-value OpenHashMap buffering (its insert cost lost to refine
-    # past ~3 MB).  The agg kernel is now array_sort(collect_list) +
-    # lerp (aggregations._quantile): flat append/concat partials, one
-    # sort per group in the result projection — measured 0.76 s vs
-    # refine's 1.30 s on the 10.8 MB sf0.1 lineitem fence agg, and the
-    # advantage grows with input (refine pays a second full scan).
-    # Memory bound of the agg zone: worst case ONE group holds the
-    # whole input, so one task buffers input-sized doubles (~2x raw
-    # bytes with array overhead) — 64 MB sorts in well under a second
-    # and fits any sane executor; past it refine's O(sqrt(n)*log n)
-    # bound takes over.
+    # Upper bound of the "arrow" zone (bytes of plan stats).  It also
+    # caps the worst case of ONE group's values crossing Arrow into a
+    # single python worker; past it refine's O(sqrt(n)*log n) bound
+    # takes over.
     "quantile_agg_max_bytes": 64 << 20,
     # the "driver" tiny zone: one bounded plan-build collect of the
     # pruned (keys, value) projection.  12 MB is MEASURED, not
@@ -76,13 +58,10 @@ OPTIONS: dict[str, Any] = {
     # the distributed kernel spreads it).  Below the gate the win is
     # 2.4-3x; the bound also caps the plan-build collect.
     "quantile_driver_max_bytes": 12 << 20,
+    # Upper bound of the "refine" zone: at 1 TB one group's refine
+    # state is ~13 MB of collected candidates + ~80 MB of sketch
+    # (core._refine_accuracy); larger inputs take "sort".
     "quantile_refine_max_bytes": 1 << 40,
-    # inputs past refine_max but at most this take "refine2": the
-    # two-level bracket (one extra narrowing scan) whose collected
-    # candidate set shrinks by another ~grid/6 factor, extending the
-    # zero-data-shuffle exact-quantile zone to ~64 TB even when ONE
-    # group owns the whole input (see core._narrow_quantile_brackets).
-    "quantile_refine2_max_bytes": 1 << 46,
     # sort=True outputs whose DECLARED expected-groups grid is at most
     # this many rows are sorted in one post-shuffle task
     # (repartition(1).sortWithinPartitions — no range-exchange sampling
@@ -124,11 +103,10 @@ _VALIDATORS = {
     "approx_quantile": lambda v: isinstance(v, bool),
     "approx_quantile_accuracy": lambda v: isinstance(v, int) and v > 0,
     "broadcast_reindex": lambda v: isinstance(v, bool),
-    "quantile_impl": lambda v: v in ("auto", "agg", "arrow", "driver", "sort", "refine", "refine2"),
+    "quantile_impl": lambda v: v in ("auto", "agg", "arrow", "driver", "sort", "refine"),
     "quantile_agg_max_bytes": lambda v: isinstance(v, int) and v >= 0,
     "quantile_driver_max_bytes": lambda v: isinstance(v, int) and v >= 0,
     "quantile_refine_max_bytes": lambda v: isinstance(v, int) and v >= 0,
-    "quantile_refine2_max_bytes": lambda v: isinstance(v, int) and v >= 0,
     "single_partition_sort_max": lambda v: isinstance(v, int) and v >= 0,
     "single_partition_sort_input_max_bytes": lambda v: isinstance(v, int) and v >= 0,
     "diamond_materialize": lambda v: v in ("local_checkpoint", "persist", "none"),

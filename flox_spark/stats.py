@@ -422,10 +422,9 @@ def groupby_kurtosis(
     return res.orderBy(*by) if sort else res
 
 
-# value dtypes whose Arrow -> float64 conversion is bit-identical to
-# Spark's cast-to-double (IEEE round-nearest widening): the driver
-# fence kernel is only taken for these, so its np.quantile sees the
-# exact bytes the distributed Arrow kernel would
+# plain numeric value dtypes: the driver fence kernel is only taken
+# for these, whose cast to double IS the distributed kernel's
+# arithmetic view (bool/datetime/decimal values take the aggregate)
 _WINSOR_VALUE_TYPES = {"double", "float", "bigint", "int", "smallint", "tinyint"}
 
 
@@ -435,81 +434,36 @@ def _driver_fence_rows(df, by, value, lower, upper):
     Under the operator's 32 MB plan-stats gate the fence aggregate's
     distributed form is pure overhead: a shuffle of every row into a
     GROUPED_AGG python worker, just to produce a GROUP-sized frame the
-    caller collects anyway.  This collapses it to ONE no-shuffle Arrow
-    collect of the pruned ``(keys..., value)`` projection plus an
-    in-driver ``np.quantile`` per group — the same numpy kernel (and
-    the same post-cast float64 bytes) as ``_quantile_arrow``
-    (core.py:926), so the fences are BIT-IDENTICAL by construction
-    (pinned by ``tests/test_stats.py``'s driver-vs-arrow differential).
+    caller collects anyway.  This collapses it to the shared driver
+    kernel (``core._driver_group_quantiles``: ONE no-shuffle Arrow
+    collect of the pruned ``(keys..., value-as-double)`` projection +
+    in-driver ``np.quantile`` per group) — the "driver" quantile
+    strategy's kernel, so the fences are BIT-IDENTICAL to the
+    distributed Arrow kernel by construction (pinned by
+    ``tests/test_stats.py``'s driver-vs-arrow differential).
 
     Returns fence rows ``[{key...: v, "__wlo": lo, "__whi": hi}]`` for
     non-NULL-key groups only (NULL-keyed rows pass through in every
     consumer branch — same outcome as the left join), or None when the
-    Arrow route is unavailable (caller falls back to the distributed
-    fence aggregate).  Groups whose values are all missing get NULL
-    fences (pass-through), matching the aggregate path's n=0 rule.
+    kernel declines (caller falls back to the distributed fence
+    aggregate).  Groups whose values are all missing get NULL fences
+    (pass-through), matching the aggregate path's n=0 rule.
 
     NB this runs at PLAN-BUILD time (one bounded, gated collect — the
     lm/kmeans literal-model pattern): same operator-level concurrency
     caveat as the literal-fences branch below."""
-    import numpy as np
+    from flox_spark.core import _driver_group_quantiles
 
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = df.select(
-            *[F.col(b) for b in by], F.col(value).alias("__v")
-        ).toArrow().combine_chunks()
-    except Exception:
+    groups = _driver_group_quantiles(
+        df.select(*by, F.col(value).cast("double").alias("__qv")), by, [lower, upper]
+    )
+    if groups is None:
         return None
-    if tbl.num_rows == 0:
-        return []
-
-    def chunk(name):
-        col = tbl.column(name)
-        return col.chunk(0) if col.num_chunks else pa.array([], type=col.type)
-
-    valid = np.ones(tbl.num_rows, dtype=bool)
-    for b in by:
-        valid &= pc.is_valid(chunk(b)).to_numpy(zero_copy_only=False)
-    if not valid.all():
-        tbl = tbl.filter(pa.array(valid))
-        if tbl.num_rows == 0:
-            return []
-        tbl = tbl.combine_chunks()
-    v = chunk("__v").to_numpy(zero_copy_only=False).astype("float64", copy=False)
-
-    combined = None
-    dics = []
-    maxcode = 1
-    for b in by:
-        enc = pc.dictionary_encode(chunk(b))
-        codes = enc.indices.to_numpy(zero_copy_only=False).astype("int64")
-        dic = enc.dictionary.to_pylist()
-        dics.append(dic)
-        maxcode *= max(1, len(dic))
-        if maxcode > (1 << 62):  # combined-code overflow guard
-            return None
-        combined = codes if combined is None else combined * len(dic) + codes
-
-    order = np.argsort(combined, kind="stable")
-    sc, sv = combined[order], v[order]
-    bounds = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-    qs = [lower, upper]
-    rows = []
-    for i, start in enumerate(bounds):
-        stop = bounds[i + 1] if i + 1 < len(bounds) else len(sc)
-        a = sv[start:stop]
-        a = a[~np.isnan(a)]
-        lo, hi = (np.quantile(a, qs).tolist() if a.size else (None, None))
-        code = sc[start]
-        key = {}
-        for b, dic in zip(reversed(by), reversed(dics)):
-            code, idx = divmod(code, len(dic))
-            key[b] = dic[int(idx)]
-        rows.append({**key, "__wlo": lo, "__whi": hi})
-    return rows
+    return [
+        {**dict(zip(by, keys)), "__wlo": out[0], "__whi": out[1]}
+        for keys, out, _, _ in groups
+        if None not in keys
+    ]
 
 
 def winsorize_group(
@@ -527,7 +481,7 @@ def winsorize_group(
 
     ``approx``: False (the default; None is accepted as False) =
     exact interpolated fences at ANY input size — the stats-auto
-    exact-quantile strategy (agg / refine / refine2 / sort by size)
+    exact-quantile strategy (driver / arrow / refine / sort by size)
     keeps memory bounded without ever changing the RESULT.  True =
     the approx_percentile sketch, an explicit opt-in: the sketch
     returns uninterpolated data values, so its fences do NOT match

@@ -170,7 +170,7 @@ def test_quantile_sort_impl_matches_agg(spark):
     for kw in cases:
         with set_options(quantile_impl="agg"):
             base = groupby_reduce(df, "k", value="v", **kw).collect()
-        for impl in ("sort", "refine", "refine2"):
+        for impl in ("sort", "refine"):
             with set_options(quantile_impl=impl):
                 alt = groupby_reduce(df, "k", value="v", **kw).collect()
             assert len(base) == len(alt), (impl, kw)
@@ -197,7 +197,7 @@ def test_quantile_sort_impl_timestamp(spark):
     })
     df = spark.createDataFrame(pdf)
     base = groupby_reduce(df, "k", func="nanmedian", value="v").collect()
-    for impl in ("sort", "refine", "refine2"):
+    for impl in ("sort", "refine"):
         with set_options(quantile_impl=impl):
             alt = groupby_reduce(df, "k", func="nanmedian", value="v").collect()
         assert [tuple(r) for r in base] == [tuple(r) for r in alt], impl
@@ -210,11 +210,14 @@ def test_multi_warns_on_sort_quantile_impl(spark):
 
     pdf = pd.DataFrame({"k": [0, 0, 1], "v": [1.0, 2.0, 3.0]})
     df = spark.createDataFrame(pdf)
-    with set_options(quantile_impl="sort"):
-        with warnings.catch_warnings(record=True) as rec:
-            warnings.simplefilter("always")
-            groupby_reduce_multi(df, "k", aggs={"m": ("nanmedian", "v")}).collect()
-    assert any("cannot honor quantile_impl" in str(w.message) for w in rec)
+    # every forced strategy but "agg" (the fused kernel itself) warns
+    for impl, warns in (("sort", True), ("refine", True), ("arrow", True),
+                        ("driver", True), ("agg", False)):
+        with set_options(quantile_impl=impl):
+            with warnings.catch_warnings(record=True) as rec:
+                warnings.simplefilter("always")
+                groupby_reduce_multi(df, "k", aggs={"m": ("nanmedian", "v")}).collect()
+        assert any("cannot honor quantile_impl" in str(w.message) for w in rec) == warns, impl
 
 
 def test_multi_bin_labels(spark):
@@ -308,14 +311,20 @@ def test_quantile_auto_impl_selection(spark):
         assert _choose_quantile_impl(df) == "refine"
     with set_options(quantile_driver_max_bytes=0, quantile_agg_max_bytes=0,
                      quantile_refine_max_bytes=0):
-        assert _choose_quantile_impl(df) == "refine2"
-    with set_options(
-        quantile_driver_max_bytes=0, quantile_agg_max_bytes=0,
-        quantile_refine_max_bytes=0, quantile_refine2_max_bytes=0,
-    ):
         assert _choose_quantile_impl(df) == "sort"
     with set_options(quantile_impl="agg", quantile_agg_max_bytes=0):
         assert _choose_quantile_impl(df) == "agg"  # explicit wins
+
+
+def test_removed_refine2_strategy_rejected():
+    # the two-level refine strategy and its zone bound are gone: both
+    # spellings fail loudly instead of silently running another plan
+    from flox_spark import set_options
+
+    with pytest.raises(ValueError, match="quantile_impl"):
+        set_options(quantile_impl="refine2")
+    with pytest.raises(ValueError, match="unknown option"):
+        set_options(quantile_refine2_max_bytes=1 << 46)
 
 
 def test_refine_accuracy_scales_with_input_size():
@@ -364,13 +373,12 @@ def test_quantile_refine_adversarial_distributions(spark):
             want = float(np.quantile(v, q))
             # cutoff is max(1024, acc//2); force the LARGE-group bracket
             # path by shrinking accuracy so 5000 > cutoff
-            for impl in ("refine", "refine2"):
-                with set_options(quantile_impl=impl, approx_quantile_accuracy=2048):
-                    got = groupby_reduce(
-                        df, "k", func="nanquantile", value="v",
-                        finalize_kwargs={"q": q},
-                    ).collect()[0]["nanquantile"]
-                assert got == pytest.approx(want, rel=1e-12, abs=1e-12), (impl, name, q, got, want)
+            with set_options(quantile_impl="refine", approx_quantile_accuracy=2048):
+                got = groupby_reduce(
+                    df, "k", func="nanquantile", value="v",
+                    finalize_kwargs={"q": q},
+                ).collect()[0]["nanquantile"]
+            assert got == pytest.approx(want, rel=1e-12, abs=1e-12), (name, q, got, want)
 
 
 def test_sorted_output_small_declared_grid_single_task(spark):
@@ -402,49 +410,3 @@ def test_sorted_output_huge_declared_grid_warns(spark):
             ).collect()
     assert any("sort=False" in str(w.message) for w in rec)
     assert [r["k"] for r in out] == [0, 1, 2]
-
-
-def test_refine2_narrow_branch_exercised(spark, monkeypatch):
-    # force the level-2 narrowing sketch to actually run (not the
-    # small-bracket collect fallback): shrink the level-1 accuracy so
-    # the bracket population n2 (~6n/acc) exceeds the cutoff, and drop
-    # the cutoff floor so 20k rows are "large".  Heavy duplicates at a
-    # single value stress the rank-overflow guards (target rank pushed
-    # below/above the strict-interior population by ties).
-    import math
-    import flox_spark.core as core
-    from flox_spark import set_options
-
-    monkeypatch.setattr(core, "_refine_accuracy", lambda work: 64)
-    monkeypatch.setattr(core, "_REFINE_CUTOFF_FLOOR", 8)
-
-    rng = np.random.default_rng(42)
-    n = 20000
-    pdf = pd.DataFrame({
-        "k": rng.integers(0, 3, n).astype("int64"),
-        "v": np.where(rng.random(n) < 0.05, np.nan, rng.lognormal(0, 2, n)),
-    })
-    pdf.loc[pdf.index[:3000], "v"] = 7.0  # point mass => tie stress
-    df = spark.createDataFrame(pdf)
-
-    cases = [
-        dict(func="nanquantile", finalize_kwargs={"q": 0.9}),
-        dict(func="quantile", finalize_kwargs={"q": 0.9}),
-        dict(func="nanmedian"),
-        dict(func="nanquantile", finalize_kwargs={"q": [0.0, 0.1, 0.5, 0.99, 1.0]}),
-    ]
-    for kw in cases:
-        with set_options(quantile_impl="agg"):
-            base = groupby_reduce(df, "k", value="v", **kw).collect()
-        with set_options(quantile_impl="refine2"):
-            alt = groupby_reduce(df, "k", value="v", **kw).collect()
-        assert len(base) == len(alt), kw
-        for rb, ra in zip(base, alt):
-            for c in rb.asDict():
-                vb, va = rb[c], ra[c]
-                if isinstance(vb, float) and math.isnan(vb):
-                    assert isinstance(va, float) and math.isnan(va), (kw, c)
-                elif isinstance(vb, float):
-                    assert va == pytest.approx(vb, rel=1e-12), (kw, c, rb, ra)
-                else:
-                    assert vb == va, (kw, c, rb, ra)

@@ -19,7 +19,7 @@ def empty(spark):
     return spark.createDataFrame([], "k long, v double, idx long")
 
 
-@pytest.mark.parametrize("impl", ["agg", "sort", "refine", "refine2"])
+@pytest.mark.parametrize("impl", ["agg", "arrow", "driver", "sort", "refine"])
 def test_empty_input_quantiles(spark, empty, impl):
     with set_options(quantile_impl=impl):
         assert groupby_reduce(empty, "k", func="nanmedian", value="v").count() == 0

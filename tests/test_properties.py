@@ -286,7 +286,7 @@ def test_quantile_refine_matches_numpy_property(spark, data, q, acc):
 @st.composite
 def quantile_cases(draw):
     # distributions chosen to stress the refine bracket math: heavy
-    # point masses (rank-overflow guards), tiny spreads, mixed NaN
+    # point masses (ties at the bracket edges), tiny spreads, mixed NaN
     n = draw(st.integers(30, 400))
     kind = draw(st.sampled_from(["uniform", "pointmass", "twolevel", "tiny_spread"]))
     rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
@@ -294,7 +294,7 @@ def quantile_cases(draw):
         v = rng.uniform(-100, 100, n)
     elif kind == "pointmass":
         # ~3/4 identical values, the rest spread: stresses the
-        # duplicate-at-bracket-edge rank-overflow guards
+        # below/at-bracket counts when duplicates sit on an edge
         v = np.full(n, 3.25)
         v[: n // 4] = rng.uniform(-10, 10, n // 4)
     elif kind == "twolevel":
@@ -311,8 +311,8 @@ def quantile_cases(draw):
 
 @ex
 @given(quantile_cases())
-def test_refine2_property_matches_numpy(spark, case):
-    # the two-level bracket (forced into its narrow branch by tiny
+def test_refine_bracket_property_matches_numpy(spark, case):
+    # the refine bracket (forced past its collect-all cutoff by tiny
     # accuracy/cutoff) must reproduce numpy linear interpolation on
     # arbitrary distributions, per group, NaNs skipped
     import flox_spark.core as core
@@ -324,7 +324,7 @@ def test_refine2_property_matches_numpy(spark, case):
     core._refine_accuracy = lambda work: 32
     core._REFINE_CUTOFF_FLOOR = 4
     try:
-        with set_options(quantile_impl="refine2"):
+        with set_options(quantile_impl="refine"):
             got = {
                 r["k"]: r["nanquantile"]
                 for r in groupby_reduce(
@@ -348,10 +348,10 @@ def test_refine_bracket_trust_boundary_regression(spark):
     # cutoff = acc//2, n=17 at acc=32 sat inside the bracket-trust
     # window but percentile_approx's rank-convention slop (+~2 ranks
     # beyond the n/acc compression error) degenerated the q=0.01
-    # bracket to [min, min] and refine/refine2 returned the group
-    # MINIMUM instead of the rank-0/1 interpolation.  The fixed
-    # cutoff (= acc) must route this group through collect-all and
-    # match numpy exactly on both strategies.
+    # bracket to [min, min] and refine returned the group MINIMUM
+    # instead of the rank-0/1 interpolation.  The fixed cutoff (= acc)
+    # must route this group through collect-all and match numpy
+    # exactly.
     import flox_spark.core as core
     from flox_spark import set_options
 
@@ -367,15 +367,14 @@ def test_refine_bracket_trust_boundary_regression(spark):
     core._refine_accuracy = lambda work: 32
     core._REFINE_CUTOFF_FLOOR = 4
     try:
-        for impl in ("refine", "refine2"):
-            with set_options(quantile_impl=impl):
-                got = groupby_reduce(
-                    df, "k", func="nanquantile", value="v",
-                    finalize_kwargs={"q": 0.01},
-                ).collect()[0]["nanquantile"]
-            want = float(np.quantile(np.array(vals), 0.01))
-            assert got == pytest.approx(want, rel=1e-12), (impl, got, want)
-            assert got != min(vals)  # the old failure returned the min
+        with set_options(quantile_impl="refine"):
+            got = groupby_reduce(
+                df, "k", func="nanquantile", value="v",
+                finalize_kwargs={"q": 0.01},
+            ).collect()[0]["nanquantile"]
+        want = float(np.quantile(np.array(vals), 0.01))
+        assert got == pytest.approx(want, rel=1e-12), (got, want)
+        assert got != min(vals)  # the old failure returned the min
     finally:
         core._refine_accuracy, core._REFINE_CUTOFF_FLOOR = orig_acc, orig_floor
 

@@ -13,7 +13,7 @@ import pytest
 
 from flox_spark import groupby_reduce, set_options
 
-STRATS = ("agg", "arrow", "driver", "sort", "refine", "refine2")
+STRATS = ("agg", "arrow", "driver", "sort", "refine")
 
 
 def _frame(spark, with_nan=True, with_null=True):
@@ -75,6 +75,45 @@ def test_four_strategies_agree(spark, func):
         else:
             want.append((k, float("nan") if isna.any() else float(np.quantile(a, q))))
     _close(sorted(want, key=str), outs["arrow"])
+
+
+def _same(got, want):
+    return got == want or (np.isnan(got) and np.isnan(want))
+
+
+# q -> per-group values: medians whose lerp crosses infinities, and
+# the q -> 1 neighbour pair where a one-sided lerp cancels
+# catastrophically
+_LERP_CASES = {
+    0.5: {"a": [np.inf, np.inf, np.inf], "b": [1.0, np.inf], "c": [-16385.0, 0.0]},
+    1 - 2**-53: {"c": [-16385.0, 0.0]},
+}
+
+
+@pytest.mark.parametrize("route", [*STRATS, "multi"])
+def test_quantile_lerp_parity(spark, route):
+    # every surviving strategy and groupby_reduce_multi's fused kernel
+    # interpolate with numpy's rule: exact equality with np.quantile
+    # (NaN == NaN), no tolerance
+    from flox_spark import groupby_reduce_multi
+
+    for q, groups in _LERP_CASES.items():
+        rows = [(k, v) for k, vals in groups.items() for v in vals]
+        df = spark.createDataFrame(rows, "k string, v double")
+        fk = {"q": q}
+        if route == "multi":
+            out = groupby_reduce_multi(
+                df, "k", aggs={"out": {"func": "nanquantile", "value": "v",
+                                       "finalize_kwargs": fk}},
+            )
+        else:
+            with set_options(quantile_impl=route):
+                out = groupby_reduce(df, "k", func="nanquantile", value="v",
+                                     alias="out", finalize_kwargs=fk)
+        got = {r["k"]: r["out"] for r in out.collect()}
+        for k, vals in groups.items():
+            want = float(np.quantile(np.array(vals), q))
+            assert got[k] is not None and _same(got[k], want), (route, q, vals, got[k], want)
 
 
 def test_vector_q_and_min_count(spark):

@@ -17,10 +17,11 @@ Usage: python tools/bench_scale.py [--quick]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -132,36 +133,64 @@ def synth_docs(spark, n: int):
     )
 
 
-def quantile_arrow_zone(spark, quick: bool) -> dict:
-    """The r11 arrow-vs-agg exact-quantile comparison at the top of
-    the stats-auto small zone (~40 MB parquet, the largest input the
-    zone admits): the np.quantile grouped-agg kernel vs the JVM
-    percentile ObjectHashAggregate vs refine, identical results."""
-    import os
+def quantile_arrow_zone(spark, quick: bool, runs: int = 5) -> dict:
+    """The exact-quantile zone table (core._choose_quantile_impl's
+    docstring, SCALE.md): at each input size, the stats-auto pick
+    against its neighbouring strategies on a p90 by string key.  Each
+    wall is the whole call — plan build (the driver strategy collects
+    at build time) plus a noop sink — as the median of ``runs``
+    rounds that alternate the strategies, after one warm-up each.
+    ``--quick`` keeps the two smallest points."""
+    import statistics
     import tempfile
 
     from flox_spark import groupby_reduce, set_options
-
-    n = 1_000_000 if quick else 5_000_000
-    path = os.path.join(tempfile.gettempdir(), f"flox_qzone_{n}.parquet")
-    if not os.path.exists(path):
-        spark.range(n).select(
-            (F.col("id") % 8).cast("string").alias("k"),
-            (F.rand(7) * 1000).alias("v"),
-        ).write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
+    from flox_spark.core import _choose_quantile_impl
     from flox_spark.plans.util import estimate_size_bytes
 
-    out: dict = {"rows": n, "stats_bytes": estimate_size_bytes(df)}
-    for s in ("agg", "arrow", "refine"):
-        with set_options(quantile_impl=s):
-            q = groupby_reduce(
-                df, "k", func="quantile", value="v", alias="p",
-                finalize_kwargs={"q": 0.9},
-            )
-            force(q)
-            out[s] = {"wall_s": min(force(q) for _ in range(3))}
-    return out
+    # (rows, groups, strategies): ~8 B of parquet per row at 8 groups
+    points = [
+        (87_500, 8, ("driver", "arrow", "refine")),        # ~0.7 MB
+        (862_500, 8, ("driver", "arrow", "refine")),       # ~6.9 MB
+        (2_000_000, 8, ("arrow", "refine")),               # ~16 MB
+        (5_000_000, 8, ("arrow", "refine")),               # ~40 MB
+        (5_000_000, 5000, ("arrow", "refine")),
+        (7_500_000, 8, ("arrow", "refine")),               # ~60 MB
+        (10_000_000, 8, ("refine", "sort")),               # ~80 MB
+    ]
+    out = []
+    for n, groups, strategies in points[:2] if quick else points:
+        path = os.path.join(tempfile.gettempdir(), f"flox_qzone_{n}_{groups}.parquet")
+        if not os.path.exists(path):
+            spark.range(n).select(
+                (F.col("id") % groups).cast("string").alias("k"),
+                (F.rand(7) * 1000).alias("v"),
+            ).write.mode("overwrite").parquet(path)
+        df = spark.read.parquet(path)
+
+        def call(impl: str) -> float:
+            t0 = time.perf_counter()
+            with set_options(quantile_impl=impl):
+                q = groupby_reduce(
+                    df, "k", func="quantile", value="v", alias="p",
+                    finalize_kwargs={"q": 0.9},
+                )
+            q.write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0
+
+        walls: dict = {s: [] for s in strategies}
+        for s in strategies:
+            call(s)
+        for _ in range(runs):
+            for s in strategies:
+                walls[s].append(call(s))
+        out.append({
+            "rows": n, "groups": groups,
+            "stats_mb": round(estimate_size_bytes(df) / (1 << 20), 1),
+            "auto": _choose_quantile_impl(df),
+            **{s: round(statistics.median(w), 2) for s, w in walls.items()},
+        })
+    return {"runs": runs, "points": out}
 
 
 def spans_scaling(spark, quick: bool) -> dict:

@@ -7,11 +7,12 @@ tolerance).  Usage: python tools/check_oracle.py [sf_dir]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from flox_spark.session import get_spark
