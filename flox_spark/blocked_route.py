@@ -92,18 +92,10 @@ def route_to_blocked(
         ).alias("__g"),
     ]
     if order_by is not None:
-        from flox_spark.dtypes import is_missing
+        from flox_spark.dtypes import sql_missing, sql_quote
 
-        aggs.append(
-            F.coalesce(
-                F.sum(
-                    is_missing(
-                        F.col(order_by), df.schema[order_by].dataType
-                    ).cast("long")
-                ),
-                F.lit(0),
-            ).alias("__om")
-        )
+        om = sql_missing(sql_quote(order_by), df.schema[order_by].dataType)
+        aggs.append(F.expr(f"coalesce(sum(CAST({om} AS BIGINT)), 0)").alias("__om"))
     row = df.agg(*aggs).collect()[0]
     if order_by is not None and row["__om"] > 0:
         # missing order values violate the blocked contract (the
@@ -169,7 +161,7 @@ def blocked_scan(
     stay equal-population under skewed (bursty) orders where uniform
     [min, max] ranges would put nearly everything in one block.
     ``order_view`` must be numeric and non-null except on rows that
-    ``missing_block = (is_missing, index)`` sends to a dedicated block.
+    ``missing_block = (missing, index)`` sends to a dedicated block.
     It is staged as a real column before the crossJoin: a derived
     expression captured in the block-filter lambda can mis-bind across
     the join (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on one plan shape,

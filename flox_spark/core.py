@@ -27,18 +27,17 @@ from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, DateType
 
 from flox_spark.aggregations import REDUCTIONS, AggContext, Aggregation, agg_column, sql_lerp, sql_sentinel
 from flox_spark.dtypes import (
     NAN,
-    arith_input,
-    arith_restore,
+    drop_missing,
     is_datetime_type,
     is_float_type,
     is_timedelta_type,
     sql_arith_input,
-    sql_missing,
+    sql_arith_restore,
     sql_quote,
 )
 from flox_spark.options import OPTIONS
@@ -70,7 +69,6 @@ def _break_to_num(b: Any, dt) -> float:
     (flox/factorize.py:64-72, tested reference tests/test_core.py:1256-1271).
     Accepts datetime/date/np.datetime64/pd.Timestamp/ISO strings."""
     import pandas as pd
-    from pyspark.sql.types import DateType
 
     ts = pd.Timestamp(b)
     if isinstance(dt, DateType):
@@ -100,7 +98,13 @@ def _bin_column(col: Column, breaks: Sequence, dt=None, closed: str = "right") -
     if closed not in ("right", "left"):
         raise ValueError(f"closed must be 'right' or 'left', got {closed!r}")
     if dt is not None and is_datetime_type(dt):
-        col, _ = arith_input(col, dt)
+        # dtypes.sql_arith_input's int64 view (epoch days / us), in
+        # Column form: the public bin_column digitizes a Column, not
+        # text -- the bin exception to the single text source
+        if isinstance(dt, DateType):
+            col = F.datediff(col, F.lit("1970-01-01").cast("date")).cast("long")
+        else:
+            col = F.unix_micros(col.cast("timestamp"))
         breaks = [_break_to_num(b, dt) for b in breaks]
     breaks = list(breaks)
     n = len(breaks) - 1
@@ -164,14 +168,13 @@ def _prep_labels(
     of all -0.0) see the raw bits.  Returns (work, key_cols, by_dts,
     raw) with ``raw``: value column -> the snapshot actually taken."""
     schema = df.schema
-    work = df
+    work = drop_missing(df, by)
     key_cols: list[str] = []
     by_dts: list = []
     raw: dict[str, str] = {}
     for i, b in enumerate(by):
         bdt = schema[b].dataType
         by_dts.append(bdt)
-        work = work.filter(F.expr(f"NOT {sql_missing(sql_quote(b), bdt)}"))
         if isbin_t[i]:
             kc = f"{b}_bin"
             work = work.withColumn(kc, _bin_column(F.col(b), expected_t[i], bdt, closed_t[i]))
@@ -861,7 +864,7 @@ def groupby_reduce_multi(
 
 
 def _finalize(
-    val: Column,
+    val: str | Column,
     n: str,
     agg: Aggregation,
     min_count: int | None,
@@ -881,12 +884,15 @@ def _finalize(
     - ``min_count``: groups with fewer than ``min_count`` countable
       values (``n``) take ``fill_value`` (default: the func's fill).
 
-    ``n`` and ``poison`` are SQL text, parsed only when their rule
-    applies (each parse is a py4j round trip).  ``m`` is the vector-q
-    width when ``val`` is an array of m values."""
+    ``val`` is SQL text (a Column only when ``dt`` is None); ``n`` and
+    ``poison`` are SQL text, parsed only when their rule applies (each
+    parse is a py4j round trip).  ``m`` is the vector-q width when
+    ``val`` is an array of m values."""
     dtish = dt is not None and (is_datetime_type(dt) or is_timedelta_type(dt))
     if dtish:
-        val = F.transform(val, lambda c: arith_restore(c, dt)) if m else arith_restore(val, dt)
+        val = f"transform({val}, x -> {sql_arith_restore('x', dt)})" if m else sql_arith_restore(val, dt)
+    if isinstance(val, str):
+        val = F.expr(val)
     if poison is not None and not agg.name.startswith("nan"):
         sentinel = F.expr(sql_sentinel(dt if dtish else "double"))
         val = F.when(F.expr(poison), F.array_repeat(sentinel, m) if m else sentinel).otherwise(val)
@@ -973,7 +979,7 @@ def _quantile_sort(
     )
     per_q = bounds.join(picked, [*key_cols, "__qi"], "left")
     val = _finalize(
-        F.expr(sql_lerp("__vlo", "__vhi", "(__t - __tf)")), "__n", agg,
+        sql_lerp("__vlo", "__vhi", "(__t - __tf)"), "__n", agg,
         min_count, fill_value, dt=ctx.dt, poison="__poison",
     )
 
@@ -1116,7 +1122,7 @@ def _finalize_qarrays(
         nan = "coalesce({}, CAST('NaN' AS DOUBLE))"
         vals = f"transform({vals}, x -> {nan.format('x')})" if is_vec else nan.format(vals)
     val = _finalize(
-        F.expr(f"CASE WHEN {n} > 0 THEN {vals} END"), n, agg, min_count, fill_value,
+        f"CASE WHEN {n} > 0 THEN {vals} END", n, agg, min_count, fill_value,
         m=m if is_vec else None, dt=ctx.dt, poison=f"element_at(__qa, {m + 2}) > 0",
     )
     return res.select(*key_cols, val.alias(out_name))
@@ -1523,7 +1529,7 @@ def _quantile_refine(
         tf = f"CAST(floor({t}) AS BIGINT)"
         lerp = sql_lerp(at(tf), at(f"CAST(ceil({t}) AS BIGINT)"), f"({t} - {tf})")
         return _finalize(
-            F.expr(f"CASE WHEN __n > 0 THEN {lerp} END"), "__n", agg,
+            f"CASE WHEN __n > 0 THEN {lerp} END", "__n", agg,
             min_count, fill_value, dt=ctx.dt, poison="__poison",
         )
 

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import arith_input, is_missing
+from flox_spark.dtypes import sql_arith_input, sql_missing, sql_quote
 from flox_spark.rank import groupby_rank
 
 __all__ = ["groupby_corr"]
@@ -52,13 +52,11 @@ def groupby_corr(
     if method not in ("pearson", "spearman"):
         raise ValueError(f"method must be pearson|spearman, got {method!r}")
     xdt, ydt = df.schema[x].dataType, df.schema[y].dataType
-    xm, ym = is_missing(F.col(x), xdt), is_missing(F.col(y), ydt)
-    either = xm | ym
-    ax, _ = arith_input(F.col(x), xdt)
-    ay, _ = arith_input(F.col(y), ydt)
+    qx, qy = sql_quote(x), sql_quote(y)
+    either = f"{sql_missing(qx, xdt)} OR {sql_missing(qy, ydt)}"
     # pairwise deletion: null BOTH sides when either is missing
-    px = F.when(either, F.lit(None)).otherwise(ax)
-    py = F.when(either, F.lit(None)).otherwise(ay)
+    px = F.expr(f"CASE WHEN {either} THEN NULL ELSE {sql_arith_input(qx, xdt)[0]} END")
+    py = F.expr(f"CASE WHEN {either} THEN NULL ELSE {sql_arith_input(qy, ydt)[0]} END")
 
     if method == "spearman":
         work = df.withColumn("__px", px).withColumn("__py", py)

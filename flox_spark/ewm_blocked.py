@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flox_spark.blocked_route import BlockedSpec, blocked_scan
-from flox_spark.dtypes import arith_input
+from flox_spark.dtypes import sql_arith_input, sql_quote
 from flox_spark.transform import groupby_apply_batched
 
 __all__ = ["groupby_ewm_blocked"]
@@ -149,8 +149,8 @@ def groupby_ewm_blocked(
 
     args = (by, value, order_by, out, in_fields, a, base, kw, ignore_na)
     spec = _adjust_true(*args, func) if adjust else _adjust_false(*args)
-    onum, _ = arith_input(F.col(order_by), df.schema[order_by].dataType)
-    return blocked_scan(df.select(*in_names), by, onum, spec, num_blocks)
+    onum, _ = sql_arith_input(sql_quote(order_by), df.schema[order_by].dataType)
+    return blocked_scan(df.select(*in_names), by, F.expr(onum), spec, num_blocks)
 
 
 def _adjust_true(by, value, order_by, out, in_fields, a, base, kw, ign, func):

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import ts_micros
+from flox_spark.dtypes import sql_ts_micros
 from pyspark.sql.types import StructField, StructType
 
 __all__ = ["asof_join"]
@@ -135,11 +135,8 @@ def asof_join(
 
     if tolerance_seconds is not None:
         tol_us = int(round(tolerance_seconds * 1_000_000))
-        gap = (
-            ts_micros(F.col("__ts")) - ts_micros(F.col("__mts"))
-            if direction == "backward"
-            else ts_micros(F.col("__mts")) - ts_micros(F.col("__ts"))
-        )
+        later, earlier = ("__ts", "__mts") if direction == "backward" else ("__mts", "__ts")
+        gap = F.expr(f"{sql_ts_micros(later)} - {sql_ts_micros(earlier)}")
         ok = F.col("__mts").isNotNull() & (gap <= F.lit(tol_us))
         matched = matched.select(
             "__l",

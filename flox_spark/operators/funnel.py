@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import ts_micros
+from flox_spark.dtypes import sql_quote, sql_ts_micros
 
 from flox_spark.operators.asof import asof_join
 
@@ -100,7 +100,7 @@ def funnel_conversion(
         tolerance_seconds=within_seconds,
     )
     conv = F.col("asof___step_ts").isNotNull()
-    delay_us = ts_micros(F.col("asof___step_ts")) - ts_micros(F.col(ts))
+    delay_us = F.expr(f"{sql_ts_micros('asof___step_ts')} - {sql_ts_micros(sql_quote(ts))}")
     return (
         j.groupBy(*by)
         .agg(

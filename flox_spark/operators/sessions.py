@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import ts_micros
+from flox_spark.dtypes import sql_quote, sql_ts_micros
 
 __all__ = ["sessionize", "session_stats"]
 
@@ -52,9 +52,10 @@ def sessionize(
     timestamps can tie — required for deterministic ids."""
     order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(*by).orderBy(*order)
-    prev = F.lag(ts_micros(F.col(ts))).over(w)
+    cur = F.expr(sql_ts_micros(sql_quote(ts)))
+    prev = F.lag(cur).over(w)
     brk = F.when(
-        prev.isNull() | (ts_micros(F.col(ts)) - prev > F.lit(_gap_micros(gap_seconds))),
+        prev.isNull() | (cur - prev > F.lit(_gap_micros(gap_seconds))),
         F.lit(1),
     ).otherwise(F.lit(0))
     running = Window.partitionBy(*by).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
@@ -97,7 +98,7 @@ def session_stats(
         .withColumn("session_start", F.col("__w.start"))
         .withColumn(
             "duration_us",
-            ts_micros(F.col("last_ts")) - ts_micros(F.col("__w.start")),
+            F.expr(f"{sql_ts_micros('last_ts')} - {sql_ts_micros('__w.start')}"),
         )
         .drop("__w")
     )

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import is_missing
+from flox_spark.dtypes import drop_missing
 
 __all__ = ["grouped_topk"]
 
@@ -38,7 +38,7 @@ def grouped_topk(
     NaN above every number and "win" the top slots).  ``tiebreak``
     makes the cut deterministic when values tie."""
     if skipna:
-        df = df.filter(~is_missing(F.col(value), df.schema[value].dataType))
+        df = drop_missing(df, [value])
     order = [F.col(value).asc() if ascending else F.col(value).desc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).asc())

@@ -20,11 +20,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, NumericType
 
 from flox_spark.dtypes import (
-    arith_input,
     is_bool_type,
     is_datetime_type,
-    is_missing,
     is_timedelta_type,
+    sql_arith_input,
+    sql_missing,
+    sql_quote,
 )
 from flox_spark.options import OPTIONS
 
@@ -53,6 +54,15 @@ def _blockable(vdt: DataType) -> bool:
         or is_datetime_type(vdt)
         or is_timedelta_type(vdt)
     )
+
+
+def _rank_views(value: str, vdt: DataType) -> tuple[str, str]:
+    """(missing, vord) as SQL text: the value's is-missing test and its
+    numeric rank order, NULL on missing rows — shared by the window and
+    blocked plans."""
+    qv = sql_quote(value)
+    missing = sql_missing(qv, vdt)
+    return missing, f"CASE WHEN {missing} THEN NULL ELSE {sql_arith_input(qv, vdt)[0]} END"
 
 
 def groupby_rank(
@@ -109,14 +119,12 @@ def groupby_rank(
             df, *by, value=value, method=method, ascending=ascending,
             na_option=na_option, order_by=order_by, out=out, pct=pct,
         )
-    v = F.col(value)
-    missing = is_missing(v, vdt)
-    av, _ = arith_input(v, vdt)
+    miss_sql, vord_sql = _rank_views(value, vdt)
+    missing, vord = F.expr(miss_sql), F.expr(vord_sql)
 
     # missing rows sort into their own block: after everything for
     # 'keep'/'bottom', before everything for 'top'
-    mkey = F.when(missing, F.lit(0 if na_option == "top" else 2)).otherwise(F.lit(1))
-    vord = F.when(missing, F.lit(None)).otherwise(av)
+    mkey = F.expr(f"CASE WHEN {miss_sql} THEN {0 if na_option == 'top' else 2} ELSE 1 END")
     order: list[Column] = [mkey.asc(), vord.asc() if ascending else vord.desc()]
     if method == "first" and order_by is not None:
         # occurrence order resolves ties ONLY for method='first';

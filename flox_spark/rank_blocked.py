@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flox_spark.blocked_route import BlockedSpec, blocked_scan
-from flox_spark.dtypes import arith_input, is_missing
-from flox_spark.rank import _blockable, _check_args
+from flox_spark.rank import _blockable, _check_args, _rank_views
 
 __all__ = ["groupby_rank_blocked"]
 
@@ -69,11 +68,9 @@ def groupby_rank_blocked(
             "use groupby_rank"
         )
 
-    v = F.col(value)
-    missing = is_missing(v, vdt)
-    av, _ = arith_input(v, vdt)
-    vord = F.when(missing, F.lit(None)).otherwise(av)
-    miss = missing.cast("long")
+    miss_sql, vord_sql = _rank_views(value, vdt)
+    missing, vord = F.expr(miss_sql), F.expr(vord_sql)
+    miss = F.expr(f"CAST({miss_sql} AS BIGINT)")
     vsort = vord.asc() if ascending else vord.desc()
 
     def local(work, keys):

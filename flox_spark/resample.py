@@ -143,10 +143,9 @@ def time_weighted_mean(
     window pass for ``lead(ts)``, one map-side-combined aggregate —
     the same single-shuffle profile as ``groupby_scan``.
     """
-    from flox_spark.dtypes import is_missing
+    from flox_spark.dtypes import drop_missing
 
-    vdt = df.schema[value].dataType
-    work = df.filter(~is_missing(F.col(value), vdt))
+    work = drop_missing(df, [value])
     w = Window.partitionBy(*by).orderBy(ts)
     micros = F.unix_micros(F.col(ts))
     dur = (F.lead(micros).over(w) - micros).cast("double")
@@ -211,13 +210,10 @@ def resample_upsample(
             "(same rule as groupby_rolling time windows)"
         )
     out = out or value
-    from flox_spark.dtypes import is_missing
+    from flox_spark.dtypes import drop_missing
 
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
     bucket = time_bucket(F.col(time_col), freq, origin)
-    vdt = work.schema[value].dataType
     v = F.col(value).cast("double")
     v = F.when(~F.isnan(v), v)
     obs_base = work.select(

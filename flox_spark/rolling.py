@@ -150,7 +150,7 @@ def groupby_rolling(
         v: Column = F.col(value)
         if is_float_type(vdt):
             # NaN -> NULL so SQL aggregates skip it (nan* semantics,
-            # dtypes.to_skip's rule)
+            # dtypes.sql_skip's rule)
             v = F.when(~F.isnan(v), v)
         expr = funcs[func](v, w)
         if min_periods > 1:

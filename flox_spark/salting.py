@@ -39,7 +39,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import NAN, is_missing, to_skip
+from flox_spark.dtypes import NAN, drop_missing, sql_missing, sql_quote, sql_skip
 
 __all__ = ["diagnose_skew", "groupby_reduce_salted", "SALTABLE"]
 
@@ -188,9 +188,7 @@ def groupby_reduce_salted(
             "round-trips"
         )
 
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
 
     from flox_spark.dtypes import is_float_type
 
@@ -199,7 +197,7 @@ def groupby_reduce_salted(
         # accumulates float in double anyway and min/max must preserve
         # the input float type like groupby_reduce does
         v_raw = F.col(value)
-        v_skip = to_skip(F.col(value), vdt)
+        v_skip = F.expr(sql_skip(sql_quote(value), vdt))
     elif isinstance(vdt, BooleanType):
         v_raw = F.col(value).cast("long")
         v_skip = v_raw
@@ -209,7 +207,7 @@ def groupby_reduce_salted(
         # long sum is exact and matches groupby_reduce's promotion
         v_raw = F.col(value)
         v_skip = F.col(value)
-    poison = is_missing(F.col(value), vdt)
+    poison = F.expr(sql_missing(sql_quote(value), vdt))
     salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salt))
 
     p_build, m_build = _specs(is_float_type(vdt), vdt)[func]

@@ -23,12 +23,13 @@ from pyspark.sql.types import DataType, DecimalType
 
 from flox_spark.dtypes import (
     NAN,
-    arith_input,
     is_datetime_type,
     is_float_type,
-    is_missing,
     is_timedelta_type,
-    to_skip,
+    sql_arith_input,
+    sql_missing,
+    sql_quote,
+    sql_skip,
 )
 from flox_spark.aggregations import SCANS, Scan, ScanContext
 
@@ -77,22 +78,23 @@ def _sum_type(dt: DataType) -> str:
     return "long"
 
 
-def _cumulative_scan(func: str, v: Column, vdt: DataType) -> _CumulativeScan:
-    """The one definition of each cumulative scan in ``SCANS``: the
-    window plan runs ``finish([ch.scan(group_window)])``; the blocked
-    plan (``scan_blocked``) runs the same ``ch.scan`` per block and
-    folds the block carries with ``op``."""
-    v_skip = to_skip(v, vdt)
+def _cumulative_scan(func: str, v: str, vdt: DataType) -> _CumulativeScan:
+    """The one definition of each cumulative scan in ``SCANS`` over the
+    quoted value column ``v``: the window plan runs
+    ``finish([ch.scan(group_window)])``; the blocked plan
+    (``scan_blocked``) runs the same ``ch.scan`` per block and folds
+    the block carries with ``op``."""
+    skip = sql_skip(v, vdt)
 
     def same(c: list[Column]) -> Column:
         return c[0]
 
     if func in ("cumsum", "nancumsum", "cumprod", "nancumprod"):
-        x, xdt = arith_input(v_skip, vdt)
+        x, xdt = sql_arith_input(skip, vdt)
         if "sum" in func:
-            ch = _Channel(F.sum(x), operator.add, F.lit(0).cast(_sum_type(xdt)))
-        else:
-            ch = _Channel(F.product(x), operator.mul, F.lit(1.0))
+            ch = _Channel(F.expr(f"sum({x})"), operator.add, F.lit(0).cast(_sum_type(xdt)))
+        else:  # product() is not a SQL routine
+            ch = _Channel(F.product(F.expr(x)), operator.mul, F.lit(1.0))
 
         def restore(c: Column) -> Column:
             if vdt.simpleString() == "float":
@@ -106,27 +108,30 @@ def _cumulative_scan(func: str, v: Column, vdt: DataType) -> _CumulativeScan:
         # numpy cumsum/cumprod: a missing value poisons every position
         # from its own on — NaN for floats, NULL otherwise (a NaN
         # literal cast to long would silently yield 0)
-        poison = _Channel(F.max(is_missing(v, vdt).cast("int")), F.greatest, F.lit(0))
+        poison = _Channel(
+            F.expr(f"max(CAST({sql_missing(v, vdt)} AS INT))"), F.greatest, F.lit(0)
+        )
         bad = F.lit(NAN) if is_float_type(vdt) else F.lit(None)
         return _CumulativeScan(
             (ch, poison), lambda c: restore(F.when(c[1] == 1, bad).otherwise(c[0]))
         )
     if func == "cumcount":
-        count = _Channel(F.count(v_skip), operator.add, F.lit(0).cast("long"))
+        count = _Channel(F.expr(f"count({skip})"), operator.add, F.lit(0).cast("long"))
         return _CumulativeScan((count,), same)
     if func in ("cummax", "cummin"):
         # NaN-skipping running extrema (beyond-reference utility);
         # preserves input type
         if func == "cummax":
-            return _CumulativeScan((_Channel(F.max(v_skip), F.greatest),), same)
-        return _CumulativeScan((_Channel(F.min(v_skip), F.least),), same)
+            return _CumulativeScan((_Channel(F.expr(f"max({skip})"), F.greatest),), same)
+        return _CumulativeScan((_Channel(F.expr(f"min({skip})"), F.least),), same)
     if func in ("ffill", "bfill"):
         # bfill is ffill over the reversed order: a running frame, where
         # first() over currentRow..unboundedFollowing re-aggregates the
         # whole rest of the group for every row
         pick = F.max if func == "ffill" else F.min
+        v_skip = F.expr(skip)
         fill = _Channel(
-            F.last(v_skip, ignorenulls=True),
+            F.expr(f"last({skip}, true)"),
             lambda earlier, later: F.coalesce(later, earlier),
             # the last non-missing value in traversal order (missing
             # rows must not clobber the carry)
@@ -138,25 +143,23 @@ def _cumulative_scan(func: str, v: Column, vdt: DataType) -> _CumulativeScan:
     raise ValueError(f"{func!r} is not a cumulative scan")
 
 
-def _lag_finish(func: str, v: Column, lagged: Column, vdt: DataType) -> Column:
-    """shift/diff/pct_change from the value and its lagged partner —
-    shared by the window plan and ``shift_blocked``."""
+def _lag_finish(func: str, v: str, lagged: str, vdt: DataType) -> Column:
+    """shift/diff/pct_change from the value and its lagged partner
+    (SQL text) — shared by the window plan and ``shift_blocked``."""
     if func == "shift":
-        return lagged
+        return F.expr(lagged)
     if func == "pct_change":
         # pandas GroupBy.pct_change: v / lag(v) - 1; a zero lag
         # yields NULL via try_divide (ANSI-safe), not an abort
-        return F.try_divide(v.cast("double"), lagged.cast("double")) - F.lit(1.0)
-    av, _ = arith_input(v, vdt)
-    lv, _ = arith_input(lagged, vdt)
-    expr = av - lv
+        return F.expr(f"try_divide(CAST({v} AS DOUBLE), CAST({lagged} AS DOUBLE)) - 1.0D")
+    expr = f"({sql_arith_input(v, vdt)[0]} - {sql_arith_input(lagged, vdt)[0]})"
     if is_datetime_type(vdt) or is_timedelta_type(vdt):
         # datetime diff yields an interval-like long of microseconds,
         # surfaced as day-time interval
-        return F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), expr / F.lit(1e6))
+        return F.expr(f"make_dt_interval(0, 0, 0, {expr} / 1e6)")
     if vdt.simpleString() == "float":
-        return expr.cast("float")
-    return expr
+        return F.expr(f"CAST({expr} AS FLOAT)")
+    return F.expr(expr)
 
 
 def groupby_scan(
@@ -255,11 +258,12 @@ def groupby_scan(
                 df, *by, func=func, value=value, order_by=order_by, alias=out
             )
     vdt = df.schema[value].dataType
-    v = F.col(value)
-    w_ord = Window.partitionBy(*by).orderBy(order_by)
+    qv = sql_quote(value)
     if custom:
+        w_ord = Window.partitionBy(*by).orderBy(order_by)
         ctx = ScanContext(
-            value=v, v_skip=to_skip(v, vdt), missing=is_missing(v, vdt), dt=vdt,
+            value=F.col(value), v_skip=F.expr(sql_skip(qv, vdt)),
+            missing=F.expr(sql_missing(qv, vdt)), dt=vdt,
             window=w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow),
             window_fwd=w_ord.rowsBetween(Window.currentRow, Window.unboundedFollowing),
             kwargs=dict(finalize_kwargs or {}),
@@ -273,13 +277,12 @@ def groupby_scan(
         # pandas would upcast ints to float and emit NaN there, which
         # a typed column engine deliberately does not do.
         periods = int((finalize_kwargs or {}).get("periods", 1))
-        lagged = (
-            F.lag(v, periods).over(w_ord)
-            if periods >= 0
-            else F.lead(v, -periods).over(w_ord)
-        )
-        return df.withColumn(out, _lag_finish(func, v, lagged, vdt))
-    spec = _cumulative_scan(func, v, vdt)
+        lag = f"lag({qv}, {periods})" if periods >= 0 else f"lead({qv}, {-periods})"
+        keys = ", ".join(sql_quote(b) for b in by)
+        part = f"PARTITION BY {keys} " if by else ""
+        lagged = f"{lag} OVER ({part}ORDER BY {sql_quote(order_by)})"
+        return df.withColumn(out, _lag_finish(func, qv, lagged, vdt))
+    spec = _cumulative_scan(func, qv, vdt)
     o = F.col(order_by)
     w = Window.partitionBy(*by).orderBy(o.desc() if spec.reverse else o).rowsBetween(
         Window.unboundedPreceding, Window.currentRow

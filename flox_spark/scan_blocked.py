@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flox_spark.blocked_route import BlockedSpec, blocked_scan
-from flox_spark.dtypes import arith_input
+from flox_spark.dtypes import sql_arith_input, sql_quote
 from flox_spark.scan import _cumulative_scan
 
 __all__ = ["groupby_scan_blocked"]
@@ -59,7 +59,7 @@ def groupby_scan_blocked(
     if func not in _SUPPORTED:
         raise ValueError(f"blocked scan supports {_SUPPORTED}, not {func!r}")
     vdt = df.schema[value].dataType
-    cs = _cumulative_scan(func, F.col(value), vdt)
+    cs = _cumulative_scan(func, sql_quote(value), vdt)
     o = F.col(order_by)
     null = F.lit(None).cast(vdt)
     # (carry name, local-pass name, channel, identity)
@@ -86,5 +86,5 @@ def groupby_scan_blocked(
         combine=lambda s, _: cs.finish([ch.op(s[cn], F.col(ln)) for cn, ln, ch, _ in chans]),
         descending=cs.reverse,
     )
-    onum, _ = arith_input(o, df.schema[order_by].dataType)
-    return blocked_scan(df, by, onum, spec, num_blocks)
+    onum, _ = sql_arith_input(sql_quote(order_by), df.schema[order_by].dataType)
+    return blocked_scan(df, by, F.expr(onum), spec, num_blocks)

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flox_spark.blocked_route import BlockedSpec, blocked_scan
-from flox_spark.dtypes import arith_input
+from flox_spark.dtypes import sql_arith_input, sql_quote
 from flox_spark.scan import _lag_finish
 
 __all__ = ["groupby_shift_blocked"]
@@ -59,9 +59,9 @@ def groupby_shift_blocked(
     out = alias or func
     periods = int(periods)
     vdt = df.schema[value].dataType
-    v = F.col(value)
+    v, qv = F.col(value), sql_quote(value)
     if periods == 0:
-        return df.withColumn(out, _lag_finish(func, v, v, vdt))
+        return df.withColumn(out, _lag_finish(func, qv, qv, vdt))
     ascending = periods > 0
     p = abs(periods)
     o = F.col(order_by)
@@ -75,13 +75,14 @@ def groupby_shift_blocked(
         return work.select("*", F.lag(v, p).over(w).alias("__lagged"), F.row_number().over(w).alias("__rn"))
 
     def combine(prev, _):
-        # rows whose local position <= p read from the carried tail;
-        # index from the END of prev (its last element is the row
-        # immediately before the block in lag direction)
-        idx = F.size(prev) - F.lit(p) + F.col("__rn")
-        from_prev = F.when(idx >= 1, F.element_at(prev, idx)["v"])
-        lagged = F.when(F.col("__rn") > p, F.col("__lagged")).otherwise(from_prev)
-        return _lag_finish(func, v, lagged, vdt)
+        # rows whose local position <= p read from the carried tail
+        # (``prev``: the fold state, the joined-back __st column);
+        # index from its END (its last element is the row immediately
+        # before the block in lag direction)
+        idx = f"size(__st) - {p} + __rn"
+        from_prev = f"CASE WHEN {idx} >= 1 THEN element_at(__st, {idx}).v END"
+        lagged = f"CASE WHEN __rn > {p} THEN __lagged ELSE {from_prev} END"
+        return _lag_finish(func, qv, lagged, vdt)
 
     otype = df.schema[order_by].dataType.simpleString()
     spec = BlockedSpec(
@@ -95,5 +96,5 @@ def groupby_shift_blocked(
         combine=combine,
         descending=not ascending,
     )
-    onum, _ = arith_input(o, df.schema[order_by].dataType)
-    return blocked_scan(df, by, onum, spec, num_blocks)
+    onum, _ = sql_arith_input(sql_quote(order_by), df.schema[order_by].dataType)
+    return blocked_scan(df, by, F.expr(onum), spec, num_blocks)

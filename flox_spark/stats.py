@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flox_spark.core import groupby_reduce_multi
-from flox_spark.dtypes import is_missing
+from flox_spark.dtypes import drop_missing, sql_missing, sql_quote
 
 __all__ = [
     "fillna_group",
@@ -123,9 +123,7 @@ def groupby_ntile(
     (sort spills, no per-group buffering beyond the frame)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
     w = Window.partitionBy(*[F.col(b) for b in by]).orderBy(
         F.col(value).asc_nulls_last(), F.col(tiebreak)
     )
@@ -156,7 +154,7 @@ def fillna_group(
         df, *by, func=func, value=value, alias=stat, finalize_kwargs=finalize_kwargs
     )
     vdt = df.schema[value].dataType
-    missing = is_missing(F.col(value), vdt)
+    missing = F.expr(sql_missing(sql_quote(value), vdt))
     # no cast back onto the stat: an int column imputed with a
     # fractional mean promotes to the common type (double), exactly
     # pandas' fillna dtype promotion — truncating would be silent data
@@ -281,10 +279,7 @@ def groupby_entropy(
     dropped (flox label rule)."""
     if base <= 0 or base == 1.0:
         raise ValueError("base must be positive and != 1")
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
-    work = work.filter(~is_missing(F.col(value), work.schema[value].dataType))
+    work = drop_missing(df, [*by, value])
     counts = work.groupBy(*by, value).agg(F.count(F.lit(1)).alias("__c"))
     tot = F.sum("__c")
     # -sum(c*ln c)/n + ln n, algebraically == -sum(p ln p): one pass
@@ -315,18 +310,14 @@ def groupby_value_counts(
     — the second pass never touches fact-sized data.  No ordering is
     imposed (relational output); sort by ``count`` descending for the
     pandas presentation."""
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
-    vdt = work.schema[value].dataType
     if dropna:
-        work = work.filter(~is_missing(F.col(value), vdt))
+        work = drop_missing(df, [*by, value])
     else:
         # NaN and NULL are the same missing value: canonicalize so
         # they count as ONE row, like pandas' NaN
-        work = work.withColumn(
-            value, F.when(~is_missing(F.col(value), vdt), F.col(value))
-        )
+        work = drop_missing(df, by)
+        missing = sql_missing(sql_quote(value), df.schema[value].dataType)
+        work = work.withColumn(value, F.expr(f"CASE WHEN NOT {missing} THEN {sql_quote(value)} END"))
     counts = work.groupBy(*by, value).agg(F.count(F.lit(1)).alias(out))
     if not normalize:
         return counts
@@ -338,10 +329,7 @@ def _moment_work(df: DataFrame, by: tuple, value: str):
     """(work, v): group-missing rows dropped, value as double with
     NaN canonicalized to NULL (nan* skip policy) — the shared front
     of the one-pass moment aggregates."""
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
-    return work, F.nanvl(F.col(value).cast("double"), F.lit(None))
+    return drop_missing(df, by), F.nanvl(F.col(value).cast("double"), F.lit(None))
 
 
 def groupby_skew(

@@ -112,14 +112,13 @@ def groupby_corr_stream(
     as the batch operator keeps zero-variance windows NULL instead of
     an ANSI abort.  Pairwise missing deletion matches batch: rows
     where either side is missing are excluded."""
-    from flox_spark.dtypes import arith_input, is_missing
+    from flox_spark.dtypes import sql_arith_input, sql_missing, sql_quote
 
     xdt, ydt = df.schema[x].dataType, df.schema[y].dataType
-    either = is_missing(F.col(x), xdt) | is_missing(F.col(y), ydt)
-    ax, _ = arith_input(F.col(x), xdt)
-    ay, _ = arith_input(F.col(y), ydt)
-    px = F.when(either, F.lit(None)).otherwise(ax)
-    py = F.when(either, F.lit(None)).otherwise(ay)
+    qx, qy = sql_quote(x), sql_quote(y)
+    either = f"{sql_missing(qx, xdt)} OR {sql_missing(qy, ydt)}"
+    px = F.expr(f"CASE WHEN {either} THEN NULL ELSE {sql_arith_input(qx, xdt)[0]} END")
+    py = F.expr(f"CASE WHEN {either} THEN NULL ELSE {sql_arith_input(qy, ydt)[0]} END")
     pearson = F.try_divide(F.covar_pop(px, py), F.stddev_pop(px) * F.stddev_pop(py))
     win = F.window(F.col(time_col), window, slide) if slide else F.window(F.col(time_col), window)
     res = (
@@ -251,7 +250,7 @@ def groupby_reduce_stream_salted(
     ``flox_spark.salting.SALTABLE``.  Tumbling windows only — a slide
     would need every pane's partials kept separate through the chain.
     """
-    from flox_spark.dtypes import is_float_type, is_missing, to_skip
+    from flox_spark.dtypes import drop_missing, is_float_type, sql_missing, sql_quote, sql_skip
     from flox_spark.salting import SALTABLE, _specs
 
     if func not in SALTABLE:
@@ -265,19 +264,17 @@ def groupby_reduce_stream_salted(
         )
     out = alias or func
 
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
     if is_float_type(vdt):
         v_raw = F.col(value)
-        v_skip = to_skip(F.col(value), vdt)
+        v_skip = F.expr(sql_skip(sql_quote(value), vdt))
     elif isinstance(vdt, BooleanType):
         v_raw = F.col(value).cast("long")
         v_skip = v_raw
     else:
         v_raw = F.col(value)
         v_skip = F.col(value)
-    poison = is_missing(F.col(value), vdt)
+    poison = F.expr(sql_missing(sql_quote(value), vdt))
 
     salt_cols = salt_on or [time_col, value]
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(n_salt))
@@ -329,12 +326,9 @@ def groupby_entropy_stream(
 
     if base <= 0 or base == 1.0:
         raise ValueError("base must be positive and != 1")
-    from flox_spark.dtypes import is_missing
+    from flox_spark.dtypes import drop_missing
 
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
-    work = work.filter(~is_missing(F.col(value), work.schema[value].dataType))
+    work = drop_missing(df, [*by, value])
 
     win = F.window(F.col(time_col), window)
     stage1 = (
@@ -386,12 +380,10 @@ def groupby_describe_stream(
     ``approx=`` flag guards), and a drifting stream wants the sketch
     anyway.  NaN values are skipped (nan* policy); labels reuse the
     batch operator's collision-free scheme."""
-    from flox_spark.dtypes import is_float_type, is_missing
+    from flox_spark.dtypes import drop_missing, is_float_type
 
     vdt = df.schema[value].dataType
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
     v = F.col(value)
     if is_float_type(vdt):
         v = F.when(~F.isnan(v), v)
@@ -467,12 +459,10 @@ def outlier_fences_stream(
     if method not in ("zscore", "iqr"):
         raise ValueError(f"unknown method {method!r}")
     thr = threshold if threshold is not None else (3.0 if method == "zscore" else 1.5)
-    from flox_spark.dtypes import is_float_type, is_missing
+    from flox_spark.dtypes import drop_missing, is_float_type
 
     vdt = df.schema[value].dataType
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
     v = F.col(value)
     if is_float_type(vdt):
         v = F.when(~F.isnan(v), v)
@@ -598,11 +588,9 @@ def groupby_skew_stream(
     0.0 (pandas parity, same guard as the batch twin ``groupby_skew``
     — Spark's ``skewness`` alone would yield NULL at m2 = 0, so a
     ``var_pop`` aggregate rides along to detect that case)."""
-    from flox_spark.dtypes import is_missing
+    from flox_spark.dtypes import drop_missing
 
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
     v = F.nanvl(F.col(value).cast("double"), F.lit(None))
     win = (
         F.window(F.col(time_col), window, slide)
@@ -654,11 +642,9 @@ def groupby_kurtosis_stream(
     ``nankurt`` fperr guard — denominator
     ``(n-2)(n-3)(sum dev^2)^2 < 1e-14`` absolute — mirrored from the
     batch twin via a ``var_pop`` rider)."""
-    from flox_spark.dtypes import is_missing
+    from flox_spark.dtypes import drop_missing
 
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
     v = F.nanvl(F.col(value).cast("double"), F.lit(None))
     win = (
         F.window(F.col(time_col), window, slide)
@@ -714,18 +700,14 @@ def groupby_value_counts_stream(
     projection on this stream's sink.  Missing group labels drop
     (flox rule); ``dropna`` controls missing-VALUE rows, with NaN and
     NULL canonicalized to ONE missing row like the batch twin."""
-    from flox_spark.dtypes import is_missing
+    from flox_spark.dtypes import drop_missing, sql_missing, sql_quote
 
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
-    vdt = work.schema[value].dataType
     if dropna:
-        work = work.filter(~is_missing(F.col(value), vdt))
+        work = drop_missing(df, [*by, value])
     else:
-        work = work.withColumn(
-            value, F.when(~is_missing(F.col(value), vdt), F.col(value))
-        )
+        work = drop_missing(df, by)
+        missing = sql_missing(sql_quote(value), df.schema[value].dataType)
+        work = work.withColumn(value, F.expr(f"CASE WHEN NOT {missing} THEN {sql_quote(value)} END"))
     win = (
         F.window(F.col(time_col), window, slide)
         if slide
@@ -770,12 +752,10 @@ def winsorize_bounds_stream(
     NaN/NULL values are skipped (nan* policy)."""
     if not 0.0 <= lower <= upper <= 1.0:
         raise ValueError(f"need 0 <= lower <= upper <= 1, got {lower}, {upper}")
-    from flox_spark.dtypes import is_float_type, is_missing
+    from flox_spark.dtypes import drop_missing, is_float_type
 
     vdt = df.schema[value].dataType
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
     v = F.col(value)
     if is_float_type(vdt):
         v = F.when(~F.isnan(v), v)

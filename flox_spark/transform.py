@@ -102,12 +102,9 @@ def groupby_apply(
     or ``pandas_aggregation`` (scalar UDAF) first; use this only when
     the per-group computation is genuinely iterative/relational
     (model-per-group fitting, per-group resampling)."""
-    from flox_spark.dtypes import is_missing
+    from flox_spark.dtypes import drop_missing
 
-    work = df
-    if drop_missing_labels:
-        for b in by:
-            work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by) if drop_missing_labels else df
     return work.groupBy(*by).applyInPandas(fn, schema)
 
 
@@ -162,12 +159,9 @@ def groupby_apply_batched(
        this.  ``tests/test_transform.py`` demonstrates the trap
        through this hatch.
     """
-    from flox_spark.dtypes import is_missing
+    from flox_spark.dtypes import drop_missing
 
-    work = df
-    if drop_missing_labels:
-        for b in by:
-            work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by) if drop_missing_labels else df
     sort_cols = [*by, order_by] if order_by else list(by)
     work = work.repartition(*[F.col(b) for b in by]).sortWithinPartitions(
         *[F.col(c) for c in sort_cols]

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import NAN, arith_input, is_missing, to_skip
+from flox_spark.dtypes import NAN, drop_missing, sql_arith_input, sql_missing, sql_quote, sql_skip
 
 __all__ = ["groupby_reduce_weighted"]
 
@@ -67,13 +67,11 @@ def groupby_reduce_weighted(
     vdt = df.schema[value].dataType
     wdt = df.schema[weights].dataType
 
-    work = df
-    for b in by:
-        work = work.filter(~is_missing(F.col(b), work.schema[b].dataType))
+    work = drop_missing(df, by)
 
-    v, _ = arith_input(to_skip(F.col(value), vdt), vdt)
-    v = v.cast("double")
-    w = F.coalesce(to_skip(F.col(weights), wdt).cast("double"), F.lit(0.0))
+    qv = sql_quote(value)
+    v = F.expr(f"CAST({sql_arith_input(sql_skip(qv, vdt), vdt)[0]} AS DOUBLE)")
+    w = F.expr(f"coalesce(CAST({sql_skip(sql_quote(weights), wdt)} AS DOUBLE), 0.0D)")
     # xarray rule: weights count only where the value is present
     w_eff = F.when(v.isNotNull(), w).otherwise(F.lit(0.0))
 
@@ -110,7 +108,7 @@ def groupby_reduce_weighted(
         expr = F.when(sw > 0, expr).otherwise(F.lit(NAN))
 
     if not skipna and base != "count":
-        poisoned = F.bool_or(is_missing(F.col(value), vdt))
+        poisoned = F.expr(f"bool_or({sql_missing(qv, vdt)})")
         expr = F.when(poisoned, F.lit(NAN)).otherwise(expr)
 
     res = work.groupBy(*by).agg(expr.alias(out))

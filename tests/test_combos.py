@@ -371,9 +371,11 @@ def test_quantile_refine_adversarial_distributions(spark):
         df = spark.createDataFrame(pdf)
         for q in (0.0, 0.25, 0.5, 0.9, 1.0):
             want = float(np.quantile(v, q))
-            # cutoff is max(1024, acc//2); force the LARGE-group bracket
-            # path by shrinking accuracy so 5000 > cutoff
-            with set_options(quantile_impl="refine", approx_quantile_accuracy=2048):
+            # refine collects groups of <= max(1024, its size-adaptive
+            # accuracy: 1024 here) rows outright; these 5000-row groups
+            # are past that cutoff, so they take the bracket path (the
+            # approx_quantile_accuracy option does not apply to refine)
+            with set_options(quantile_impl="refine"):
                 got = groupby_reduce(
                     df, "k", func="nanquantile", value="v",
                     finalize_kwargs={"q": q},

@@ -222,3 +222,71 @@ def test_timedelta_count_any(spark):
     got = {r["k"]: r["any"] for r in
            groupby_reduce(df, "k", func="any", value="v").collect()}
     assert got == {0: True, 1: True}
+
+
+# -- one missing-label drop (dtypes.drop_missing) ---------------------------
+# (s, f, v): a NULL string label, NaN and NULL float labels, NaN and NULL
+# values; every complete label pair keeps at least one present value
+_MISSING_ROWS = [
+    ("a", 1.0, 1.0), ("a", 1.0, 2.0), ("a", 2.0, 3.0), ("a", 2.0, float("nan")),
+    ("b", 1.0, float("nan")), ("b", 1.0, 4.0), ("b", 1.0, None),
+    (None, 1.0, 5.0), ("a", float("nan"), 6.0), ("b", None, 7.0),
+    (None, float("nan"), 8.0),
+]
+_LABELS = {("a", 1.0), ("a", 2.0), ("b", 1.0)}
+
+
+def _missing_frame(spark):
+    t0 = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [(s, f, v, 1.0, i, t0 + dt.timedelta(minutes=i)) for i, (s, f, v) in enumerate(_MISSING_ROWS)],
+        "s string, f double, v double, w double, t long, ts timestamp",
+    )
+
+
+def _label_callers():
+    from flox_spark import stats
+    from flox_spark.resample import resample_upsample
+    from flox_spark.salting import groupby_reduce_salted
+    from flox_spark.streaming.stream import groupby_value_counts_stream
+    from flox_spark.transform import groupby_apply_batched
+    from flox_spark.weighted import groupby_reduce_weighted
+
+    return {
+        "entropy": lambda df: stats.groupby_entropy(df, "s", "f", value="v"),
+        "value_counts": lambda df: stats.groupby_value_counts(df, "s", "f", value="v", dropna=False),
+        "skew": lambda df: stats.groupby_skew(df, "s", "f", value="v"),
+        "weighted": lambda df: groupby_reduce_weighted(df, "s", "f", func="mean", value="v", weights="w"),
+        "salted": lambda df: groupby_reduce_salted(df, "s", "f", func="nansum", value="v", n_salt=2),
+        "upsample": lambda df: resample_upsample(df, "s", "f", time_col="ts", value="v", freq="1min"),
+        "apply_batched": lambda df: groupby_apply_batched(
+            df, "s", "f", fn=lambda pdf: pdf, schema=df.schema, order_by="t"),
+        # a streaming operator over a bounded frame (the watermark is a
+        # no-op there): the same label rule as its batch twin
+        "value_counts_stream": lambda df: groupby_value_counts_stream(
+            df, "s", "f", value="v", time_col="ts", window="1 day"),
+    }
+
+
+@pytest.mark.parametrize("caller", list(_label_callers()))
+def test_missing_labels_dropped_like_groupby_reduce(spark, caller):
+    """Every operator that drops missing labels drops exactly the rows
+    whose label is NULL (any type) or NaN (float), like groupby_reduce
+    (flox/factorize.py:201-212)."""
+    df = _missing_frame(spark)
+    want = {(r["s"], r["f"]) for r in groupby_reduce(df, "s", "f", func="count", value="v").collect()}
+    assert want == _LABELS
+    got = {(r["s"], r["f"]) for r in _label_callers()[caller](df).collect()}
+    assert got == want, (caller, got)
+
+
+def test_topk_drops_missing_values_only(spark):
+    """grouped_topk's ``skipna`` value drop goes through the same
+    missing test (NULL or NaN); topk keeps rows, not groups, so a
+    missing label is a partition of its own."""
+    from flox_spark.operators.topk import grouped_topk
+
+    df = _missing_frame(spark)
+    got = sorted(r["t"] for r in grouped_topk(df, "s", "f", value="v", k=10).collect())
+    want = [i for i, (_, _, v) in enumerate(_MISSING_ROWS) if v is not None and not np.isnan(v)]
+    assert got == want

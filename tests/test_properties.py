@@ -256,21 +256,31 @@ def test_salted_equals_plain_property(spark, func, data):
             assert x == y, (func, g)
 
 
-@given(data=arrays(), q=st.floats(0.0, 1.0), acc=st.sampled_from([64, 512, 10000]))
+@given(data=arrays(), q=st.floats(0.0, 1.0), acc=st.sampled_from([2, 3, 4]))
 @ex
 def test_quantile_refine_matches_numpy_property(spark, data, q, acc):
     # the refine bracket math must be exact for ANY q/accuracy/data —
-    # including duplicate-heavy and all-NaN groups (small n exercises
-    # the collect-all cutoff; tiny accuracies exercise the bracket)
+    # including duplicate-heavy and all-NaN groups.  Refine sizes its
+    # own sketch accuracy (the approx_quantile_accuracy option does not
+    # apply) and collects groups of <= max(cutoff floor, accuracy) rows
+    # outright, so both are pinned small: groups of more than ``acc``
+    # present values take the bracket, smaller ones the collect-all
+    import flox_spark.core as core
     from flox_spark import set_options
 
     v, lab = data
     pdf = pd.DataFrame({"k": lab, "v": v})
     df = spark.createDataFrame(pdf)
-    with set_options(quantile_impl="refine", approx_quantile_accuracy=acc):
-        res = groupby_reduce(
-            df, "k", func="nanquantile", value="v", finalize_kwargs={"q": q}
-        ).collect()
+    orig_acc, orig_floor = core._refine_accuracy, core._REFINE_CUTOFF_FLOOR
+    core._refine_accuracy = lambda work: acc
+    core._REFINE_CUTOFF_FLOOR = 1
+    try:
+        with set_options(quantile_impl="refine"):
+            res = groupby_reduce(
+                df, "k", func="nanquantile", value="v", finalize_kwargs={"q": q}
+            ).collect()
+    finally:
+        core._refine_accuracy, core._REFINE_CUTOFF_FLOOR = orig_acc, orig_floor
     got = {r["k"]: r["nanquantile"] for r in res}
     for g in np.unique(lab):
         vals = v[lab == g]

@@ -9,14 +9,17 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from flox_spark.session import get_spark
 
 
-def main(sf_dir: str = "/root/testdata/sf0.1", out_path: str = "/root/repo/PLANS.txt") -> None:
-    spark = get_spark("explain_report")
+def main(sf_dir: str = "/root/testdata/sf0.1", out_path: str = os.path.join(ROOT, "PLANS.txt")) -> None:
+    # a fixed core count: shuffle partitions are max(cpus, 8), and they
+    # show in the plans, so PLANS.txt must not depend on the host
+    spark = get_spark("explain_report", cpus=8)
     lines = []
     summary = []
     for name, fn in entrymod.queries().items():
