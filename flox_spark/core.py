@@ -23,6 +23,7 @@ map-side-combined by Spark automatically.
 
 from __future__ import annotations
 
+from types import EllipsisType
 from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -41,6 +42,7 @@ from flox_spark.dtypes import (
     sql_quote,
 )
 from flox_spark.options import OPTIONS
+from flox_spark.plans.util import estimate_size_bytes, one_task_if_small, pin_keyed_parallelism
 
 __all__ = ["groupby_reduce"]
 
@@ -157,7 +159,7 @@ def _fold_negzero(b: str, bdt) -> Column:
 def _prep_labels(
     df: DataFrame, by: Sequence[str], isbin_t: Sequence[bool], expected_t: Sequence,
     closed_t: Sequence[str], snapshots: dict[str, str],
-) -> tuple[DataFrame, list[str], list, dict[str, str]]:
+) -> tuple[DataFrame, list[str], list, dict[str, str], int | None, bool]:
     """Label prep shared by ``groupby_reduce`` and
     ``groupby_reduce_multi``: per key, drop rows whose label is NULL or
     NaN (flox/factorize.py:201-212), digitize binned keys into
@@ -166,7 +168,11 @@ def _prep_labels(
     that is also a value column is first copied to its
     ``snapshots[key]`` name, so sign-sensitive reductions (first/min/sum
     of all -0.0) see the raw bits.  Returns (work, key_cols, by_dts,
-    raw) with ``raw``: value column -> the snapshot actually taken."""
+    raw, size, one_task) with ``raw``: value column -> the snapshot
+    actually taken, and ``size``/``one_task`` from the one plan-stats
+    estimate of the prepped frame (``plans.util.one_task_if_small``:
+    a small ``work`` comes back coalesced to one partition, so every
+    plan built over it runs as one stage with no exchange)."""
     schema = df.schema
     work = drop_missing(df, by)
     key_cols: list[str] = []
@@ -187,7 +193,8 @@ def _prep_labels(
                     work = work.withColumn(raw[b], F.col(b))
                 work = work.withColumn(b, _fold_negzero(b, bdt))
         key_cols.append(kc)
-    return work, key_cols, by_dts, raw
+    work, size, one_task = one_task_if_small(work)
+    return work, key_cols, by_dts, raw, size, one_task
 
 
 def _order_sql(schema, order_by: str | None) -> str | None:
@@ -442,7 +449,7 @@ def groupby_reduce(
     out_name = alias or agg.name
 
     # ---- label prep: drop invalid labels, digitize bins -------------
-    work, key_cols, by_dts, raw = _prep_labels(
+    work, key_cols, by_dts, raw, size, one_task = _prep_labels(
         df, by, isbin_t, expected_t, closed_t, {value: "__fs_value_raw"}
     )
     schema = df.schema
@@ -480,7 +487,7 @@ def groupby_reduce(
     # ---- aggregate --------------------------------------------------
     qfam = agg.name in ("median", "nanmedian", "quantile", "nanquantile")
     quantile_impl = (
-        _choose_quantile_impl(work)
+        _choose_quantile_impl(work, size)
         if qfam and not OPTIONS["approx_quantile"]
         else "agg"
     )
@@ -498,11 +505,11 @@ def groupby_reduce(
     elif qfam and quantile_impl == "sort":
         result = _quantile_sort(work, key_cols, ctx, agg, out_name, min_count, fill_value)
     elif qfam and quantile_impl == "driver":
-        result = _quantile_driver(work, key_cols, ctx, agg, out_name, min_count, fill_value)
+        result = _quantile_driver(work, key_cols, ctx, agg, out_name, min_count, fill_value, size)
         if result is None:  # streaming / high-card / Arrow-hostile keys
-            result = _quantile_arrow(work, key_cols, ctx, agg, out_name, min_count, fill_value)
+            result = _quantile_arrow(work, key_cols, ctx, agg, out_name, min_count, fill_value, size)
     elif qfam and quantile_impl == "arrow":
-        result = _quantile_arrow(work, key_cols, ctx, agg, out_name, min_count, fill_value)
+        result = _quantile_arrow(work, key_cols, ctx, agg, out_name, min_count, fill_value, size)
     elif qfam and quantile_impl == "refine":
         result = _quantile_refine(work, key_cols, ctx, agg, out_name, min_count, fill_value)
     else:
@@ -526,9 +533,7 @@ def groupby_reduce(
             # bytes as shipping partial buffers, and keeps the final
             # sort+merge stage multi-task instead of AQE's one-task
             # coalesce (see pin_keyed_parallelism)
-            from flox_spark.plans.util import pin_keyed_parallelism
-
-            agg_in = pin_keyed_parallelism(work, key_cols)
+            agg_in = pin_keyed_parallelism(work, key_cols, size=size)
         result = agg_in.groupBy(*key_cols).agg(*aggs_list)
     if occ_needed:
         # multi-stage strategies (mode/quantile): attach the
@@ -545,7 +550,7 @@ def groupby_reduce(
             fill = [fill if fill is not None else NAN] * len(qlist)
         result = _reindex_expected(
             result, key_cols, isbin_t, expected_t, {out_name: fill}, df.sparkSession,
-            with_pos=(not sort) and all_declared,
+            with_pos=(not sort) and all_declared, one_task=one_task,
         )
 
     if bin_labels and any(isbin_t):
@@ -595,7 +600,8 @@ def groupby_reduce(
             # sort; for sort/refine the checkpoint cost measured equal
             # to the sampling re-run it saves
             heavy=(qfam and quantile_impl in ("agg", "arrow")),
-            input_df=work,
+            in_size=size,
+            one_task=one_task,
         )
     elif "__occ" in result.columns:
         # flox sort=False order: first occurrence (or the declared
@@ -604,8 +610,10 @@ def groupby_reduce(
         # go last.
         oc = [F.col("__occ").asc_nulls_last(), *(["q"] if qlist is not None else [])]
         declared_card = _declared_cardinality(isbin_t, expected_t)
-        if declared_card is not None and declared_card <= OPTIONS["single_partition_sort_max"]:
-            result = _tiny_sorted(result, *oc, input_df=work).drop("__occ")
+        if one_task or (
+            declared_card is not None and declared_card <= OPTIONS["single_partition_sort_max"]
+        ):
+            result = _tiny_sorted(result, *oc, in_size=size, one_task=one_task).drop("__occ")
         else:
             result = result.orderBy(*oc).drop("__occ")
     return result
@@ -626,8 +634,8 @@ def _declared_cardinality(isbin_t: tuple, expected_t: tuple) -> int | None:
 def _tiny_sorted(
     result: DataFrame,
     *sort_cols,
-    input_df: DataFrame | None = None,
-    in_size: int | None = None,
+    in_size: int | None,
+    one_task: bool = False,
 ) -> DataFrame:
     """Single-task sort for provably tiny (group-cardinality-sized)
     outputs.  ``coalesce(1)`` rides the upstream aggregate's existing
@@ -640,20 +648,24 @@ def _tiny_sorted(
       boundary, so it must only fire when the FINAL AGGREGATE's
       single-task merge is provably cheap: the merge volume is
       (map tasks x group cardinality) partial rows, bounded only
-      when the INPUT is small.  Gate on the input's plan stats at
-      ``single_partition_sort_input_max_bytes`` — at 100 TB the
-      stats blow the bound and the distributed final aggregate +
-      explicit single-partition exchange (the old shape) stays;
+      when the INPUT is small.  Gate on the input's plan stats
+      ``in_size`` at ``single_partition_sort_input_max_bytes`` — at
+      100 TB the stats blow the bound and the distributed final
+      aggregate + explicit single-partition exchange (the old shape)
+      stays;
     - a plan with no shuffle upstream at all (a bucketed-read
       aggregate, where the scan itself satisfies the group
       distribution) would serialize its data-sized SCAN stage —
-      those always keep the explicit exchange."""
-    if in_size is None and input_df is not None:
-        # callers that already probed the stats pass in_size down —
-        # the plan-stats fetch is a py4j round trip worth not repeating
-        from flox_spark.plans.util import estimate_size_bytes
+      those always keep the explicit exchange.
 
-        in_size = estimate_size_bytes(input_df)
+    ``one_task``: the input was coalesced to one partition
+    (``plans.util.one_task_if_small``), so the plan is already one
+    stage with no shuffle: the sort is a bare ``sortWithinPartitions``
+    with no plan probe.  The ``coalesce(1)`` ahead of it is a no-op
+    there; it keeps the order global should a multi-partition side
+    have joined in (a declared grid too large to coalesce)."""
+    if one_task:
+        return result.coalesce(1).sortWithinPartitions(*sort_cols)
     small_input = (
         in_size is not None
         and in_size <= OPTIONS["single_partition_sort_input_max_bytes"]
@@ -680,7 +692,8 @@ def _plan_has_shuffle(result: DataFrame) -> bool:
     plans: a Spark upgrade that reformats the string trips the pin
     instead of silently flipping every sorted groupby to the
     two-exchange shape.  BroadcastExchange is deliberately not a
-    match — it is not a coalesce-able boundary."""
+    match — it is not a coalesce-able boundary.  One-task plans never
+    reach the probe (they have no exchange to ride)."""
     import re
 
     try:
@@ -697,9 +710,12 @@ def _sorted_output(
     sort_cols: list[str],
     declared_card: int | None,
     heavy: bool,
-    input_df: DataFrame | None = None,
+    in_size: int | None,
+    one_task: bool,
 ) -> DataFrame:
-    """The final ``sort=True`` ordering, costed by output shape.
+    """The final ``sort=True`` ordering, costed by output shape;
+    ``in_size``/``one_task`` come from the input's one plan-stats
+    estimate (``_prep_labels``).
 
     A plain ``orderBy`` compiles to a range exchange whose partitioner
     SAMPLES the child — re-executing the final aggregate stage once
@@ -707,28 +723,26 @@ def _sorted_output(
     noise, but for buffering aggregates (exact ``percentile``) it
     doubles the most expensive stage.  Strategy:
 
-    - declared grid <= ``single_partition_sort_max``: the output is
-      provably tiny — ``_tiny_sorted`` sorts it in one post-shuffle
-      task with NO sampling pass and no extra exchange at all (the
-      sort rides the aggregate's own shuffle read via coalesce; the
-      upstream aggregate keeps full parallelism, only the
-      group-cardinality-sized result funnels to one task).
-    - unknown cardinality, but the INPUT's plan-stats size is at most
-      ``single_partition_sort_input_max_bytes``: the output (<= one
-      row per input row) provably fits one sort task too — same
-      single-partition plan.  At 100 TB the stats exceed the bound
-      and this branch never fires.
-    - declared grid larger: the range sort IS the right distributed
-      plan; warn (SCALE.md) that sorting that many groups adds a
-      whole-result exchange the caller can skip with ``sort=False``.
+    - declared grid larger than ``single_partition_sort_max``: the
+      range sort IS the right distributed plan; warn (SCALE.md) that
+      sorting that many groups adds a whole-result exchange the caller
+      can skip with ``sort=False``.
+    - one-task input: the plan is already a single partition —
+      ``_tiny_sorted`` adds a bare in-partition sort.
+    - declared grid <= ``single_partition_sort_max``, or unknown
+      cardinality over an input whose plan-stats size is at most
+      ``single_partition_sort_input_max_bytes`` (the output has <= one
+      row per input row): the output is provably tiny —
+      ``_tiny_sorted`` sorts it in one post-shuffle task with NO
+      sampling pass and no extra exchange (the upstream aggregate
+      keeps full parallelism, only the group-cardinality-sized result
+      funnels to one task).  At 100 TB the stats exceed the bound.
     - unknown cardinality over a big/stats-less input: keep the
       classic range sort, but when the final aggregate is the
       buffering kind (``heavy``), materialize the group-sized result
       first so the sampling pass reads the materialization instead of
       re-running the aggregate."""
-    if declared_card is not None:
-        if declared_card <= OPTIONS["single_partition_sort_max"]:
-            return _tiny_sorted(result, *sort_cols, input_df=input_df)
+    if declared_card is not None and declared_card > OPTIONS["single_partition_sort_max"]:
         import warnings
 
         warnings.warn(
@@ -738,14 +752,10 @@ def _sorted_output(
             stacklevel=3,
         )
         return result.orderBy(*sort_cols)
-    if input_df is not None:
-        from flox_spark.plans.util import estimate_size_bytes
-
-        in_size = estimate_size_bytes(input_df)
-        if in_size is not None and in_size <= OPTIONS["single_partition_sort_input_max_bytes"]:
-            return _tiny_sorted(
-                result, *sort_cols, input_df=input_df, in_size=in_size
-            )
+    if one_task or declared_card is not None or (
+        in_size is not None and in_size <= OPTIONS["single_partition_sort_input_max_bytes"]
+    ):
+        return _tiny_sorted(result, *sort_cols, in_size=in_size, one_task=one_task)
     if heavy:
         from flox_spark.plans.util import materialize_shared
 
@@ -785,7 +795,7 @@ def groupby_reduce_multi(
         (spec["value"] if isinstance(spec, dict) else spec[1])
         for spec in aggs.values()
     }
-    work, key_cols, by_dts, raw_map = _prep_labels(
+    work, key_cols, by_dts, raw_map, size, one_task = _prep_labels(
         df, by, isbin_t, expected_t, closed_t, {v: f"__fs_raw__{v}" for v in agg_value_cols}
     )
     schema = df.schema
@@ -844,20 +854,22 @@ def groupby_reduce_multi(
     if any(e is not None for e in expected_t):
         result = _reindex_expected(
             result, key_cols, isbin_t, expected_t, fills, df.sparkSession,
-            with_pos=(not sort) and all_declared,
+            with_pos=(not sort) and all_declared, one_task=one_task,
         )
     if bin_labels and any(isbin_t):
         result = _with_bin_labels(result, by, isbin_t, expected_t, by_dts)
     if sort:
         result = _sorted_output(
             result, key_cols, _declared_cardinality(isbin_t, expected_t),
-            heavy=False, input_df=work,
+            heavy=False, in_size=size, one_task=one_task,
         )
     elif "__occ" in result.columns:
         oc = F.col("__occ").asc_nulls_last()
         declared_card = _declared_cardinality(isbin_t, expected_t)
-        if declared_card is not None and declared_card <= OPTIONS["single_partition_sort_max"]:
-            result = _tiny_sorted(result, oc, input_df=work).drop("__occ")
+        if one_task or (
+            declared_card is not None and declared_card <= OPTIONS["single_partition_sort_max"]
+        ):
+            result = _tiny_sorted(result, oc, in_size=size, one_task=one_task).drop("__occ")
         else:
             result = result.orderBy(oc).drop("__occ")
     return result
@@ -1005,6 +1017,7 @@ def _quantile_arrow(
     out_name: str,
     min_count: int | None,
     fill_value: Any,
+    size: int | None,
 ) -> DataFrame:
     """Exact quantile via one Arrow-batched ``np.quantile`` per group —
     the stats-chosen kernel for the small-input zone (input provably
@@ -1051,10 +1064,9 @@ def _quantile_arrow(
     whose raw values the other strategies would return unrounded.
     Acceptable by policy: 2^53 us is ~year 2255, and flox's own
     kernel is np.quantile over float64 (reference
-    aggregations.py:688-710), i.e. identical rounding."""
+    aggregations.py:688-710), i.e. identical rounding.  ``size``: the
+    caller's plan-stats estimate of ``work``."""
     from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    from flox_spark.plans.util import pin_keyed_parallelism
 
     skipna, is_vec, qlist = _q_params(ctx, agg)
     qs = tuple(qlist)
@@ -1090,7 +1102,7 @@ def _quantile_arrow(
             return out
 
     res = (
-        pin_keyed_parallelism(work2, key_cols)
+        pin_keyed_parallelism(work2, key_cols, size=size)
         .groupBy(*key_cols)
         .agg(_qnk("__qv").alias("__qa"))
     )
@@ -1223,6 +1235,7 @@ def _quantile_driver(
     out_name: str,
     min_count: int | None,
     fill_value: Any,
+    size: int | None | EllipsisType = ...,
 ) -> DataFrame | None:
     """Exact quantile for the TINY zone (input plan-stats under
     ``quantile_driver_max_bytes``): ``_driver_group_quantiles`` over
@@ -1252,7 +1265,8 @@ def _quantile_driver(
     Returns None when ineligible (streaming input, a declined kernel,
     or — forced-mode guard — plan stats over
     ``_QUANTILE_DRIVER_HARD_FACTOR`` x the auto gate) — the caller
-    falls back to the "arrow" kernel."""
+    falls back to the "arrow" kernel.  ``size``: the caller's
+    plan-stats estimate of ``work``."""
     _, _, qlist = _q_params(ctx, agg)
     if work.isStreaming:
         return None
@@ -1262,9 +1276,8 @@ def _quantile_driver(
     # plan is KNOWN to be far past the tiny zone.  Unknown stats fall
     # through (the user explicitly forced the strategy; auto never
     # reaches here stats-less — it picks "sort").
-    from flox_spark.plans.util import estimate_size_bytes
-
-    size = estimate_size_bytes(work)
+    if size is ...:
+        size = estimate_size_bytes(work)
     if size is not None and size > _QUANTILE_DRIVER_HARD_FACTOR * OPTIONS["quantile_driver_max_bytes"]:
         return None
     av, _ = ctx.arith()
@@ -1301,10 +1314,14 @@ def _quantile_driver(
             res = spark.createDataFrame([], schema=schema)
     except Exception:
         return None  # Arrow-hostile types etc. — distributed kernel instead
+    # one partition, like the one-task plan it may join: the re-entered
+    # frame is group-sized, and its slices would otherwise cost the
+    # reindex join an exchange
+    res = res.coalesce(1)
     return _finalize_qarrays(res, key_cols, ctx, agg, out_name, min_count, fill_value)
 
 
-def _choose_quantile_impl(work: DataFrame) -> str:
+def _choose_quantile_impl(work: DataFrame, size: int | None | EllipsisType = ...) -> str:
     """Stats-driven exact-quantile strategy selection (the Spark
     analog of flox's ``_choose_engine``, flox/core.py:712-736 — pick
     the physical kernel from the data's shape, never from a fixed
@@ -1352,13 +1369,12 @@ def _choose_quantile_impl(work: DataFrame) -> str:
 
     The 5000-group row is a tie (within run-to-run spread).  No zone
     past 1 TB has been measured; sort is the plan that stays safe
-    there."""
+    there.  ``size``: the caller's plan-stats estimate of ``work``."""
     impl = OPTIONS["quantile_impl"]
     if impl != "auto":
         return impl
-    from flox_spark.plans.util import estimate_size_bytes
-
-    size = estimate_size_bytes(work)
+    if size is ...:
+        size = estimate_size_bytes(work)
     if size is None:
         return "sort"
     if size <= OPTIONS["quantile_driver_max_bytes"] and not work.isStreaming:
@@ -1395,8 +1411,6 @@ def _refine_accuracy(work: DataFrame) -> int:
     approx_quantile_accuracy option deliberately does not apply here.
     Rows are estimated from plan-stats bytes at 16 B/row — only the
     order of magnitude matters."""
-    from flox_spark.plans.util import estimate_size_bytes
-
     return _refine_accuracy_for_bytes(estimate_size_bytes(work))
 
 
@@ -1580,18 +1594,26 @@ def _reindex_expected(
     fills: dict[str, Any],
     spark,
     with_pos: bool = False,
+    one_task: bool = False,
 ) -> DataFrame:
     """Left-join the aggregated result onto the cartesian grid of
     expected groups and fill absences — flox's reindex_ + fill
     (flox/reindex.py:160-216, flox/core.py:1195-1202).  Both sides
     are group-cardinality-sized; broadcast the aggregated side so the
-    join never shuffles.  ``fills``: out_column -> fill value (None ->
-    NaN for float results, flox's promotion rule collapsed to NULL/NaN).
+    join never shuffles.  On a ``one_task`` plan with every group
+    declared, both sides are one partition already (the grid
+    coalesced, the result from the coalesced input), so a shuffle-hash
+    join needs no exchange at all and the broadcast's job of its own
+    goes too.  (A materialized result reports no partitioning, so the
+    partially-declared grid keeps the broadcast.)  ``fills``:
+    out_column -> fill value (None -> NaN for float results, flox's
+    promotion rule collapsed to NULL/NaN).
     ``with_pos`` attaches a ``__occ`` row-major grid position (the
     declared lists' GIVEN order — flox's sort=False expected-order
     contract, flox/factorize.py:85-93); requires every by declared.
     """
-    if any(e is None for e in expected_t):
+    partial = any(e is None for e in expected_t)
+    if partial:
         # partially-declared expected groups: the observed-key grid
         # branches off `result`, which would otherwise re-execute the
         # whole aggregate subtree as a second plan branch (diamond)
@@ -1665,12 +1687,11 @@ def _reindex_expected(
     # legitimately NULL must NOT be replaced by fill_value — fill is
     # only for expected-but-absent groups (flox/core.py:461-470)
     marked = result.withColumn("__present", F.lit(True))
-    do_broadcast = _should_broadcast_reindex(grid_card)
-    joined = grid.join(
-        F.broadcast(marked) if do_broadcast else marked,
-        on=key_cols,
-        how="left",
-    )
+    if one_task and not partial and grid_card <= _GRID_COALESCE_MAX_CARD:
+        marked = marked.hint("shuffle_hash")
+    elif _should_broadcast_reindex(grid_card):
+        marked = F.broadcast(marked)
+    joined = grid.join(marked, on=key_cols, how="left")
     for out_name, fill in fills.items():
         res_dt = result.schema[out_name].dataType
         if fill is None and is_float_type(res_dt):

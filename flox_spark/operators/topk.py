@@ -9,7 +9,9 @@ Scale design: a ``row_number() <= k`` filter, which Spark rewrites to
 ``WindowGroupLimit`` — each map task pre-keeps its local top-k per
 group BEFORE the exchange, so the shuffle carries at most k*P rows
 per group instead of the whole group (the same two-stage top-k the
-similarity operators rely on; asserted in ``tests/test_topk.py``).
+similarity operators rely on; asserted in ``tests/test_topk.py``).  A
+small input runs as one task with no exchange at all
+(``plans.util.one_task_if_small``).
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flox_spark.dtypes import drop_missing
+from flox_spark.plans.util import one_task_if_small
 
 __all__ = ["grouped_topk"]
 
@@ -39,6 +42,7 @@ def grouped_topk(
     makes the cut deterministic when values tie."""
     if skipna:
         df = drop_missing(df, [value])
+    df, _, _ = one_task_if_small(df)
     order = [F.col(value).asc() if ascending else F.col(value).desc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).asc())

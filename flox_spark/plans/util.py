@@ -12,6 +12,8 @@ buys full-cluster parallelism for everything downstream.
 
 from __future__ import annotations
 
+from types import EllipsisType
+
 from pyspark.sql import DataFrame
 
 # Catalyst's stats fall back to spark.sql.defaultSizeInBytes
@@ -83,10 +85,43 @@ def ensure_parallelism(
     return df
 
 
+# Plan-stats bytes at or under which an input is "small": a grouped
+# operator over it runs as ONE task (``one_task_if_small``) and
+# ``pin_keyed_parallelism`` keeps that plan.  SCALE.md holds the
+# local[4] one-task vs distributed sweep behind the value.
+SMALL_INPUT_MAX_BYTES = 4 << 20
+
+
+def one_task_if_small(df: DataFrame) -> tuple[DataFrame, int | None, bool]:
+    """Coalesce a small input to ONE partition ahead of a grouped
+    operator; returns ``(df, size, one_task)`` with ``size`` the one
+    plan-stats estimate the caller passes down to its other gates.
+
+    flox reduces an in-memory array in one blockwise pass with no
+    combine step (``method="blockwise"``, flox/core.py:478-524).  The
+    Spark analog: ``coalesce(1)`` reports ``SinglePartition``, which
+    satisfies every downstream distribution — the aggregate's
+    clustering, a global sort's ordering, a window's partitioning — so
+    partial + final aggregate, the ``sort=True`` ordering, the mode
+    chain and a window all compile into one stage with no exchange, no
+    AQE re-plan and one job.  A small input is usually one scan
+    partition already, so the exchange bought no parallelism.
+
+    Fires when the plan stats are at most ``SMALL_INPUT_MAX_BYTES``
+    and the frame is not streaming.  Unknown stats (the conservative
+    sentinel) keep the distributed plan.  The coalesce runs the whole
+    stage since the last shuffle in one task, so the gate trusts the
+    stats to bound that stage's input as well as its output."""
+    size = estimate_size_bytes(df)
+    if size is not None and size <= SMALL_INPUT_MAX_BYTES and not df.isStreaming:
+        return df.coalesce(1), size, True
+    return df, size, False
+
+
 def pin_keyed_parallelism(
     df: DataFrame,
     keys: list[str],
-    min_bytes: int = 4 << 20,
+    size: int | None | EllipsisType = ...,
 ) -> DataFrame:
     """Hash-repartition on ``keys`` at an EXPLICIT partition count so a
     downstream keyed operator (window function, buffering aggregate)
@@ -106,11 +141,14 @@ def pin_keyed_parallelism(
 
     Parallelism is still bounded by the number of distinct keys (3
     groups -> at most 3 non-empty partitions) — that bound is the
-    data's, not the planner's.  Gated on plan-stats size: tiny inputs
-    keep the cheap one-task plan, and stats-less frames skip the pin
-    (post-shuffle frames are already parallel)."""
-    size = estimate_size_bytes(df)
-    if size is not None and size > min_bytes:
+    data's, not the planner's.  Gated on plan-stats size (``size``:
+    an estimate the caller already took): inputs up to
+    ``SMALL_INPUT_MAX_BYTES`` keep the cheap one-task plan, and
+    stats-less frames skip the pin (post-shuffle frames are already
+    parallel)."""
+    if size is ...:
+        size = estimate_size_bytes(df)
+    if size is not None and size > SMALL_INPUT_MAX_BYTES:
         from pyspark.sql import functions as F
 
         return df.repartition(

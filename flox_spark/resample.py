@@ -143,11 +143,14 @@ def time_weighted_mean(
     window pass for ``lead(ts)``, one map-side-combined aggregate —
     the same single-shuffle profile as ``groupby_scan``.
     """
-    from flox_spark.dtypes import drop_missing
+    from flox_spark.dtypes import drop_missing, sql_quote, sql_ts_micros
 
+    # drop missing labels like every grouped operator
+    # (flox/factorize.py:201-212), before the key set below is taken
+    df = drop_missing(df, by)
     work = drop_missing(df, [value])
     w = Window.partitionBy(*by).orderBy(ts)
-    micros = F.unix_micros(F.col(ts))
+    micros = F.expr(sql_ts_micros(sql_quote(ts)))
     dur = (F.lead(micros).over(w) - micros).cast("double")
     work = work.withColumn("__dur", dur)
     got = work.groupBy(*by).agg(

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from flox_spark.dtypes import is_datetime_type, is_float_type
+from flox_spark.dtypes import is_datetime_type, is_float_type, sql_quote, sql_ts_micros
 from flox_spark.resample import _parse_freq
 
 __all__ = ["groupby_rolling"]
@@ -109,7 +109,10 @@ def groupby_rolling(
         if window <= 0:
             raise ValueError(f"row window must be positive, got {window}")
         odt = df.schema[order_by].dataType
-        okey = F.unix_micros(F.col(order_by)) if is_datetime_type(odt) else F.col(order_by)
+        okey = (
+            F.expr(sql_ts_micros(sql_quote(order_by))) if is_datetime_type(odt)
+            else F.col(order_by)
+        )
         w = Window.partitionBy(*by).orderBy(okey).rowsBetween(-(window - 1), 0)
     else:
         kind, step = _parse_freq(window)
@@ -125,7 +128,7 @@ def groupby_rolling(
                 f"duration window {window!r} needs a timestamp/date order "
                 f"column; {order_by!r} is {odt.simpleString()}"
             )
-        us = F.unix_micros(F.col(order_by).cast("timestamp"))
+        us = F.expr(sql_ts_micros(sql_quote(order_by)))
         # (t - window, t]: +1 us excludes the exact left edge (pandas
         # closed='right')
         w = (

@@ -32,6 +32,7 @@ from flox_spark.dtypes import (
     sql_skip,
 )
 from flox_spark.aggregations import SCANS, Scan, ScanContext
+from flox_spark.plans.util import one_task_if_small
 
 __all__ = ["groupby_scan"]
 
@@ -257,6 +258,8 @@ def groupby_scan(
             return groupby_scan_blocked(
                 df, *by, func=func, value=value, order_by=order_by, alias=out
             )
+    # the window plan: a small input runs it as one task, no exchange
+    df, _, _ = one_task_if_small(df)
     vdt = df.schema[value].dataType
     qv = sql_quote(value)
     if custom:

@@ -228,3 +228,21 @@ def test_streaming_corr_equals_batch(spark):
             assert got[key] == pytest.approx(want[key], rel=1e-9), key
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_twa_timestamp_ntz_order_column(spark):
+    # pandas/arrow-written parquet arrives as TIMESTAMP_NTZ, which
+    # unix_micros rejects without a cast
+    from pyspark.sql import functions as F
+
+    tdf = pd.DataFrame(
+        {
+            "k": [0, 0, 0],
+            "v": [10.0, 20.0, 99.0],
+            "ts": pd.to_datetime(["2024-01-01 00:00", "2024-01-01 00:10", "2024-01-01 00:30"]),
+        }
+    )
+    df = spark.createDataFrame(tdf).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    out = time_weighted_mean(df, "k", value="v", ts="ts").collect()
+    assert out[0]["twa"] == pytest.approx((10 * 10 + 20 * 20) / 30)

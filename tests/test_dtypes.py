@@ -246,7 +246,7 @@ def _missing_frame(spark):
 
 def _label_callers():
     from flox_spark import stats
-    from flox_spark.resample import resample_upsample
+    from flox_spark.resample import resample_upsample, time_weighted_mean
     from flox_spark.salting import groupby_reduce_salted
     from flox_spark.streaming.stream import groupby_value_counts_stream
     from flox_spark.transform import groupby_apply_batched
@@ -259,6 +259,7 @@ def _label_callers():
         "weighted": lambda df: groupby_reduce_weighted(df, "s", "f", func="mean", value="v", weights="w"),
         "salted": lambda df: groupby_reduce_salted(df, "s", "f", func="nansum", value="v", n_salt=2),
         "upsample": lambda df: resample_upsample(df, "s", "f", time_col="ts", value="v", freq="1min"),
+        "twa": lambda df: time_weighted_mean(df, "s", "f", value="v", ts="ts"),
         "apply_batched": lambda df: groupby_apply_batched(
             df, "s", "f", fn=lambda pdf: pdf, schema=df.schema, order_by="t"),
         # a streaming operator over a bounded frame (the watermark is a

@@ -103,8 +103,12 @@ def test_groupby_reduce_multi_expected(small):
     assert got[9]["total"] == 0.0  # sum fill
 
 
-def test_multi_single_shuffle(small):
-    # one aggregation pass: physical plan has exactly one shuffle
+def test_multi_single_shuffle(small, monkeypatch):
+    # one aggregation pass: physical plan has exactly one shuffle (the
+    # distributed plan; a small input runs as one task, no exchange)
+    import flox_spark.plans.util as plan_util
+
+    monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", 0)
     df = groupby_reduce_multi(
         small, "label", aggs={"a": ("nansum", "v"), "b": ("nanmean", "v")}, sort=False
     )

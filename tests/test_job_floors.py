@@ -2,7 +2,8 @@
 
 Every job is a scheduling floor the query pays at ANY scale, so the
 r10/r11 job cuts (fused perplexity filter, semdedup staging collapse,
-the one-stage tiny sort, LocalRelation literal grids) are guarded
+the one-stage tiny sort, LocalRelation literal grids) and the one-task
+plan for small inputs are guarded
 here the same way plan asserts guard exchanges: if a change silently
 re-adds a stage, the pin trips.  Counts are measured with the bench's
 noop-sink protocol at sf0.001 and are deterministic for a fixed plan;
@@ -15,16 +16,22 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # query -> max jobs per execution (the measured structural count)
 PINS = {
-    "sum": 2,                # map agg + final-agg-with-sort (one stage)
-    "mean": 2,
+    # a small input runs as one task (plans.util.one_task_if_small):
+    # aggregate + sort in one stage, one job (was 2: map agg +
+    # final-agg-with-sort)
+    "sum": 1,
+    "mean": 1,
     # r12: stats-chosen "driver" strategy — one collect job + the
-    # LocalRelation-side sort/noop pair.  +1 trivial job vs the arrow
+    # LocalRelation-side sort/noop job.  +1 trivial job vs the arrow
     # kernel, measured 2.5x less wall (0.64s vs 1.6s at sf0.1)
-    "quantile": 3,
-    "dayofyear_mean": 2,
-    "monthhour_sum": 2,
-    "expected_fill": 4,      # + grid broadcast + reindex join
-    "binned_count": 3,
+    "quantile": 2,
+    "dayofyear_mean": 1,
+    "monthhour_sum": 1,
+    # one-task reindex: a shuffle-hash join of two one-partition
+    # sides, no broadcast of the aggregate (was 4 and 3); the two-key
+    # grid of expected_fill still broadcasts a part for its crossJoin
+    "expected_fill": 2,
+    "binned_count": 1,
     "perplexity": 4,         # LM literal-model path
     "perplexity_filter": 4,  # == perplexity + 0 (the r10 fusion)
     "winsorize": 2,          # literal fences (r10 rewrite)

@@ -919,3 +919,81 @@ def test_label_drop_py4j_round_trips(spark, caller, bound):
     }[caller]
     n = build_py4j_count(spark, build, make_df)
     assert n < bound, n
+
+
+# -- one-task plans for small inputs (plans.util.one_task_if_small) ---------
+
+
+def _noop_jobs(spark, df) -> int:
+    """Jobs of one warm noop-sink execution of ``df``."""
+    st = spark.sparkContext.statusTracker()
+
+    def run():
+        df.write.format("noop").mode("overwrite").save()
+
+    run()  # warm: plan, parquet footers
+    before = set(st.getJobIdsForGroup(None))
+    run()
+    return len(set(st.getJobIdsForGroup(None)) - before)
+
+
+def test_small_input_runs_one_task(spark, monkeypatch):
+    """A plain sum over a small frame is one stage: no hash exchange
+    and one job.  With the small-input bound at 0 the same call keeps
+    the distributed shape (partial aggregate, hash exchange, final
+    aggregate)."""
+    import flox_spark.plans.util as plan_util
+
+    rng = np.random.default_rng(9)
+    df = spark.createDataFrame(pd.DataFrame({
+        "k": rng.integers(0, 7, 5000), "v": rng.normal(size=5000),
+    }))
+
+    def build():
+        return groupby_reduce(df, "k", func="sum", value="v")
+
+    res = build()
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 0, plan
+    assert "Exchange" not in plan, plan
+    assert _noop_jobs(spark, res) == 1
+
+    monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", 0)
+    plan = build()._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_one_task_and_distributed_rows_identical(spark, monkeypatch):
+    """Every registry function gives the same rows (values, keys and
+    order) on the one-task plan and on the distributed plan, over one
+    cached frame."""
+    import flox_spark.plans.util as plan_util
+
+    frames = _matrix_frames(spark)
+    try:
+        cases = [
+            kw for fam, frame, kw, opts in registry_matrix_cases()
+            if fam in ("plain", "shaped") and frame == "main" and not opts
+            and (kw["value"] == "vd" or fam == "shaped")
+            and kw.get("finalize_kwargs") is None
+            and (kw["sort"] or kw.get("order_by"))  # else the order is unspecified
+        ]
+        funcs = {kw["func"] for kw in cases if kw["value"] == "vd"}
+        assert funcs == set(REDUCTIONS), set(REDUCTIONS) - funcs
+
+        probe = _run_case(frames, "main", cases[0], {})._jdf.queryExecution()
+        assert "Exchange" not in probe.executedPlan().toString()  # the one-task branch
+
+        def rows(bound):
+            with monkeypatch.context() as m:
+                m.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", bound)
+                return [[r.asDict() for r in _run_case(frames, "main", kw, {}).collect()]
+                        for kw in cases]
+
+        small, dist = rows(plan_util.SMALL_INPUT_MAX_BYTES), rows(0)
+        for kw, a, b in zip(cases, small, dist):
+            assert [{**r, "r": None} for r in a] == [{**r, "r": None} for r in b], (kw, a, b)
+            assert all(_close(x["r"], y["r"], 1e-12) for x, y in zip(a, b)), (kw, a, b)
+    finally:
+        for f in frames.values():
+            f.unpersist()

@@ -176,3 +176,22 @@ def test_rolling_median_approx_plan_and_accuracy(spark):
     # statistic; on N(0,1) data adjacent ranks in a 50-row frame can
     # sit ~1 apart at the tails
     assert np.median(diffs) < 0.1 and max(diffs) < 2.0
+
+
+def test_row_window_timestamp_ntz_order(spark, frame):
+    # a TIMESTAMP_NTZ order column (pandas/arrow-written parquet)
+    # orders the row-count window like its TIMESTAMP twin
+    pdf, df = frame
+    ntz = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    assert dict(ntz.dtypes)["ts"] == "timestamp_ntz"
+    got = (
+        groupby_rolling(ntz, "g", order_by="ts", aggs={"roll": ("sum", "v")}, window=5)
+        .orderBy("g", "ts")
+        .toPandas()
+    )
+    want = _pandas_rolling(pdf, 5, 1, "sum")
+    for a, b in zip(got["roll"].tolist(), want["roll"].tolist()):
+        if b != b:
+            assert a is None or a != a
+        else:
+            assert a == pytest.approx(b, rel=1e-12)

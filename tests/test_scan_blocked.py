@@ -147,11 +147,16 @@ def test_blocked_timestamp_order(spark):
         assert blocked[i] == pytest.approx(w, rel=1e-9), i
 
 
-def test_reindex_broadcast_heuristic(spark):
+def test_reindex_broadcast_heuristic(spark, monkeypatch):
     # the forced hint is dropped for huge DECLARED grids (Catalyst may
     # still choose to broadcast a genuinely small side on its own)
+    import flox_spark.plans.util as plan_util
     from flox_spark.core import _should_broadcast_reindex
     from flox_spark import groupby_reduce, set_options
+
+    # the distributed plan (a small input joins its one-partition grid
+    # with no exchange and no broadcast)
+    monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", 0)
 
     assert _should_broadcast_reindex(1000.0)
     assert not _should_broadcast_reindex(2e7)

@@ -41,7 +41,12 @@ def test_topk_ascending_and_nan_skip(spark):
     assert got == {("a", 2), ("a", 3), ("b", 5)}
 
 
-def test_topk_window_group_limit_plan(spark):
+def test_topk_window_group_limit_plan(spark, monkeypatch):
+    import flox_spark.plans.util as plan_util
+
+    # the distributed plan, where the pre-trim runs below the exchange
+    # (a small input runs as one task, no exchange)
+    monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", 0)
     orders = load_table(spark, SF, "orders")
     plan = (
         grouped_topk(orders, "o_orderstatus", value="o_totalprice", k=3, tiebreak="o_orderkey")

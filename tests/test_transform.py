@@ -56,7 +56,11 @@ def test_standardize_matches_pandas(spark, tdata):
             assert g == pytest.approx(w, rel=1e-9), rid
 
 
-def test_standardize_single_shuffle(spark, tdata):
+def test_standardize_single_shuffle(spark, tdata, monkeypatch):
+    import flox_spark.plans.util as plan_util
+
+    # the distributed plan (a small input runs as one task, no exchange)
+    monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", 0)
     df = spark.createDataFrame(tdata)
     plan = standardize(df, "k", value="v")._jdf.queryExecution().executedPlan().toString()
     # one hash aggregation pass feeds both stats (multi API); the join

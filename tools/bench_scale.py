@@ -12,6 +12,7 @@ grows, on synthetic frames built with spark.range (testdata untouched).
    overhead vs data-proportional work.
 
 Usage: python tools/bench_scale.py [--quick]
+       python tools/bench_scale.py --one-task [--quick]   # one-task vs distributed plans
 """
 
 from __future__ import annotations
@@ -21,7 +22,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the repository root this tool belongs to (not the working directory)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -191,6 +194,72 @@ def quantile_arrow_zone(spark, quick: bool, runs: int = 5) -> dict:
             **{s: round(statistics.median(w), 2) for s, w in walls.items()},
         })
     return {"runs": runs, "points": out}
+
+
+def one_task_zone(spark, quick: bool, runs: int = 5) -> dict:
+    """The one-task zone (``plans.util.SMALL_INPUT_MAX_BYTES``,
+    SCALE.md): at 1/4/16/64 MB of plan stats, the one-task plan
+    (input coalesced to one partition, no exchange) against the
+    distributed plan (partial aggregate -> hash exchange -> final
+    aggregate; hash-partitioned window) for a plain sum, a nanmode
+    (two-stage aggregate) and a window nancumsum, 64 int groups.
+    Each wall is the whole call, build plus a noop sink, as the median
+    of ``runs`` rounds alternating the two plans after one warm-up
+    each.  Run it on the session's default ``local[N]`` so the
+    distributed plan has cores to spread over.  ``--quick`` keeps the
+    two smallest points."""
+    import statistics
+    import tempfile
+
+    import flox_spark.plans.util as plan_util
+    from flox_spark.plans.util import estimate_size_bytes
+
+    calls = {
+        "sum": lambda df: groupby_reduce(df, "k", func="sum", value="v"),
+        "nanmode": lambda df: groupby_reduce(df, "k", func="nanmode", value="r"),
+        "nancumsum": lambda df: groupby_scan(
+            df, "k", func="nancumsum", value="v", order_by="i", plan="window"),
+    }
+    bounds = {"one_task": 1 << 62, "distributed": 0}
+    default = plan_util.SMALL_INPUT_MAX_BYTES
+    out = []
+    for mb in (1, 4) if quick else (1, 4, 16, 64):
+        # ~12.5 B of parquet per row: a random double, a 100-value
+        # double, a sequential long and the 64-value key
+        n = mb * (1 << 20) * 2 // 25
+        path = os.path.join(tempfile.gettempdir(), f"flox_onetask_{mb}mb.parquet")
+        if not os.path.exists(path):
+            spark.range(n).select(
+                (F.col("id") % 64).cast("int").alias("k"),
+                (F.rand(3) * 1000).alias("v"),
+                F.floor(F.rand(5) * 100).alias("r"),
+                F.col("id").alias("i"),
+            ).write.mode("overwrite").parquet(path)
+        df = spark.read.parquet(path)
+
+        def call(name: str, plan: str) -> float:
+            plan_util.SMALL_INPUT_MAX_BYTES = bounds[plan]
+            try:
+                t0 = time.perf_counter()
+                res = calls[name](df)
+                if name == "nancumsum":  # N rows out: one aggregate over them
+                    res = res.agg(F.sum("nancumsum"))
+                res.write.format("noop").mode("overwrite").save()
+                return time.perf_counter() - t0
+            finally:
+                plan_util.SMALL_INPUT_MAX_BYTES = default
+
+        point = {"stats_mb": round(estimate_size_bytes(df) / (1 << 20), 1), "rows": n}
+        for name in calls:
+            walls: dict = {p: [] for p in bounds}
+            for p in bounds:
+                call(name, p)
+            for _ in range(runs):
+                for p in bounds:
+                    walls[p].append(call(name, p))
+            point[name] = {p: round(statistics.median(w), 3) for p, w in walls.items()}
+        out.append(point)
+    return {"runs": runs, "cores": spark.sparkContext.defaultParallelism, "points": out}
 
 
 def spans_scaling(spark, quick: bool) -> dict:
@@ -708,8 +777,8 @@ def extras_sf1(spark, runs: int = 2) -> dict:
     data with the bench's own best-of-N protocol.  Per-job scheduling
     floors are fixed; data-proportional work is not — if the sf0.1
     flags measure the floor, net ratios must fall here.  Writes the
-    result to /root/repo/SCALE_extras_sf1.json so bench.py surfaces it
-    in the driver record."""
+    result to ``SCALE_extras_sf1.json`` at this tool's repository root,
+    where bench.py reads it for the driver record."""
     import os
 
     import duckdb
@@ -763,7 +832,7 @@ def extras_sf1(spark, runs: int = 2) -> dict:
         "floor_s": round(floor, 3),
         "queries": out,
     }
-    with open("/root/repo/SCALE_extras_sf1.json", "w") as f:
+    with open(os.path.join(ROOT, "SCALE_extras_sf1.json"), "w") as f:
         json.dump(result, f, indent=1)
     return result
 
@@ -962,6 +1031,10 @@ def main() -> None:
     if "--qarrow" in sys.argv:
         spark = get_spark("bench_scale")
         print(json.dumps({"quantile_arrow_zone": quantile_arrow_zone(spark, quick)}, indent=2))
+        return
+    if "--one-task" in sys.argv:
+        spark = get_spark("bench_scale")
+        print(json.dumps({"one_task_zone": one_task_zone(spark, quick)}, indent=2))
         return
     if "--spans" in sys.argv:
         spark = get_spark("bench_scale")
