@@ -4015,14 +4015,14 @@ UNION ALL SELECT doc_id, 7 AS band, md5(mh14::VARCHAR || '|' || mh15::VARCHAR) A
               ON c_acctbal::DOUBLE >= lo AND c_acctbal::DOUBLE <= hi""",
         "heavy_hitters": """
             SELECT tok AS item, count(*)::BIGINT AS n
-            FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
+            FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
                   FROM documents WHERE text IS NOT NULL)
             WHERE tok IS NOT NULL
             GROUP BY tok HAVING count(*) >= 200""",
         "chunk_docs": """
             WITH t AS (
               SELECT doc_id,
-                     regexp_split_to_array(trim(text), '\s+') AS toks
+                     regexp_split_to_array(trim(text), '\\s+') AS toks
               FROM documents
               WHERE text IS NOT NULL AND trim(text) != ''
             ), s AS (

@@ -54,13 +54,19 @@ Crossover constants (OPTIONS, measured in SCALE.md r13 on local[32]):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from types import EllipsisType
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flox_spark.options import OPTIONS
-from flox_spark.plans.util import estimate_size_bytes
+from flox_spark.plans.util import (
+    BLOCKED_BOUND_DIVISOR,
+    estimate_size_bytes,
+    one_partition_cartesian,
+    one_task_if_small,
+)
 
 __all__ = ["route_to_blocked"]
 
@@ -77,12 +83,17 @@ def route_to_blocked(
     by: tuple[str, ...] | list[str],
     crossover_rows: int,
     order_by: str | None = None,
+    size: int | None | EllipsisType = ...,
 ) -> bool:
     """True when plan stats say the blocked twin should run (see the
-    module docstring for the ladder and the measured constants)."""
+    module docstring for the ladder and the measured constants).
+    ``size``: the plan-stats estimate the caller already took (the
+    entry points pass ``one_task_if_small``'s, and its coalesced frame
+    as ``df``, so the probe on a small input runs as one job)."""
     if getattr(df, "isStreaming", False):
         return False
-    size = estimate_size_bytes(df)
+    if size is ...:
+        size = estimate_size_bytes(df)
     if size is None or size <= OPTIONS["blocked_route_min_bytes"]:
         return False
     aggs = [
@@ -109,8 +120,10 @@ class BlockedSpec:
     """One blocked operator in flox's ``Scan(scan, reduction,
     binary_op, identity)`` form (reference flox/aggregations.py:715-737):
 
-    - ``local(work, keys)``: the in-block pass over ``keys`` =
-      ``[*by, "__blk"]``, adding the operator's per-row columns;
+    - ``local(work, keys, one_task)``: the in-block pass over ``keys``
+      = ``[*by, "__blk"]``, adding the operator's per-row columns;
+      ``one_task`` says ``work`` is one partition (``blocked_scan``'s
+      one-task shape), so the pass needs no exchange and no broadcast;
     - ``carry``: name -> aggregate Column, the per-(key, block) carry
       (over ``work``, or over the local pass's output when
       ``carry_on_local``).  The fold reads every carry inside a lambda,
@@ -126,7 +139,7 @@ class BlockedSpec:
     scans, leads, descending ranks)."""
 
     out: str
-    local: Callable[[DataFrame, list[str]], DataFrame]
+    local: Callable[[DataFrame, list[str], bool], DataFrame]
     carry: dict[str, Column]
     identity: Column
     fold: Callable[[Column, Column], Column]
@@ -145,7 +158,7 @@ def blocked_scan(
     missing_block: tuple[Column, int] | None = None,
 ) -> DataFrame:
     """Run ``spec`` as the blocked (Blelloch) plan flox uses across dask
-    chunks (flox/dask.py:576-663):
+    chunks (flox/dask.py:576-663); the distributed shape:
 
         stage 0  equal-population blocks: approx-quantile breaks of
                  ``order_view`` (a lazy broadcast aggregate, no driver
@@ -155,6 +168,20 @@ def blocked_scan(
         stage 3  exclusive fold of carries over blocks per key: one
                  F.aggregate over the collected block array  [tiny]
         stage 4  broadcast-join states back; per-row combine
+
+    One-task shape: an input of at most ``SMALL_INPUT_MAX_BYTES //
+    BLOCKED_BOUND_DIVISOR`` (``plans.util``; 512 KB) of plan stats is
+    coalesced to one partition (``one_task_if_small``, decided ONCE
+    here from the input's stats: the cartesian's stats are the product
+    of its sides, so an estimate on a derived frame would wrongly read
+    "not small"),
+    and every stage above runs in that one task with no exchange and
+    no broadcast job — the breaks join as a one-partition cartesian
+    (``plans.util.one_partition_cartesian``), the local pass gets
+    ``one_task=True`` and its output is coalesced back to one partition
+    (a ``MapInPandas`` pass reports unknown partitioning), carries and
+    fold need no shuffle, and the states join back as a shuffle-hash
+    join of two one-partition sides.  The whole plan is one job.
 
     The block function is monotone in ``order_view`` — block i's rows
     all precede block i+1's and tied values share one block — so blocks
@@ -171,6 +198,7 @@ def blocked_scan(
         raise ValueError("num_blocks must be >= 1")
     by = list(by)
     keys = [*by, "__blk"]
+    df, _, one_task = one_task_if_small(df, BLOCKED_BOUND_DIVISOR)
 
     work, blk = df, F.lit(0)
     if num_blocks > 1:
@@ -180,13 +208,19 @@ def blocked_scan(
                 order_view, F.array(*[F.lit(q) for q in qs]), F.lit(10000)
             ).alias("__breaks")
         )
-        work = df.withColumn("__ord", order_view).crossJoin(F.broadcast(bounds))
+        work = df.withColumn("__ord", order_view)
+        if one_task:
+            work = one_partition_cartesian(work, bounds)
+        else:
+            work = work.crossJoin(F.broadcast(bounds))
         blk = F.size(F.filter(F.col("__breaks"), lambda b: b < F.col("__ord")))
     if missing_block is not None:
         blk = F.when(missing_block[0], F.lit(missing_block[1])).otherwise(blk)
     work = work.withColumn("__blk", blk.cast("int")).drop("__breaks", "__ord")
 
-    staged = spec.local(work, keys)
+    staged = spec.local(work, keys, one_task)
+    if one_task:
+        staged = staged.coalesce(1)
     carries = (staged if spec.carry_on_local else work).groupBy(*keys).agg(
         *[c.alias(name) for name, c in spec.carry.items()]
     )
@@ -216,7 +250,10 @@ def blocked_scan(
     )
 
     on = [F.col(b).eqNullSafe(F.col(k)) for b, k in zip(by, skeys)]
-    joined = staged.join(F.broadcast(states), [*on, F.col("__blk") == F.col("__sblk")], "left")
+    # one-task: both sides are one partition, so a shuffle-hash join
+    # needs no exchange (a broadcast would be a job of its own)
+    states = states.hint("shuffle_hash") if one_task else F.broadcast(states)
+    joined = staged.join(states, [*on, F.col("__blk") == F.col("__sblk")], "left")
     total = F.col("__tot") if spec.total else None
     cols = [c for c in df.columns if c != spec.out]
     return joined.withColumn(spec.out, spec.combine(F.col("__st"), total)).select(*cols, spec.out)

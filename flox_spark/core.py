@@ -42,7 +42,12 @@ from flox_spark.dtypes import (
     sql_quote,
 )
 from flox_spark.options import OPTIONS
-from flox_spark.plans.util import estimate_size_bytes, one_task_if_small, pin_keyed_parallelism
+from flox_spark.plans.util import (
+    estimate_size_bytes,
+    one_partition_cartesian,
+    one_task_if_small,
+    pin_keyed_parallelism,
+)
 
 __all__ = ["groupby_reduce"]
 
@@ -1602,9 +1607,10 @@ def _reindex_expected(
     are group-cardinality-sized; broadcast the aggregated side so the
     join never shuffles.  On a ``one_task`` plan with every group
     declared, both sides are one partition already (the grid
-    coalesced, the result from the coalesced input), so a shuffle-hash
-    join needs no exchange at all and the broadcast's job of its own
-    goes too.  (A materialized result reports no partitioning, so the
+    coalesced, its parts crossed as a one-partition cartesian, the
+    result from the coalesced input), so a shuffle-hash join needs no
+    exchange at all and the broadcasts' jobs of their own go too.  (A
+    materialized result reports no partitioning, so the
     partially-declared grid keeps the broadcast.)  ``fills``:
     out_column -> fill value (None -> NaN for float results, flox's
     promotion rule collapsed to NULL/NaN).
@@ -1674,7 +1680,14 @@ def _reindex_expected(
             n_part = len(exp)
         if n_part is not None and grid_card <= _GRID_COALESCE_MAX_CARD:
             part = part.coalesce(1)
-        grid = part if grid is None else grid.crossJoin(part)
+        if grid is None:
+            grid = part
+        elif one_task and not partial and grid_card <= _GRID_COALESCE_MAX_CARD:
+            # both sides are one partition: cross them inside the one
+            # task instead of broadcasting a part as a job of its own
+            grid = one_partition_cartesian(grid, part)
+        else:
+            grid = grid.crossJoin(part)
     if with_pos:
         pos: Column = F.lit(0)
         for i, n in enumerate(part_sizes):

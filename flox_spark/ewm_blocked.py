@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 
 from flox_spark.blocked_route import BlockedSpec, blocked_scan
 from flox_spark.dtypes import sql_arith_input, sql_quote
-from flox_spark.transform import groupby_apply_batched
+from flox_spark.transform import _apply_batched
 
 __all__ = ["groupby_ewm_blocked"]
 
@@ -127,7 +127,8 @@ def groupby_ewm_blocked(
     ``var = (Sw*Swx2 - Swx^2)/(Sw^2 - Sw2)`` — verified against
     pandas at 1e-15 for both ignore_na modes before building.  The
     value column is shifted by a per-group anchor (its group mean,
-    one cheap aggregate + broadcast join) before squaring: variance
+    one cheap aggregate joined back; a broadcast, or in the one-task
+    plan a join inside the task) before squaring: variance
     is shift-invariant and the centered moments avoid the raw-moment
     cancellation.  adjust=False var/std stay on ``groupby_ewm``'s
     per-group kernel (the renormalized second moment has no clean
@@ -226,15 +227,18 @@ def _adjust_true(by, value, order_by, out, in_fields, a, base, kw, ign, func):
         keep["__pos"] = g.cumcount().to_numpy(dtype="int64")
         return keep.drop(columns=drop_cols)
 
-    def local(work, keys):
+    def local(work, keys, one_task):
         if second:
             # per-group anchor (variance is shift-invariant): centered
-            # moments avoid raw-moment cancellation for tight data
+            # moments avoid raw-moment cancellation for tight data.
+            # One-task: both join sides are one partition, so a
+            # shuffle-hash join needs no exchange and no broadcast job
             anchors = work.groupBy(*by).agg(
                 F.coalesce(F.avg(F.col(value)), F.lit(0.0)).alias("__anch")
             )
-            work = work.join(F.broadcast(anchors), list(by), "left")
-        return groupby_apply_batched(work, *keys, fn=fn, schema=schema, order_by=order_by)
+            anchors = anchors.hint("shuffle_hash") if one_task else F.broadcast(anchors)
+            work = work.join(anchors, list(by), "left")
+        return _apply_batched(work, keys, fn, schema, order_by, shuffle=not one_task)
 
     # carries = the LAST row's states in PROCESSING order (__pos —
     # unique within the block, so the max struct is deterministic even
@@ -407,8 +411,8 @@ def _adjust_false(by, value, order_by, out, in_fields, a, base, kw, ign):
 
     return BlockedSpec(
         out=out,
-        local=lambda work, keys: groupby_apply_batched(
-            work, *keys, fn=fn, schema=schema, order_by=order_by
+        local=lambda work, keys, one_task: _apply_batched(
+            work, keys, fn, schema, order_by, shuffle=not one_task
         ),
         carry={
             "__clam": last["lam"],

@@ -91,8 +91,16 @@ def ensure_parallelism(
 # local[4] one-task vs distributed sweep behind the value.
 SMALL_INPUT_MAX_BYTES = 4 << 20
 
+# The blocked plans (``blocked_route.blocked_scan``) do several times an
+# aggregate's per-row work in the stage a coalesce serializes (breaks,
+# the higher-order block lookup, a window, carries, the join-back), so
+# one task stops paying at a smaller input: they run as one task up to
+# ``SMALL_INPUT_MAX_BYTES // BLOCKED_BOUND_DIVISOR`` (SCALE.md, "One-task
+# zone": the blocked crossover lies between 0.5 and 1 MB at local[4]).
+BLOCKED_BOUND_DIVISOR = 8
 
-def one_task_if_small(df: DataFrame) -> tuple[DataFrame, int | None, bool]:
+
+def one_task_if_small(df: DataFrame, divisor: int = 1) -> tuple[DataFrame, int | None, bool]:
     """Coalesce a small input to ONE partition ahead of a grouped
     operator; returns ``(df, size, one_task)`` with ``size`` the one
     plan-stats estimate the caller passes down to its other gates.
@@ -107,15 +115,31 @@ def one_task_if_small(df: DataFrame) -> tuple[DataFrame, int | None, bool]:
     AQE re-plan and one job.  A small input is usually one scan
     partition already, so the exchange bought no parallelism.
 
-    Fires when the plan stats are at most ``SMALL_INPUT_MAX_BYTES``
-    and the frame is not streaming.  Unknown stats (the conservative
+    Fires when the plan stats are at most ``SMALL_INPUT_MAX_BYTES //
+    divisor`` and the frame is not streaming (the blocked plans pass
+    ``BLOCKED_BOUND_DIVISOR``).  Unknown stats (the conservative
     sentinel) keep the distributed plan.  The coalesce runs the whole
     stage since the last shuffle in one task, so the gate trusts the
     stats to bound that stage's input as well as its output."""
     size = estimate_size_bytes(df)
-    if size is not None and size <= SMALL_INPUT_MAX_BYTES and not df.isStreaming:
+    if size is not None and size <= SMALL_INPUT_MAX_BYTES // divisor and not df.isStreaming:
         return df.coalesce(1), size, True
     return df, size, False
+
+
+def one_partition_cartesian(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Cross join two ONE-partition frames inside the current stage.
+
+    A plain ``crossJoin`` of small sides plans as a broadcast
+    nested-loop join, whose broadcast is a job of its own.  The
+    ``shuffle_replicate_nl`` hint picks ``CartesianProductExec``
+    instead: one task per (left, right) partition pair, so one task
+    here, and no exchange.  It reports unknown partitioning, so the
+    ``coalesce(1)`` restores ``SinglePartition`` for the one-task plan
+    downstream (a no-op on the data: there is one partition).  Callers
+    on a one-task plan only: with many partitions a side the product
+    would schedule ``nLeft x nRight`` tasks."""
+    return left.crossJoin(right.hint("shuffle_replicate_nl")).coalesce(1)
 
 
 def pin_keyed_parallelism(

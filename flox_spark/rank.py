@@ -28,6 +28,7 @@ from flox_spark.dtypes import (
     sql_quote,
 )
 from flox_spark.options import OPTIONS
+from flox_spark.plans.util import one_task_if_small, pin_keyed_parallelism
 
 __all__ = ["groupby_rank"]
 
@@ -106,11 +107,14 @@ def groupby_rank(
     from flox_spark import blocked_route
 
     blocked_route.validate_plan(plan, "groupby_rank")
+    # a small input runs the route probe as one job and the window
+    # plan as one task; the blocked twin takes its own decision
+    small, size, _ = one_task_if_small(df)
     if plan == "blocked" or (
         plan == "auto"
         and _blockable(vdt)
         and blocked_route.route_to_blocked(
-            df, by, OPTIONS["blocked_route_rank_rows"]
+            small, by, OPTIONS["blocked_route_rank_rows"], size=size
         )
     ):
         from flox_spark.rank_blocked import groupby_rank_blocked
@@ -133,13 +137,11 @@ def groupby_rank(
         order.append(F.col(order_by).asc())
     w = Window.partitionBy(*by).orderBy(*order)
 
-    # Pin the window's exchange so AQE cannot coalesce the sort +
-    # window pass to a single task (observed: the whole sf0.1 rank ran
-    # single-task, 1.8 s where 3-way parallel is ~1.0 s) — see
-    # pin_keyed_parallelism for the mechanism.
-    from flox_spark.plans.util import pin_keyed_parallelism
-
-    df = pin_keyed_parallelism(df, list(by))
+    # Over the bound, pin the window's exchange so AQE cannot coalesce
+    # the sort + window pass to a single task (observed: the whole
+    # sf0.1 rank ran single-task, 1.8 s where 3-way parallel is
+    # ~1.0 s) — see pin_keyed_parallelism for the mechanism.
+    df = pin_keyed_parallelism(small, list(by), size)
 
     if method == "first":
         expr = F.row_number().over(w).cast("double")

@@ -73,7 +73,7 @@ def groupby_rank_blocked(
     miss = F.expr(f"CAST({miss_sql} AS BIGINT)")
     vsort = vord.asc() if ascending else vord.desc()
 
-    def local(work, keys):
+    def local(work, keys, _one_task):
         # within a pure block the one-window form's (mkey, vord[,
         # order_by]) order is vord alone (missing blocks are all peers)
         order = [vsort, F.col(order_by).asc()] if method == "first" else [vsort]

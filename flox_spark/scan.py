@@ -239,11 +239,14 @@ def groupby_scan(
             "generic carry decomposition for an arbitrary window "
             "expression); use plan='window'"
         )
+    # a small input runs the route probe as one job and the window
+    # plan as one task; the blocked twins take their own decision
+    small, size, _ = one_task_if_small(df)
     if not custom and plan != "window":
         from flox_spark.options import OPTIONS
 
         if plan == "blocked" or blocked_route.route_to_blocked(
-            df, by, OPTIONS["blocked_route_scan_rows"], order_by=order_by
+            small, by, OPTIONS["blocked_route_scan_rows"], order_by=order_by, size=size
         ):
             if func in _LAGS:
                 from flox_spark.shift_blocked import groupby_shift_blocked
@@ -258,8 +261,7 @@ def groupby_scan(
             return groupby_scan_blocked(
                 df, *by, func=func, value=value, order_by=order_by, alias=out
             )
-    # the window plan: a small input runs it as one task, no exchange
-    df, _, _ = one_task_if_small(df)
+    df = small
     vdt = df.schema[value].dataType
     qv = sql_quote(value)
     if custom:
@@ -350,12 +352,15 @@ def groupby_ewm(
     from flox_spark import blocked_route
 
     blocked_route.validate_plan(plan, "groupby_ewm")
+    # a small input runs the route probe as one job and the per-group
+    # kernel as one task; the blocked twin takes its own decision
+    small, size, one_task = one_task_if_small(df)
     blockable = func == "mean" or adjust  # var/std: adjust=True only
     if plan != "window" and blockable:
         from flox_spark.options import OPTIONS
 
         if plan == "blocked" or blocked_route.route_to_blocked(
-            df, by, OPTIONS["blocked_route_ewm_rows"], order_by=order_by
+            small, by, OPTIONS["blocked_route_ewm_rows"], order_by=order_by, size=size
         ):
             from flox_spark.ewm_blocked import groupby_ewm_blocked
 
@@ -402,9 +407,9 @@ def groupby_ewm(
         keep[out] = res.droplevel(list(range(len(keys)))).sort_index().to_numpy()
         return keep
 
-    from flox_spark.transform import groupby_apply_batched
+    from flox_spark.transform import _apply_batched
 
-    return groupby_apply_batched(
-        df.select(*[f.name for f in in_fields]), *by,
-        fn=fn, schema=schema, order_by=order_by,
+    return _apply_batched(
+        small.select(*[f.name for f in in_fields]), keys, fn, schema, order_by,
+        shuffle=not one_task,
     )

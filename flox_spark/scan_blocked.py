@@ -68,7 +68,7 @@ def groupby_scan_blocked(
         for i, ch in enumerate(cs.channels)
     ]
 
-    def local(work, keys):
+    def local(work, keys, _one_task):
         w = Window.partitionBy(*keys).orderBy(o.desc() if cs.reverse else o).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )

@@ -69,7 +69,7 @@ def groupby_shift_blocked(
     def tail(arr: Column) -> Column:
         return F.when(F.size(arr) > p, F.slice(arr, F.size(arr) - F.lit(p) + 1, F.lit(p))).otherwise(arr)
 
-    def local(work, keys):
+    def local(work, keys, _one_task):
         # a lead is a lag over the reversed order
         w = Window.partitionBy(*keys).orderBy(o.asc() if ascending else o.desc())
         return work.select("*", F.lag(v, p).over(w).alias("__lagged"), F.row_number().over(w).alias("__rn"))

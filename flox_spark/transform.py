@@ -159,14 +159,21 @@ def groupby_apply_batched(
        this.  ``tests/test_transform.py`` demonstrates the trap
        through this hatch.
     """
+    return _apply_batched(df, list(by), fn, schema, order_by, drop_missing_labels)
+
+
+def _apply_batched(df, keys, fn, schema, order_by, drop_missing_labels=True, shuffle=True):
+    """``groupby_apply_batched``'s plan.  ``shuffle=False`` skips the
+    hash repartition on ``keys``: for a ONE-partition input (the
+    one-task plans, ``plans.util.one_task_if_small``) every group is
+    already whole in its partition, so the exchange buys nothing."""
     from flox_spark.dtypes import drop_missing
 
-    work = drop_missing(df, by) if drop_missing_labels else df
-    sort_cols = [*by, order_by] if order_by else list(by)
-    work = work.repartition(*[F.col(b) for b in by]).sortWithinPartitions(
-        *[F.col(c) for c in sort_cols]
-    )
-    keys = list(by)
+    work = drop_missing(df, keys) if drop_missing_labels else df
+    if shuffle:
+        work = work.repartition(*[F.col(k) for k in keys])
+    sort_cols = [*keys, order_by] if order_by else keys
+    work = work.sortWithinPartitions(*[F.col(c) for c in sort_cols])
 
     def run(batches):
         import pandas as pd

@@ -28,9 +28,10 @@ PINS = {
     "dayofyear_mean": 1,
     "monthhour_sum": 1,
     # one-task reindex: a shuffle-hash join of two one-partition
-    # sides, no broadcast of the aggregate (was 4 and 3); the two-key
-    # grid of expected_fill still broadcasts a part for its crossJoin
-    "expected_fill": 2,
+    # sides, no broadcast of the aggregate (was 4 and 3), and the
+    # two-key grid crossed as a one-partition cartesian, no broadcast
+    # of a part (was 2)
+    "expected_fill": 1,
     "binned_count": 1,
     "perplexity": 4,         # LM literal-model path
     "perplexity_filter": 4,  # == perplexity + 0 (the r10 fusion)

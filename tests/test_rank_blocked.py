@@ -115,13 +115,20 @@ def test_blocked_rejects_unblockable_value(spark):
         groupby_rank_blocked(df, "k", value="v")
 
 
-def test_blocked_parallelism_exceeds_group_count(spark):
+def test_blocked_parallelism_exceeds_group_count(spark, monkeypatch):
     # the reason the operator exists: the big shuffle partitions by
     # (key, block), so the plan's exchange is NOT bound by the group
-    # count.  Assert the stage-1 exchange hashes on __blk too.
+    # count.  Assert the stage-1 exchange hashes on __blk too — on the
+    # distributed plan (a small input runs the one-task plan, which
+    # has no exchange at all).
+    import re
+
+    import flox_spark.plans.util as plan_util
+
+    monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", 0)
     df = _frame(spark, n=400, groups=2)
     plan = groupby_rank_blocked(df, "k", value="v", num_blocks=8)._jdf.queryExecution().executedPlan().toString()
-    assert "__blk" in plan.split("Window")[-1] or "__blk" in plan
+    assert re.search(r"Exchange hashpartitioning\([^)]*\b__blk#", plan), plan
 
 
 # ---- hypothesis fuzz over shapes/params ----

@@ -119,16 +119,25 @@ def test_pivot_rejects_multistage(spark):
         )
 
 
-def test_rank_single_exchange_plan(spark, frame):
+def test_rank_single_exchange_plan(spark, frame, monkeypatch):
     # average/max tie handling must come from the reversed-order rank
     # over the SAME group-key partitioning — one hash exchange total,
-    # never a second (keys, value)-partitioned shuffle
+    # never a second (keys, value)-partitioned shuffle.  A small input
+    # runs the one-task plan (no exchange at all); the bound at 0 pins
+    # the distributed plan.
+    import flox_spark.plans.util as plan_util
+
     df = spark.createDataFrame(frame)
-    p = (
-        groupby_rank(df, "k", value="v", method="average")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert p.count("Exchange hashpartitioning") == 1
+
+    def plan():
+        return (
+            groupby_rank(df, "k", value="v", method="average")
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+
+    assert "Exchange" not in plan()
+    monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", 0)
+    assert plan().count("Exchange hashpartitioning") == 1
 
 
 def test_rank_order_by_does_not_split_ties(spark):

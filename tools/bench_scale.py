@@ -197,12 +197,16 @@ def quantile_arrow_zone(spark, quick: bool, runs: int = 5) -> dict:
 
 
 def one_task_zone(spark, quick: bool, runs: int = 5) -> dict:
-    """The one-task zone (``plans.util.SMALL_INPUT_MAX_BYTES``,
-    SCALE.md): at 1/4/16/64 MB of plan stats, the one-task plan
+    """The one-task zone (``plans.util.SMALL_INPUT_MAX_BYTES``, and a
+    ``BLOCKED_BOUND_DIVISOR``-th of it for the blocked plans,
+    SCALE.md): at 0.5/1/4/16/64 MB of plan stats, the one-task plan
     (input coalesced to one partition, no exchange) against the
     distributed plan (partial aggregate -> hash exchange -> final
     aggregate; hash-partitioned window) for a plain sum, a nanmode
-    (two-stage aggregate) and a window nancumsum, 64 int groups.
+    (two-stage aggregate), a window nancumsum and a forced
+    ``plan="blocked"`` diff (``blocked_route.blocked_scan``: one-task
+    cartesian and join-back against broadcast breaks, hash-partitioned
+    local pass and broadcast join-back), 64 int groups.
     Each wall is the whole call, build plus a noop sink, as the median
     of ``runs`` rounds alternating the two plans after one warm-up
     each.  Run it on the session's default ``local[N]`` so the
@@ -219,14 +223,16 @@ def one_task_zone(spark, quick: bool, runs: int = 5) -> dict:
         "nanmode": lambda df: groupby_reduce(df, "k", func="nanmode", value="r"),
         "nancumsum": lambda df: groupby_scan(
             df, "k", func="nancumsum", value="v", order_by="i", plan="window"),
+        "diff": lambda df: groupby_scan(
+            df, "k", func="diff", value="v", order_by="i", plan="blocked"),
     }
     bounds = {"one_task": 1 << 62, "distributed": 0}
     default = plan_util.SMALL_INPUT_MAX_BYTES
     out = []
-    for mb in (1, 4) if quick else (1, 4, 16, 64):
+    for mb in (0.5, 1) if quick else (0.5, 1, 4, 16, 64):
         # ~12.5 B of parquet per row: a random double, a 100-value
         # double, a sequential long and the 64-value key
-        n = mb * (1 << 20) * 2 // 25
+        n = int(mb * (1 << 20) * 2 // 25)
         path = os.path.join(tempfile.gettempdir(), f"flox_onetask_{mb}mb.parquet")
         if not os.path.exists(path):
             spark.range(n).select(
@@ -242,8 +248,8 @@ def one_task_zone(spark, quick: bool, runs: int = 5) -> dict:
             try:
                 t0 = time.perf_counter()
                 res = calls[name](df)
-                if name == "nancumsum":  # N rows out: one aggregate over them
-                    res = res.agg(F.sum("nancumsum"))
+                if name in ("nancumsum", "diff"):  # N rows out: one aggregate over them
+                    res = res.agg(F.sum(name))
                 res.write.format("noop").mode("overwrite").save()
                 return time.perf_counter() - t0
             finally:
