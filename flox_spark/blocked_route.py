@@ -1,14 +1,16 @@
 """The blocked-scan skeleton and the stats-gated routing onto it.
 
-``blocked_scan`` is the one block -> local -> fold -> combine plan;
-the blocked operators (``scan_blocked`` / ``shift_blocked`` /
-``rank_blocked`` / ``ewm_blocked``) are ``BlockedSpec`` carry specs
-over it.  They exist for FEW-GROUPS GIANT-GROUP
-shapes, where a WindowExec / per-group kernel's parallelism is bound
-by group-key cardinality and one group serializes on one core —
-SCALE.md's measured crossovers put the switch at millions of rows per
-group, while at bench shapes (hundreds of thousands of rows across
-thousands of groups) the one-window form wins 2-3x.  Until r14 the
+``blocked_scan`` is the one block -> carry -> fold -> local plan:
+every carry is an aggregate over the block input, so the local pass
+runs once, seeded by the fold, and has one consumer.  The blocked
+operators (``scan_blocked`` / ``shift_blocked`` / ``rank_blocked`` /
+``ewm_blocked``) are ``BlockedSpec`` carry specs over it.  They exist
+for FEW-GROUPS GIANT-GROUP shapes, where a WindowExec / per-group
+kernel's parallelism is bound by group-key cardinality and one group
+serializes on one core — SCALE.md's measured crossovers put the
+switch at millions of rows per group, while at bench shapes (hundreds
+of thousands of rows across thousands of groups) the one-window form
+wins 2-3x.  Until r14 the
 caller had to KNOW to call the blocked twin; this module is the
 ``method="auto"``-style chooser (the quantile family's six-strategy
 ``auto`` is the in-repo precedent, core.py) that consults plan stats
@@ -64,6 +66,7 @@ from flox_spark.options import OPTIONS
 from flox_spark.plans.util import (
     BLOCKED_BOUND_DIVISOR,
     estimate_size_bytes,
+    materialize_shared,
     one_partition_cartesian,
     one_task_if_small,
 )
@@ -120,20 +123,18 @@ class BlockedSpec:
     """One blocked operator in flox's ``Scan(scan, reduction,
     binary_op, identity)`` form (reference flox/aggregations.py:715-737):
 
-    - ``local(work, keys, one_task)``: the in-block pass over ``keys``
-      = ``[*by, "__blk"]``, adding the operator's per-row columns;
-      ``one_task`` says ``work`` is one partition (``blocked_scan``'s
-      one-task shape), so the pass needs no exchange and no broadcast;
-    - ``carry``: name -> aggregate Column, the per-(key, block) carry
-      (over ``work``, or over the local pass's output when
-      ``carry_on_local``).  The fold reads every carry inside a lambda,
-      where Catalyst cannot prune it, so list only carries the call
-      uses;
+    - ``carry``: name -> aggregate Column over the block input, the
+      per-(key, block) carry.  The fold reads every carry inside a
+      lambda, where Catalyst cannot prune it, so list only carries the
+      call uses;
     - ``identity`` and ``fold(state, block)``: the associative fold of
       carries; ``block`` is a struct with the carry names as fields;
-    - ``combine(state, total)``: the per-row ``out`` Column, from the
-      exclusive fold of the earlier blocks (and the inclusive group
-      total when ``total``; else ``None``).
+    - ``local(work, keys, one_task)``: the in-block pass over ``keys``
+      = ``[*by, "__blk"]``, seeded: ``work`` already holds ``__st``, the
+      exclusive fold of the earlier blocks (and ``__tot``, the
+      inclusive group total, when ``total``), and the pass adds the
+      per-row ``out`` column.  ``one_task`` says ``work`` is one
+      partition, so the pass needs no exchange and no broadcast.
 
     ``descending`` folds blocks from the last to the first (reversed
     scans, leads, descending ranks)."""
@@ -143,57 +144,64 @@ class BlockedSpec:
     carry: dict[str, Column]
     identity: Column
     fold: Callable[[Column, Column], Column]
-    combine: Callable[[Column, Column | None], Column]
     descending: bool = False
     total: bool = False
-    carry_on_local: bool = False
 
 
 def blocked_scan(
     df: DataFrame,
     by: Sequence[str],
-    order_view: Column,
+    order_view: str,
     spec: BlockedSpec,
     num_blocks: int,
     missing_block: tuple[Column, int] | None = None,
 ) -> DataFrame:
     """Run ``spec`` as the blocked (Blelloch) plan flox uses across dask
-    chunks (flox/dask.py:576-663); the distributed shape:
+    chunks (flox/dask.py:576-663): every block's carry is an aggregate
+    over the block INPUT (flox's ``preop=grouped_reduce``), so the local
+    pass runs once, after the fold, with one consumer.  The distributed
+    shape:
 
         stage 0  equal-population blocks: approx-quantile breaks of
                  ``order_view`` (a lazy broadcast aggregate, no driver
-                 action); __blk = #{breaks < order_view}
-        stage 1  local pass within (key, __blk)     [big shuffle, split]
-        stage 2  per-(key, __blk) carry aggregate   [small]
-        stage 3  exclusive fold of carries over blocks per key: one
+                 action); __blk = #{breaks < order_view}: ``work``
+        stage 1  per-(key, __blk) carry aggregate over ``work``  [small]
+        stage 2  exclusive fold of carries over blocks per key: one
                  F.aggregate over the collected block array  [tiny]
-        stage 4  broadcast-join states back; per-row combine
+        stage 3  broadcast-join the states onto ``work``; the seeded
+                 local pass within (key, __blk)  [big shuffle, split]
+
+    ``work`` feeds stages 1 and 3, so the distributed plan computes it
+    twice (a scan and a broadcast cross join: no shuffle).
 
     One-task shape: an input of at most ``SMALL_INPUT_MAX_BYTES //
     BLOCKED_BOUND_DIVISOR`` (``plans.util``; 512 KB) of plan stats is
     coalesced to one partition (``one_task_if_small``, decided ONCE
     here from the input's stats: the cartesian's stats are the product
     of its sides, so an estimate on a derived frame would wrongly read
-    "not small"),
-    and every stage above runs in that one task with no exchange and
-    no broadcast job — the breaks join as a one-partition cartesian
-    (``plans.util.one_partition_cartesian``), the local pass gets
-    ``one_task=True`` and its output is coalesced back to one partition
-    (a ``MapInPandas`` pass reports unknown partitioning), carries and
-    fold need no shuffle, and the states join back as a shuffle-hash
-    join of two one-partition sides.  The whole plan is one job.
+    "not small"), and every stage above runs in that one task with no
+    exchange and no broadcast job — the breaks join as a one-partition
+    cartesian (``plans.util.one_partition_cartesian``), carries and
+    fold need no shuffle, the states join as a shuffle-hash join of two
+    one-partition sides, and the local pass gets ``one_task=True``.
+    With no exchange to reuse, ``work`` would be computed once per
+    branch, so it is built once (``plans.util.materialize_shared``, a
+    lazy local checkpoint filled by the query's own job) and
+    re-coalesced, because a checkpointed frame reports no
+    partitioning.  The whole plan is one job.
 
     The block function is monotone in ``order_view`` — block i's rows
     all precede block i+1's and tied values share one block — so blocks
     stay equal-population under skewed (bursty) orders where uniform
     [min, max] ranges would put nearly everything in one block.
-    ``order_view`` must be numeric and non-null except on rows that
-    ``missing_block = (missing, index)`` sends to a dedicated block.
-    It is staged as a real column before the crossJoin: a derived
-    expression captured in the block-filter lambda can mis-bind across
-    the join (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on one plan shape,
-    silently wrong blocks on another).  ``num_blocks == 1`` skips the
-    quantile aggregate.  Returns ``df``'s columns plus ``spec.out``."""
+    ``order_view`` (SQL text) must be numeric and non-null except on
+    rows that ``missing_block = (missing, index)`` sends to a dedicated
+    block.  It is staged as a real column before the crossJoin: a
+    derived expression captured in the block-filter lambda can mis-bind
+    across the join (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on one plan
+    shape, silently wrong blocks on another).  ``num_blocks == 1`` skips
+    the quantile aggregate.  Returns ``df``'s columns plus
+    ``spec.out``."""
     if num_blocks < 1:
         raise ValueError("num_blocks must be >= 1")
     by = list(by)
@@ -202,13 +210,11 @@ def blocked_scan(
 
     work, blk = df, F.lit(0)
     if num_blocks > 1:
-        qs = [i / num_blocks for i in range(1, num_blocks)]
+        qs = ", ".join(f"{i / num_blocks!r}D" for i in range(1, num_blocks))
         bounds = df.agg(
-            F.percentile_approx(
-                order_view, F.array(*[F.lit(q) for q in qs]), F.lit(10000)
-            ).alias("__breaks")
+            F.expr(f"percentile_approx({order_view}, array({qs}), 10000)").alias("__breaks")
         )
-        work = df.withColumn("__ord", order_view)
+        work = df.withColumn("__ord", F.expr(order_view))
         if one_task:
             work = one_partition_cartesian(work, bounds)
         else:
@@ -217,14 +223,10 @@ def blocked_scan(
     if missing_block is not None:
         blk = F.when(missing_block[0], F.lit(missing_block[1])).otherwise(blk)
     work = work.withColumn("__blk", blk.cast("int")).drop("__breaks", "__ord")
-
-    staged = spec.local(work, keys, one_task)
     if one_task:
-        staged = staged.coalesce(1)
-    carries = (staged if spec.carry_on_local else work).groupBy(*keys).agg(
-        *[c.alias(name) for name, c in spec.carry.items()]
-    )
+        work = materialize_shared(work).coalesce(1)
 
+    carries = work.groupBy(*keys).agg(*[c.alias(name) for name, c in spec.carry.items()])
     arr = F.array_sort(F.collect_list(F.struct("__blk", *spec.carry)))
     if spec.descending:
         arr = F.reverse(arr)
@@ -253,7 +255,6 @@ def blocked_scan(
     # one-task: both sides are one partition, so a shuffle-hash join
     # needs no exchange (a broadcast would be a job of its own)
     states = states.hint("shuffle_hash") if one_task else F.broadcast(states)
-    joined = staged.join(states, [*on, F.col("__blk") == F.col("__sblk")], "left")
-    total = F.col("__tot") if spec.total else None
+    seeded = work.join(states, [*on, F.col("__blk") == F.col("__sblk")], "left")
     cols = [c for c in df.columns if c != spec.out]
-    return joined.withColumn(spec.out, spec.combine(F.col("__st"), total)).select(*cols, spec.out)
+    return spec.local(seeded, keys, one_task).select(*cols, spec.out)

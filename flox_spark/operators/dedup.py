@@ -125,36 +125,6 @@ def _shingles_from_tokens(toks: Column, k: int) -> Column:
     return F.when(n >= k, shingles).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def _shingle_expr(text: Column, k: int, unit: str = "word") -> Column:
-    """k-shingles of lower-cased text; docs shorter than k units
-    produce their full content as the one shingle.  Pure array
-    expressions — no UDF.  ``unit``: 'word' (whitespace tokens) or
-    'char' (overlapping character k-grams, the classic dedup choice
-    for languages without whitespace segmentation).
-
-    NOTE (perf): prefer staging ``_word_tokens`` in its own select and
-    calling ``_shingles_from_tokens``.  This convenience form inlines
-    the tokenizer into the shingle lambda, so it deliberately keeps
-    the single-slice body: k per-element token lookups would
-    re-evaluate the inline split k times per shingle (measured 6x
-    slower at k=13), while one slice re-evaluates it once."""
-    if unit == "char":
-        t = F.lower(F.trim(text))
-        n = F.length(t)
-        shingles = F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: t.substr(i, F.lit(k)),
-        )
-        return F.when(n >= k, shingles).otherwise(F.array(t))
-    toks = _word_tokens(text)
-    n = F.size(toks)
-    shingles = F.transform(
-        F.sequence(F.lit(1), n - k + 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
-    return F.when(n >= k, shingles).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
 def doc_shingles(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3, unit: str = "word"
 ) -> DataFrame:

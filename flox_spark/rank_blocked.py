@@ -12,7 +12,7 @@ VALUE blocks, exactly like a cumsum decomposes over an order column:
 - carry: rows, dense levels and missing rows per block;
 - fold: elementwise sums from zero (plus a has-missing max); the
   inclusive group total gives the ``pct`` divisors;
-- combine: local rank + the earlier blocks' rows (dense: levels).
+- seed: local rank + the earlier blocks' rows (dense: levels).
 
 ``block(v) = #{breaks < v}`` is monotone in the rank order, so block
 i's ranks all precede block i+1's and — the property every method's
@@ -22,7 +22,7 @@ are block-local.  Missing values get a dedicated block placed per
 ``keep``/``bottom``), which makes every block pure and keeps the
 missing tie-block semantics of the one-window form.
 
-Results equal ``groupby_rank`` EXACTLY (bitwise — the combine is
+Results equal ``groupby_rank`` EXACTLY (bitwise — the seeding is
 integer-valued double arithmetic plus the same half/divisor terms);
 ``tests/test_rank_blocked.py`` pins the full method x na_option x
 pct x ascending matrix differentially plus a hypothesis fuzz.  Use
@@ -73,23 +73,6 @@ def groupby_rank_blocked(
     miss = F.expr(f"CAST({miss_sql} AS BIGINT)")
     vsort = vord.asc() if ascending else vord.desc()
 
-    def local(work, keys, _one_task):
-        # within a pure block the one-window form's (mkey, vord[,
-        # order_by]) order is vord alone (missing blocks are all peers)
-        order = [vsort, F.col(order_by).asc()] if method == "first" else [vsort]
-        w = Window.partitionBy(*keys).orderBy(*order)
-        if method == "first":
-            return work.withColumn("__local", F.row_number().over(w).cast("double"))
-        if method == "dense":
-            return work.withColumn("__local", F.dense_rank().over(w).cast("double"))
-        # SQL peer-group frame over the same sort (groupby_rank's
-        # trick): tied values never cross blocks, so this is the
-        # GLOBAL tie-block size
-        peer = F.count(F.lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow))
-        return work.select(
-            "*", F.rank().over(w).cast("double").alias("__local"), peer.alias("__peer")
-        )
-
     # carry "__c": the block's rows, or for dense its levels (distinct
     # non-missing values, plus 1 for the missing block: its NULL
     # tie-block is one dense level).  pct with na_option="keep" also
@@ -110,9 +93,11 @@ def groupby_rank_blocked(
         m = F.greatest(s["m"], b["__m"]) if dense else s["m"] + b["__m"]
         return F.struct(c, m.alias("m"))
 
-    def combine(st, tot):
-        # integer-valued double arithmetic — bitwise identical to the
-        # one-window form's rank values
+    def seeded():
+        # the local rank plus the earlier blocks' rows (dense: levels)
+        # from the fold state: integer-valued double arithmetic —
+        # bitwise identical to the one-window form's rank values
+        st, tot = F.col("__st"), F.col("__tot")
         expr = F.col("__local") + st["c"].cast("double")
         if method == "max":
             expr = expr + (F.col("__peer") - F.lit(1)).cast("double")
@@ -126,13 +111,30 @@ def groupby_rank_blocked(
             expr = expr / denom.cast("double")
         return expr
 
+    def local(work, keys, _one_task):
+        # within a pure block the one-window form's (mkey, vord[,
+        # order_by]) order is vord alone (missing blocks are all peers)
+        order = [vsort, F.col(order_by).asc()] if method == "first" else [vsort]
+        w = Window.partitionBy(*keys).orderBy(*order)
+        if method in ("first", "dense"):
+            rank = F.row_number() if method == "first" else F.dense_rank()
+            ranked = work.withColumn("__local", rank.over(w).cast("double"))
+        else:
+            # SQL peer-group frame over the same sort (groupby_rank's
+            # trick): tied values never cross blocks, so this is the
+            # GLOBAL tie-block size
+            peer = F.count(F.lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow))
+            ranked = work.select(
+                "*", F.rank().over(w).cast("double").alias("__local"), peer.alias("__peer")
+            )
+        return ranked.withColumn(out, seeded())
+
     spec = BlockedSpec(
         out=out,
         local=local,
         carry=carry,
         identity=F.struct(*[F.lit(0).cast("long").alias(f) for f in fields]),
         fold=fold,
-        combine=combine,
         descending=not ascending,
         total=pct,
     )
@@ -141,6 +143,6 @@ def groupby_rank_blocked(
     # everything for 'top', after for 'keep'/'bottom'
     miss_last = (na_option != "top") == ascending
     return blocked_scan(
-        df, by, vord, spec, num_blocks,
+        df, by, vord_sql, spec, num_blocks,
         missing_block=(missing, num_blocks if miss_last else -1),
     )

@@ -12,8 +12,8 @@ from ``scan._cumulative_scan`` — the window plan's own expressions:
   identity), e.g. ``sum`` / ``product`` / ``count`` / ``max``, a
   "missing seen" max for the NaN-poisoning ``cumsum``/``cumprod``, and
   the last non-missing value in order for the fills;
-- fold and combine: the channel's ``op`` (``+``, ``*``, ``greatest``,
-  ``least``, ``coalesce(later, earlier)``) — ``combine = op(state,
+- fold and seed: the channel's ``op`` (``+``, ``*``, ``greatest``,
+  ``least``, ``coalesce(later, earlier)``) — each row is ``op(state,
   local)`` then the scan's own ``finish`` (poison, dtype restore).
 
 ``bfill`` runs over the reversed order, so its blocks fold from the
@@ -68,14 +68,17 @@ def groupby_scan_blocked(
         for i, ch in enumerate(cs.channels)
     ]
 
+    out, st = alias or func, F.col("__st")
+
     def local(work, keys, _one_task):
         w = Window.partitionBy(*keys).orderBy(o.desc() if cs.reverse else o).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
-        return work.select("*", *[ch.scan(w).alias(ln) for _, ln, ch, _ in chans])
+        scanned = work.select("*", *[ch.scan(w).alias(ln) for _, ln, ch, _ in chans])
+        return scanned.withColumn(out, cs.finish([ch.op(st[cn], F.col(ln)) for cn, ln, ch, _ in chans]))
 
     spec = BlockedSpec(
-        out=alias or func,
+        out=out,
         local=local,
         carry={
             cn: F.coalesce(ch.carry(o) if ch.carry else ch.run, ident)
@@ -83,8 +86,7 @@ def groupby_scan_blocked(
         },
         identity=F.struct(*[ident.alias(cn) for cn, _, _, ident in chans]),
         fold=lambda s, b: F.struct(*[ch.op(s[cn], b[cn]).alias(cn) for cn, _, ch, _ in chans]),
-        combine=lambda s, _: cs.finish([ch.op(s[cn], F.col(ln)) for cn, ln, ch, _ in chans]),
         descending=cs.reverse,
     )
     onum, _ = sql_arith_input(sql_quote(order_by), df.schema[order_by].dataType)
-    return blocked_scan(df, by, F.expr(onum), spec, num_blocks)
+    return blocked_scan(df, by, onum, spec, num_blocks)

@@ -12,7 +12,7 @@ rows, so
 - fold: "concat, keep the tail" from the empty array — associative,
   tiny, and exact (shift copies values; no arithmetic drift is
   possible, so the blocked form is BITWISE equal to the window form);
-- combine: the first ``periods`` rows of each block read from the
+- seed: the first ``periods`` rows of each block read from the
   carried tail.
 
 Negative ``periods`` (lead) mirrors every direction: the "previous"
@@ -72,17 +72,14 @@ def groupby_shift_blocked(
     def local(work, keys, _one_task):
         # a lead is a lag over the reversed order
         w = Window.partitionBy(*keys).orderBy(o.asc() if ascending else o.desc())
-        return work.select("*", F.lag(v, p).over(w).alias("__lagged"), F.row_number().over(w).alias("__rn"))
-
-    def combine(prev, _):
+        lagged = work.select("*", F.lag(v, p).over(w).alias("__lagged"), F.row_number().over(w).alias("__rn"))
         # rows whose local position <= p read from the carried tail
-        # (``prev``: the fold state, the joined-back __st column);
-        # index from its END (its last element is the row immediately
-        # before the block in lag direction)
+        # (the fold state __st); index from its END (its last element
+        # is the row immediately before the block in lag direction)
         idx = f"size(__st) - {p} + __rn"
         from_prev = f"CASE WHEN {idx} >= 1 THEN element_at(__st, {idx}).v END"
-        lagged = f"CASE WHEN __rn > {p} THEN __lagged ELSE {from_prev} END"
-        return _lag_finish(func, qv, lagged, vdt)
+        seeded = f"CASE WHEN __rn > {p} THEN __lagged ELSE {from_prev} END"
+        return lagged.withColumn(out, _lag_finish(func, qv, seeded, vdt))
 
     otype = df.schema[order_by].dataType.simpleString()
     spec = BlockedSpec(
@@ -93,8 +90,7 @@ def groupby_shift_blocked(
         ))},
         identity=F.array().cast(f"array<struct<o: {otype}, v: {vdt.simpleString()}>>"),
         fold=lambda s, b: tail(F.concat(s, b["__tail"])),
-        combine=combine,
         descending=not ascending,
     )
     onum, _ = sql_arith_input(sql_quote(order_by), df.schema[order_by].dataType)
-    return blocked_scan(df, by, F.expr(onum), spec, num_blocks)
+    return blocked_scan(df, by, onum, spec, num_blocks)

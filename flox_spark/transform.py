@@ -163,16 +163,17 @@ def groupby_apply_batched(
 
 
 def _apply_batched(df, keys, fn, schema, order_by, drop_missing_labels=True, shuffle=True):
-    """``groupby_apply_batched``'s plan.  ``shuffle=False`` skips the
-    hash repartition on ``keys``: for a ONE-partition input (the
-    one-task plans, ``plans.util.one_task_if_small``) every group is
-    already whole in its partition, so the exchange buys nothing."""
+    """``groupby_apply_batched``'s plan.  ``order_by`` may also be a
+    list of columns (ties broken by the later ones).  ``shuffle=False``
+    skips the hash repartition on ``keys``: for a ONE-partition input
+    (the one-task plans, ``plans.util.one_task_if_small``) every group
+    is already whole in its partition, so the exchange buys nothing."""
     from flox_spark.dtypes import drop_missing
 
     work = drop_missing(df, keys) if drop_missing_labels else df
     if shuffle:
         work = work.repartition(*[F.col(k) for k in keys])
-    sort_cols = [*keys, order_by] if order_by else keys
+    sort_cols = [*keys, *([order_by] if isinstance(order_by, str) else order_by or [])]
     work = work.sortWithinPartitions(*[F.col(c) for c in sort_cols])
 
     def run(batches):

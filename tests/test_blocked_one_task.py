@@ -2,13 +2,18 @@
 
 A small input runs ``blocked_route.blocked_scan`` as one task
 (``plans.util.one_task_if_small``): the breaks cross as a
-one-partition cartesian, the states join back by a shuffle-hash join
-of two one-partition sides, and the EWM local pass skips its hash
+one-partition cartesian, the block input is built once (a lazy local
+checkpoint), the states join it by a shuffle-hash join of two
+one-partition sides, and the EWM local pass skips its hash
 repartition.  At test sizes that branch hides the distributed one, so
 every blocked operator runs here twice — the bound at its default and
 pinned to 0 — over cached float, int and NULL-key frames, and the two
 must give the same rows.  The one-task side must also plan no
-``Exchange`` and run a forced ``plan="blocked"`` call as one job.
+``Exchange``.  Its plan text stops at the checkpoint, so a freshly
+built forced ``plan="blocked"`` call must also run as one job of one
+stage: the job that fills the checkpoint runs its subtree, and any
+exchange there would add a stage.  Every blocked EWM plan runs its
+pandas kernel once: one ``MapInPandas`` on both branches.
 """
 
 from __future__ import annotations
@@ -102,17 +107,17 @@ def _same(a, b) -> bool:
     return a == b and type(a) is type(b)
 
 
-def _noop_jobs(spark, df) -> int:
-    """Jobs of one warm noop-sink execution of ``df``."""
+def _noop_jobs_stages(spark, build) -> tuple[int, int]:
+    """Jobs and stages of building ``build()`` and running it once into
+    a noop sink, after one warm-up build and run.  Each build is fresh,
+    so the measured run fills its own checkpoint and a job fired while
+    building counts too."""
     st = spark.sparkContext.statusTracker()
-
-    def run():
-        df.write.format("noop").mode("overwrite").save()
-
-    run()  # warm: plan and caches
+    build().write.format("noop").mode("overwrite").save()  # warm: caches
     before = set(st.getJobIdsForGroup(None))
-    run()
-    return len(set(st.getJobIdsForGroup(None)) - before)
+    build().write.format("noop").mode("overwrite").save()
+    jobs = set(st.getJobIdsForGroup(None)) - before
+    return len(jobs), sum(len(st.getJobInfo(j).stageIds) for j in jobs)
 
 
 def _plan(res) -> str:
@@ -126,17 +131,23 @@ def test_blocked_one_task_and_distributed_rows_identical(spark, monkeypatch):
         one_task = []
         for name, fr, call in cases:
             res = call(frames[fr])
-            assert "Exchange" not in _plan(res), (name, fr, _plan(res))
+            plan = _plan(res)
+            assert "Exchange" not in plan, (name, fr, plan)
+            assert plan.count("MapInPandas") == name.startswith("ewm."), (name, fr, plan)
             one_task.append(_rows(res))
-        # one job per forced blocked call, one operator of each kind
+        # one job of one stage per forced blocked call, one operator of
+        # each kind
         for name, fr, call in cases:
             if name in ("scan.cumsum", "diff.-2", "rank.average.keep.pct1.asc1", "ewm.var.adjust1"):
-                assert _noop_jobs(spark, call(frames[fr])) == 1, (name, fr)
+                got = _noop_jobs_stages(spark, lambda: call(frames[fr]))
+                assert got == (1, 1), (name, fr, got)
 
         monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", 0)
         for (name, fr, call), small in zip(cases, one_task):
             res = call(frames[fr])
-            assert "Exchange hashpartitioning" in _plan(res), (name, fr)  # the distributed branch
+            plan = _plan(res)
+            assert "Exchange hashpartitioning" in plan, (name, fr)  # the distributed branch
+            assert plan.count("MapInPandas") == name.startswith("ewm."), (name, fr, plan)
             dist = _rows(res)
             assert len(small) == len(dist), (name, fr)
             bad = [(a, b) for a, b in zip(small, dist)

@@ -178,15 +178,15 @@ def test_blocked_ewm_adjust_false_hand_golden(spark):
 
 @pytest.mark.parametrize("adj", [True, False])
 @pytest.mark.parametrize("ign", [False, True])
-def test_blocked_ewm_tied_order_carry(spark, ign, adj):
+def test_blocked_ewm_tied_order_carry(spark, monkeypatch, ign, adj):
     # r13 ADVICE (high) regression pin: the stage-2 carry was keyed on
     # order_by, and when the block's max order value was TIED the
     # max-struct picked a NON-final state (cA = base^k is larger for
     # the EARLIER tied row) — silently dropping the later tied rows'
     # contributions from every downstream block's mean.  The carry is
-    # now keyed on processing position.  Equal values among ties make
-    # the expectation order-invariant, so both the differential and
-    # the hand golden are exact.
+    # now an ordered fold over the block's rows.  Equal values among
+    # ties make the expectation order-invariant, so both the
+    # differential and the hand golden are exact.
     pdf = pd.DataFrame({
         "k": ["a"] * 6 + ["b"] * 4,
         "t": [1, 1, 1, 5, 6, 6, 2, 2, 2, 9],
@@ -203,6 +203,7 @@ def test_blocked_ewm_tied_order_carry(spark, ign, adj):
             adjust=adj, num_blocks=nb,
         ))
         _close(want, got)
+    _check_tied_distinct_values(spark, monkeypatch, ign, adj)
     if not adj:
         return
     # hand golden (adjust=True) for the first row after the tie run:
@@ -218,6 +219,43 @@ def test_blocked_ewm_tied_order_carry(spark, ign, adj):
     b = 0.5
     run = b ** 2 + b + 1
     assert abs(got2[("a", 5)] - (1 + b * 10 * run) / (1 + b * run)) < 1e-9
+
+
+def _check_tied_distinct_values(spark, monkeypatch, ign, adj):
+    """Tied order values whose VALUES differ: the fold and the kernel
+    must take a tie run in one order, ``(order_by, value)``, or the
+    block-end state the fold hands on disagrees with the rows the
+    kernel wrote.  The golden is pandas over each group sorted by
+    ``(t, v)``; the missing values sit at order values of their own
+    (pandas sorts NULL last, Spark first).  Both the one-task and the
+    distributed plan."""
+    import flox_spark.plans.util as plan_util
+
+    def key(k, t, v):
+        return k, t, None if v is None or math.isnan(v) else v
+
+    pdf = pd.DataFrame({
+        "k": ["a"] * 9 + ["b"] * 5,
+        "t": [3, 3, 3, 1, 7, 7, 10, 9, 5, 2, 2, 2, 4, 8],
+        "v": [9.0, -4.0, 1.5, 2.0, 6.0, 0.5, None, 3.0, 8.0,
+              5.0, 1.0, -2.0, float("nan"), 7.0],
+    })
+    want = {}
+    for k, seg in pdf.sort_values(["k", "t", "v"]).groupby("k"):
+        y = seg["v"].ewm(alpha=0.5, adjust=adj, ignore_na=ign).mean()
+        want.update({key(k, t, v): w for t, v, w in zip(seg["t"], seg["v"], y)})
+    df = spark.createDataFrame(pdf)
+    for bound in (plan_util.SMALL_INPUT_MAX_BYTES, 0):
+        monkeypatch.setattr(plan_util, "SMALL_INPUT_MAX_BYTES", bound)
+        for nb in (2, 3, 5):
+            got = groupby_ewm_blocked(
+                df, "k", value="v", order_by="t", alpha=0.5, ignore_na=ign,
+                adjust=adj, num_blocks=nb,
+            ).collect()
+            assert len(got) == len(want)
+            for r in got:
+                w = want[key(r["k"], r["t"], r["v"])]
+                assert r["ewm_mean"] == pytest.approx(w, rel=1e-9), (bound, nb, r, w)
 
 
 # ---- hypothesis fuzz ----

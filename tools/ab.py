@@ -11,17 +11,23 @@ around every run.
     python tools/ab.py --parent ../parent --change . --workload reduce_small \\
         --pairs 10 --seed0 100
     python tools/ab.py ... --trace 1        # per-layer metrics
+    python tools/ab.py ... --per-query      # which queries moved
 
 Per workload and metric it prints each side's median and quartiles,
 the number of pairs the change won (the direction comes from the
 change's ``BENCHMARK.json``; metrics it does not list are printed
-without a win count) and the steal share per side.  ``--out FILE``
-keeps every run's record as JSON.
+without a win count) and the steal share per side.  ``--per-query``
+also reads each run's own record (the newest
+``.perfbench_out/<workload>-s<seed>-t<trace>-*.json`` in that
+checkout) and prints every query's median wall per side, so a claim
+can name the queries that moved.  ``--out FILE`` keeps every run's
+record as JSON.
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import statistics
@@ -40,8 +46,20 @@ def read_steal() -> tuple[int, int]:
     return vals[7] if len(vals) > 7 else 0, sum(vals[:8])
 
 
+def query_medians(checkout: str, workload: str, seed: int, trace: int) -> dict[str, float]:
+    """Each query's median wall in the run's own record: the newest
+    ``.perfbench_out`` file of this workload, seed and trace mode."""
+    paths = glob.glob(os.path.join(checkout, ".perfbench_out", f"{workload}-s{seed}-t{trace}-*.json"))
+    paths = [p for p in paths if not p.endswith(".spans.json")]
+    if not paths:
+        return {}
+    with open(max(paths, key=os.path.getmtime)) as fh:
+        walls = json.load(fh)["per_query_s"]["traced" if trace else "untraced"]
+    return {name: statistics.median(ws) for name, ws in walls.items() if ws}
+
+
 def run_one(checkout: str, workload: str, seed: int, seconds: float, trace: int,
-            timeout: float) -> dict:
+            timeout: float, per_query: bool = False) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     s0, t0 = read_steal()
@@ -58,6 +76,8 @@ def run_one(checkout: str, workload: str, seed: int, seconds: float, trace: int,
     res = json.loads(lines[-1])
     rec.update(correct=res["correct"], attempted=res["attempted"], failed=res["failed"],
                metrics={k: v["value"] for k, v in res["metrics"].items()})
+    if per_query:
+        rec["per_query"] = query_medians(checkout, workload, seed, trace)
     return rec
 
 
@@ -108,6 +128,16 @@ def report(workload: str, pairs: list[tuple[dict, dict]], better: dict[str, str]
         else:
             wins = "-"
         print(f"{name:34} {fmt(pq):>30} {fmt(cq):>30} {wins:>6}")
+    queries = sorted(set(ok[0][0].get("per_query", {})) & set(ok[0][1].get("per_query", {})))
+    if queries:
+        print(f"\n{'query (median wall, s)':34} {'parent med [q1, q3]':>30} "
+              f"{'change med [q1, q3]':>30} {'faster':>6}")
+    for q in queries:
+        both = [(p["per_query"][q], c["per_query"][q]) for p, c in ok
+                if q in p.get("per_query", {}) and q in c.get("per_query", {})]
+        pq = quartiles([p for p, _ in both])
+        cq = quartiles([c for _, c in both])
+        print(f"{q:34} {fmt(pq):>30} {fmt(cq):>30} {sum(c < p for p, c in both)}/{len(both):<4}")
 
 
 def main(argv=None) -> int:
@@ -121,6 +151,8 @@ def main(argv=None) -> int:
     p.add_argument("--seconds", type=float, default=10.0)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--timeout", type=float, default=900.0, help="per run, seconds")
+    p.add_argument("--per-query", action="store_true",
+                   help="also print every query's median wall per side")
     p.add_argument("--out", help="write every run's record here (JSON)")
     args = p.parse_args(argv)
 
@@ -134,7 +166,8 @@ def main(argv=None) -> int:
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             got = {}
             for side in order:
-                got[side] = run_one(sides[side], wl, seed, args.seconds, args.trace, args.timeout)
+                got[side] = run_one(sides[side], wl, seed, args.seconds, args.trace, args.timeout,
+                                    args.per_query)
                 r = got[side]
                 geo = r.get("metrics", {}).get("latency_geomean_s")
                 print(f"[{wl} pair {i + 1}/{args.pairs} seed {seed}] {side:>6}: "
