@@ -129,18 +129,21 @@ class BlockedSpec:
       call uses;
     - ``identity`` and ``fold(state, block)``: the associative fold of
       carries; ``block`` is a struct with the carry names as fields;
-    - ``local(work, keys, one_task)``: the in-block pass over ``keys``
-      = ``[*by, "__blk"]``, seeded: ``work`` already holds ``__st``, the
-      exclusive fold of the earlier blocks (and ``__tot``, the
-      inclusive group total, when ``total``), and the pass adds the
-      per-row ``out`` column.  ``one_task`` says ``work`` is one
-      partition, so the pass needs no exchange and no broadcast.
+    - ``local(work, keys, one_task, seed)``: the in-block pass over
+      ``keys`` = ``[*by, "__blk"]``, adding the per-row ``out`` column.
+      ``seed(frame)`` joins ``__st``, the exclusive fold of the earlier
+      blocks (and ``__tot``, the inclusive group total, when ``total``),
+      onto any frame that keeps ``keys``: a window pass seeds AFTER its
+      window, so the state rides no exchange or sort, while a kernel
+      that reads the state (EWM) seeds its input.  ``one_task`` says
+      ``work`` is one partition, so the pass needs no exchange and no
+      broadcast.
 
     ``descending`` folds blocks from the last to the first (reversed
     scans, leads, descending ranks)."""
 
     out: str
-    local: Callable[[DataFrame, list[str], bool], DataFrame]
+    local: Callable[[DataFrame, list[str], bool, Callable[[DataFrame], DataFrame]], DataFrame]
     carry: dict[str, Column]
     identity: Column
     fold: Callable[[Column, Column], Column]
@@ -165,11 +168,13 @@ def blocked_scan(
         stage 0  equal-population blocks: approx-quantile breaks of
                  ``order_view`` (a lazy broadcast aggregate, no driver
                  action); __blk = #{breaks < order_view}: ``work``
-        stage 1  per-(key, __blk) carry aggregate over ``work``  [small]
+        stage 1  per-(key, __blk) carry aggregate over ``work``  [small,
+                 except EWM's ordered fold: its collect_list ships
+                 every row]
         stage 2  exclusive fold of carries over blocks per key: one
                  F.aggregate over the collected block array  [tiny]
-        stage 3  broadcast-join the states onto ``work``; the seeded
-                 local pass within (key, __blk)  [big shuffle, split]
+        stage 3  the local pass within (key, __blk), seeded by a
+                 broadcast join of the states  [big shuffle, split]
 
     ``work`` feeds stages 1 and 3, so the distributed plan computes it
     twice (a scan and a broadcast cross join: no shuffle).
@@ -188,7 +193,10 @@ def blocked_scan(
     branch, so it is built once (``plans.util.materialize_shared``, a
     lazy local checkpoint filled by the query's own job) and
     re-coalesced, because a checkpointed frame reports no
-    partitioning.  The whole plan is one job.
+    partitioning.  The whole plan is one job, and its result is
+    checkpoint-backed: running the returned frame again reads the
+    filled checkpoint instead of recomputing ``df``, and a caller's
+    column pruning stops at it.
 
     The block function is monotone in ``order_view`` — block i's rows
     all precede block i+1's and tied values share one block — so blocks
@@ -255,6 +263,9 @@ def blocked_scan(
     # one-task: both sides are one partition, so a shuffle-hash join
     # needs no exchange (a broadcast would be a job of its own)
     states = states.hint("shuffle_hash") if one_task else F.broadcast(states)
-    seeded = work.join(states, [*on, F.col("__blk") == F.col("__sblk")], "left")
+
+    def seed(frame: DataFrame) -> DataFrame:
+        return frame.join(states, [*on, F.col("__blk") == F.col("__sblk")], "left")
+
     cols = [c for c in df.columns if c != spec.out]
-    return spec.local(seeded, keys, one_task).select(*cols, spec.out)
+    return spec.local(work, keys, one_task, seed).select(*cols, spec.out)

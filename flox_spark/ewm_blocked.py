@@ -118,7 +118,10 @@ def groupby_ewm_blocked(
     ``Sw * x2 / (Sw^2 - Sw2)``, with the squared weights' sum ``Sw2``
     an ewm over the valid indicator at alpha' = 1-(1-a)^2).
     adjust=False var/std stay on ``groupby_ewm``'s per-group kernel
-    (the renormalized second moment has no clean affine form)."""
+    (the renormalized second moment has no clean affine form).
+    On a small input (``blocked_scan``'s one-task plan) the result is
+    checkpoint-backed: running the returned frame again reads the
+    stored block input instead of recomputing ``df``."""
     if func not in ("mean", "var", "std"):
         raise ValueError(f"func must be mean|var|std, got {func!r}")
     if func != "mean" and not adjust:
@@ -153,10 +156,10 @@ def groupby_ewm_blocked(
         y = kernel(pdf, codes, pdf[value].astype("float64"))
         return pdf[[f.name for f in kept]].assign(**{out: y})
 
-    def local(work, keys, one_task):
+    def local(work, keys, one_task, seed):
         st = [F.expr(f"__st.{f} AS __s_{f}") for f in state]
         return _apply_batched(
-            work.select(*in_names, "__blk", *st), keys, fn, schema, [order_by, value],
+            seed(work).select(*in_names, "__blk", *st), keys, fn, schema, [order_by, value],
             shuffle=not one_task,
         )
 

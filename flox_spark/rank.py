@@ -99,7 +99,9 @@ def groupby_rank(
     bitwise-equal ``groupby_rank_blocked`` runs — the WindowExec's
     parallelism is bound by group-key cardinality, so a few-groups
     giant table would serialize one group's whole sort on one core.
-    ``"window"``/``"blocked"`` force a strategy.
+    ``"window"``/``"blocked"`` force a strategy.  A forced
+    ``"blocked"`` on a small input returns a checkpoint-backed frame
+    (see ``blocked_route.blocked_scan``).
     """
     _check_args(method, na_option, order_by)
     vdt = df.schema[value].dataType

@@ -58,7 +58,10 @@ def groupby_rank_blocked(
 
     Same parameters and output as ``groupby_rank`` plus
     ``num_blocks`` — the value-range split width, i.e. the rank's
-    parallelism floor regardless of how few groups there are."""
+    parallelism floor regardless of how few groups there are.
+    On a small input (``blocked_scan``'s one-task plan) the result is
+    checkpoint-backed: running the returned frame again reads the
+    stored block input instead of recomputing ``df``."""
     _check_args(method, na_option, order_by)
     vdt = df.schema[value].dataType
     if not _blockable(vdt):
@@ -111,7 +114,7 @@ def groupby_rank_blocked(
             expr = expr / denom.cast("double")
         return expr
 
-    def local(work, keys, _one_task):
+    def local(work, keys, _one_task, seed):
         # within a pure block the one-window form's (mkey, vord[,
         # order_by]) order is vord alone (missing blocks are all peers)
         order = [vsort, F.col(order_by).asc()] if method == "first" else [vsort]
@@ -127,7 +130,7 @@ def groupby_rank_blocked(
             ranked = work.select(
                 "*", F.rank().over(w).cast("double").alias("__local"), peer.alias("__peer")
             )
-        return ranked.withColumn(out, seeded())
+        return seed(ranked).withColumn(out, seeded())
 
     spec = BlockedSpec(
         out=out,

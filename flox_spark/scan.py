@@ -192,7 +192,9 @@ def groupby_scan(
     parallelism is num_blocks per group instead of one task per
     group.  ``"window"``/``"blocked"`` force a strategy (blocked
     raises for custom ``Scan`` specs — their window expressions have
-    no generic carry decomposition).
+    no generic carry decomposition).  A forced ``"blocked"`` on a
+    small input returns a checkpoint-backed frame (see
+    ``blocked_route.blocked_scan``).
 
     Supported funcs (flox SCANS registry, flox/aggregations.py:849-878):
 
@@ -336,12 +338,14 @@ def groupby_ewm(
     plan stats say rows-per-group crosses the measured blocked
     crossover (``blocked_route.route_to_blocked``;
     OPTIONS["blocked_route_ewm_rows"]) AND the call is in
-    ``groupby_ewm_blocked``'s scope (func="mean", both adjust
-    modes) — then
+    ``groupby_ewm_blocked``'s scope (func="mean" in both adjust
+    modes, var/std with adjust=True) — then
     the blocked linear-recurrence form runs, which also lifts this
     hatch's whole-group-in-one-worker memory wall.
     ``"window"``/``"blocked"`` force a strategy ("window" here
-    meaning this one-kernel-per-group form)."""
+    meaning this one-kernel-per-group form).  A forced ``"blocked"``
+    on a small input returns a checkpoint-backed frame (see
+    ``blocked_route.blocked_scan``)."""
     import pandas as pd  # noqa: F401 — worker-side dependency
 
     if sum(x is not None for x in (alpha, halflife, span)) != 1:

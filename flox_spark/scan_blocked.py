@@ -56,6 +56,12 @@ def groupby_scan_blocked(
     num_blocks: int = 32,
     alias: str | None = None,
 ) -> DataFrame:
+    """``groupby_scan`` for the cumulative funcs through the blocked
+    plan: same semantics and output shape, plus ``num_blocks`` — the
+    order-range split width.  On a small input (``blocked_scan``'s
+    one-task plan) the result is checkpoint-backed: running the
+    returned frame again reads the stored block input instead of
+    recomputing ``df``."""
     if func not in _SUPPORTED:
         raise ValueError(f"blocked scan supports {_SUPPORTED}, not {func!r}")
     vdt = df.schema[value].dataType
@@ -70,11 +76,11 @@ def groupby_scan_blocked(
 
     out, st = alias or func, F.col("__st")
 
-    def local(work, keys, _one_task):
+    def local(work, keys, _one_task, seed):
         w = Window.partitionBy(*keys).orderBy(o.desc() if cs.reverse else o).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
-        scanned = work.select("*", *[ch.scan(w).alias(ln) for _, ln, ch, _ in chans])
+        scanned = seed(work.select("*", *[ch.scan(w).alias(ln) for _, ln, ch, _ in chans]))
         return scanned.withColumn(out, cs.finish([ch.op(st[cn], F.col(ln)) for cn, ln, ch, _ in chans]))
 
     spec = BlockedSpec(

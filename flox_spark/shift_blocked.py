@@ -53,7 +53,9 @@ def groupby_shift_blocked(
     ``num_blocks`` — the order-range split width, i.e. the scan's
     parallelism floor regardless of how few groups there are.
     ``order_by`` must be non-null (``groupby_scan_blocked``'s
-    contract)."""
+    contract).  On a small input (``blocked_scan``'s one-task plan)
+    the result is checkpoint-backed: running the returned frame again
+    reads the stored block input instead of recomputing ``df``."""
     if func not in _FUNCS:
         raise ValueError(f"blocked shift supports {_FUNCS}, not {func!r}")
     out = alias or func
@@ -69,7 +71,7 @@ def groupby_shift_blocked(
     def tail(arr: Column) -> Column:
         return F.when(F.size(arr) > p, F.slice(arr, F.size(arr) - F.lit(p) + 1, F.lit(p))).otherwise(arr)
 
-    def local(work, keys, _one_task):
+    def local(work, keys, _one_task, seed):
         # a lead is a lag over the reversed order
         w = Window.partitionBy(*keys).orderBy(o.asc() if ascending else o.desc())
         lagged = work.select("*", F.lag(v, p).over(w).alias("__lagged"), F.row_number().over(w).alias("__rn"))
@@ -79,7 +81,7 @@ def groupby_shift_blocked(
         idx = f"size(__st) - {p} + __rn"
         from_prev = f"CASE WHEN {idx} >= 1 THEN element_at(__st, {idx}).v END"
         seeded = f"CASE WHEN __rn > {p} THEN __lagged ELSE {from_prev} END"
-        return lagged.withColumn(out, _lag_finish(func, qv, seeded, vdt))
+        return seed(lagged).withColumn(out, _lag_finish(func, qv, seeded, vdt))
 
     otype = df.schema[order_by].dataType.simpleString()
     spec = BlockedSpec(

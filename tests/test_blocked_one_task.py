@@ -13,7 +13,9 @@ must give the same rows.  The one-task side must also plan no
 built forced ``plan="blocked"`` call must also run as one job of one
 stage: the job that fills the checkpoint runs its subtree, and any
 exchange there would add a stage.  Every blocked EWM plan runs its
-pandas kernel once: one ``MapInPandas`` on both branches.
+pandas kernel once: one ``MapInPandas`` on both branches.  The window
+passes (scan, shift, rank) join the fold state after their window, so
+on the distributed branch no state column rides a hash exchange.
 """
 
 from __future__ import annotations
@@ -124,6 +126,12 @@ def _plan(res) -> str:
     return res._jdf.queryExecution().executedPlan().toString()
 
 
+def _exchange_inputs(plan: str) -> list[str]:
+    """The child line of every hash exchange in ``plan``."""
+    lines = plan.splitlines()
+    return [lines[i + 1] for i, ln in enumerate(lines[:-1]) if "Exchange hashpartitioning" in ln]
+
+
 def test_blocked_one_task_and_distributed_rows_identical(spark, monkeypatch):
     frames = _frames(spark)
     try:
@@ -148,6 +156,10 @@ def test_blocked_one_task_and_distributed_rows_identical(spark, monkeypatch):
             plan = _plan(res)
             assert "Exchange hashpartitioning" in plan, (name, fr)  # the distributed branch
             assert plan.count("MapInPandas") == name.startswith("ewm."), (name, fr, plan)
+            if not name.startswith("ewm."):
+                state = [ln for ln in _exchange_inputs(plan)
+                         if any(c in ln for c in ("__st", "__tot", "_extract_"))]
+                assert not state, (name, fr, state)
             dist = _rows(res)
             assert len(small) == len(dist), (name, fr)
             bad = [(a, b) for a, b in zip(small, dist)

@@ -13,6 +13,7 @@ grows, on synthetic frames built with spark.range (testdata untouched).
 
 Usage: python tools/bench_scale.py [--quick]
        python tools/bench_scale.py --one-task [--quick]   # one-task vs distributed plans
+       python tools/bench_scale.py --blocked-dist [--quick]   # distributed blocked plans
 """
 
 from __future__ import annotations
@@ -196,6 +197,70 @@ def quantile_arrow_zone(spark, quick: bool, runs: int = 5) -> dict:
     return {"runs": runs, "points": out}
 
 
+def _zone_frame(spark, mb: float):
+    """The one-task zone's frame of ``mb`` MB of parquet, and its rows:
+    ~12.5 B per row, a random double ``v``, a 100-value double ``r``, a
+    sequential long ``i`` and the 64-value int key ``k``."""
+    import tempfile
+
+    n = int(mb * (1 << 20) * 2 // 25)
+    path = os.path.join(tempfile.gettempdir(), f"flox_onetask_{mb}mb.parquet")
+    if not os.path.exists(path):
+        spark.range(n).select(
+            (F.col("id") % 64).cast("int").alias("k"),
+            (F.rand(3) * 1000).alias("v"),
+            F.floor(F.rand(5) * 100).alias("r"),
+            F.col("id").alias("i"),
+        ).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path), n
+
+
+def blocked_distributed(spark, quick: bool, runs: int = 3) -> dict:
+    """The blocked plans' distributed shapes, the ones the benchmark
+    workloads never reach (``plans.util.SMALL_INPUT_MAX_BYTES`` pinned
+    to 0): forced ``plan="blocked"`` diff, shift by 50, average rank
+    and EWM mean / adjust=False mean / var over the one-task zone's 16
+    and 64 MB frames (64 groups) and over one group of 4M rows
+    (SCALE.md's giant-group EWM shape).  Each wall is the whole call,
+    build plus a sum of the output into a noop sink, as the median of
+    ``runs`` after one warm-up.  To compare two checkouts, run it in
+    alternating processes from each.  ``--quick``: 16 MB and 1M rows."""
+    import statistics
+
+    import flox_spark.plans.util as plan_util
+    from flox_spark import groupby_ewm, groupby_rank
+    from flox_spark.shift_blocked import groupby_shift_blocked
+
+    def calls(df, o):
+        ewm = {"value": "v", "order_by": o, "alpha": 0.01, "out": "y", "plan": "blocked"}
+        return {
+            "diff": lambda: groupby_scan(df, "k", func="diff", value="v", order_by=o, plan="blocked", alias="y"),
+            "shift50": lambda: groupby_shift_blocked(df, "k", value="v", order_by=o, periods=50, alias="y"),
+            "rank": lambda: groupby_rank(df, "k", value="v", method="average", plan="blocked", out="y"),
+            "ewm_mean": lambda: groupby_ewm(df, "k", **ewm),
+            "ewm_mean_adjust0": lambda: groupby_ewm(df, "k", adjust=False, **ewm),
+            "ewm_var": lambda: groupby_ewm(df, "k", func="var", **ewm),
+        }
+
+    shapes = {f"{mb}mb_64_groups": (_zone_frame(spark, mb)[0], "i") for mb in ((16,) if quick else (16, 64))}
+    n = 1_000_000 if quick else 4_000_000
+    shapes[f"{n}_rows_one_group"] = (synth_events(spark, n, 1), "ord")
+    default, plan_util.SMALL_INPUT_MAX_BYTES = plan_util.SMALL_INPUT_MAX_BYTES, 0
+    out = {}
+    try:
+        for shape, (df, o) in shapes.items():
+            for name, call in calls(df, o).items():
+                walls = []
+                for _ in range(runs + 1):
+                    t0 = time.perf_counter()
+                    call().agg(F.sum("y")).write.format("noop").mode("overwrite").save()
+                    walls.append(time.perf_counter() - t0)
+                out.setdefault(shape, {})[name] = round(statistics.median(walls[1:]), 3)
+    finally:
+        plan_util.SMALL_INPUT_MAX_BYTES = default
+    return {"runs": runs, "cores": spark.sparkContext.defaultParallelism, "walls_s": out}
+
+
 def one_task_zone(spark, quick: bool, runs: int = 5) -> dict:
     """The one-task zone (``plans.util.SMALL_INPUT_MAX_BYTES``, and a
     ``BLOCKED_BOUND_DIVISOR``-th of it for the blocked plans,
@@ -213,7 +278,6 @@ def one_task_zone(spark, quick: bool, runs: int = 5) -> dict:
     distributed plan has cores to spread over.  ``--quick`` keeps the
     two smallest points."""
     import statistics
-    import tempfile
 
     import flox_spark.plans.util as plan_util
     from flox_spark.plans.util import estimate_size_bytes
@@ -230,18 +294,7 @@ def one_task_zone(spark, quick: bool, runs: int = 5) -> dict:
     default = plan_util.SMALL_INPUT_MAX_BYTES
     out = []
     for mb in (0.5, 1) if quick else (0.5, 1, 4, 16, 64):
-        # ~12.5 B of parquet per row: a random double, a 100-value
-        # double, a sequential long and the 64-value key
-        n = int(mb * (1 << 20) * 2 // 25)
-        path = os.path.join(tempfile.gettempdir(), f"flox_onetask_{mb}mb.parquet")
-        if not os.path.exists(path):
-            spark.range(n).select(
-                (F.col("id") % 64).cast("int").alias("k"),
-                (F.rand(3) * 1000).alias("v"),
-                F.floor(F.rand(5) * 100).alias("r"),
-                F.col("id").alias("i"),
-            ).write.mode("overwrite").parquet(path)
-        df = spark.read.parquet(path)
+        df, n = _zone_frame(spark, mb)
 
         def call(name: str, plan: str) -> float:
             plan_util.SMALL_INPUT_MAX_BYTES = bounds[plan]
@@ -1041,6 +1094,10 @@ def main() -> None:
     if "--one-task" in sys.argv:
         spark = get_spark("bench_scale")
         print(json.dumps({"one_task_zone": one_task_zone(spark, quick)}, indent=2))
+        return
+    if "--blocked-dist" in sys.argv:
+        spark = get_spark("bench_scale")
+        print(json.dumps({"blocked_distributed": blocked_distributed(spark, quick)}, indent=2))
         return
     if "--spans" in sys.argv:
         spark = get_spark("bench_scale")
