@@ -372,6 +372,11 @@ def q_minhash_pairs(s, d):
     return minhash_candidates(_t(s, d, "documents"), num_hashes=16, bands=4, shingle_k=3, max_bucket=None, hash_impl="md5")
 
 
+# q_minhash_pairs_xx's candidate call runs uncapped: its literal-id
+# dup-group prefilter is complete only when no bucket is dropped
+_MINHASH_PAIRS_XX_MAX_BUCKET = None
+
+
 def q_minhash_pairs_xx(s, d):
     # production-hash twin of minhash_pairs (xxhash64 longs instead of
     # md5 hex strings).  Cross-engine HASHING is the one thing
@@ -408,11 +413,10 @@ def q_minhash_pairs_xx(s, d):
     # minhash_candidates and once more for the band-shape audit's
     # minhash_band_keys call (two independent actions, two full
     # pipelines; 18 Spark jobs, 3.1-4.3 s wall).  minhash_band_keys
-    # and band_buckets are bit-identical by shared construction
-    # (band_key/minhash_min_exprs are single-sourced), so build the
-    # band keys once, materialize, and feed BOTH the production
-    # self-join (via minhash_candidates(buckets=...)) and the
-    # band-shape aggregate from it.
+    # IS a band_buckets call, so build the band keys once,
+    # materialize, and feed BOTH the production self-join (via
+    # minhash_candidates(buckets=...)) and the band-shape aggregate
+    # from it.
     bk = materialize_shared(
         minhash_band_keys(
             docs, num_hashes=16, bands=4, shingle_k=3, hash_impl="xxhash64"
@@ -420,7 +424,7 @@ def q_minhash_pairs_xx(s, d):
     )
     pair_rows = minhash_candidates(
         docs, num_hashes=16, bands=4, shingle_k=3,
-        max_bucket=None, hash_impl="xxhash64", buckets=bk,
+        max_bucket=_MINHASH_PAIRS_XX_MAX_BUCKET, hash_impl="xxhash64", buckets=bk,
     ).collect()
     pair_set = {(r["id_a"], r["id_b"]) for r in pair_rows}
     n_bad_order = sum(1 for a, b in ((r["id_a"], r["id_b"]) for r in pair_rows) if a >= b)
@@ -429,6 +433,9 @@ def q_minhash_pairs_xx(s, d):
     # the broadcast literal-id frame (the build side must be the tiny
     # side — Spark cannot broadcast the LEFT of an anti join), unknown
     # = literal ids minus known.  No id collect.
+    assert _MINHASH_PAIRS_XX_MAX_BUCKET is None, (
+        "the literal-id dup-group prefilter below needs uncapped buckets"
+    )
     ids = sorted({x for p in pair_set for x in p})
     # duplicate shingle-set groups: prefiltered by the LITERAL pair
     # ids (r15; supersedes the r14 signature-equality rebuild).  Equal
@@ -585,7 +592,7 @@ def q_simhash_xx(s, d):
         "doc_id",
         "simhash",
         F.concat_ws(
-            "\x1f", F.array_sort(F.array_distinct(_word_tokens(F.col("text"))))
+            "\x1f", F.array_sort(F.array_distinct(_word_tokens("text")))
         ).alias("__k"),
     )
     rolled = frame.rollup("__k").agg(
@@ -2106,8 +2113,8 @@ def q_minhash_bands(s, d):
     return minhash_band_keys(_t(s, d, "documents"), num_hashes=16, bands=4, shingle_k=3, hash_impl="md5")
 
 
-# universal-hash minhash (mirrors operators/dedup._minhash_halves +
-# minhash_min_exprs): ONE md5 per shingle, halved into two 32-bit
+# universal-hash minhash (mirrors operators/dedup._minhash_pipeline_sql's
+# halves and min fold): ONE md5 per shingle, halved into two 32-bit
 # ints; seed i's hash is (h1 + i*h2) % p, p the smallest prime > 2^32
 _MINHASH_P = 4294967311
 

@@ -231,18 +231,18 @@ def contamination_report(
     # Tokens are STAGED in their own select (see _word_tokens): the
     # inline form re-splits per shingle — measured ~40% of the cost.
     bench_sh = (
-        benchmark.select(_word_tokens(F.col(btc)).alias("__t"))
-        .select(F.explode(_shingles_from_tokens(F.col("__t"), n)).alias("shingle"))
+        benchmark.select(_word_tokens(btc).alias("__t"))
+        .select(F.explode(_shingles_from_tokens("__t", n)).alias("shingle"))
         .filter(F.col("shingle") != "")
         .distinct()
     )
     corp_sh = (
         ensure_parallelism(corpus)
-        .select(F.col(id_col), _word_tokens(F.col(text_col)).alias("__t"))
+        .select(F.col(id_col), _word_tokens(text_col).alias("__t"))
         .select(
             F.col(id_col),
             F.explode(
-                F.array_distinct(_shingles_from_tokens(F.col("__t"), n))
+                F.array_distinct(_shingles_from_tokens("__t", n))
             ).alias("shingle"),
         )
         .filter(F.col("shingle") != "")
@@ -301,19 +301,19 @@ def decontaminate(
 
         btc = bench_text_col or text_col
         bench_sh = (
-            benchmark.select(_word_tokens(F.col(btc)).alias("__t"))
+            benchmark.select(_word_tokens(btc).alias("__t"))
             .select(
-                F.explode(_shingles_from_tokens(F.col("__t"), n)).alias("shingle")
+                F.explode(_shingles_from_tokens("__t", n)).alias("shingle")
             )
             .filter(F.col("shingle") != "")
             .distinct()
         )
         hits = (
             ensure_parallelism(corpus)
-            .select(F.col(id_col), _word_tokens(F.col(text_col)).alias("__t"))
+            .select(F.col(id_col), _word_tokens(text_col).alias("__t"))
             .select(
                 F.col(id_col),
-                F.explode(_shingles_from_tokens(F.col("__t"), n)).alias("shingle"),
+                F.explode(_shingles_from_tokens("__t", n)).alias("shingle"),
             )
             .filter(F.col("shingle") != "")
             .join(F.broadcast(bench_sh), "shingle", "left_semi")
@@ -445,12 +445,12 @@ def _kgram_windows(
 
     toks = (
         ensure_parallelism(df)
-        .select(F.col(id_col), _word_tokens(F.col(text_col)).alias("__t"))
+        .select(F.col(id_col), _word_tokens(text_col).alias("__t"))
         .filter(F.size("__t") >= k)
     )
     return toks.select(
         F.col(id_col),
-        F.posexplode(_shingles_from_tokens(F.col("__t"), k)).alias("__p0", "__g"),
+        F.posexplode(_shingles_from_tokens("__t", k)).alias("__p0", "__g"),
     ).select(
         F.col(id_col),
         (F.col("__p0") + 1).alias("pos"),
@@ -469,11 +469,11 @@ def _reference_grams(
 
     toks = (
         ensure_parallelism(reference)
-        .select(_word_tokens(F.col(text_col)).alias("__t"))
+        .select(_word_tokens(text_col).alias("__t"))
         .filter(F.size("__t") >= k)
     )
     return (
-        toks.select(F.explode(_shingles_from_tokens(F.col("__t"), k)).alias("__g"))
+        toks.select(F.explode(_shingles_from_tokens("__t", k)).alias("__g"))
         .select(_gram_key(hash_impl, F.col("__g")).alias("__g"))
         .distinct()
     )

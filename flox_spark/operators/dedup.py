@@ -57,22 +57,8 @@ def dedup_exact(
 
 
 # ---------------------------------------------------------------------------
-# shared banding / bucket-cap helpers
+# shared bucket-cap helper
 # ---------------------------------------------------------------------------
-
-
-def band_key(hash_impl: str, cols: list[Column]) -> Column:
-    """One band's bucket key from its member minhash columns (longs):
-    md5 of the '|'-joined decimal renderings (oracle-reproducible —
-    DuckDB casts BIGINT to the same decimal string) or one xxhash64
-    over the longs (production).  Single definition shared by the
-    batch LSH join and the streaming banding so the two can never
-    silently diverge."""
-    if hash_impl == "xxhash64":
-        return F.xxhash64(*cols).cast("string")
-    if hash_impl == "md5":
-        return F.md5(F.concat_ws("|", *cols))
-    raise ValueError(f"hash_impl must be md5|xxhash64, got {hash_impl!r}")
 
 
 def cap_buckets(
@@ -97,60 +83,75 @@ def cap_buckets(
 # ---------------------------------------------------------------------------
 
 
-def _word_tokens(text: Column) -> Column:
-    """Whitespace tokens of lower-cased text — stage this in its OWN
-    select before `_shingles_from_tokens`: a bound attribute reference
-    evaluates the split once per row, while an inline split expression
-    is re-evaluated per shingle inside the transform lambda (measured
-    ~40% of the whole minhash signature cost)."""
-    return F.split(F.lower(F.trim(text)), "\\s+")
+def _bt(name: str) -> str:
+    """Backtick-quote a column name for SQL-text assembly."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _shingles_from_tokens(toks: Column, k: int) -> Column:
+# The tokenizer and the two shingle builders exist once, as SQL text:
+# the minhash pipeline splices them into its CTE and the Column
+# helpers below parse the same strings.  Refs are PRE-QUOTED.
+
+
+def _tokens_sql(text: str) -> str:
+    """Whitespace tokens of lower-cased ``text``."""
+    return f"split(lower(trim({text})), '\\\\s+')"
+
+
+def _word_shingles_sql(toks: str, k: int) -> str:
     """k-shingles from a (pre-staged) token array; docs shorter than
     k tokens produce their full content as the one shingle.  Each
     shingle is built by k direct element lookups + one concat (no
     per-shingle slice allocation — measured ~25% faster)."""
-    n = F.size(toks)
+    parts = ", ' ', ".join(f"{toks}[i{j - 1:+d}]" for j in range(k))
+    return (
+        f"CASE WHEN size({toks}) >= {k} "
+        f"THEN transform(sequence(1, size({toks}) - {k - 1}), i -> concat({parts})) "
+        f"ELSE array(concat_ws(' ', {toks})) END"
+    )
 
-    def one(i: Column) -> Column:
-        parts: list[Column] = []
-        for j in range(k):
-            if j:
-                parts.append(F.lit(" "))
-            parts.append(toks[i - 1 + j])
-        return F.concat(*parts)
 
-    shingles = F.transform(F.sequence(F.lit(1), n - k + 1), one)
-    return F.when(n >= k, shingles).otherwise(F.array(F.concat_ws(" ", toks)))
+def _char_shingles_sql(text: str, k: int) -> str:
+    """Character k-grams of a (pre-staged, normalized) string; strings
+    shorter than k produce themselves as the one shingle."""
+    return (
+        f"CASE WHEN length({text}) >= {k} "
+        f"THEN transform(sequence(1, length({text}) - {k - 1}), i -> substr({text}, i, {k})) "
+        f"ELSE array({text}) END"
+    )
+
+
+def _word_tokens(text_col: str) -> Column:
+    """Whitespace tokens of lower-cased ``text_col`` — stage this in
+    its OWN select before `_shingles_from_tokens`: a bound attribute
+    reference evaluates the split once per row, while an inline split
+    expression is re-evaluated per shingle inside the transform lambda
+    (measured ~40% of the whole minhash signature cost)."""
+    return F.expr(_tokens_sql(_bt(text_col)))
+
+
+def _shingles_from_tokens(toks_col: str, k: int) -> Column:
+    """k-shingles of the staged token-array column ``toks_col``."""
+    return F.expr(_word_shingles_sql(_bt(toks_col), k))
 
 
 def doc_shingles(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3, unit: str = "word"
 ) -> DataFrame:
     """Distinct (id, shingle) pairs — the inverted-index input.
-    Fans out small scans first: shingling+hashing are CPU-bound."""
+    Fans out small scans first: shingling+hashing are CPU-bound.  The
+    char unit stages the normalized text too — an inline
+    lower(trim()) inside the substr lambda re-normalizes the whole
+    string once per character position (the same trap the word
+    branch's token staging closes)."""
     df = ensure_parallelism(df)
     if unit == "word":
-        staged = df.select(F.col(id_col), _word_tokens(F.col(text_col)).alias("__t"))
-        return staged.select(
-            F.col(id_col),
-            F.explode(_shingles_from_tokens(F.col("__t"), k)).alias("shingle"),
-        ).distinct()
-    # char unit: stage the normalized text too — an inline
-    # lower(trim()) inside the substr lambda re-normalizes the whole
-    # string once per character position (the same trap the word
-    # branch's token staging closes)
-    staged = df.select(F.col(id_col), F.lower(F.trim(F.col(text_col))).alias("__c"))
-    t = F.col("__c")
-    n = F.length(t)
-    shingles = F.transform(
-        F.sequence(F.lit(1), n - k + 1), lambda i: t.substr(i, F.lit(k))
-    )
-    expr = F.when(n >= k, shingles).otherwise(F.array(t))
-    return staged.select(
-        F.col(id_col), F.explode(expr).alias("shingle")
-    ).distinct()
+        staged = df.select(F.col(id_col), _word_tokens(text_col).alias("__t"))
+        shingles = _shingles_from_tokens("__t", k)
+    else:
+        staged = df.select(F.col(id_col), F.lower(F.trim(F.col(text_col))).alias("__c"))
+        shingles = F.expr(_char_shingles_sql("__c", k))
+    return staged.select(F.col(id_col), F.explode(shingles).alias("shingle")).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -163,75 +164,10 @@ def doc_shingles(
 MINHASH_P = 4294967311
 
 
-def _minhash_halves(hash_impl: str):
-    """shingle -> struct(h1, h2): the two 32-bit halves of ONE base
-    hash per shingle (md5 hex halves via conv — oracle-reproducible;
-    or the xxhash64 long split — the production default).  Seed-i
-    minhash values derive as (h1 + i*h2) % MINHASH_P (the standard
-    Kirsch-Mitzenmacher double-hashing construction) — 16x fewer hash
-    calls than hashing (seed, shingle) per seed, same LSH guarantees."""
-    if hash_impl == "md5":
-
-        def hp(s: Column) -> Column:
-            m = F.md5(s)
-            return F.struct(
-                F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("h1"),
-                F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("h2"),
-            )
-
-        return hp
-    if hash_impl == "xxhash64":
-
-        def hp(s: Column) -> Column:
-            h = F.xxhash64(s)
-            mask = F.lit(4294967295)  # 2^32 - 1
-            return F.struct(
-                F.shiftright(h, 32).bitwiseAND(mask).alias("h1"),
-                h.bitwiseAND(mask).alias("h2"),
-            )
-
-        return hp
-    raise ValueError(f"hash_impl must be md5|xxhash64, got {hash_impl!r}")
-
-
-def minhash_min_exprs(halves_col: str, num_hashes: int) -> list[Column]:
-    """All ``num_hashes`` per-seed minimums over an array<struct(h1,h2)>
-    column, computed in ONE fold (array-state accumulator:
-    acc[i] = min(acc[i], (h1 + i*h2) % p)) — measured ~25% faster than
-    num_hashes separate array_min passes.  Returned as one aliased
-    column per seed (mh0..mhN); callers must keep the fold in a STAGED
-    select (see minhash_signatures) so it runs once.  Shared by the
-    batch and streaming signature builders so the two can never
-    silently diverge.  The inner two-arg lambda is deliberately the
-    (element, index) form: the index IS the seed."""
-    mins = F.aggregate(
-        F.col(halves_col),
-        F.array_repeat(F.lit(MINHASH_P).cast("long"), num_hashes),
-        lambda acc, x: F.transform(
-            acc, lambda c, i: F.least(c, (x["h1"] + i * x["h2"]) % F.lit(MINHASH_P))
-        ),
-    )
-    return [mins.alias("__mins")]
-
-
-def minhash_seed_cols(mins_col: str, num_hashes: int, prefix: str = "mh") -> list[Column]:
-    """Unpack the fold's array<long> into the mh0..mhN signature
-    columns (cheap element_at projections)."""
-    return [
-        F.element_at(F.col(mins_col), i + 1).alias(f"{prefix}{i}")
-        for i in range(num_hashes)
-    ]
-
-
 # names the staged signature/banding pipeline owns: carrying a column
 # with one of these would silently clobber a staged projection or
 # produce duplicate/ambiguous output columns
 _CARRY_RESERVED = frozenset({"band", "bkey", "__c", "__sh", "__hp", "__mins", "__t"})
-
-
-def _bt(name: str) -> str:
-    """Backtick-quote a column name for SQL-text assembly."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _minhash_pipeline_sql(
@@ -249,43 +185,47 @@ def _minhash_pipeline_sql(
     prefix: str = "mh",
 ) -> DataFrame:
     """The staged signature/banding pipeline as ONE parameterized
-    ``spark.sql`` call — the plan-assembly twin of the Column-built
-    form (bit-identical expressions, same staged-projection CTE
-    boundaries, same physical plan).
+    ``spark.sql`` statement — the only spelling of the minhash
+    family's kernel, run unchanged on batch and streaming frames.
 
-    Why it exists (r14 optimization): assembling the staged pipeline
-    through DataFrame selects costs ~0.5 s of py4j + per-select
-    analysis per build (measured: a 32-column ``.select`` alone is
-    ~160 ms; the same projection inside one ``spark.sql`` is ~20 ms,
-    the whole banding CTE ~120 ms) — a fixed per-plan-build cost paid
-    by every member of the minhash family.  One SQL string analyzes
-    once.  The seed_centroids SQL-string conversion (r13) is the
-    in-repo precedent.
+    Universal-hash minhash: each shingle gets ONE base hash split into
+    two 32-bit halves (h1, h2) — md5 hex halves via conv (byte-identical
+    in any engine, the oracle path) or the xxhash64 long split (the
+    production default) — and seed i's value is (h1 + i*h2) % p (the
+    Kirsch-Mitzenmacher double-hashing construction: 16x fewer hash
+    calls than hashing (seed, shingle) per seed, same LSH guarantees).
+    All seeds' minimums come out of ONE array-state fold (measured ~25%
+    faster than a pass per seed); the lambda's index IS the seed.
+
+    STAGED projections: tokens, shingles, halves and the min fold are
+    each their own CTE select, so the O(tokens^2) shingle build and the
+    per-shingle hash run once, not once per seed (inlining the
+    tokenizer alone cost ~40%; an early one-select form measured 11x
+    slower at sf0.1).  One statement analyzes once: assembling the
+    same stages through DataFrame selects cost ~0.5 s of py4j and
+    per-select analysis per build (r14).
 
     ``out``: "signatures" (id, carry..., {prefix}0..{prefix}N) or
-    "band_keys" (id, carry..., band, bkey).  Callers keep the Column
-    path for STREAMING frames (parameterized sql is only exercised on
-    batch plans here).
+    "band_keys" (id, carry..., band, bkey), where a band's key is the
+    md5 of its '|'-joined decimal seeds (DuckDB casts BIGINT to the
+    same string) or one xxhash64 over them.
     """
     k = shingle_k
     idq = _bt(id_col)
     carryq = "".join(f", {_bt(c)}" for c in carry)
     if unit == "word":
-        parts = ", ' ', ".join(f"__t[i{j - 1:+d}]" for j in range(k))
         stage_in = (
             f"WITH __mh_t AS (SELECT {idq}{carryq}, "
-            f"split(lower(trim({_bt(text_col)})), '\\\\s+') AS __t FROM {{src}}),\n"
-            f"__mh_s AS (SELECT {idq}{carryq}, CASE WHEN size(__t) >= {k} "
-            f"THEN transform(sequence(1, size(__t) - {k - 1}), i -> concat({parts})) "
-            f"ELSE array(concat_ws(' ', __t)) END AS __sh FROM __mh_t)"
+            f"{_tokens_sql(_bt(text_col))} AS __t FROM {{src}}),\n"
+            f"__mh_s AS (SELECT {idq}{carryq}, {_word_shingles_sql('__t', k)} AS __sh "
+            "FROM __mh_t)"
         )
     elif unit == "char":
         stage_in = (
             f"WITH __mh_c AS (SELECT {idq}{carryq}, "
             f"lower(trim({_bt(text_col)})) AS __c FROM {{src}}),\n"
-            f"__mh_s AS (SELECT {idq}{carryq}, CASE WHEN length(__c) >= {k} "
-            f"THEN transform(sequence(1, length(__c) - {k - 1}), i -> substr(__c, i, {k})) "
-            f"ELSE array(__c) END AS __sh FROM __mh_c)"
+            f"__mh_s AS (SELECT {idq}{carryq}, {_char_shingles_sql('__c', k)} AS __sh "
+            "FROM __mh_c)"
         )
     else:
         raise ValueError(f"unit must be word|char, got {unit!r}")
@@ -359,71 +299,26 @@ def minhash_signatures(
     """Per-document MinHash signature (mh0..mhN longs): for seed i,
     the minimum of (h1 + i*h2) % p over the doc's shingles, where
     (h1, h2) are the halves of ONE base hash per shingle
-    (``_minhash_halves``) — universal-hash minhash.  ``hash_impl``:
-    "xxhash64" (default, native long hash) or "md5" (hex-derived,
-    byte-identical in any engine — the oracle path).
+    (``_minhash_pipeline_sql``) — universal-hash minhash.
+    ``hash_impl``: "xxhash64" (default, native long hash) or "md5"
+    (hex-derived, byte-identical in any engine — the oracle path).
 
     Row-local and ZERO-exchange: a document is one row and min() is
     insensitive to duplicate shingles, so the seeds' mins are one
     array fold — no explode/distinct/groupBy (the previous
-    formulation's two shuffles).  STAGED projections: shingles,
-    halves and the min fold are each aliased in their own select so
-    the O(tokens^2) shingle build and the per-shingle hash run once,
-    not once per seed.
+    formulation's two shuffles) — and the same statement runs on
+    batch and streaming frames.
 
     ``carry`` names extra columns of ``df`` threaded through every
     staged select into the output — for SHORT payloads (a normalized
     name in ``fuzzy_join``) that downstream wants without a join-back.
     Don't carry document-sized text: it rides every shuffle after."""
     _check_carry(carry, num_hashes)
-    if not df.isStreaming:
-        # batch plans assemble through ONE parameterized spark.sql
-        # call (bit-identical expressions; ~0.5 s -> ~0.1 s of py4j +
-        # analysis per build, r14; see _minhash_pipeline_sql)
-        return _minhash_pipeline_sql(
-            ensure_parallelism(df),
-            id_col=id_col, text_col=text_col, num_hashes=num_hashes,
-            bands=1, shingle_k=shingle_k, hash_impl=hash_impl,
-            unit=unit, carry=tuple(carry), out="signatures",
-        )
-    hp = _minhash_halves(hash_impl)
-    keep = [F.col(c) for c in carry]
-    if unit == "word":
-        toks = ensure_parallelism(df).select(
-            F.col(id_col), *keep, _word_tokens(F.col(text_col)).alias("__t")
-        )
-        base = toks.select(
-            F.col(id_col),
-            *keep,
-            _shingles_from_tokens(F.col("__t"), shingle_k).alias("__sh"),
-        )
-    elif unit == "char":
-        # char k-grams (short strings / no-whitespace scripts): stage
-        # the normalized text, then substr per position
-        staged = ensure_parallelism(df).select(
-            F.col(id_col), *keep, F.lower(F.trim(F.col(text_col))).alias("__c")
-        )
-        t = F.col("__c")
-        n = F.length(t)
-        sh = F.transform(
-            F.sequence(F.lit(1), n - shingle_k + 1),
-            lambda i: t.substr(i, F.lit(shingle_k)),
-        )
-        base = staged.select(
-            F.col(id_col),
-            *keep,
-            F.when(n >= shingle_k, sh).otherwise(F.array(t)).alias("__sh"),
-        )
-    else:
-        raise ValueError(f"unit must be word|char, got {unit!r}")
-    halves = base.select(
-        F.col(id_col), *keep, F.transform(F.col("__sh"), hp).alias("__hp")
-    )
-    folded = halves.select(
-        F.col(id_col), *keep, *minhash_min_exprs("__hp", num_hashes)
-    )
-    return folded.select(
-        F.col(id_col), *keep, *minhash_seed_cols("__mins", num_hashes)
+    return _minhash_pipeline_sql(
+        ensure_parallelism(df),
+        id_col=id_col, text_col=text_col, num_hashes=num_hashes,
+        bands=1, shingle_k=shingle_k, hash_impl=hash_impl,
+        unit=unit, carry=tuple(carry), out="signatures",
     )
 
 
@@ -446,37 +341,15 @@ def band_buckets(
     (one copy per band row — short payloads only)."""
     if num_hashes % bands != 0:
         raise ValueError(
-            f"num_hashes ({num_hashes}) must divide evenly into bands ({bands})"
+            f"num_hashes ({num_hashes}) must divide evenly into bands ({bands}); "
+            "a remainder would silently drop hashes and change the LSH threshold"
         )
     _check_carry(carry, num_hashes)
-    if not df.isStreaming:
-        # one-sql-call assembly for batch plans (r14; see
-        # _minhash_pipeline_sql) — the band explode rides in the same
-        # analyzed statement
-        return _minhash_pipeline_sql(
-            ensure_parallelism(df),
-            id_col=id_col, text_col=text_col, num_hashes=num_hashes,
-            bands=bands, shingle_k=shingle_k, hash_impl=hash_impl,
-            unit=unit, carry=tuple(carry), out="band_keys",
-        )
-    r = num_hashes // bands
-    sigs = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_k, hash_impl, unit, carry
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                band_key(hash_impl, [F.col(f"mh{b * r + j}") for j in range(r)]).alias("bkey"),
-            )
-            for b in range(bands)
-        ]
-    )
-    keep = [F.col(c) for c in carry]
-    return sigs.select(
-        F.col(id_col), *keep, F.explode(band_structs).alias("bb")
-    ).select(
-        id_col, *carry, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
+    return _minhash_pipeline_sql(
+        ensure_parallelism(df),
+        id_col=id_col, text_col=text_col, num_hashes=num_hashes,
+        bands=bands, shingle_k=shingle_k, hash_impl=hash_impl,
+        unit=unit, carry=tuple(carry), out="band_keys",
     )
 
 
@@ -650,15 +523,26 @@ def _simhash_pipeline_sql(
     hash_impl: str,
     carry: tuple[str, ...],
 ) -> DataFrame:
-    """``simhash_signatures`` assembled as ONE parameterized
-    ``spark.sql`` call — bit-identical expressions and CTE stage
-    boundaries, one analysis pass instead of per-select (the
-    ``_minhash_pipeline_sql`` rationale; the hex-char rebuild alone is
-    32 nested CASE columns of py4j traffic on the Column path)."""
+    """``simhash_signatures``' kernel as ONE parameterized ``spark.sql``
+    statement, run unchanged on batch and streaming frames (the
+    ``_minhash_pipeline_sql`` rationale: one analysis pass instead of
+    one per select).
+
+    Each token's hash is read as a long: xxhash64 directly, or md5's
+    first ``hex_chars`` hex digits through one conv (two for 16
+    chars: conv of >15 hex digits overflows the signed-long cast, so
+    two 32-bit halves combine with shiftleft|or).  All ``hex_chars *
+    4`` bit votes come out of ONE array-state fold over the token
+    array (measured ~2x over a pass per bit); the flat vote index
+    i = 4p+j reads hex char p's bit 3-j, so the hex rebuild below is
+    the same for both hashes.  NULL-text rows have no tokens and are
+    dropped, matching the grouped formulation (whose explode emits no
+    rows for them) instead of an all-zero signature that would
+    collide all NULL docs."""
     nbits = hex_chars * 4
     idq = _bt(id_col)
     carryq = "".join(f", {_bt(c)}" for c in carry)
-    toks = f"array_distinct(split(lower(trim({_bt(text_col)})), '\\\\s+'))"
+    toks = f"array_distinct({_tokens_sql(_bt(text_col))})"
     if hash_impl == "xxhash64":
         hs = f"transform({toks}, t -> xxhash64(t))"
         bitpos = "i + 3 - (i % 4) * 2"
@@ -711,9 +595,10 @@ def simhash_signatures(
 
     Plan shape: a document is one row, so the votes are row-local
     array folds (``aggregate`` over ``transform``'d hashes) — a
-    pure projection with ZERO exchanges, like the text operators; the
-    explode -> groupBy formulation this replaces is kept as
-    ``_simhash_signatures_grouped`` and equality-tested.
+    pure projection with ZERO exchanges, like the text operators, and
+    one statement (``_simhash_pipeline_sql``) for batch and streaming
+    frames; the explode -> groupBy formulation this replaces is kept
+    as ``_simhash_signatures_grouped`` and equality-tested.
 
     ``carry`` names extra columns of ``df`` threaded through the
     staged selects into the output (the ``minhash_signatures``
@@ -728,108 +613,15 @@ def simhash_signatures(
             "pipeline's internal/output names (__hs, __v, simhash) — "
             "rename them before carrying"
         )
-    if hash_impl == "xxhash64" and hex_chars * 4 > 64:
-        raise ValueError("xxhash64 simhash supports at most 16 hex chars")
-    if hash_impl == "md5" and hex_chars > 16:
-        raise ValueError("md5 simhash supports at most 16 hex chars")
     if hash_impl not in ("md5", "xxhash64"):
         raise ValueError(f"hash_impl must be md5|xxhash64, got {hash_impl!r}")
-    if not df.isStreaming:
-        return _simhash_pipeline_sql(
-            ensure_parallelism(df),
-            id_col=id_col, text_col=text_col, hex_chars=hex_chars,
-            hash_impl=hash_impl, carry=tuple(carry),
-        )
-    keep = [F.col(c) for c in carry]
-    toks = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), "\\s+"))
-
-    if hash_impl == "xxhash64":
-        if hex_chars * 4 > 64:
-            raise ValueError("xxhash64 simhash supports at most 16 hex chars")
-        base = (
-            ensure_parallelism(df)
-            .filter(F.col(text_col).isNotNull())
-            .select(F.col(id_col), *keep, F.transform(toks, lambda t: F.xxhash64(t)).alias("__hs"))
-        )
-
-        # all bits voted in ONE fold (array-state accumulator); flat
-        # index i = 4p+j reads xxhash64 bit 4p+(3-j) = i + 3 - 2*(i%4),
-        # preserving the original per-bit aggregate's bit->char mapping
-        nbits = hex_chars * 4
-        votes = F.aggregate(
-            F.col("__hs"),
-            F.array_repeat(F.lit(0).cast("long"), nbits),
-            lambda acc, h: F.transform(
-                acc, lambda c, i: c + F.getbit(h, i + 3 - (i % 4) * 2) * 2 - 1
-            ),
-        )
-        sig = base.select(F.col(id_col), *keep, votes.alias("__v"))
-        out_chars = []
-        for p in range(hex_chars):
-            val = None
-            for j in range(4):
-                bit = F.when(
-                    F.element_at(F.col("__v"), p * 4 + j + 1) > 0, F.lit(2 ** (3 - j))
-                ).otherwise(F.lit(0))
-                val = bit if val is None else val + bit
-            out_chars.append(F.lit(_HEX).substr(val + 1, F.lit(1)))
-        return sig.select(F.col(id_col), *keep, F.concat(*out_chars).alias("simhash"))
-    if hash_impl != "md5":
-        raise ValueError(f"hash_impl must be md5|xxhash64, got {hash_impl!r}")
-
     if hex_chars > 16:
-        raise ValueError("md5 simhash supports at most 16 hex chars")
-    nbits = hex_chars * 4
-
-    # One md5 + one conv (two for 16 chars: conv of >15 hex digits
-    # overflows the signed-long cast, so combine two 32-bit halves
-    # with shiftleft|or) per token: the first hex_chars hex digits as
-    # a single long (bit-identical to the per-digit instr/substring
-    # decode this replaces — digit p occupies bits
-    # [4*(hex_chars-1-p)+3 .. 4*(hex_chars-1-p)], so flat bit index
-    # i = 4p+j maps to long bit position nbits-1-i).  NULL-text rows
-    # have no tokens: drop them, matching the grouped formulation
-    # (whose explode emits no rows for them) instead of emitting an
-    # all-zero signature that would collide all NULL docs.
-    def tok_long(t: Column) -> Column:
-        h = F.md5(t)
-        if hex_chars <= 15:
-            return F.conv(F.substring(h, 1, hex_chars), 16, 10).cast("long")
-        hi = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-        lo = F.conv(F.substring(h, 9, hex_chars - 8), 16, 10).cast("long")
-        return F.shiftleft(hi, 4 * (hex_chars - 8)).bitwiseOR(lo)
-
-    base = (
-        ensure_parallelism(df)
-        .filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col),
-            *keep,
-            F.transform(toks, tok_long).alias("__hs"),
-        )
+        raise ValueError(f"{hash_impl} simhash supports at most 16 hex chars")
+    return _simhash_pipeline_sql(
+        ensure_parallelism(df),
+        id_col=id_col, text_col=text_col, hex_chars=hex_chars,
+        hash_impl=hash_impl, carry=tuple(carry),
     )
-
-    # ALL nbits bit votes in ONE fold over the token array (array-state
-    # accumulator) — replaces the hex_chars transforms + nbits separate
-    # aggregate passes of the original formulation (measured ~2x)
-    votes = F.aggregate(
-        F.col("__hs"),
-        F.array_repeat(F.lit(0).cast("long"), nbits),
-        lambda acc, v: F.transform(
-            acc, lambda c, i: c + F.getbit(v, F.lit(nbits - 1) - i) * 2 - 1
-        ),
-    )
-    sig = base.select(F.col(id_col), *keep, votes.alias("__v"))
-    out_chars = []
-    for p in range(hex_chars):
-        val = None
-        for j in range(4):
-            bit = F.when(
-                F.element_at(F.col("__v"), p * 4 + j + 1) > 0, F.lit(2 ** (3 - j))
-            ).otherwise(F.lit(0))
-            val = bit if val is None else val + bit
-        out_chars.append(F.lit(_HEX).substr(val + 1, F.lit(1)))
-    return sig.select(F.col(id_col), *keep, F.concat(*out_chars).alias("simhash"))
 
 
 def _simhash_signatures_grouped(

@@ -75,7 +75,7 @@ def _doc_bigrams(
     # measured WORSE (extra exchange, 1.7 s) — the CPU lives in the
     # map side, so the scan fan is the right knob.
     toks = ensure_parallelism(df, min_bytes=256 << 10).select(
-        F.col(id_col), _word_tokens(F.col(text_col)).alias("__t")
+        F.col(id_col), _word_tokens(text_col).alias("__t")
     )
     # ONE expr string: the nested transform/filter built from Python
     # lambdas costs ~0.2 s of py4j round trips per plan build (the
@@ -478,7 +478,7 @@ def _fused_filter_small(
     toks = ensure_parallelism(corpus, min_bytes=256 << 10).select(
         F.struct(*[F.col(c) for c in corpus.columns]).alias("__row"),
         F.col(id_col).alias("__id"),
-        _word_tokens(F.col(text_col)).alias("__t"),
+        _word_tokens(text_col).alias("__t"),
     )
     valid = F.expr(
         "filter(CASE WHEN size(__t) >= 2 THEN "

@@ -29,9 +29,13 @@ from flox_spark.plans import ensure_parallelism
 _M = 1000003
 
 
-def _plane(p: int, c: Column) -> Column:
-    mix = (F.lit(1009 * (p + 1) + 12345) + F.lit(9176) * (c + 1)) * F.lit(2654435761)
-    return (mix % _M) / F.lit(float(_M)) - 0.5
+def _plane_weight(p: int, c: int) -> float:
+    """Component ``c`` of hyperplane ``p``: the integer mix is exact
+    (max product ~1.7e15, no long overflow) and the final
+    ``/ 1000003.0 - 0.5`` is one IEEE double op, the same as
+    ``lsh_signature_bits``' per-row SQL fold."""
+    mix = (1009 * (p + 1) + 12345 + 9176 * (c + 1)) * 2654435761
+    return (mix % _M) / float(_M) - 0.5
 
 
 def _sqlref(name: str) -> str:
@@ -63,9 +67,15 @@ _UNROLL_MAX_DIM = 32
 
 
 def _dot_sql(ra: str, rb: str, dim: int) -> str:
-    """SQL text of the sequential dot product over two PRE-QUOTED
-    refs — the string the name-based ``_dot`` branch parses, exposed
-    so multi-expression callers can splice it into one statement."""
+    """SQL text of the sequential left-to-right dot product over two
+    PRE-QUOTED refs (bit-reproducible across engines that evaluate
+    list folds sequentially).
+
+    When ``dim`` is known and <= ``_UNROLL_MAX_DIM`` the product is a
+    flat unrolled sum (codegen; see the note above).  Otherwise
+    ``zip_with`` iterates both arrays directly: a per-row
+    ``sequence(0, dim-1)`` index array + ``element_at`` random access
+    is measurably slower to analyze AND execute."""
     if isinstance(dim, int) and 0 < dim <= _UNROLL_MAX_DIM:
         terms = " + ".join(
             f"(CAST(get({ra}, {i}) AS DOUBLE) * CAST(get({rb}, {i}) AS DOUBLE))"
@@ -79,29 +89,11 @@ def _dot_sql(ra: str, rb: str, dim: int) -> str:
     )
 
 
-def _dot(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Sequential left-to-right dot product (bit-reproducible across
-    engines that evaluate list folds sequentially).
-
-    When ``dim`` is known and <= ``_UNROLL_MAX_DIM`` the product is a
-    flat unrolled sum (codegen; see the note above).  Otherwise
-    ``zip_with`` iterates both arrays directly — no per-row
-    ``sequence(0, dim-1)`` index array + ``element_at`` random access
-    (the old shape; measurably slower to analyze AND execute — the
-    expression tree is half the size).  When both operands are column
-    NAMES the expression is built as one ``F.expr`` string — a Python
+def _dot(a: str, b: str, dim: int) -> Column:
+    """``_dot_sql`` over two column NAMES as one ``F.expr`` — a Python
     lambda here costs ~30ms of py4j round-trips PER CALL at plan-build
     time (measured), which dominated ivf/ann bench wall."""
-    unroll = isinstance(dim, int) and 0 < dim <= _UNROLL_MAX_DIM
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(_sqlref(a), _sqlref(b), dim))
-    if unroll:
-        acc: Column = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-        return acc
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+    return F.expr(_dot_sql(_sqlref(a), _sqlref(b), dim))
 
 
 def _norm_sql(ra: str, dim: int) -> str:
@@ -119,18 +111,32 @@ def _norm_sql(ra: str, dim: int) -> str:
     )
 
 
-def _norm(a: Column | str, dim: int) -> Column:
-    unroll = isinstance(dim, int) and 0 < dim <= _UNROLL_MAX_DIM
-    if isinstance(a, str):
-        return F.expr(_norm_sql(_sqlref(a), dim))
-    if unroll:
-        acc: Column = F.lit(0.0)
-        for i in range(dim):
-            el = F.get(a, i).cast("double")
-            acc = acc + el * el
-        return F.sqrt(acc)
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
+def _norm(a: str, dim: int) -> Column:
+    return F.expr(_norm_sql(_sqlref(a), dim))
+
+
+def _pick_kernel(
+    kernel: str, dim: int, df: DataFrame, *more: DataFrame, what: str = "kernel"
+) -> str:
+    """The one expr-vs-numpy kernel choice of this module: validate
+    ``kernel`` and resolve ``'auto'`` to numpy exactly when the dim is
+    past the unroll limit (the expr folds run interpreted), plan stats
+    put ``df`` past 64 MB (the per-row or per-pair folds dominate the
+    Arrow round trip), and neither ``df`` nor any of ``more`` is a
+    stream.  Oracle-scale inputs keep the bit-exact declarative
+    arithmetic.  ``what`` names the caller's parameter in the error."""
+    if kernel not in ("auto", "expr", "numpy"):
+        raise ValueError(f"{what} must be auto|expr|numpy, got {kernel!r}")
+    if kernel != "auto":
+        return kernel
+    if not (isinstance(dim, int) and dim > _UNROLL_MAX_DIM) or any(
+        d.isStreaming for d in (df, *more)
+    ):
+        return "expr"
+    from flox_spark.plans.util import estimate_size_bytes
+
+    size = estimate_size_bytes(df)
+    return "numpy" if size is not None and size > (64 << 20) else "expr"
 
 
 def _topk_per_query(
@@ -314,24 +320,7 @@ def cosine_topk(
     exactly k rows per query should pin ``kernel`` rather than rely
     on 'auto', whose choice flips at the stats gate.
     """
-    if kernel not in ("auto", "expr", "numpy"):
-        raise ValueError(f"kernel must be auto|expr|numpy, got {kernel!r}")
-    if kernel == "auto":
-        from flox_spark.plans.util import estimate_size_bytes
-
-        size = estimate_size_bytes(base)
-        kernel = (
-            "numpy"
-            if (
-                dim > _UNROLL_MAX_DIM
-                and size is not None
-                and size > (64 << 20)
-                and not base.isStreaming
-                and not queries.isStreaming
-            )
-            else "expr"
-        )
-    if kernel == "numpy":
+    if _pick_kernel(kernel, dim, base, queries) == "numpy":
         # matmul = memory-bandwidth work: below the byte gate the
         # fan-out exchange costs more than the compute (see
         # lsh_signature_bits); auto only picks numpy past 64 MB
@@ -393,12 +382,10 @@ def _numpy_signature_pass(
 
     from pyspark.sql.types import StringType, StructField, StructType
 
-    W = np.empty((planes, dim), dtype=np.float64)
-    for p in range(planes):
-        for c in range(dim):
-            mix = (1009 * (p + 1) + 12345 + 9176 * (c + 1)) * 2654435761
-            W[p, c] = (mix % _M) / float(_M) - 0.5
-    WT = W.T.copy()
+    WT = np.array(
+        [[_plane_weight(p, c) for p in range(planes)] for c in range(dim)],
+        dtype=np.float64,
+    )
     out_schema = StructType(
         [df.schema[id_col], StructField("sig", StringType())]
     )
@@ -471,9 +458,9 @@ def lsh_signature_bits(
     plane weights computed at plan-build time in Python — the integer
     mix is exact in both engines (no long overflow: max product
     ~1.7e15) and the final ``/ 1000003.0 - 0.5`` is the same IEEE
-    double op, so the weights are bit-identical to the old per-row
-    Column arithmetic, and each bit's sum keeps the fold's
-    left-to-right association.  This replaces ``planes`` interpreted
+    double op, so the weights are bit-identical to the fold's per-row
+    SQL arithmetic, and each bit's sum keeps the fold's left-to-right
+    association.  This replaces ``planes`` interpreted
     ``aggregate(transform(sequence(...)))`` folds per row — which also
     re-derived every plane weight per ROW per element — with one
     codegen'd projection (each bit is its own generated method, well
@@ -486,25 +473,7 @@ def lsh_signature_bits(
     input is big enough (>64 MB) that the per-row interpreted folds
     dominate; oracle-scale inputs keep the fold so bucket keys stay
     bit-identical to the declarative arithmetic."""
-    if kernel not in ("auto", "expr", "numpy"):
-        raise ValueError(f"kernel must be auto|expr|numpy, got {kernel!r}")
-    emb = F.col(vec_col)
-    if kernel == "auto":
-        from flox_spark.plans.util import estimate_size_bytes
-
-        size = estimate_size_bytes(df)
-        kernel = (
-            "numpy"
-            if (
-                isinstance(dim, int)
-                and dim > _UNROLL_MAX_DIM
-                and size is not None
-                and size > (64 << 20)
-                and not df.isStreaming
-            )
-            else "expr"
-        )
-    if kernel == "numpy":
+    if _pick_kernel(kernel, dim, df) == "numpy":
         # the matmul pass is memory-bandwidth work, not an expensive
         # per-row fold: below the byte gate the fan-out exchange costs
         # more wall than the compute it parallelizes (the min_bytes
@@ -515,47 +484,33 @@ def lsh_signature_bits(
             ensure_parallelism(df, min_bytes=8 << 20), id_col, vec_col,
             planes, dim,
         )
-    df = ensure_parallelism(df)
-
+    vc = _sqlref(vec_col)
     if isinstance(dim, int) and 0 < dim <= _UNROLL_MAX_DIM:
-        vc = _sqlref(vec_col)
-        bits = []
-        for p in range(planes):
-            terms = []
-            for c in range(dim):
-                mix = (1009 * (p + 1) + 12345 + 9176 * (c + 1)) * 2654435761
-                w = (mix % _M) / float(_M) - 0.5
-                # CAST('<repr>' AS DOUBLE) is constant-folded at plan
-                # time; repr round-trips, so the literal is exact
-                terms.append(
-                    f"(CAST(get({vc}, {c}) AS DOUBLE) * CAST('{w!r}' AS DOUBLE))"
-                )
-            proj = F.expr("(0.0D + " + " + ".join(terms) + ")")
-            bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return df.select(F.col(id_col), F.concat(*bits).alias("sig"))
-
-    def _proj(p: int):
-        # one-arg lambda: a defaulted second param would make
-        # F.transform pass the element index into it.  get(), not
-        # element_at(): under ANSI mode (the Spark 4 default)
-        # element_at THROWS on a short vector — get() returns NULL,
-        # which is the documented corrupt-row path (NULL sum ->
-        # all-'0' sig), and matches the unrolled kernel's get()
-        return lambda c: F.get(emb, c).cast("double") * _plane(p, c)
-
-    bits = [
-        F.when(
-            F.aggregate(
-                F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), _proj(p)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for p in range(planes)
-    ]
-    return df.select(F.col(id_col), F.concat(*bits).alias("sig"))
+        # CAST('<repr>' AS DOUBLE) is constant-folded at plan time;
+        # repr round-trips, so the literal is exact
+        projs = [
+            "(0.0D + " + " + ".join(
+                f"(CAST(get({vc}, {c}) AS DOUBLE) * CAST('{_plane_weight(p, c)!r}' AS DOUBLE))"
+                for c in range(dim)
+            ) + ")"
+            for p in range(planes)
+        ]
+    else:
+        # the same integer-then-double mix per element: get(), not
+        # element_at() — under ANSI mode (the Spark 4 default)
+        # element_at THROWS on a short vector, get() returns NULL, the
+        # documented corrupt-row path (NULL sum -> all-'0' sig)
+        projs = [
+            f"aggregate(transform(sequence(0, {dim - 1}), __i -> "
+            f"CAST(get({vc}, __i) AS DOUBLE) * "
+            f"(((({1009 * (p + 1) + 12345} + 9176 * (__i + 1)) * 2654435761) % {_M})"
+            f" / {float(_M)!r}D - 0.5D)), 0.0D, (acc, x) -> acc + x)"
+            for p in range(planes)
+        ]
+    bits = ", ".join(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END" for proj in projs)
+    return ensure_parallelism(df).select(
+        F.col(id_col), F.expr(f"concat({bits})").alias("sig")
+    )
 
 
 def lsh_bucket_candidates(
@@ -680,6 +635,13 @@ def ivf_topk(
     knowable without a job, so there is no declarative auto-switch);
     the probed-cluster choice becomes approximate in the usual IVF
     sense."""
+    # fine-scoring kernel split (cosine_topk's): past the unroll limit
+    # the per-candidate fold is interpreted — route the probed
+    # candidate pairs through the shared Arrow einsum pass when plan
+    # stats say the base dominates the round trip; oracle scales keep
+    # the bit-exact fold.  Picked first, so a bad ``kernel`` raises
+    # before the two-level probe's centroid collect runs.
+    kernel = _pick_kernel(kernel, dim, base, queries)
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("__qv"),
@@ -750,28 +712,6 @@ def ivf_topk(
             qscore.withColumn("__pr", F.row_number().over(wq))
             .filter(F.col("__pr") <= nprobe)
             .select(query_id_col, cluster_col, "__qv", "__qn")
-        )
-    # fine-scoring kernel split (cosine_topk's): past the unroll limit
-    # the per-candidate fold is interpreted — route the probed
-    # candidate pairs through the shared Arrow einsum pass when plan
-    # stats say the base dominates the round trip; oracle scales keep
-    # the bit-exact fold
-    if kernel not in ("auto", "expr", "numpy"):
-        raise ValueError(f"kernel must be auto|expr|numpy, got {kernel!r}")
-    if kernel == "auto":
-        from flox_spark.plans.util import estimate_size_bytes
-
-        size = estimate_size_bytes(base)
-        kernel = (
-            "numpy"
-            if (
-                dim > _UNROLL_MAX_DIM
-                and size is not None
-                and size > (64 << 20)
-                and not base.isStreaming
-                and not queries.isStreaming
-            )
-            else "expr"
         )
     if kernel == "numpy":
         # no base-side norm staging (an interpreted per-row fold past
@@ -926,21 +866,11 @@ def embedding_near_duplicates(
     arithmetic).  numpy differs from the fold only at last-ulp
     (pairwise vs sequential summation), which the rounded ``cos_sim``
     absorbs except for exact threshold-boundary pairs."""
-    if verify not in ("auto", "expr", "numpy"):
-        raise ValueError(f"verify must be auto|expr|numpy, got {verify!r}")
+    verify = _pick_kernel(verify, dim, df, what="verify")
     cands = lsh_bucket_candidates(
         df, id_col, vec_col, planes, bands, dim, max_bucket=max_bucket,
         signature_kernel=signature_kernel,
     )
-    if verify == "auto":
-        from flox_spark.plans.util import estimate_size_bytes
-
-        size = estimate_size_bytes(df)
-        verify = (
-            "numpy"
-            if dim > _UNROLL_MAX_DIM and size is not None and size > (64 << 20)
-            else "expr"
-        )
     if verify == "numpy":
         # no norm staging: past the unroll limit the expr norm is
         # itself an interpreted per-row fold — the Arrow pass computes
@@ -1020,27 +950,10 @@ def normalize_embeddings(
     NULL elements to NaN output (the Arrow boundary folds list NULLs
     into NaN — same caveat as the signature kernel); oracle-scale
     inputs keep the fold."""
-    if kernel not in ("auto", "expr", "numpy"):
-        raise ValueError(f"kernel must be auto|expr|numpy, got {kernel!r}")
-    if kernel == "auto":
-        from flox_spark.plans.util import estimate_size_bytes
-
-        size = estimate_size_bytes(df)
-        kernel = (
-            "numpy"
-            if (
-                isinstance(dim, int)
-                and dim > _UNROLL_MAX_DIM
-                and size is not None
-                and size > (64 << 20)
-                and not df.isStreaming
-            )
-            else "expr"
-        )
-    if kernel == "numpy":
+    if _pick_kernel(kernel, dim, df) == "numpy":
         return _numpy_normalize_pass(df, vec_col, out_col or vec_col, dim)
     v = F.col(vec_col)
-    nrm = _norm(v, dim)
+    nrm = _norm(vec_col, dim)
     out = F.when(nrm == 0, F.transform(v, lambda x: x.cast("double"))).otherwise(
         F.transform(v, lambda x: x.cast("double") / nrm)
     )
@@ -1281,17 +1194,13 @@ def semantic_dedup_pairs(
     size = estimate_size_bytes(df)
     small = size is not None and size * max(1, k // 8) < (32 << 20)
     pair_work = None  # exact pair-expansion elements, when known
-    if verify not in ("auto", "expr", "numpy"):
-        raise ValueError(f"verify must be auto|expr|numpy, got {verify!r}")
-    if verify == "auto" and dim <= _UNROLL_MAX_DIM:
-        verify = "expr"
-    if verify == "auto" and not small and size is not None and size > (64 << 20):
-        # the large-path Arrow route is decidable up front — resolve
-        # it NOW so the per-row norm staging below (itself an
-        # interpreted fold past the unroll limit) can be skipped; the
-        # small path resolves later from the exact pair volume, with
-        # the (cheap at that scale) staged norms feeding either kernel
-        verify = "numpy"
+    if not (verify == "auto" and small and dim > _UNROLL_MAX_DIM):
+        # resolve NOW so the per-row norm staging below (itself an
+        # interpreted fold past the unroll limit) can be skipped on
+        # the Arrow route; the small path past the unroll limit
+        # resolves later from the exact pair volume, with the (cheap
+        # at that scale) staged norms feeding either kernel
+        verify = _pick_kernel(verify, dim, df, what="verify")
     stage_norms = verify != "numpy"
     proj = df.select(F.col(id_col), F.col(vec_col))
     fanned = proj if small else ensure_parallelism(proj)
@@ -1494,22 +1403,15 @@ def semantic_dedup_pairs(
     # Arrow round trip; oracle-scale inputs keep the bit-exact fold.
     # (Resolved BEFORE the pair join is assembled — r15 — so the
     # small/expr shape can build join+score+filter as one statement.)
-    if verify not in ("auto", "expr", "numpy"):
-        raise ValueError(f"verify must be auto|expr|numpy, got {verify!r}")
+    # Only the small path gets here unresolved, and its plan stats sit
+    # far below _pick_kernel's 64 MB, so without cluster sizes
+    # (max_cluster=None) it keeps the fold.  1<<26 sits between the
+    # sf0.1 oracle/bench row (3.3e7 elements, fold wall well under a
+    # second across the pinned 32-way probe) and the measured dim-768
+    # crossover (99k pairs = 7.6e7 elements: fold 12.3 s vs einsum
+    # 2.4 s verify-only, SCALE.md r9 table).
     if verify == "auto":
-        if dim <= _UNROLL_MAX_DIM:
-            verify = "expr"
-        elif pair_work is not None:
-            # 1<<26 sits between the sf0.1 oracle/bench row (3.3e7
-            # elements, fold wall well under a second across the
-            # pinned 32-way probe) and the measured dim-768 crossover
-            # (99k pairs = 7.6e7 elements: fold 12.3 s vs einsum
-            # 2.4 s verify-only, SCALE.md r9 table)
-            verify = "numpy" if pair_work > (1 << 26) else "expr"
-        else:
-            verify = (
-                "numpy" if size is not None and size > (64 << 20) else "expr"
-            )
+        verify = "numpy" if pair_work is not None and pair_work > (1 << 26) else "expr"
     thr = f"CAST('{float(threshold)!r}' AS DOUBLE)"
     if small and verify == "expr" and stage_norms:
         # ONE parameterized statement for broadcast-join + cosine +

@@ -1,10 +1,12 @@
 """Streaming incremental MinHash near-duplicate detection.
 
-Signatures are row-local array folds (the shared universal-hash
-construction in ``operators/dedup.py`` — a document is one row and
-the per-seed min ignores duplicate shingles), so the signature stage
-is completely stateless on a stream and provably equal to the batch
-path (``tests/test_stream_neardup.py::test_rowlocal_equals_batch_buckets``).
+Signatures are row-local array folds (a document is one row and the
+per-seed min ignores duplicate shingles), so the signature stage is
+stateless on a stream: it is the batch statement itself
+(``operators/dedup._minhash_pipeline_sql`` through ``band_buckets``),
+run unchanged on the streaming frame — there is no stream-only
+spelling to drift (``tests/test_stream_neardup.py`` runs it on a
+file stream and compares rows with the batch call).
 
 Only the LSH bucket memory is stateful: ``applyInPandasWithState``
 keyed by (band, bucket key) stores exactly one value per bucket — the
@@ -21,8 +23,7 @@ from __future__ import annotations
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
@@ -41,87 +42,19 @@ def minhash_band_keys(
     hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """Row-local (id, band, bkey) rows — no shuffle, no state; works
-    identically on batch and streaming frames.  Uses the shared
-    universal-hash minhash construction (``operators/dedup.py``:
-    one base hash per shingle, seeds derived by affine mixes, all
-    mins in one fold); ``hash_impl="md5"`` is the oracle-reproducible
-    path, "xxhash64" (default) the native production hash.
+    identically on batch and streaming frames, because it IS
+    ``band_buckets`` (word shingles): one base hash per shingle, seeds
+    derived by affine mixes, all mins in one fold.  ``hash_impl="md5"``
+    is the oracle-reproducible path, "xxhash64" (default) the native
+    production hash.  ``extra_cols`` ride through to the output and
+    get the same reserved-name guard as ``band_buckets``' ``carry``:
+    a column named band/bkey/__t etc. would silently clobber a
+    pipeline-internal or output column, so it raises instead."""
+    from flox_spark.operators.dedup import band_buckets
 
-    STAGED projections matter here (the round-2 lesson, re-verified
-    every time it is touched): tokens, shingles, halves and the min
-    fold each live in their OWN select — inlining any of them into
-    the next stage's lambda re-evaluates it per element (the inline
-    tokenizer alone was ~40% of signature cost; an early naive
-    one-select form measured 11x slower at sf0.1)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must divide evenly into bands ({bands}); "
-            "a remainder would silently drop hashes and change the LSH threshold"
-        )
-    r = num_hashes // bands
-    extra = list(extra_cols or [])
-    # same reserved-name guard band_buckets/minhash_signatures apply:
-    # an extra column named band/bkey/__t etc. would silently clobber
-    # pipeline-internal/output columns instead of erroring
-    from flox_spark.operators.dedup import _check_carry
-
-    _check_carry(extra, num_hashes)
-    if not df.isStreaming:
-        # fan out single-file scans before the CPU-bound hashing (a
-        # streaming frame already shuffles into the stateful operator),
-        # then assemble through ONE parameterized spark.sql call (r14;
-        # bit-identical to the staged Column pipeline below, which
-        # remains the streaming path — see _minhash_pipeline_sql)
-        from flox_spark.operators.dedup import _minhash_pipeline_sql
-        from flox_spark.plans import ensure_parallelism
-
-        return _minhash_pipeline_sql(
-            ensure_parallelism(df),
-            id_col=id_col, text_col=text_col, num_hashes=num_hashes,
-            bands=bands, shingle_k=shingle_k, hash_impl=hash_impl,
-            unit="word", carry=tuple(extra), out="band_keys",
-        )
-    from flox_spark.operators.dedup import (
-        _minhash_halves,
-        _shingles_from_tokens,
-        _word_tokens,
-        minhash_min_exprs,
-        minhash_seed_cols,
-    )
-
-    hp = _minhash_halves(hash_impl)  # validates hash_impl
-    base = df.select(
-        F.col(id_col), *extra, _word_tokens(F.col(text_col)).alias("__t")
-    )
-    base = base.select(
-        F.col(id_col),
-        *extra,
-        _shingles_from_tokens(F.col("__t"), shingle_k).alias("__sh"),
-    )
-    base = base.select(
-        F.col(id_col), *extra, F.transform(F.col("__sh"), hp).alias("__hp")
-    )
-    base = base.select(
-        F.col(id_col), *extra, *minhash_min_exprs("__hp", num_hashes)
-    )
-    base = base.select(
-        F.col(id_col),
-        *extra,
-        *minhash_seed_cols("__mins", num_hashes, prefix="__mh"),
-    )
-    from flox_spark.operators.dedup import band_key
-
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                band_key(hash_impl, [F.col(f"__mh{b * r + j}") for j in range(r)]).alias("bkey"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return base.select(F.col(id_col), *extra, F.explode(band_structs).alias("bb")).select(
-        id_col, *extra, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
+    return band_buckets(
+        df, id_col, text_col, num_hashes, bands, shingle_k, hash_impl,
+        unit="word", carry=tuple(extra_cols or ()),
     )
 
 

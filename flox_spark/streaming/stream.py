@@ -833,8 +833,8 @@ def stream_decontaminate_spans(
     # re-evaluate the \s+ split (and the whole shingle transform)
     # once per window position inside the filter lambda — the same
     # measured ~40% trap _word_tokens' docstring warns about
-    joined = joined.withColumn("__t", _word_tokens(F.col(text_col))).withColumn(
-        "__sh", _shingles_from_tokens(F.col("__t"), k)
+    joined = joined.withColumn("__t", _word_tokens(text_col)).withColumn(
+        "__sh", _shingles_from_tokens("__t", k)
     )
     n = F.size(F.col("__t"))
     # 1-based window starts whose gram is in the reference set; docs

@@ -192,3 +192,38 @@ def test_semdedup_declarative_seed_edge_shapes(spark):
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
     kept = semantic_dedup(two, k=4, threshold=0.9, dim=DIM, max_iter=0).collect()
     assert [r["vec_id"] for r in kept] == [1]
+
+
+@pytest.mark.parametrize("capped", [False, True])
+def test_small_path_matches_general_path(spark, vecs, monkeypatch, capped):
+    # the small path assembles seeds + fold and join + cosine +
+    # threshold as one SQL statement each; with plan stats unknown the
+    # general Column path runs instead.  Both must return identical
+    # rows, uncapped and with one cell over max_cluster
+    import hashlib
+
+    from flox_spark.plans import util
+
+    df, pdf = vecs
+    k = 3
+    max_cluster = None
+    if capped:
+        # cell sizes of the hash-draw seeds (as in _numpy_semdedup):
+        # cap just below the one largest cell
+        ids = pdf.vec_id.to_numpy()
+        V = np.array([np.array(v) for v in pdf.embedding])
+        order = sorted(
+            range(len(ids)), key=lambda i: hashlib.md5(f"{ids[i]}:0".encode()).hexdigest()
+        )
+        cl = ((V[:, None, :] - V[order[:k]][None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        sizes = sorted(np.bincount(cl, minlength=k))
+        assert sizes[-1] > sizes[-2] >= 2
+        max_cluster = int(sizes[-1]) - 1
+    kw = dict(k=k, threshold=-1.0, dim=DIM, max_iter=0, max_cluster=max_cluster)
+    small = sorted(map(tuple, semantic_dedup_pairs(df, **kw).collect()))
+    monkeypatch.setattr(util, "estimate_size_bytes", lambda _df: None)
+    general = sorted(map(tuple, semantic_dedup_pairs(df, **kw).collect()))
+    assert small == general and len(small) > 0
+    if capped:
+        uncapped = semantic_dedup_pairs(df, **{**kw, "max_cluster": None}).count()
+        assert len(small) < uncapped

@@ -190,3 +190,64 @@ def test_minhash_universal_hash_matches_hashlib(spark):
                 vals.append((h1 + i * h2) % MINHASH_P)
             exp.append(min(vals))
         assert got[doc_id] == exp, doc_id
+
+
+# The signature/banding kernels are one SQL statement for batch and
+# streaming frames: a parquet file stream drained through a memory sink
+# must return exactly the batch call's rows.
+_STREAM_CASES = [
+    *[
+        (fn, {"unit": unit, "hash_impl": h})
+        for fn in ("minhash_signatures", "band_buckets")
+        for unit in ("word", "char")
+        for h in ("md5", "xxhash64")
+    ],
+    ("simhash_signatures", {"hash_impl": "md5", "hex_chars": 8}),
+    ("simhash_signatures", {"hash_impl": "md5", "hex_chars": 16}),
+    ("simhash_signatures", {"hash_impl": "xxhash64", "hex_chars": 16}),
+    ("minhash_band_keys", {"hash_impl": "md5"}),
+]
+
+
+@pytest.fixture(scope="module")
+def docs_dir(spark):
+    tmp = tempfile.mkdtemp(prefix="flox_stream_batch_")
+    edge = spark.createDataFrame(
+        [(900001, None), (900002, ""), (900003, "ab"), (900004, "  Two   WORDS ")],
+        "doc_id long, text string",
+    )
+    load_table(spark, SF, "documents").select("doc_id", "text").unionByName(
+        edge
+    ).coalesce(2).write.parquet(f"{tmp}/in")
+    yield tmp
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "fn,kw", _STREAM_CASES, ids=[f"{fn}-{'-'.join(map(str, kw.values()))}" for fn, kw in _STREAM_CASES]
+)
+def test_stream_equals_batch(spark, docs_dir, fn, kw):
+    from flox_spark.operators import dedup
+
+    op = minhash_band_keys if fn == "minhash_band_keys" else getattr(dedup, fn)
+    batch = spark.read.parquet(f"{docs_dir}/in")
+    stream = spark.readStream.schema(batch.schema).parquet(f"{docs_dir}/in")
+    out = op(stream, **kw)
+    assert out.isStreaming
+    name = "flox_sb_" + "_".join([fn, *map(str, kw.values())])
+    q = (
+        out.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", f"{docs_dir}/ckpt_{name}")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(180)
+        assert q.exception() is None
+        got = sorted(map(tuple, spark.sql(f"SELECT * FROM {name}").collect()))
+    finally:
+        q.stop()
+    want = sorted(map(tuple, op(batch, **kw).collect()))
+    assert got == want and len(want) >= 500

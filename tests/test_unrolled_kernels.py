@@ -49,14 +49,6 @@ def test_unrolled_dot_bit_identical_to_fold(spark, vecs):
     assert out[0] == 0.0 and out[1] == 0.0  # bit-identical, not tolerance
 
 
-def test_unrolled_column_variant_matches_string_variant(spark, vecs):
-    out = vecs.select(
-        (sim._dot(F.col("a"), F.col("b"), 16) - sim._dot("a", "b", 16)).alias("d"),
-        (sim._norm(F.col("a"), 16) - sim._norm("a", 16)).alias("n"),
-    ).agg(F.max(F.abs("d")), F.max(F.abs("n"))).collect()[0]
-    assert out[0] == 0.0 and out[1] == 0.0
-
-
 def test_unrolled_ragged_vector_nulls_out(spark):
     df = spark.createDataFrame(
         [(1, [1.0, 2.0], [3.0, 4.0]), (2, [1.0], [3.0, 4.0])],
